@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -124,25 +128,20 @@ object StreamPipeline {
     * (`README.md:107-131`) — a re-delivered or updated order REPLACES
     * its previous row instead of appending a duplicate.
     *
-    * State layout is a key-bucketed LSM-style store:
-    * `outDir/bucket=<hash(key) mod nBuckets>/gen=<batchId>`. Each
-    * micro-batch merges ONLY its affected buckets — read the bucket's
-    * latest committed generation, last-write-wins on `keyCol`, write a
-    * new generation, retire the old — so per-batch work scales with
-    * the touched key range, not total state, and buckets spread the
-    * merge across the cluster. Replay-idempotent: a replayed batch
-    * merges from generations strictly OLDER than its own batchId, so a
-    * crashed attempt's half-written generation is overwritten, never
-    * merged twice.
+    * The store is key-bucketed: `outDir/bucket=<hash(key) mod
+    * nBuckets>/gen=<batchId>`. Each bucket holds one BASE generation (a
+    * full snapshot) and the DELTA generations written since (each the
+    * newest row per key of the batches it covers); readers merge them
+    * newest-wins ([[readUpserted]]). A trigger writes only its own rows
+    * as deltas, and folds a bucket's deltas into a new base only once
+    * they outweigh it, so the amortized write per input row is a small
+    * constant however large the stored state grows ([[upsertBatch]]).
+    * Replay-idempotent: a replayed batch skips every bucket it already
+    * committed.
     *
-    * Sizing: each affected bucket is one merge job, so `nBuckets`
-    * should stay O(cluster parallelism) with bucket size set by state
-    * volume / nBuckets (a bucket's generation must be a comfortable
-    * job, not a tiny file). A key-space so hot that thousands of
-    * buckets are touched every batch wants the inverse layout —
-    * gen-major partitions with periodic compaction, i.e. a table
-    * format's MERGE — which this sink deliberately approximates from
-    * plain parquet primitives. */
+    * Sizing: all touched buckets commit in one Spark job, so `nBuckets`
+    * sets the files per trigger and the unit of compaction, not the
+    * number of jobs; keep it O(cluster parallelism). */
   def upsertEnriched(enriched: DataFrame, outDir: String, checkpointDir: String,
                      keyCol: String = "order_id",
                      nBuckets: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -156,54 +155,107 @@ object StreamPipeline {
   /** Marker written by the sink itself after a generation's parquet
     * write returns — NOT the committer's _SUCCESS, which a cluster may
     * disable (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`)
-    * and whose absence would then silently hide every generation. */
+    * and whose absence would then silently hide every generation. Its
+    * content describes the generation ([[Gen]]); it is written under a
+    * temporary name and renamed, so a reader never sees half of it. */
   private val CommitMarker = "_graft_commit"
 
-  private def allGens(fs: org.apache.hadoop.fs.FileSystem,
-                      bucketDir: org.apache.hadoop.fs.Path): Array[Long] =
-    if (fs.exists(bucketDir))
-      fs.listStatus(bucketDir).map(_.getPath.getName)
-        .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
-    else Array.empty[Long]
+  /** A bucket keeps at most this many live deltas: one more is merged
+    * with its newest peers (never into the base), see [[upsertBatch]]. */
+  private[graft] val DeltaCap = 8
 
-  /** Generations of a bucket whose write COMPLETED — a generation torn
-    * by a mid-write crash must be invisible to both merges and
-    * readers. */
-  private def committedGens(fs: org.apache.hadoop.fs.FileSystem,
-                            bucketDir: org.apache.hadoop.fs.Path): Array[Long] =
-    if (fs.exists(bucketDir))
-      fs.listStatus(bucketDir).map(_.getPath)
-        .filter(p => p.getName.startsWith("gen=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(p, CommitMarker)))
-        .map(_.getName.stripPrefix("gen=").toLong)
-    else Array.empty[Long]
+  /** One committed generation of a bucket, as its marker describes it.
+    * A base is a full snapshot of the bucket. A delta holds the newest
+    * row per key of batches `from`..`gen`; it supersedes any older delta
+    * of that range. `rows` is unknown (None) only for the empty markers
+    * of stores written before markers had content, which are bases. */
+  private final case class Gen(gen: Long, base: Boolean, key: Option[String],
+                               rows: Option[Long], from: Long) {
+    def render: String =
+      s"kind=${if (base) "base" else "delta"}\nkey=${key.get}\nrows=${rows.get}\nfrom=$from\n"
+  }
 
-  /** One merge-on-key commit (the foreachBatch body, exposed for
-    * replay tests). The generation merged FROM is retained until the
-    * NEXT batch supersedes it: deleting it eagerly would strand a
-    * replay — a batch that crashed after writing its generation but
-    * before its checkpoint commit re-runs, must merge from its
-    * pre-batch state again, and that state must still exist. Only
-    * generations older than the merge input are retired, so a bucket
-    * holds at most two generations.
+  private def parseGen(gen: Long, text: String): Gen = {
+    val kv = text.linesIterator.map(_.split("=", 2)).collect {
+      case Array(k, v) => k -> v
+    }.toMap
+    Gen(gen, !kv.get("kind").contains("delta"), kv.get("key"),
+      kv.get("rows").map(_.toLong), kv.get("from").fold(gen)(_.toLong))
+  }
+
+  /** Every generation directory of a bucket: its number and its marker,
+    * None when the write never committed (torn). */
+  private def listGens(fs: FileSystem, bucketDir: Path): Seq[(Long, Option[Gen])] =
+    if (!fs.exists(bucketDir)) Nil
+    else fs.listStatus(bucketDir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("gen="))
+      .map { p =>
+        val g = p.getName.stripPrefix("gen=").toLong
+        val marker =
+          try {
+            val in = fs.open(new Path(p, CommitMarker))
+            try Some(parseGen(g, new String(in.readAllBytes(), StandardCharsets.UTF_8)))
+            finally in.close()
+          } catch { case _: java.io.FileNotFoundException => None }
+        g -> marker
+      }
+
+  /** The generations a reader merges, base first: from the newest
+    * committed generation back, skipping every generation a merged delta
+    * covers, down to the first base. */
+  private def liveChain(committed: Seq[Gen]): List[Gen] = {
+    @scala.annotation.tailrec
+    def walk(rest: List[Gen], acc: List[Gen]): List[Gen] = rest match {
+      case g :: older =>
+        if (g.base) g :: acc else walk(older.dropWhile(_.gen >= g.from), g :: acc)
+      case Nil => acc
+    }
+    walk(committed.sortBy(-_.gen).toList, Nil)
+  }
+
+  /** Rows of a written generation, from its parquet footers (no job). */
+  private def parquetRows(fs: FileSystem, dir: Path): Long =
+    fs.listStatus(dir).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map { s =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, fs.getConf))
+        try r.getRecordCount finally r.close()
+      }.sum
+
+  /** One merge-on-key commit (the foreachBatch body, exposed for replay
+    * tests). Work is O(batch), amortized:
     *
-    * ALL affected buckets merge in ONE Spark job: the bucket is a pure
-    * function of the key, so prior-generation rows re-derive their
-    * bucket from the key instead of from their directory, the union of
-    * every bucket's fresh+prior rows goes through one (key)-partitioned
-    * window, and one dynamic-partition-overwrite write lands every
-    * `bucket=b/gen=batchId` directory. Commit latency is a single
-    * cluster-wide job, not a driver loop of per-bucket jobs. Markers
-    * are created only after the whole job returns, so a mid-write crash
-    * leaves every touched generation torn (invisible), exactly as
-    * before. */
+    *  - one `groupBy(bucket).count()` job finds the touched buckets;
+    *  - a bucket whose `gen=batchId` is already committed is skipped: it
+    *    is a replay of an applied batch, and foreachBatch re-delivers the
+    *    same rows under the same id;
+    *  - every other touched bucket writes `gen=batchId` as one of
+    *    - a BASE — base, live deltas and batch merged — once
+    *      `delta rows + batch rows >= base rows`. The base about doubles
+    *      at each compaction, so base rewrites cost about 2 rows written
+    *      per input row, on top of the row's own delta write;
+    *    - a DELTA of the batch's newest row per key. A bucket already at
+    *      [[DeltaCap]] deltas merges the batch with its newest delta and
+    *      each next-older one no larger than the merge so far (size
+    *      tiers, the logarithmic method): a merge never reads the base,
+    *      so the cap costs O(log(base / batch)) rewrites per row, not
+    *      O(state);
+    *  - in-key ties resolve newest first, then by the full payload
+    *    descending (deterministic under replay, unlike dropDuplicates);
+    *  - ALL buckets go out in ONE write job, one file per
+    *    bucket-generation, and the markers only after it returns: a
+    *    mid-write crash leaves every written generation torn (invisible)
+    *    and the replay overwrites it;
+    *  - after the markers, each touched bucket deletes its torn
+    *    generations and every generation its live chain no longer
+    *    reaches (older bases, merged deltas), so the store holds about
+    *    one copy of the data. */
   def upsertBatch(batch: DataFrame, outDir: String, batchId: Long,
                   keyCol: String = "order_id", nBuckets: Int = 8): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val fs = new Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataCols = batch.columns
     // the partitioned layout claims these names; a silent collision
     // would duplicate columns at the write (or worse, partition on the
@@ -214,80 +266,131 @@ object StreamPipeline {
     require(!dataCols.exists(c => reserved.exists(_.equalsIgnoreCase(c))),
       s"upsert batch columns ${dataCols.mkString(",")} collide with the " +
         s"sink's reserved names ${reserved.mkString(",")}")
-    val bucketOf = pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong))
-    val keyed = batch.withColumn("_bucket", bucketOf).persist()
+    def bucketDir(b: Long) = new Path(s"$outDir/bucket=$b")
+    def genDir(b: Long, g: Long) = new Path(s"$outDir/bucket=$b/gen=$g")
+    val keyed = batch.withColumn("_bucket", pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
+      .persist()
     try {
       // O(nBuckets) driver values, not data
-      val affected = keyed.select("_bucket").distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (affected.nonEmpty) {
-        // replay: merge only from generations committed BEFORE this batch
-        val mergedFrom: Map[Long, Long] = affected.flatMap { b =>
-          val gens = committedGens(fs, new Path(s"$outDir/bucket=$b"))
-            .filter(_ < batchId)
-          if (gens.nonEmpty) Some(b -> gens.max) else None
-        }.toMap
-        val fresh = keyed.withColumn("_pri", lit(1))
-        val all = if (mergedFrom.nonEmpty) {
-          val priorPaths = mergedFrom.toSeq.sortBy(_._1)
-            .map { case (b, g) => s"$outDir/bucket=$b/gen=$g" }
-          fresh.unionByName(
-            spark.read.parquet(priorPaths: _*)
-              .withColumn("_bucket", bucketOf)
-              .withColumn("_pri", lit(0)))
-        } else fresh
-        // last write wins per key; inside one batch the tie-break is the
-        // full payload (deterministic under replay, unlike dropDuplicates)
-        val w = Window.partitionBy(col(keyCol))
+      val counts = keyed.groupBy("_bucket").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val listed = counts.keys.map(b => b -> listGens(fs, bucketDir(b))).toMap
+      // a bucket to write: the generations merged into its `out`, and
+      // its live chain once `out` is committed
+      final case class Plan(bucket: Long, merged: List[Gen], out: Gen, chain: List[Gen])
+      val plans = counts.toSeq.sortBy(_._1).flatMap { case (b, n) =>
+        val committed = listed(b).flatMap(_._2)
+        if (committed.exists(_.gen == batchId)) None
+        else {
+          val chain = liveChain(committed.filter(_.gen < batchId))
+          val (bases, deltas) = chain.partition(_.base)
+          val baseRows = bases.map(g => g.rows.getOrElse(parquetRows(fs, genDir(b, g.gen)))).sum
+          val sizes = deltas.map(_.rows.get)
+          val isBase = sizes.sum + n >= baseRows
+          val merged =
+            if (isBase) chain
+            else if (deltas.size < DeltaCap) Nil
+            else {
+              // size tiers: the newest delta, then each next-older one
+              // no larger than the merge so far
+              var i = deltas.size - 1
+              var acc = n + sizes(i)
+              while (i > 0 && sizes(i - 1) <= acc) { i -= 1; acc += sizes(i) }
+              deltas.drop(i)
+            }
+          val from = if (isBase) batchId else merged.headOption.fold(batchId)(_.from)
+          val out = Gen(batchId, isBase, Some(keyCol), None, from)
+          Some(Plan(b, merged, out, chain.filterNot(merged.contains) :+ out))
+        }
+      }
+      if (plans.nonEmpty) {
+        val fresh = keyed.filter(col("_bucket").isin(plans.map(_.bucket): _*))
+          .withColumn("_pri", lit(batchId))
+        val stored = plans.flatMap(p => p.merged.map(g => genDir(p.bucket, g.gen).toString))
+        val rows = if (stored.isEmpty) fresh else fresh.unionByName(
+          spark.read.option("basePath", outDir).parquet(stored: _*)
+            .select(dataCols.map(col) :+ col("bucket").cast("long").as("_bucket")
+              :+ col("gen").cast("long").as("_pri"): _*))
+        // the bucket is a function of the key, so partitioning the window
+        // by (bucket, key) keeps it on the bucket exchange: one shuffle,
+        // and each task writes whole buckets
+        val w = Window.partitionBy(col("_bucket"), col(keyCol))
           .orderBy(col("_pri").desc +: dataCols.filterNot(_ == keyCol)
             .map(c => col(c).desc): _*)
-        all.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        rows.repartition(col("_bucket"))
+          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
           .select(dataCols.map(col) :+ col("_bucket").as("bucket")
             :+ lit(batchId).as("gen"): _*)
           .write.mode("overwrite")
           // truncate ONLY the (bucket, gen) partitions this job writes —
           // a replay overwrites its own torn generation; every other
-          // bucket's state is untouched
+          // generation is untouched
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket", "gen")
           .parquet(outDir)
-        affected.foreach { b =>
-          fs.create(new Path(s"$outDir/bucket=$b/gen=$batchId/$CommitMarker"), true)
-            .close()
+        plans.foreach { p =>
+          val dir = genDir(p.bucket, batchId)
+          val tmp = new Path(dir, s"$CommitMarker.tmp")
+          val os = fs.create(tmp, true)
+          try os.write(p.out.copy(rows = Some(parquetRows(fs, dir))).render
+            .getBytes(StandardCharsets.UTF_8))
+          finally os.close()
+          fs.rename(tmp, new Path(dir, CommitMarker))
         }
-        // retire every older generation EXCEPT the one just merged from
-        // (a replay of THIS batch still needs it) — including torn
-        // directories from crashed attempts, which would otherwise leak
-        affected.foreach { b =>
-          allGens(fs, new Path(s"$outDir/bucket=$b"))
-            .filter(g => g < batchId && !mergedFrom.get(b).contains(g))
-            .foreach(g => fs.delete(new Path(s"$outDir/bucket=$b/gen=$g"), true))
-        }
+      }
+      // retire, only after every marker is down: torn generations and
+      // generations no live chain reaches. Skipped buckets retire too —
+      // their first attempt may have crashed before this step.
+      val after = plans.map(p => p.bucket -> p.chain).toMap
+      counts.keys.foreach { b =>
+        val keep = after.getOrElse(b, liveChain(listed(b).flatMap(_._2))).map(_.gen).toSet
+        listed(b).map(_._1).filter(g => g < batchId && !keep(g))
+          .foreach(g => fs.delete(genDir(b, g), true))
       }
     } finally keyed.unpersist()
   }
 
-  /** Snapshot of the upserted store: the latest COMMITTED generation of
-    * every bucket — one row per key. Torn generations (no _SUCCESS) are
-    * skipped, so a reader racing a crashed writer sees the previous
-    * consistent state. */
+  /** Snapshot of the upserted store — one row per key: every bucket's
+    * live chain ([[upsertBatch]]) merged newest-wins. Torn generations
+    * (no marker) are skipped, so a reader racing a crashed writer sees
+    * the previous consistent state.
+    *
+    * Cost: a store without live deltas is a plain scan of the bases.
+    * Otherwise only the delta rows are shuffled (a window keeps each
+    * key's newest), and the bases stream through a left-anti join
+    * against a BROADCAST of the delta keys — the base is never
+    * shuffled, so a read costs O(base) scan + O(deltas) shuffle. */
   def readUpserted(spark: SparkSession, outDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.expressions.Window
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val latest =
+    val chains =
       if (fs.exists(root))
-        fs.listStatus(root).map(_.getPath)
+        fs.listStatus(root).toSeq.map(_.getPath)
           .filter(_.getName.startsWith("bucket="))
-          .flatMap { b =>
-            val gens = committedGens(fs, b)
-            if (gens.isEmpty) None else Some(s"$b/gen=${gens.max}")
-          }
-      else Array.empty[String]
+          .map(b => b -> liveChain(listGens(fs, b).flatMap(_._2)))
+      else Nil
+    def paths(base: Boolean) = chains.flatMap { case (b, chain) =>
+      chain.filter(_.base == base).map(g => s"$b/gen=${g.gen}") }
+    val (bases, deltas) = (paths(base = true), paths(base = false))
     // an uninitialized store (or one whose only write was torn) reads
     // as an empty frame, not an error — the previous consistent state
-    if (latest.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(latest.toIndexedSeq: _*)
+    if (bases.isEmpty && deltas.isEmpty) spark.emptyDataFrame
+    else if (deltas.isEmpty) spark.read.parquet(bases: _*)
+    else {
+      val keyCol = chains.flatMap(_._2).filterNot(_.base).flatMap(_.key).head
+      val d = spark.read.option("basePath", outDir).parquet(deltas: _*)
+      val cols = d.columns.filterNot(c => c == "bucket" || c == "gen").map(col)
+      val newest = d
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col(keyCol)).orderBy(col("gen").cast("long").desc)))
+        .filter(col("_rn") === 1).select(cols: _*)
+      // every chain ends in a base: a bucket's first write is one
+      val base = spark.read.parquet(bases: _*)
+      val keys = broadcast(d.select(col(keyCol).as("_k")))
+      base.join(keys, base(keyCol) <=> keys("_k"), "left_anti")
+        .select(cols: _*).unionByName(newest)
+    }
   }
 
   /** C18: serialize enriched rows back to Kafka-shaped (key, value)

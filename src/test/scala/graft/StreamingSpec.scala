@@ -7,8 +7,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.streaming.StreamPipeline
 import graft.operators.Windows
 import graft.gen.DataGen
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 case class OrderEvent(orderID: String, customerID: Long, amount: Long)
 case class DocEvent(doc_id: Long, text: String, lang: String,
@@ -161,7 +162,8 @@ class StreamingSpec extends AnyFunSuite {
     // the replay of batch 1 overwrites the torn dir and merges from gen=0
     StreamPipeline.upsertBatch(rows(("b", 2L, 20L)), out, 1L, nBuckets = 1)
     assert(StreamPipeline.readUpserted(spark, out).count() === 2)
-    // batch 2 retires gen=0 (merged-from gen=1 is retained for replay)
+    // batch 1 outweighed its base, so gen=1 is a new base and gen=0 is
+    // already retired; batch 2 adds a delta over it
     StreamPipeline.upsertBatch(rows(("a", 1L, 11L)), out, 2L, nBuckets = 1)
     val gens = Files.list(java.nio.file.Paths.get(out, "bucket=0")).iterator()
     val names = scala.collection.mutable.Buffer[String]()
@@ -186,6 +188,265 @@ class StreamingSpec extends AnyFunSuite {
       assert(snap.filter(col("order_id") === "o1")
         .select("purchase_amount").head.getLong(0) === 250L)
     } finally q.stop()
+  }
+
+  private def ls(d: Path): List[Path] = {
+    val s = Files.list(d)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val s = Files.walk(from)
+    try s.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally s.close()
+  }
+
+  private def deleteTree(d: Path): Unit = if (Files.exists(d)) {
+    val s = Files.walk(d)
+    try s.iterator().asScala.toList.reverse.foreach(Files.delete) finally s.close()
+  }
+
+  /** Every generation directory of an upsert store: (bucket, gen) → its
+    * marker's content, None when torn. */
+  private def storeGens(out: Path): Map[(Long, Long), Option[String]] =
+    if (!Files.exists(out)) Map.empty
+    else (for {
+      b <- ls(out) if b.getFileName.toString.startsWith("bucket=")
+      g <- ls(b) if g.getFileName.toString.startsWith("gen=")
+    } yield {
+      val m = g.resolve("_graft_commit")
+      (b.getFileName.toString.stripPrefix("bucket=").toLong,
+        g.getFileName.toString.stripPrefix("gen=").toLong) ->
+        (if (Files.exists(m)) Some(Files.readString(m)) else None)
+    }).toMap
+
+  private def markerField(marker: String, k: String): String =
+    marker.linesIterator.collectFirst { case l if l.startsWith(s"$k=") => l.drop(k.length + 1) }
+      .getOrElse(fail(s"marker has no $k: $marker"))
+
+  /** Leaves `out` as a crash inside batch `id` would: every generation the
+    * batch writes is on disk, but only buckets `keep` accepts got their
+    * marker, and nothing was retired. The batch's write is a function of
+    * the store and its rows, so a full run supplies the generations. */
+  private def crashAfterWrite(out: Path, id: Long, keep: Long => Boolean)(run: => Unit): Unit = {
+    val pre = out.resolveSibling(s"${out.getFileName}-pre")
+    deleteTree(pre)
+    if (Files.exists(out)) copyTree(out, pre) else Files.createDirectories(pre)
+    run
+    for (((b, g), _) <- storeGens(out) if g == id) {
+      val t = pre.resolve(s"bucket=$b").resolve(s"gen=$g")
+      copyTree(out.resolve(s"bucket=$b").resolve(s"gen=$g"), t)
+      if (!keep(b)) {
+        Files.delete(t.resolve("_graft_commit"))
+        Files.deleteIfExists(t.resolve("._graft_commit.crc"))
+      }
+    }
+    deleteTree(out)
+    Files.move(pre, out)
+  }
+
+  test("upsert sink equals a last-write-wins model under replays, crashes and compactions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    for (nBuckets <- Seq(1, 8); keyCol <- Seq("order_id", "fp")) {
+      val ctx = s"nBuckets=$nBuckets keyCol=$keyCol"
+      val out = Files.createTempDirectory("graft-upsert-model").resolve("store")
+      // the curate path appends its key `fp` last; the order sink leads with `order_id`
+      val cols = if (keyCol == "fp") Seq("n", "s", "fp") else Seq("order_id", "n", "s")
+      val schema = StructType(cols.map(c => StructField(c, if (c == "n") LongType else StringType)))
+      def frame(rows: Seq[(String, Long, String)]) = spark.createDataFrame(
+        rows.map { case (k, n, s) =>
+          Row.fromSeq(cols.map { case "n" => n; case "s" => s; case _ => k })
+        }.asJava, schema)
+      // reference: per key the last batch's row; inside a batch the
+      // largest payload (n, s), the sink's documented tie-break
+      val model = scala.collection.mutable.Map.empty[String, (Long, String)]
+      def applyModel(rows: Seq[(String, Long, String)]): Unit =
+        rows.groupBy(_._1).foreach { case (k, rs) => model(k) = rs.map(r => (r._2, r._3)).max }
+      def check(when: String): Unit = {
+        val got = StreamPipeline.readUpserted(spark, out.toString)
+          .select(keyCol, "n", "s").as[(String, Long, String)].collect()
+        assert(got.length === model.size, s"$ctx $when: ${got.length} rows for ${model.size} keys")
+        assert(got.map(r => r._1 -> (r._2, r._3)).toMap === model.toMap, s"$ctx $when")
+      }
+      val rnd = new scala.util.Random(nBuckets * 31 + keyCol.length)
+      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+      def row(k: String) = (k, rnd.nextInt(4).toLong, rnd.alphanumeric.take(1).mkString)
+      // a first batch of 30 keys per bucket, then small batches: 70% new
+      // keys, 30% re-deliveries, some keys twice in one batch
+      def batch(id: Int): Seq[(String, Long, String)] =
+        (0 until (if (id == 0) 30 * nBuckets else 2 + rnd.nextInt(3 * nBuckets))).flatMap { _ =>
+          val k =
+            if (keys.nonEmpty && rnd.nextInt(10) < 3) keys(rnd.nextInt(keys.size))
+            else { keys += s"k${keys.size}"; keys.last }
+          if (rnd.nextInt(10) == 0) Seq(row(k), row(k)) else Seq(row(k))
+        }
+      val torn = Set(5, 19)
+      val someMarkers = Set(9, 27)
+      val allMarkers = Set(13, 30)
+      val replayed = Set(3, 11, 22, 33)
+      var compacted, tiered = false
+      for (id <- 0 until 34) {
+        val rows = batch(id)
+        val df = frame(rows)
+        def run(): Unit = StreamPipeline.upsertBatch(df, out.toString, id, keyCol, nBuckets)
+        if (torn(id)) {
+          // a crash mid-write left a half-written generation behind
+          val t = out.resolve("bucket=0").resolve(s"gen=$id")
+          Files.createDirectories(t)
+          Files.writeString(t.resolve("part-00000.parquet"), "not parquet")
+          check(s"torn gen=$id")
+          run()
+          applyModel(rows)
+        } else if (someMarkers(id) || allMarkers(id)) {
+          crashAfterWrite(out, id, b => allMarkers(id) || b % 2 == 1)(run())
+          if (allMarkers(id)) {
+            applyModel(rows)
+            check(s"batch $id committed, not retired")
+          }
+          run() // the replay: skips committed buckets, writes the rest, retires
+          applyModel(rows)
+        } else {
+          run()
+          applyModel(rows)
+        }
+        check(s"after batch $id")
+        if (replayed(id)) {
+          run()
+          check(s"replay of batch $id")
+        }
+        storeGens(out).foreach {
+          case ((_, g), Some(m)) if g == id =>
+            compacted |= id > 0 && markerField(m, "kind") == "base"
+            tiered |= markerField(m, "kind") == "delta" && markerField(m, "from").toLong < id
+          case _ =>
+        }
+      }
+      assert(compacted && tiered, s"$ctx: compactions=$compacted, tiered delta merges=$tiered")
+    }
+  }
+
+  test("upsert sink work is O(batch) amortized: rows written per input row and generations stay bounded") {
+    val out = Files.createTempDirectory("graft-upsert-amortized").resolve("store")
+    var next = 0
+    def batch(n: Int) = {
+      val rows = (next until next + n).map(i => (s"o$i", (i % 97).toLong, i.toLong))
+      next += n
+      rows.toDF("order_id", "customer_id", "amount")
+    }
+    val per = 80
+    // grown first, like a store a stream has fed for a while: the window
+    // holds its first compaction and the tiered delta merges after it
+    StreamPipeline.upsertBatch(batch(16 * per), out.toString, 0L)
+    val written = (1 to 40).map { id =>
+      val df = batch(per)
+      def run(): Unit = StreamPipeline.upsertBatch(df, out.toString, id.toLong)
+      // trigger 9 is the first over the delta cap; it crashes before
+      // retiring, and its replay must still retire what its merge covers
+      if (id == 9) crashAfterWrite(out, id, _ => true)(run())
+      run()
+      val gens = storeGens(out)
+      gens.groupBy(_._1._1).foreach { case (b, gs) =>
+        assert(gs.size <= StreamPipeline.DeltaCap + 1,
+          s"bucket $b holds ${gs.size} generations after trigger $id")
+      }
+      gens.collect { case ((_, g), Some(m)) if g == id => markerField(m, "rows").toLong }.sum
+    }
+    def ratio(ws: Seq[Long]) = ws.sum.toDouble / (ws.size * per)
+    val (first, second) = written.splitAt(20)
+    assert(ratio(written) <= 3.0, s"rows written per input row ${ratio(written)}: $written")
+    assert(ratio(second) <= ratio(first),
+      s"second half ${ratio(second)} above first half ${ratio(first)}: $written")
+    assert(StreamPipeline.readUpserted(spark, out.toString).count() === 56 * per)
+  }
+
+  test("upsert sink merges an over-cap delta with its newest similar-sized peers, never the base") {
+    val out = Files.createTempDirectory("graft-upsert-tiers").resolve("store")
+    var next = 0
+    def upsert(n: Int, id: Long): Unit = {
+      StreamPipeline.upsertBatch((next until next + n).map(i => (s"o$i", 1L, i.toLong))
+        .toDF("order_id", "customer_id", "amount"), out.toString, id, nBuckets = 1)
+      next += n
+    }
+    upsert(1000, 0L)
+    // one large delta, then small ones up to the cap
+    val sizes = 100 +: Seq.fill(StreamPipeline.DeltaCap - 1)(10)
+    sizes.zipWithIndex.foreach { case (n, i) => upsert(n, i + 1L) }
+    val last = sizes.size + 1L
+    upsert(10, last)
+    val gens = storeGens(out)
+    // the small deltas and the batch fold into one; the 100-row delta
+    // and the base are left as they were
+    assert(gens.keySet === Set((0L, 0L), (0L, 1L), (0L, last)))
+    val m = gens((0L, last)).get
+    assert(markerField(m, "kind") === "delta")
+    assert(markerField(m, "rows").toLong === 10L * StreamPipeline.DeltaCap)
+    assert(markerField(m, "from").toLong === 2L)
+    assert(StreamPipeline.readUpserted(spark, out.toString).count() === next.toLong)
+  }
+
+  test("upsert reader: deltas merge through a broadcast anti-join, the base is never shuffled") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val out = Files.createTempDirectory("graft-upsert-plan").resolve("store").toString
+    def rows(t: Seq[(String, Long, Long)]) = t.toDF("order_id", "customer_id", "amount")
+    val h = new AdaptiveSparkPlanHelper {}
+    // bases are read without partition columns, deltas with them
+    val baseScan: SparkPlan => Boolean = {
+      case s: FileSourceScanExec => s.relation.partitionSchema.isEmpty
+      case _ => false
+    }
+    StreamPipeline.upsertBatch(rows((0 until 64).map(i => (s"k$i", i.toLong, i.toLong))), out, 0L)
+    val plain = StreamPipeline.readUpserted(spark, out)
+    assert(plain.count() === 64)
+    val p0 = plain.queryExecution.executedPlan
+    assert(h.find(p0)(baseScan).isDefined)
+    assert(h.collect(p0) { case j: BaseJoinExec => j; case w: WindowExec => w }.isEmpty, p0)
+    // a few updates and inserts: deltas over every base
+    StreamPipeline.upsertBatch(rows((0 until 8).map(i => (s"k${i * 8}", 0L, 1000L + i)) ++
+      Seq(("new1", 1L, 1L), ("new2", 2L, 2L))), out, 1L)
+    val snap = StreamPipeline.readUpserted(spark, out)
+    val got = snap.as[(String, Long, Long)].collect()
+    assert(got.length === 66)
+    assert(got.count(_._3 >= 1000L) === 8)
+    val plan = snap.queryExecution.executedPlan
+    assert(h.collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }.nonEmpty, plan)
+    assert(h.find(plan)(baseScan).isDefined, plan)
+    val shuffled = h.collect(plan) { case e: ShuffleExchangeLike => e }
+      .filter(e => h.find(e)(baseScan).isDefined)
+    assert(shuffled.isEmpty, plan)
+  }
+
+  test("upsert sink reads and continues a store written with empty markers (two full generations)") {
+    val out = Files.createTempDirectory("graft-upsert-legacy").resolve("store")
+    // the earlier layout: each batch rewrote the bucket's whole state as a
+    // new generation, kept the previous one and marked both with an empty
+    // _graft_commit
+    def legacyGen(gen: Long, t: Seq[(String, Long, Long)]): Unit = {
+      t.toDF("order_id", "customer_id", "amount")
+        .withColumn("bucket", lit(0L)).withColumn("gen", lit(gen))
+        .write.mode("append").partitionBy("bucket", "gen").parquet(out.toString)
+      Files.createFile(out.resolve("bucket=0").resolve(s"gen=$gen").resolve("_graft_commit"))
+    }
+    val g0 = Seq(("a", 1L, 10L), ("b", 2L, 20L), ("c", 3L, 30L), ("d", 4L, 40L))
+    val g1 = Seq(("a", 1L, 11L), ("b", 2L, 20L), ("c", 3L, 30L), ("d", 4L, 40L), ("e", 5L, 50L))
+    legacyGen(0L, g0)
+    legacyGen(1L, g1)
+    def snap() = StreamPipeline.readUpserted(spark, out.toString)
+      .as[(String, Long, Long)].collect().toSet
+    assert(snap() === g1.toSet)
+    StreamPipeline.upsertBatch(Seq(("b", 2L, 21L), ("f", 6L, 60L))
+      .toDF("order_id", "customer_id", "amount"), out.toString, 2L, nBuckets = 1)
+    assert(snap() === (g1.filterNot(_._1 == "b") ++ Seq(("b", 2L, 21L), ("f", 6L, 60L))).toSet)
+    // the old base gen=1 stays under the new delta; gen=0 is retired
+    assert(storeGens(out).keySet === Set((0L, 1L), (0L, 2L)))
   }
 
   test("streaming dedup keeps one row per order id within the watermark") {

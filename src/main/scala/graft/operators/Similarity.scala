@@ -2484,7 +2484,6 @@ object Similarity {
   def pqCodesAgainstOnVectors(vecs: DataFrame,
                               codebook: Seq[(Int, Long, Seq[Double])],
                               m: Int = 8, dims: Int = 64): DataFrame = {
-    val spark = vecs.sparkSession
     val subs = subvectors(vecs, m, dims / m)
     argminCode(subs, codebook)
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
@@ -2517,7 +2516,6 @@ object Similarity {
     * by the ADC top-k and the re-ranked search. */
   private def adcRanked(embeddings: DataFrame, m: Int, k: Int,
                         rounds: Int, dims: Int, nQueries: Int): DataFrame = {
-    val spark = embeddings.sparkSession
     val pq = trainPqModel(embeddings, m, k, rounds, dims)
     val codes = argminCode(subvectors(withVec(embeddings), m, dims / m), pq)
       .select(col("vec_id"), col("sub"), col("code"))
@@ -2594,7 +2592,6 @@ object Similarity {
   def annIvfPq(embeddings: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
                m: Int = 8, kCodes: Int = 16, dims: Int = 64,
                nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
     val all = withVec(embeddings)
     val cmodel = trainIvfModel(embeddings, nCells, trainRounds)
     val pq = trainPqModel(embeddings, m, kCodes, trainRounds, dims)
@@ -2649,7 +2646,6 @@ object Similarity {
   def annIvfPqOnVectors(vecs: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
                         m: Int = 8, kCodes: Int = 16, dims: Int = 64,
                         nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
     val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
     val cmodel = kmeansCentroids(all, nCells, trainRounds)
     val pq = trainPqModelOnVectors(vecs, m, kCodes, trainRounds, dims)
@@ -2775,7 +2771,6 @@ object Similarity {
   def resPqCodesAgainst(embeddings: DataFrame, cmodel: Seq[(Long, Seq[Double])],
                         codebook: Seq[(Int, Long, Seq[Double])],
                         m: Int = 8, dims: Int = 64): DataFrame = {
-    val spark = embeddings.sparkSession
     val resv = residualVectors(withVec(embeddings), cmodel)
     argminCode(subvectors(resv, m, dims / m), codebook)
       .select(col("vec_id"), col("sub"), col("code"))
@@ -2797,7 +2792,6 @@ object Similarity {
   def annIvfPqRes(embeddings: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
                   m: Int = 8, kCodes: Int = 16, dims: Int = 64,
                   nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
     val all = withVec(embeddings)
     val cmodel = trainIvfModel(embeddings, nCells, trainRounds)
     val resv = residualVectors(all, cmodel)
@@ -2875,7 +2869,6 @@ object Similarity {
                          codebook: Seq[(Int, Long, Seq[Double])],
                          m: Int = 8, dims: Int = 64, nQueries: Int = 20,
                          k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
     val all = withVec(embeddings)
     val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
     val codes = argminCode(subvectors(all, m, dims / m), codebook)
@@ -2893,7 +2886,6 @@ object Similarity {
                                   m: Int = 8, dims: Int = 64,
                                   nQueries: Int = 20, k: Int = 3,
                                   nProbe: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
     val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
     val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
     val codes = argminCode(subvectors(all, m, dims / m), codebook)
@@ -2908,7 +2900,6 @@ object Similarity {
                          codebook: Seq[(Int, Long, Seq[Double])],
                          m: Int = 8, dims: Int = 64,
                          nQueries: Int = 20, kNn: Int = 3): DataFrame = {
-    val spark = embeddings.sparkSession
     val codes = argminCode(subvectors(withVec(embeddings), m, dims / m), codebook)
       .select(col("vec_id"), col("sub"), col("code"))
     pqAdcTopKOnCodes(embeddings, codes, codebook, m, dims, nQueries, kNn)
@@ -2920,7 +2911,6 @@ object Similarity {
                             codebook: Seq[(Int, Long, Seq[Double])],
                             m: Int = 8, dims: Int = 64, nQueries: Int = 20,
                             shortlist: Int = 64, kNn: Int = 3): DataFrame = {
-    val spark = embeddings.sparkSession
     val codes = argminCode(subvectors(withVec(embeddings), m, dims / m), codebook)
       .select(col("vec_id"), col("sub"), col("code"))
     val vecs = withVec(embeddings)
@@ -2950,7 +2940,6 @@ object Similarity {
                             codebook: Seq[(Int, Long, Seq[Double])],
                             m: Int = 8, dims: Int = 64, nQueries: Int = 20,
                             k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
     val all = withVec(embeddings)
     val resv = residualVectors(all, cmodel)
     val asg = resv.select(col("vec_id"), col("cell"))
@@ -2985,7 +2974,6 @@ object Similarity {
                            trainRounds: Int = 2, m: Int = 8, kCodes: Int = 16,
                            dims: Int = 64, nQueries: Int = 20, k: Int = 3,
                            nProbe: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
     val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
     val cmodel = kmeansCentroids(all, nCells, trainRounds)
     val resv = residualVectors(all, cmodel)
@@ -3006,7 +2994,6 @@ object Similarity {
                                      m: Int = 8, dims: Int = 64,
                                      nQueries: Int = 20, k: Int = 3,
                                      nProbe: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
     val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
     val resv = residualVectors(all, cmodel)
     val asg = resv.select(col("vec_id"), col("cell"))
@@ -3032,7 +3019,6 @@ object Similarity {
                                  cmodel: Seq[(Long, Seq[Double])],
                                  codebook: Seq[(Int, Long, Seq[Double])],
                                  m: Int = 8, dims: Int = 64): DataFrame = {
-    val spark = vecs.sparkSession
     val resv = residualVectors(
       vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v")))), cmodel)
     argminCode(subvectors(resv, m, dims / m), codebook)

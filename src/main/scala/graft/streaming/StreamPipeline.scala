@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.functions.{OrderEventDecode, SeededUuid}
 import graft.operators.Enrich
 import graft.sources.Tables
 
@@ -58,10 +59,25 @@ object StreamPipeline {
     * the connector adds) → typed order events. Factored out of
     * [[KafkaOrders]] so the decode contract is spec-testable offline —
     * the container has no broker or Kafka jars, so this function IS the
-    * part of the consume path that can regress silently. */
+    * part of the consume path that can regress silently.
+    *
+    * The result is exactly `from_json(value.cast("string"),
+    * orderEventSchema)`, which stays the one definition of the
+    * semantics. In front of it runs [[graft.functions.OrderEventDecode]],
+    * a byte-level parse of the producer's canonical JSON that skips
+    * Spark's per-row reader and Jackson setup. It accepts only a strict
+    * subset — one object of the keys `orderID` (printable ASCII string,
+    * no escapes), `customerID` and `amount` (integers
+    * `-?(0|[1-9][0-9]{0,17})`), each at most once, with JSON whitespace
+    * around tokens — and returns null for anything else (BOM, non-ASCII,
+    * `null`, nested values, duplicate or unknown keys, leading zeros,
+    * fractions, exponents, trailing bytes), which `coalesce` then hands
+    * to `from_json`. Inside the subset both give the same struct. */
   def decodeOrderBytes(kafkaRows: DataFrame): DataFrame =
     kafkaRows
-      .select(from_json(col("value").cast("string"), Tables.orderEventSchema).as("o"))
+      .select(coalesce(
+        OrderEventDecode.decode_order_event(col("value").cast("binary")),
+        from_json(col("value").cast("string"), Tables.orderEventSchema)).as("o"))
       .select("o.*")
 
   /** C5 as a stream: JSON-lines files appearing in a directory — the
@@ -111,14 +127,21 @@ object StreamPipeline {
     * again before its checkpoint committed) overwrites its previous
     * attempt instead of appending duplicates — the idempotence that
     * makes foreachBatch exactly-once. `coalesceTo` caps files per
-    * batch (tiny-file control at scale). */
+    * batch (tiny-file control at scale).
+    *
+    * No per-batch value may enter generated code: Spark caches compiled
+    * classes by their source text, so a batch id or seed written into
+    * the source compiles the whole stage again every trigger. `uuid()`
+    * inlines its seed; [[graft.functions.SeededUuid]] draws the same v4
+    * ids from a fresh per-batch seed passed through `references[]`, so
+    * ids stay distinct across batches and the code is reused. */
   def writeEnriched(enriched: DataFrame, outDir: String, checkpointDir: String,
                     coalesceTo: Int = 4): DataStreamWriter[org.apache.spark.sql.Row] =
     enriched.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("id", expr("uuid()"))
+        batch.withColumn("id", SeededUuid.seeded_uuid(scala.util.Random.nextLong()))
           .repartition(coalesceTo, col("customer_id"))
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
@@ -250,7 +273,13 @@ object StreamPipeline {
     *  - after the markers, each touched bucket deletes its torn
     *    generations and every generation its live chain no longer
     *    reaches (older bases, merged deltas), so the store holds about
-    *    one copy of the data. */
+    *    one copy of the data.
+    *
+    * Steady-state triggers reuse compiled code: Spark caches generated
+    * classes by source text, and a long literal is inlined there, so
+    * `batchId` must not appear as one. Fresh rows rank with a constant
+    * above every stored generation, and the `gen` partition value is a
+    * string literal, which generated code reads from `references[]`. */
   def upsertBatch(batch: DataFrame, outDir: String, batchId: Long,
                   keyCol: String = "order_id", nBuckets: Int = 8): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -304,8 +333,13 @@ object StreamPipeline {
         }
       }
       if (plans.nonEmpty) {
-        val fresh = keyed.filter(col("_bucket").isin(plans.map(_.bucket): _*))
-          .withColumn("_pri", lit(batchId))
+        // filter only when a bucket is skipped, so the bucket list
+        // reaches generated code only on replays
+        val written =
+          if (plans.size == counts.size) keyed
+          else keyed.filter(col("_bucket").isin(plans.map(_.bucket): _*))
+        // every stored generation is older than batchId < Long.MaxValue
+        val fresh = written.withColumn("_pri", lit(Long.MaxValue))
         val stored = plans.flatMap(p => p.merged.map(g => genDir(p.bucket, g.gen).toString))
         val rows = if (stored.isEmpty) fresh else fresh.unionByName(
           spark.read.option("basePath", outDir).parquet(stored: _*)
@@ -320,7 +354,7 @@ object StreamPipeline {
         rows.repartition(col("_bucket"))
           .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
           .select(dataCols.map(col) :+ col("_bucket").as("bucket")
-            :+ lit(batchId).as("gen"): _*)
+            :+ lit(batchId.toString).as("gen"): _*)
           .write.mode("overwrite")
           // truncate ONLY the (bucket, gen) partitions this job writes —
           // a replay overwrites its own torn generation; every other

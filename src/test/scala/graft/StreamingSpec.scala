@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.streaming.StreamPipeline
+import graft.functions.{OrderEventDecode, SeededUuid}
 import graft.operators.Windows
 import graft.gen.DataGen
 import java.nio.file.{Files, Path}
@@ -665,6 +666,191 @@ class StreamingSpec extends AnyFunSuite {
         .select("order_id", "customer_name").as[(String, String)].head() ===
         (("k1", "Walker Wong")))
     } finally q.stop()
+  }
+
+  /** Runs `body` with the given session confs, restoring them after. */
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Decode fuzz inputs, each tagged with its kind: the producer's
+    * canonical bytes, other inputs inside the fast path's subset,
+    * mutations of canonical bytes, random token soup, and hand-picked
+    * cases the fast path must leave to `from_json`. */
+  private def decodeFuzz(seed: Long, n: Int): Seq[(String, Array[Byte])] = {
+    val rnd = new java.util.SplittableRandom(seed)
+    def pick[T](xs: IndexedSeq[T]): T = xs(rnd.nextInt(xs.size))
+    def uuid() = new java.util.UUID(rnd.nextLong(), rnd.nextLong()).toString
+    def canon() =
+      s"""{"orderID":"${uuid()}","customerID":${1 + rnd.nextInt(10000)},"amount":${20 + rnd.nextInt(480)}}"""
+    val ws = IndexedSeq("", "", " ", "\t", "\n", "\r\n", "  ")
+    val printable = (0x20 to 0x7e).map(_.toChar).filterNot(c => c == '"' || c == '\\')
+    val bigNums = IndexedSeq("0", "-0", "7", "-7", "123456789012345678", "-999999999999999999")
+    def inSubset(): String = {
+      val id = if (rnd.nextInt(4) == 0) "" else
+        Seq.fill(1 + rnd.nextInt(40))(pick(printable)).mkString
+      val fields = rnd.nextInt(3) match {
+        case 0 => Seq(s""""orderID":"$id"""", s""""customerID":${pick(bigNums)}""",
+          s""""amount":${rnd.nextLong(-1000, 1000)}""")
+        case 1 => Seq(s""""orderID"${pick(ws)}:${pick(ws)}"${uuid()}"""",
+          s""""amount":${1 + rnd.nextInt(500)}""")
+        case _ => Seq(s""""customerID":${pick(bigNums)}""")
+      }
+      val shuffled = scala.util.Random.javaRandomToRandom(new java.util.Random(rnd.nextLong()))
+        .shuffle(fields)
+      pick(ws) + "{" + pick(ws) + shuffled.mkString(pick(ws) + "," + pick(ws)) + pick(ws) + "}" + pick(ws)
+    }
+    val soupBytes = IndexedSeq("{", "}", "[", "]", ":", ",", "\"", "\\", "-", ".", "e", "E",
+      "0", "1", "9", " ", "\t", "\n", "\r", "n", "u", "l", "a", "\u0000", "é").map(_.getBytes("UTF-8")) ++
+      IndexedSeq(Array(0xEF, 0xBB, 0xBF), Array(0xC3), Array(0xFF), Array(0x80)).map(_.map(_.toByte))
+    def mutate(b: Array[Byte]): Array[Byte] = {
+      var out = b
+      (0 to rnd.nextInt(3)).foreach { _ =>
+        val at = rnd.nextInt(out.length + 1)
+        out = rnd.nextInt(3) match {
+          case 0 => out.take(at) ++ pick(soupBytes) ++ out.drop(at)
+          case 1 => out.take(at) ++ out.drop(at + 1)
+          case _ if at < out.length =>
+            out.updated(at, (if (rnd.nextBoolean()) rnd.nextInt(256) else pick(soupBytes).head).toByte)
+          case _ => out.take(at)
+        }
+      }
+      out
+    }
+    val tokens = IndexedSeq("{", "}", "[", "]", ":", ",", "\"orderID\"", "\"customerID\"", "\"amount\"",
+      "\"OrderID\"", "\"orderid\"", "\"AMOUNT\"", "\"order\\u0049D\"", "\"x\"", "\"a\\\"b\"", "\"\\u0041\"",
+      "null", "true", "false", "0", "-0", "01", "-01", "12", "-7", "1.5", "1e3", "1E+3", "-",
+      "123456789012345678", "1234567890123456789", "99999999999999999999", "NaN", "'orderID'",
+      "\"é\"", " ", "\t", "\n", "//c\n", "/*c*/")
+    def soup(): Array[Byte] =
+      if (rnd.nextInt(3) == 0) Seq.fill(rnd.nextInt(12))(pick(soupBytes)).flatten.toArray
+      else Seq.fill(rnd.nextInt(14))(pick(tokens)).mkString.getBytes("UTF-8")
+    val c = """{"orderID":"a","customerID":1,"amount":2}"""
+    val cases = IndexedSeq(
+      "\uFEFF" + c, c.replace("\"a\"", "\"é\""), c.replace("\"a\"", "\"a\\\"b\""),
+      c.replace("\"a\"", "\"a\\\\b\""), c.replace("\"a\"", "\"\\u0041\""), c.replace("\"a\"", "\"a\\nb\""),
+      c.replace("\"a\"", "null"), c.replace(":1,", ":null,"), c.replace(":2}", ":null}"),
+      c.replace(":1,", ":{\"x\":1},"), c.replace(":2}", ":[2]}"), c.replace("\"a\"", "{}"),
+      c.replace(":1,", ":1234567890123456789,"), c.replace(":2}", ":-9223372036854775808}"),
+      c.replace(":2}", ":99999999999999999999}"), c.replace(":1,", ":01,"), c.replace(":2}", ":-00}"),
+      c.replace(":2}", ":2.0}"), c.replace(":2}", ":2e0}"), c.replace(":2}", ":2E2}"),
+      c.replace(":1,", ":\"1\","), c.replace(":2}", ":true}"),
+      c.replace("}", ",\"amount\":3}"), c.replace("\"orderID\"", "\"OrderID\""),
+      c.replace("\"amount\"", "\"Amount\""), c.replace("}", ",\"extra\":5}"),
+      c + "x", c + c, c + ",", c + " \n", c.replace(",", ",,"), c.replace("}", ",}"),
+      "{'orderID':'a'}", "{}", " { } ", "", "   ", "[]", "[" + c + "]", "null", "{\"orderID\":\"a\"",
+      c.replace("\"a\"", "\"\u0001\""), c.replace("\"a\"", "\"\u007f\""),
+      c.replace("\"a\"", "\"" + "x" * (OrderEventDecode.MaxIdBytes + 1) + "\""),
+      c.replace("\"a\"", "\"" + "x" * OrderEventDecode.MaxIdBytes + "\"")
+    ).map(_.getBytes("UTF-8")) ++ IndexedSeq(
+      c.getBytes("UTF-8").updated(12, 0xC3.toByte), c.getBytes("UTF-16"), c.getBytes("UTF-16LE"), null)
+    cases.map("case" -> _) ++ Seq.fill(n - cases.size) {
+      rnd.nextInt(10) match {
+        case 0 | 1 => "canonical" -> canon().getBytes("UTF-8")
+        case 2 | 3 => "subset" -> inSubset().getBytes("UTF-8")
+        case 4 | 5 | 6 => "mutated" -> mutate(canon().getBytes("UTF-8"))
+        case 7 => "mutated" -> mutate(inSubset().getBytes("UTF-8"))
+        case _ => "soup" -> soup()
+      }
+    }
+  }
+
+  test("order-event decode: the byte-level fast path equals from_json row for row (fuzz, codegen and interpreted)") {
+    val dir = Files.createTempDirectory("graft-decode-fuzz")
+    val inputs = decodeFuzz(20261017L, 30000) ++ decodeFuzz(7L, 30000)
+    // materialized, so the optimizer cannot fold the input into eval
+    inputs.toDF("kind", "value").coalesce(1).write.parquet(dir.resolve("in").toString)
+    val src = spark.read.parquet(dir.resolve("in").toString)
+    val fromJson = from_json(col("value").cast("string"), graft.sources.Tables.orderEventSchema)
+    // from_json has no generated code, so the decode projection runs
+    // outside whole-stage codegen as a compiled UnsafeProjection:
+    // CODEGEN_ONLY forbids its interpreted fallback (the kernel's
+    // doGenCode runs), NO_CODEGEN forces it (the kernel's eval runs)
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+      withConfs("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> wholeStage) {
+        val decoded = StreamPipeline.decodeOrderBytes(src)
+        val got = decoded.collect()
+        val want = src.select(fromJson.as("o")).select("o.*").collect()
+        assert(got.length === inputs.size)
+        got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+          assert(g === w, s"$mode: input $i ${Option(inputs(i)._2).map(new String(_, "UTF-8"))}")
+        }
+        // where the kernel answers, it answers exactly from_json's struct
+        val pairs = src.select(col("kind"),
+          OrderEventDecode.decode_order_event(col("value")).as("k"), fromJson.as("j")).collect()
+        pairs.foreach(r => if (!r.isNullAt(1)) assert(r.get(1) === r.get(2)))
+        // the producer's wire bytes always take the fast path
+        assert(pairs.filter(_.getString(0) == "canonical").forall(!_.isNullAt(1)))
+        val fast = pairs.count(!_.isNullAt(1))
+        assert(fast > inputs.size / 4 && fast < inputs.size - inputs.size / 4, s"fast path taken $fast times")
+      }
+  }
+
+  test("sinks reuse compiled code: steady-state triggers of both sinks compile nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sc = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-codegen-reuse")
+    // compiles added by 3 same-shape triggers after one warm-up trigger
+    def steadyCompiles(name: String,
+        sink: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row]): Long = {
+      val mem = MemoryStream[OrderEvent]
+      val q = sink(graft.operators.Enrich.enrichReference(mem.toDF(), customersHead)).start()
+      try {
+        var next = 0
+        def trigger(n: Int): Unit = {
+          mem.addData((next until next + n).map(i => OrderEvent(s"$name$i", 1 + i % 5, 20 + i % 480)))
+          next += n
+          q.processAllAvailable()
+        }
+        // a large first trigger: the 3 small ones after it stay deltas
+        // of the upsert store, never a compaction
+        trigger(400)
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (1 to 3).foreach(_ => trigger(40))
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      } finally q.stop()
+    }
+    val append = steadyCompiles("a", StreamPipeline.writeEnriched(_,
+      dir.resolve("append").toString, dir.resolve("append-ck").toString))
+    val upsert = steadyCompiles("u", StreamPipeline.upsertEnriched(_,
+      dir.resolve("upsert").toString, dir.resolve("upsert-ck").toString))
+    assert((append, upsert) === ((0L, 0L)))
+    // the triggers really went through the delta path
+    assert(StreamPipeline.readUpserted(spark, dir.resolve("upsert").toString).count() === 520)
+  }
+
+  test("append sink ids are v4 UUIDs, disjoint across identically partitioned batches") {
+    implicit val sc = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-ids")
+    val out = dir.resolve("out").toString
+    val mem = MemoryStream[OrderEvent]
+    val q = StreamPipeline.writeEnriched(
+      graft.operators.Enrich.enrichReference(mem.toDF(), customersHead), out,
+      dir.resolve("ck").toString).start()
+    try {
+      (0 until 2).foreach { b =>
+        mem.addData((0 until 200).map(i => OrderEvent(s"$b-$i", 1 + i % 5, 20 + i % 480)))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val ids = (0 until 2).map(b =>
+      spark.read.parquet(s"$out/batch=$b").select("id").as[String].collect().toSet)
+    val v4 = "[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}"
+    ids.foreach { s =>
+      assert(s.size === 200)
+      assert(s.forall(_.matches(v4)), s.find(!_.matches(v4)))
+    }
+    assert(ids(0).intersect(ids(1)).isEmpty)
+    // generated and interpreted evaluation draw the same ids from a seed
+    val seeded = spark.range(0, 50, 1, 2).select(SeededUuid.seeded_uuid(42L))
+    val interpreted = withConfs("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(seeded.as[String].collect().toSeq)
+    assert(seeded.as[String].collect().toSeq === interpreted)
+    assert(interpreted.distinct.size === 50)
   }
 
   test("kafka payload round-trips through from_json (C18)") {

@@ -188,8 +188,10 @@ private[graft] object Oracles {
          FROM exf LEFT JOIN caught c ON c.doc_a = exf.doc_a AND c.doc_b = exf.doc_b
          GROUP BY 1"""
 
-  private val embeddingEToN = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
+  private val embeddingsE = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),"""
+
+  private val embeddingEToN = embeddingsE + """
          n AS (SELECT vec_id, v,
              sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),"""
 
@@ -744,8 +746,7 @@ private[graft] object Oracles {
            round(CAST(sum(n) AS DOUBLE) / count(*), 4) AS mean_load
          FROM g GROUP BY tt"""
 
-  private val ivfEToRk = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfNToRk
+  private val ivfEToRk = embeddingsE + ivfNToRk
 
   private val ivfEToAsg = ivfEToRk + """
              FROM n t, k2 k),
@@ -807,8 +808,7 @@ private[graft] object Oracles {
            HAVING count(*) = 2)
          SELECT q_id, n_id, cos, round(cos * 2 / (cos + c2), 6) AS margin"""
 
-  private val ivfInertiaEToRk = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfNToRkOpen + """
+  private val ivfInertiaEToRk = embeddingsE + ivfNToRkOpen + """
                list_reduce(list_transform(range(1, len(k.cv)+1), i -> k.cv[i]*t.v[i]),
                  (x,y) -> x+y) / (k.cn * t.nrm) AS sc,""" + ivfRkArgmax
 
@@ -901,8 +901,7 @@ private[graft] object Oracles {
              ORDER BY adist_u, n_id) AS rank FROM sc),
          ak AS (SELECT q_id, n_id FROM r WHERE rank <= 3),""" + pqRecallXnToHits
 
-  private val pqRerankEToFr = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqSvToSc + """
+  private val pqRerankEToFr = embeddingsE + pqSvToSc + """
          sl AS (SELECT q_id, n_id FROM (SELECT q_id, n_id,
              row_number() OVER (PARTITION BY q_id ORDER BY adist_u, n_id) AS rnk
            FROM sc) z WHERE rnk <= 64),
@@ -931,8 +930,7 @@ private[graft] object Oracles {
              CAST(list_reduce(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]),
                (x,y) -> x+y) AS DOUBLE) * a.scale * b.scale AS adot"""
 
-  private val sqEToROpen = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
+  private val sqEToROpen = embeddingsE + """
          sc AS (SELECT vec_id, v,""" + sqQqToS + """
            FROM qq a, qq b WHERE a.vec_id < 20 AND b.vec_id <> a.vec_id),
          r AS (SELECT q_id, n_id, adot, row_number() OVER (PARTITION BY q_id"""
@@ -951,8 +949,7 @@ private[graft] object Oracles {
          s AS (SELECT a.vec_id AS q_id, t.vec_id AS n_id,
              """ + binaryHamming
 
-  private val binaryEToROpen = """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + binaryBToS + """
+  private val binaryEToROpen = embeddingsE + binaryBToS + """
            FROM b a, b t WHERE a.vec_id < 20 AND t.vec_id <> a.vec_id),
          r AS (SELECT q_id, n_id, hamming, row_number() OVER (PARTITION BY q_id"""
 
@@ -1878,6 +1875,861 @@ private[graft] object Oracles {
          FROM events""",
   )
 
+  // ---- x1: sampling, splits and data mixtures ----
+  private def x1: Map[String, String] = Map(
+    "x1_sample_split" ->
+      """SELECT doc_id, lang,
+         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS pct,
+         CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+              WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+              ELSE 'test' END AS split
+         FROM documents""",
+    "x1_mixture" ->
+      """SELECT doc_id, source,
+           CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5 ELSE 0.25 END AS frac
+         FROM documents
+         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
+           < CAST(CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5 ELSE 0.25 END
+                  * 1000000 AS BIGINT)""",
+    "x1_temperature" ->
+      ("""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
+         m AS (SELECT min(n_docs) AS n_min FROM c),
+         r AS (SELECT source,
+             """ + temperatureWeight + """ AS frac FROM c, m)
+         SELECT d.doc_id, d.source, r.frac
+         FROM documents d JOIN r ON r.source = d.source
+         WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
+           < CAST(r.frac * 1000000 AS BIGINT)"""),
+    "x1_kfold" ->
+      """WITH f AS (SELECT
+             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 5
+               AS fold,
+             source, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             n_chars
+           FROM documents)
+         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
+             AS mean_chars
+         FROM f GROUP BY 1""",
+    // per-source pow weight quantized to int BEFORE the total (a float
+    // sum of pow values would be fold-order-dependent); shares are one
+    // division each; epochs is the ratio of the ROUNDED shares
+    "x1_epoch_plan" ->
+      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+           FROM documents GROUP BY 1),
+         w AS (SELECT source, n_docs, n_tokens,
+             CAST(floor(power(CAST(n_tokens AS DOUBLE), 0.5) * 1000000 + 0.5)
+               AS BIGINT) AS w6 FROM c),
+         t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
+             CAST(sum(w6) AS BIGINT) AS tot_w6 FROM w),
+         s AS (SELECT source, n_docs, n_tokens,
+             round(CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE), 6)
+               AS natural_share,
+             round(CAST(w6 AS DOUBLE) / CAST(tot_w6 AS DOUBLE), 6)
+               AS target_share
+           FROM w, t)
+         SELECT source, n_docs, n_tokens, natural_share, target_share,
+           round(target_share / natural_share, 4) AS epochs
+         FROM s""",
+    // the x1_temperature thin rolled up against the doc-count n^alpha
+    // target
+    "x1_mixture_audit" ->
+      ("""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+             FROM documents GROUP BY source),
+         m AS (SELECT min(n_docs) AS n_min FROM c),
+         r AS (SELECT source,
+             """ + temperatureWeight + """ AS frac FROM c, m),
+         kd AS (SELECT d.source FROM documents d JOIN r ON r.source = d.source
+           WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
+             < CAST(r.frac * 1000000 AS BIGINT)),
+         k AS (SELECT source, CAST(count(*) AS BIGINT) AS n_kept FROM kd GROUP BY 1),
+         j AS (SELECT c.source, c.n_docs, coalesce(k.n_kept, 0) AS n_kept,
+             CAST(floor(power(CAST(c.n_docs AS DOUBLE), 0.5) * 1000000 + 0.5)
+               AS BIGINT) AS w6
+           FROM c LEFT JOIN k ON k.source = c.source),
+         t AS (SELECT CAST(sum(n_kept) AS BIGINT) AS tot_kept,
+             CAST(sum(w6) AS BIGINT) AS tot_w6 FROM j),
+         z AS (SELECT source, n_docs, n_kept,
+             round(CAST(n_kept AS DOUBLE) / CAST(n_docs AS DOUBLE), 6) AS keep_rate,
+             round(CAST(n_kept AS DOUBLE) / CAST(tot_kept AS DOUBLE), 6)
+               AS achieved_share,
+             round(CAST(w6 AS DOUBLE) / CAST(tot_w6 AS DOUBLE), 6) AS target_share
+           FROM j, t)
+         SELECT source, n_docs, n_kept, keep_rate, achieved_share, target_share,
+           round(achieved_share - target_share, 6) AS miss
+         FROM z"""),
+    "x1_pack_shards" ->
+      """SELECT doc_id, source, n_tokens,
+         CAST((cum - n_tokens) // 500 AS BIGINT) AS shard FROM (
+           SELECT doc_id, source,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             CAST(sum(len(string_split(text, ' '))) OVER (PARTITION BY source
+               ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+           FROM documents)""",
+    "x1_curriculum" ->
+      ("""WITH q AS (SELECT doc_id, source, round(""" + qualityScoreFromDocs + """
+         r AS (SELECT doc_id, source, quality, row_number() OVER (
+             PARTITION BY source ORDER BY quality DESC, doc_id) AS rank FROM q),
+         t AS (SELECT * FROM r WHERE rank <= 100),
+         s AS (SELECT source, CAST(row_number() OVER (ORDER BY source) AS BIGINT)
+             AS src_idx FROM (SELECT DISTINCT source FROM t)),
+         n AS (SELECT count(*) AS n_src FROM s)
+         SELECT t.doc_id, t.source, t.quality,
+           CAST((t.rank - 1) * n.n_src + s.src_idx - 1 AS BIGINT) AS global_pos
+         FROM t JOIN s ON t.source = s.source, n"""),
+    "x1_pack_contexts" ->
+      """WITH d AS (SELECT doc_id,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (SELECT doc_id, n_tokens,
+             CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+               AS BIGINT) AS cum
+           FROM d),
+         x AS (SELECT doc_id, n_tokens, cum, cum - n_tokens AS strt,
+             unnest(generate_series((cum - n_tokens) // 128, (cum - 1) // 128))
+               AS ctx_id
+           FROM c)
+         SELECT doc_id, ctx_id,
+           greatest(0, ctx_id * 128 - strt) AS tok_from,
+           least(n_tokens, (ctx_id + 1) * 128 - strt) AS tok_to,
+           least(n_tokens, (ctx_id + 1) * 128 - strt)
+             - greatest(0, ctx_id * 128 - strt) AS n_ctx_tokens
+         FROM x""",
+    "x1_source_cap" ->
+      """SELECT doc_id, source, rn FROM (
+           SELECT doc_id, source, CAST(row_number() OVER (PARTITION BY source
+             ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT),
+                      doc_id) AS BIGINT) AS rn
+           FROM documents) WHERE rn <= 15""",
+    "x1_budget_select" ->
+      ("""WITH q AS (SELECT doc_id,
+             round(
+               """ + qualityLengthTerm + """ +
+               0.3 * (len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','and','to'))) /
+                      CAST(len(string_split(text,' ')) AS DOUBLE)) +
+               0.3 * (1.0 - length(regexp_replace(text, '[a-z ]', '', 'g')) /
+                      CAST(greatest(length(text), 1) AS DOUBLE)), 6) AS quality,
+             CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (SELECT doc_id, quality, n_tokens,
+             sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM q)
+         SELECT doc_id, quality, n_tokens, CAST(cum AS BIGINT) AS cum
+         FROM c WHERE cum - n_tokens < 10000"""),
+    "x1_first_event" ->
+      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us FROM (
+           SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+             ORDER BY ts, event_id) AS rn FROM events) WHERE rn = 1""",
+    "x1_fingerprint_dedup" ->
+      """SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS n_dups
+         FROM documents GROUP BY md5(text)""",
+    "x1_epoch_shuffle" ->
+      """WITH k AS (SELECT CAST(ep.epoch AS BIGINT) AS epoch, d.doc_id,
+             CAST(('0x' || substr(md5(CAST(ep.epoch AS VARCHAR) || ':' ||
+               CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS key
+           FROM documents d, (SELECT unnest(range(3)) AS epoch) ep)
+         SELECT epoch, doc_id,
+           CAST(row_number() OVER (PARTITION BY epoch ORDER BY key, doc_id) AS BIGINT) AS pos
+         FROM k""",
+    // leakage-safe split: the x4_cluster chain through l3 + the
+    // x1_sample_split md5-pct thresholds keyed on the CLUSTER id instead
+    // of doc_id
+    "x1_grouped_split" ->
+      (clusterTkToL3Last + """
+         SELECT doc_id, cluster,
+           CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS pct,
+           CASE WHEN CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+                WHEN CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+                ELSE 'test' END AS split
+         FROM l3"""),
+    // leakage-safe k-fold: the x4_cluster chain through l3 + fold =
+    // md5-hash(cluster) mod 5 + the x1_kfold balance-report tail
+    "x1_grouped_kfold" ->
+      (clusterTkToL3 + """
+         f AS (SELECT doc_id,
+             CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 5 AS fold
+           FROM l3),
+         j AS (SELECT f.fold, d.source,
+             CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens, d.n_chars
+           FROM f JOIN documents d ON d.doc_id = f.doc_id)
+         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
+             AS mean_chars
+         FROM j GROUP BY 1"""),
+    // the x4_cluster chain plus the x1_sample_split hash assignment,
+    // histogrammed by the split-set signature of each cluster; a comma in
+    // `splits` = leakage
+    "x1_time_split" ->
+      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day, user_id FROM events),
+         s AS (SELECT min(day) + (max(day) - min(day)) * 4 // 5 AS split_day FROM d),
+         t AS (SELECT d.day, d.user_id, d.day < s.split_day AS is_train FROM d, s),
+         ev AS (SELECT
+             CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
+             CAST(sum(CASE WHEN is_train THEN 0 ELSE 1 END) AS BIGINT) AS n_test
+           FROM t),
+         uu AS (SELECT user_id,
+             max(CASE WHEN is_train THEN 1 ELSE 0 END) AS in_train,
+             max(CASE WHEN is_train THEN 0 ELSE 1 END) AS in_test
+           FROM t GROUP BY user_id),
+         us AS (SELECT CAST(sum(in_train) AS BIGINT) AS n_train_users,
+             CAST(sum(in_test) AS BIGINT) AS n_test_users,
+             CAST(sum(CASE WHEN in_train = 1 AND in_test = 1 THEN 1 ELSE 0 END)
+               AS BIGINT) AS n_cross_users
+           FROM uu)
+         SELECT s.split_day, ev.n_train, ev.n_test, us.n_train_users,
+           us.n_test_users, us.n_cross_users,
+           round(CAST(us.n_cross_users AS DOUBLE) /
+             CAST(us.n_train_users AS DOUBLE), 6) AS cross_frac
+         FROM s, ev, us""",
+    "x1_split_leakage" ->
+      (clusterTkToL3 + """
+         sp AS (SELECT doc_id,
+             CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+                  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+                  ELSE 'test' END AS split
+           FROM documents),
+         cl AS (SELECT l3.cluster,
+             array_to_string(list_sort(list_distinct(list(split))), ',') AS splits,
+             count(*) AS n_docs
+           FROM l3 JOIN sp ON sp.doc_id = l3.doc_id GROUP BY 1)
+         SELECT splits, CAST(count(*) AS BIGINT) AS n_clusters,
+           CAST(sum(n_docs) AS BIGINT) AS n_docs
+         FROM cl GROUP BY 1"""),
+    "x1_systematic_sample" ->
+      """WITH d AS (SELECT doc_id,
+           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+           FROM documents),
+         c AS (SELECT doc_id, n_tokens, CAST(sum(n_tokens) OVER (
+             ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS cum
+           FROM d)
+         SELECT doc_id, n_tokens, cum,
+           (cum // 997) - ((cum - n_tokens) // 997) AS n_ticks
+         FROM c WHERE (cum // 997) > ((cum - n_tokens) // 997)""",
+    "x1_weighted_sample" ->
+      """WITH s AS (SELECT doc_id,
+           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+             % 2147483647 AS h
+           FROM documents)
+         SELECT doc_id, n_tokens,
+           CAST(floor(ln((h + 1) / 2147483647.0) / n_tokens * 1e6 + 0.5)
+             AS BIGINT) AS lk6
+         FROM s ORDER BY lk6 DESC, doc_id LIMIT 20""",
+    // release-split balance audit: the FULL x7_curate_split oracle as the
+    // `man` CTE + the per-split docs/tokens/sources/achieved-pct tail
+    "x1_split_audit" ->
+      (curateSplitKeep1ToL3 + """
+           ON m.doc_id = l.doc_id),
+         man AS (SELECT l3.doc_id, l3.cluster,
+           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+                ELSE 'test' END AS split,
+           d.lang, d.source,
+           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
+         FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id),
+         ag AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+             CAST(count(DISTINCT source) AS BIGINT) AS n_sources
+           FROM man GROUP BY 1),
+         tot AS (SELECT CAST(sum(sum_tokens) AS BIGINT) AS tot_tokens FROM ag)
+         SELECT split, n_docs, sum_tokens, n_sources,
+           round(CAST(sum_tokens AS DOUBLE) / tot_tokens, 6) AS token_pct
+         FROM ag, tot"""),
+    "x1_heavy_hitters" ->
+      """WITH c AS (SELECT user_id AS key, CAST(count(*) AS BIGINT) AS n
+             FROM events GROUP BY user_id),
+         t AS (SELECT CAST(sum(n) AS BIGINT) AS total,
+             CAST(count(*) AS BIGINT) AS n_keys FROM c)
+         SELECT key, n,
+           round(CAST(n AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share,
+           round(CAST(n AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(total AS DOUBLE), 4) AS skew
+         FROM c, t ORDER BY n DESC, key ASC LIMIT 20""",
+  )
+
+  // ---- x2: vector search and its audits ----
+  private def x2: Map[String, String] = Map(
+    "x2_ann_diverse" ->
+      """WITH e AS (SELECT vec_id, label,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),
+         n AS (SELECT vec_id, label, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
+         s AS (SELECT q.vec_id AS q_id, t.label, t.vec_id AS n_id,
+             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
+           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         c AS (SELECT q_id, label, n_id, cos, row_number() OVER (PARTITION BY
+             q_id, label ORDER BY cos DESC, n_id) AS lr FROM s),
+         r AS (SELECT q_id, label, n_id, cos, row_number() OVER (PARTITION BY
+             q_id ORDER BY cos DESC, n_id) AS rank FROM c WHERE lr = 1)
+         SELECT q_id, label, n_id, round(cos, 6) AS cos,
+           CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 5""",
+    "x2_ann_topk" ->
+      (embeddingEToN + """
+         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
+           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
+             ORDER BY cos DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 5"""),
+    // cosine RANGE search: every neighbor above the rounded-cosine
+    // radius (the FAISS range_search semantics; set-valued output)
+    "x2_range_search" ->
+      (embeddingEToN + """
+         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
+           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id)
+         SELECT q_id, n_id, cos FROM s WHERE cos >= 0.25"""),
+    "x2_mips_topk" ->
+      (embeddingsE + """
+         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) AS dp
+           FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         r AS (SELECT q_id, n_id, dp, row_number() OVER (PARTITION BY q_id
+             ORDER BY dp DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 5"""),
+    // the norm-augmented LSH chain: the x2_ann_lsh plane formula lifted
+    // to dim 65 over the UNSCALED augmentation [v, sqrt(M^2 - |v|^2)]
+    // (query lift appends 0) — sign hashes are scale-invariant, so the
+    // unscaled lift buckets identically to the unit-norm reduction
+    "x2_mips_lsh" ->
+      (mipsEToR + """
+             ORDER BY dp DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 3"""),
+    // the x2_mips_lsh mm..r chain followed by the brute-force sb/rb chain
+    // + overlap
+    "x2_mips_recall" ->
+      (mipsEToR + """
+             ORDER BY dp DESC, n_id) AS rank FROM s),""" + mipsSbToOvOpen + """
+           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 3) b
+           LEFT JOIN (SELECT q_id, n_id FROM r WHERE rank <= 3) l
+             ON l.q_id = b.q_id AND l.n_id = b.n_id)
+         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
+           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 3.0, 4) AS recall
+         FROM ov GROUP BY q_id"""),
+    "x2_cosine_pairs" ->
+      (embeddingsE + """
+         n AS (SELECT vec_id, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e)
+         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+           round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
+             (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
+         FROM n a JOIN n b ON a.vec_id < b.vec_id
+         ORDER BY cos DESC, a_id, b_id LIMIT 20"""),
+    "x2_ann_filtered" ->
+      ("""WITH e AS (SELECT vec_id, label,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),""" + filteredNToQp + """
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+      filteredCandToTop3),
+    // filtered recall: the labeled e/n head + a brute chain RESTRICTED to
+    // the query's label (the filtered ground truth) + x2_ann_filtered's
+    // bb..r labeled chain
+    "x2_filtered_recall" ->
+      (filteredEToBb + """
+         qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+      filteredCandToApprox),
+    // filtered ranking audit: the filtered brute head e..xr + the labeled
+    // bb + qp..r chains, keeping RANKS on both sides; graded recall
+    // normalizes by the query's OWN max gain (sum of 4 - e.rank over its
+    // exact rows)
+    "x2_filtered_rank_quality" ->
+      (filteredEToXr + filteredExactToQp + """
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+      filteredCandToRankedApprox),
+    // labeled occupancy pre-flight: the labeled e/n head + bb chain rolled
+    // up per (table, label)
+    "x2_filtered_bucket_stats" ->
+      ("""WITH e AS (SELECT vec_id, label,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),""" + filteredNToG),
+    // filtered probe-budget curve: x2_filtered_recall's e..exact head +
+    // the labeled bb CTE; the qp probe CTE adds the mask INDEX (zipped
+    // unnest), candidates keep their cheapest discovery, the curve is a
+    // conditional count
+    "x2_filtered_probe_curve" ->
+      (filteredEToBb + """
+         qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket, idx
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
+               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + filteredCmToJ),
+    "x2_recall" ->
+      (recallEToBb + """
+         qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+      recallCandToApprox),
+    // probe-budget curve: x2_recall's brute e..exact head + bb bucket CTE;
+    // the qp probe CTE adds the mask INDEX (zipped unnest), candidates
+    // keep their cheapest discovery, the curve is a conditional count per
+    // budget
+    "x2_probe_curve" ->
+      (recallEToBb + """
+         qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket, idx
+           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
+               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + probeCurveCmToJ),
+    // ranking-quality audit: x2_recall's brute + LSH chains, keeping RANKS
+    // on both sides; graded recall weights hits by exact rank (gains
+    // 3/2/1, /6), mrr = 1/min approx rank holding an exact top-3 item
+    "x2_rank_quality" ->
+      (recallEToXr + """
+         exact AS (SELECT q_id, n_id, rank FROM xr WHERE rank <= 3),""" + lshBbToS + """
+         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id""" + rankQualityApprox),
+    "x2_ann_lsh" ->
+      (lshEToS + """
+         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
+             ORDER BY cos DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 3"""),
+    // bucketed radius search: the x2_ann_lsh bucket/candidate chain + the
+    // rounded-cosine range filter instead of the top-k window
+    "x2_range_lsh" ->
+      (lshEToS + """
+         f AS (SELECT q_id, n_id, round(cos, 6) AS cos FROM s)
+         SELECT q_id, n_id, cos FROM f WHERE cos >= 0.25"""),
+    // radius recall audit: the x2_range_lsh bucket/candidate/f chain + a
+    // brute radius leg (bs/rex, the x2_range_search scored stream under
+    // different CTE names) + the per-query hit-count tail; queries with an
+    // empty radius set report NULL recall
+    "x2_range_recall" ->
+      (lshEToS + """
+         f AS (SELECT q_id, n_id, round(cos, 6) AS cos FROM s),
+         app AS (SELECT q_id, n_id, 1 AS hit FROM f WHERE cos >= 0.25),
+         bs AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
+           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         rex AS (SELECT q_id, n_id FROM bs WHERE cos >= 0.25),
+         g AS (SELECT rex.q_id, CAST(count(*) AS BIGINT) AS n_true,
+             CAST(sum(coalesce(a.hit, 0)) AS BIGINT) AS n_found
+           FROM rex LEFT JOIN app a ON a.q_id = rex.q_id AND a.n_id = rex.n_id
+           GROUP BY rex.q_id)
+         SELECT qq.vec_id AS q_id,
+           CAST(coalesce(g.n_true, 0) AS BIGINT) AS n_true,
+           CAST(coalesce(g.n_found, 0) AS BIGINT) AS n_found,
+           CASE WHEN coalesce(g.n_true, 0) > 0
+             THEN round(CAST(g.n_found AS DOUBLE) / g.n_true, 4) END AS recall
+         FROM (SELECT vec_id FROM e WHERE vec_id < 20) qq
+         LEFT JOIN g ON g.q_id = qq.vec_id"""),
+    "x2_bucket_stats" ->
+      (embeddingsE + lshBbToG),
+    "x2_ann_ivf" ->
+      (ivfEToQ + """
+         s AS (SELECT q.q_id, t.vec_id AS n_id, t.cell AS cell,
+             list_reduce(list_transform(range(1, len(q.qv)+1), i -> q.qv[i]*t.v[i]),
+               (x,y) -> x+y) / (q.qn * t.nrm) AS cos
+           FROM asg t JOIN q ON t.cell = q.cell AND t.vec_id <> q.q_id),
+         r AS (SELECT q_id, n_id, cell, cos, row_number() OVER (PARTITION BY q_id
+             ORDER BY cos DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, cell, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 3"""),
+    // the composed IVF x SQ oracle: the x2_ann_ivf training/assignment
+    // chain through prb + the x2_quantize sc/qq encode chain + SQ ADC
+    // scoring on probed cells
+    "x2_ann_ivfsq" ->
+      (embeddingsE + ivfsqSearchChain),
+    // residual IVF x SQ: the IVF chain + x2_ann_ivfpq_res's slim rk/asg
+    // head, resv residual frame, and pbr/pb/qres probe head + an int8
+    // encode of the residuals on BOTH sides; ranking = estimated residual
+    // L2 (exact int dots + exact dyadic ||qr||^2; the scale products are
+    // the only rounding IEEE ops, fixed operand order)
+    "x2_ann_ivfsq_res" ->
+      (embeddingsE + ivfsqResSearchChain),
+    // IVF x SQ recall audit: x2_ann_ivfsq_res's FULL chain (IVF training +
+    // residual frame/encode/estimate through srr) + a raw-code L2 leg over
+    // the SAME rivfc candidates (x2_quantize's sc/qq encode chain + the
+    // asymmetric L2 estimate with the exact query norm) +
+    // x2_ivfpq_recall's exact ground-truth chain (xn..ex) and hits tail.
+    // Holding the metric (L2) and (nCells, nProbe) fixed isolates
+    // raw-vs-residual encoding as the only variable.
+    "x2_ivfsq_recall" ->
+      (embeddingsE + ivfsqRecallChain),
+    "x2_ivf_recall" ->
+      (ivfEToQ + """
+         s AS (SELECT q.q_id, t.vec_id AS n_id,
+             list_reduce(list_transform(range(1, len(q.qv)+1), i -> q.qv[i]*t.v[i]),
+               (x,y) -> x+y) / (q.qn * t.nrm) AS cos
+           FROM asg t JOIN q ON t.cell = q.cell AND t.vec_id <> q.q_id),
+         r AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
+             ORDER BY cos DESC, n_id) AS rank FROM s),
+         ivf AS (SELECT q_id, n_id FROM r WHERE rank <= 3),""" + ivfBsToBr + """
+         ex AS (SELECT q_id, n_id FROM br WHERE rank <= 3)
+         SELECT ex.q_id, CAST(sum(CASE WHEN ivf.n_id IS NOT NULL THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_hits,
+           round(CAST(sum(CASE WHEN ivf.n_id IS NOT NULL THEN 1 ELSE 0 END)
+             AS BIGINT) / 3.0, 4) AS recall
+         FROM ex LEFT JOIN ivf ON ivf.q_id = ex.q_id AND ivf.n_id = ex.n_id
+         GROUP BY ex.q_id"""),
+    // IVF probe curve: x2_ivf_recall's full training chain e..asg and its
+    // brute bs/br/ex ground truth; the budget that first reaches an exact
+    // neighbor is the rank (ar) of its cell in the query's centroid order,
+    // so the curve is one conditional count per budget
+    "x2_ivf_probe_curve" ->
+      (ivfEToAsg + """
+         cr AS (SELECT vec_id AS q_id, c_id AS cell, ar FROM rk WHERE vec_id < 20),""" + ivfBsToBr +
+      """
+         ex AS (SELECT q_id, n_id FROM br WHERE rank <= 3),
+         cm AS (SELECT ex.q_id, ex.n_id, cr.ar FROM ex
+           JOIN asg t ON t.vec_id = ex.n_id
+           JOIN cr ON cr.q_id = ex.q_id AND cr.cell = t.cell)
+         SELECT CAST(p AS BIGINT) AS n_probes, CAST(count(*) AS BIGINT) AS n_true,
+           CAST(sum(CASE WHEN ar <= p THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+           round(CAST(sum(CASE WHEN ar <= p THEN 1 ELSE 0 END) AS DOUBLE) /
+             CAST(count(*) AS DOUBLE), 4) AS recall
+         FROM cm, (SELECT unnest([1, 2, 3, 4]) AS p)
+         GROUP BY p"""),
+    "x2_mean_pool" ->
+      """WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),
+         d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e)
+         SELECT label, CAST(pos AS BIGINT) AS pos,
+           round(sum(val) / count(*), 6) AS val
+         FROM d GROUP BY label, pos""",
+    "x2_confusion" ->
+      ("""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),
+         n AS (SELECT vec_id, label, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
+         d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e),
+         s AS (SELECT label AS c_id, pos, round(sum(val) / count(*), 6) AS val
+           FROM d GROUP BY 1, 2),
+         m AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM s GROUP BY c_id),
+         k AS (SELECT c_id, cv,
+             sqrt(list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y)) AS cn FROM m),
+         r AS (SELECT t.vec_id, t.label, k.c_id,
+               row_number() OVER (PARTITION BY t.vec_id ORDER BY
+                 """ + ivfArgmaxCosine + """
+             FROM n t, k)
+         SELECT label, c_id AS predicted, CAST(count(*) AS BIGINT) AS n
+         FROM r WHERE ar = 1 GROUP BY label, predicted"""),
+    "x2_knn_accuracy" ->
+      (knnEToS + """
+           FROM n q, n t WHERE t.vec_id <> q.vec_id),""" + knnRToJ),
+    // x2_knn_accuracy's chain with ONE added predicate: the QUERY side
+    // shrinks to the deterministic 37% vec-id hash sample while every
+    // sampled query still votes over the full corpus
+    "x2_knn_sampled" ->
+      (knnEToS + """
+           FROM n q, n t WHERE t.vec_id <> q.vec_id
+             AND CAST(('0x' || substr(md5(CAST(q.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
+               % 100 < 37),""" + knnRToJ),
+    "x2_margin_pairs" ->
+      (embeddingsE + marginNToP + """
+         FROM p WHERE cos + c2 > 0 AND round(cos * 2 / (cos + c2), 6) >= 1.05"""),
+    "x2_ivf_assign" ->
+      (ivfEToRk + """
+             FROM n t, k2 k)
+         SELECT vec_id, c_id AS cell FROM rk WHERE ar = 1"""),
+    "x2_semdedup" ->
+      (ivfEToAsg + """
+         pr AS (SELECT b.vec_id, b.cell, a.vec_id AS keep_id,
+             round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
+               (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
+           FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id),
+         dup AS (SELECT vec_id, cell, keep_id, cos,
+             row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, keep_id) AS rk2
+           FROM pr WHERE cos >= 0.38)
+         SELECT vec_id, cell, keep_id AS dup_of, cos FROM dup WHERE rk2 = 1"""),
+    "x2_ivf_inertia" ->
+      (ivfInertiaEToRk + """
+         w AS (SELECT c_id AS cell, CAST(floor(sc * 1000000 + 0.5) AS BIGINT) AS q
+             FROM rk WHERE ar = 1)
+         SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
+           CAST(sum(q) AS DOUBLE) / (count(*) * 1000000.0) AS mean_cos
+         FROM w GROUP BY cell"""),
+    "x2_ood" ->
+      (ivfInertiaEToRk + """
+         w AS (SELECT vec_id, c_id AS cell,
+             CAST(floor(sc * 1000000 + 0.5) AS BIGINT) AS q6
+             FROM rk WHERE ar = 1),
+         w4 AS (SELECT vec_id, cell, q6, q6 // 100 AS q4 FROM w),
+         st AS (SELECT cell, CAST(count(*) AS BIGINT) AS c,
+             CAST(sum(q4) AS BIGINT) AS s, CAST(sum(q4 * q4) AS BIGINT) AS qq
+           FROM w4 GROUP BY 1)
+         SELECT vec_id, cell, CAST(q6 AS DOUBLE) / 1000000.0 AS cos_to_centroid,
+           round(CAST(q4 * c - s AS DOUBLE) /
+             sqrt(CAST(qq * c - s * s AS DOUBLE)), 4) AS z,
+           (round(CAST(q4 * c - s AS DOUBLE) /
+             sqrt(CAST(qq * c - s * s AS DOUBLE)), 4) <= -2.0) AS is_outlier
+         FROM w4 JOIN st USING (cell) WHERE qq * c - s * s > 0"""),
+    "x2_incremental" ->
+      (embeddingEToN + lshBb + """
+         cand AS (SELECT DISTINCT i.vec_id, x.vec_id AS match_id
+           FROM bb i JOIN bb x ON i.tt = x.tt AND i.bucket = x.bucket
+           WHERE i.vec_id < 100 AND x.vec_id >= 100),
+         s AS (SELECT c.vec_id, c.match_id,
+             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
+           FROM cand c JOIN n q ON q.vec_id = c.vec_id
+             JOIN n t ON t.vec_id = c.match_id),
+         f AS (SELECT vec_id, match_id, cos, row_number() OVER (PARTITION BY vec_id
+             ORDER BY cos DESC, match_id) AS rk FROM s WHERE cos >= 0.38)
+         SELECT vec_id, match_id, cos FROM f WHERE rk = 1"""),
+    "x2_centroids" ->
+      (embeddingsE + ivfNToC2 + """
+             FROM c1 LEFT JOIN u2 ON u2.cell = c1.c_id)
+         SELECT c_id, CAST(pos AS BIGINT) AS pos, round(val, 6) AS val
+         FROM (SELECT c_id, generate_subscripts(cv, 1) AS pos, unnest(cv) AS val
+               FROM c2) x"""),
+    "x2_pq_codebook" ->
+      (embeddingsE + pqSvToC2 + """
+           FROM c1 LEFT JOIN u2 ON u2.sub = c1.sub AND u2.code = c1.code)
+         SELECT CAST(sub AS BIGINT) AS sub, code, CAST(pos AS BIGINT) AS pos,
+           round(val, 6) AS val
+         FROM (SELECT sub, code, generate_subscripts(cv, 1) AS pos, unnest(cv) AS val
+               FROM c2) x"""),
+    "x2_pq_codes" ->
+      (embeddingsE + pqCodesChain),
+    "x2_pq_distortion" ->
+      (embeddingsE + pqSvToK2 + """
+         r3 AS (SELECT q.vec_id, q.sub,
+             """ + pqPartialDistance + """
+               (x,y) -> x+y) + c.cn2 AS dist
+           FROM sn q JOIN k2 c ON c.sub = q.sub),
+         md AS (SELECT vec_id, sub,
+             CAST(floor(min(dist) * 1000000 + 0.5) AS BIGINT) AS q
+           FROM r3 GROUP BY vec_id, sub)
+         SELECT CAST(sub AS BIGINT) AS sub, CAST(count(*) AS BIGINT) AS n_vecs,
+           CAST(sum(q) AS DOUBLE) / (count(*) * 1000000.0) AS mean_dist,
+           CAST(max(q) AS DOUBLE) / 1000000.0 AS max_dist
+         FROM md GROUP BY sub"""),
+    "x2_ann_pq" ->
+      (embeddingsE + pqSearchChain),
+    // flat-ADC recall gate: the FULL x2_ann_pq chain (train/encode/
+    // LUT/ADC rank) kept through r, + the composed gates' exact-L2 xn..ex
+    // head + a single-leg hit rollup
+    "x2_pq_recall" ->
+      (embeddingsE + pqRecallChain),
+    "x2_ann_pq_rerank" ->
+      (pqRerankEToFr + """
+             ORDER BY dist, n_id) AS rank FROM rr)
+         SELECT q_id, n_id, round(dist, 6) AS dist, CAST(rank AS BIGINT) AS rank
+         FROM fr WHERE rank <= 3"""),
+    // shortlist->rerank recall gate: the FULL x2_ann_pq_rerank chain kept
+    // through fr + the exact-L2 xn..ex ground-truth head + the single-leg
+    // rollup
+    "x2_pq_rerank_recall" ->
+      (pqRerankEToFr + """
+             ORDER BY dist, n_id) AS rank FROM rr),
+         ak AS (SELECT q_id, n_id FROM fr WHERE rank <= 3),""" + pqRecallXnToHits),
+    "x2_ann_ivfpq" ->
+      (embeddingsE + ivfpqSearchChain),
+    // RESIDUAL IVF-PQ: the x2_ann_ivf IVF chain (e..k2/rk/asg) + the
+    // dyadic residual frame (resv: floor((v - centroid)*2^20 + 0.5)/2^20,
+    // the exactness device) + the r-prefixed PQ chain retargeted to
+    // residuals + x2_ann_ivfpq's probe CTEs (pbr/pb) + the per-(query,
+    // cell) residual LUT tail. The r-chain and tail are shared with
+    // x2_ivfpq_recall.
+    "x2_ann_ivfpq_res" ->
+      (embeddingsE + ivfpqResSearchChain),
+    // IVF-PQ recall audit: BOTH compositions replayed against exact-L2
+    // top-3 -- the IVF chain + x2_ann_ivfpq's raw p-chain and sc/fr tail +
+    // x2_ann_ivfpq_res's resv/r-chain and rsc/rfr tail + a brute exact-L2
+    // chain (xn/gs/gr/ex) + the x2_ivf_recall hit-count tail per leg.
+    "x2_ivfpq_recall" ->
+      (embeddingsE + ivfpqRecallChain),
+    "x2_quantize" ->
+      (embeddingsE + """
+         sc AS (SELECT vec_id, v,
+             list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
+         qq AS (SELECT vec_id, scale,
+             CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
+                  ELSE list_transform(v, x -> CAST(least(greatest(
+                    floor(x / scale + 0.5), -127.0), 127.0) AS BIGINT)) END AS q
+           FROM sc)
+         SELECT vec_id, round(scale, 6) AS scale,
+           CAST(list_reduce(list_transform(q, x -> abs(x)), (a, b) -> a + b) AS BIGINT) AS q_l1,
+           CAST(list_reduce(q, (a, b) -> a + b) AS BIGINT) AS q_sum,
+           list_max(q) AS q_max
+         FROM qq"""),
+    // SQ int8 ADC search: the x2_quantize encode chain (e/sc/qq), then
+    // rank by the asymmetric estimate ip·scale_q·scale_d. The int8 inner
+    // product is an exact integer (≤ 2^20 at dim 64), so the only doubles
+    // are the two scale factors in ONE fixed operand order.
+    "x2_ann_sq" ->
+      (sqEToROpen + """
+             ORDER BY adot DESC, n_id) AS rank FROM s)
+         SELECT q_id, n_id, round(adot, 6) AS adot, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 5"""),
+    // binary sign-pack search: the b/s/r Hamming chain is shared with
+    // x2_binary_recall
+    "x2_ann_binary" ->
+      (binaryEToROpen + """
+             ORDER BY hamming, n_id) AS rank FROM s)
+         SELECT q_id, n_id, hamming, CAST(rank AS INTEGER) AS rank
+         FROM r WHERE rank <= 5"""),
+    // binary shortlist (top-20 by Hamming, the shared b/s/r chain) ->
+    // exact cosine rerank of only those pairs
+    "x2_ann_binary_rerank" ->
+      (binaryEToRr + """
+             ORDER BY cos DESC, n_id) AS rank FROM ex)
+         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
+         FROM rr WHERE rank <= 5"""),
+    // Hamming-shortlist -> exact-cosine rerank recall gate: the FULL
+    // x2_ann_binary_rerank chain kept through rr (its n CTE already
+    // carries the norms) + the x2_binary_recall brute cosine sb/rb chain +
+    // the hit rollup
+    "x2_binary_rerank_recall" ->
+      (binaryEToRr + """
+             ORDER BY cos DESC, n_id) AS rank FROM ex),
+         ak AS (SELECT q_id, n_id FROM rr WHERE rank <= 5),""" + cosineSbToRb + """
+         ov AS (SELECT b.q_id, b.n_id,
+             CASE WHEN l.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 5) b
+           LEFT JOIN ak l ON l.q_id = b.q_id AND l.n_id = b.n_id)
+         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
+           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
+         FROM ov GROUP BY q_id"""),
+    // binary recall audit: the SAME b/s/r Hamming chain + the exact
+    // cosine brute-force chain as ground truth
+    "x2_binary_recall" ->
+      (binaryEToR + """
+         n AS (SELECT vec_id, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),""" +
+      cosineSbToRb + """
+         ov AS (SELECT g.q_id, g.n_id,
+             CASE WHEN l.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 5) g
+           LEFT JOIN (SELECT q_id, n_id FROM r WHERE rank <= 5) l
+             ON l.q_id = g.q_id AND l.n_id = g.n_id)
+         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
+           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
+         FROM ov GROUP BY q_id"""),
+    // two-stage SQ serve: the x2_ann_sq chain (e/sc/qq/s/r) proposes 20
+    // candidates, then only those pairs rerank by the EXACT double dot
+    // product.
+    "x2_ann_sq_rerank" ->
+      (sqEToRr + """
+             ORDER BY dp DESC, n_id) AS rank FROM ex)
+         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
+         FROM rr WHERE rank <= 5"""),
+    // int8-shortlist -> exact-dot rerank recall gate: the FULL
+    // x2_ann_sq_rerank chain kept through rr + the x2_sq_recall brute MIPS
+    // sb/rb chain + the hit rollup
+    "x2_sq_rerank_recall" ->
+      (sqEToRr + """
+             ORDER BY dp DESC, n_id) AS rank FROM ex),
+         ak AS (SELECT q_id, n_id FROM rr WHERE rank <= 5),""" + mipsSbToOv + """
+           LEFT JOIN ak l ON l.q_id = b.q_id AND l.n_id = b.n_id)
+         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
+           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
+         FROM ov GROUP BY q_id"""),
+    // SQ recall audit: exact-MIPS ground truth (the x2_mips_recall sb/rb
+    // brute-force chain) left-joined with the SQ top-5 (qs2/qr2 = the
+    // x2_ann_sq scoring formula over the shared encode chain).
+    "x2_sq_recall" ->
+      (embeddingsE + sqScToQs2 + """
+           FROM qq a, qq b WHERE a.vec_id < 20 AND b.vec_id <> a.vec_id),
+         qr2 AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
+             ORDER BY adot DESC, n_id) AS rank FROM qs2),""" + mipsSbToOv + """
+           LEFT JOIN (SELECT q_id, n_id FROM qr2 WHERE rank <= 5) l
+             ON l.q_id = b.q_id AND l.n_id = b.n_id)
+         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
+           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
+         FROM ov GROUP BY q_id"""),
+    // hybrid retrieval: the x2_ann_topk cosine chain (e2/n2/s2/r2 = its
+    // e/n/s/r, copied verbatim modulo CTE names) and the x3_bm25_search
+    // terms/dl/nd/dfs/idx chain with the query CTE swapped to doc_id < 20,
+    // fused by integer RRF contributions floor(10^6/(60 + rank)).
+    "x2_hybrid_rrf" ->
+      ("""WITH e2 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+             FROM embeddings),
+         n2 AS (SELECT vec_id, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e2),
+         s2 AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
+           FROM n2 q, n2 t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         r2 AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
+             ORDER BY cos DESC, n_id) AS rank FROM s2),
+         terms AS (""" + bm25DlToQ + """
+           WHERE doc_id < 20),""" + bm25HitToRk + """
+             PARTITION BY q_id ORDER BY s6 DESC, doc_id) AS rank FROM sc),
+         dr AS (SELECT q_id, n_id AS match_id, CAST(rank AS BIGINT) AS dense_rank
+           FROM r2 WHERE rank <= 5),
+         br AS (SELECT q_id, doc_id AS match_id, CAST(rank AS BIGINT) AS bm25_rank
+           FROM rk WHERE rank <= 5),""" + hybridFuToFr),
+    // ALL-stored hybrid: the x2_ann_sq encode chain (e/sc/qq) + its ADC
+    // top-k (s/r, carries the shared asymmetric-estimate formula) as the
+    // dense leg, the x3_bm25_search terms/dl/nd/dfs/idx chain with the
+    // doc_id < 20 query CTE as the sparse leg (score CTEs renamed bsc/brk:
+    // `sc` is taken by the SQ chain), fused by the same integer RRF tail
+    // as x2_hybrid_rrf.
+    "x2_hybrid_rrf_stored" ->
+      (sqEToR + """
+         terms AS (""" + bm25DlToIdx + """
+         qt AS (SELECT DISTINCT doc_id AS q_id, token FROM terms
+           WHERE doc_id < 20),
+         hit AS (SELECT qt.q_id, i.doc_id,
+             CAST(floor(i.idf6 * ((i.tf * 2.2::DOUBLE) /
+               (i.tf + 1.2::DOUBLE * (0.25 + 0.75::DOUBLE * i.dl / i.avgdl)))
+               + 0.5) AS BIGINT) AS c6
+           FROM qt JOIN idx i ON i.token = qt.token AND i.doc_id <> qt.q_id
+           WHERE i.idf6 > 0),
+         bsc AS (SELECT q_id, doc_id, CAST(count(*) AS BIGINT) AS n_hit,
+             CAST(sum(c6) AS BIGINT) AS s6
+           FROM hit GROUP BY q_id, doc_id),
+         brk AS (SELECT q_id, doc_id, n_hit, s6, row_number() OVER (
+             PARTITION BY q_id ORDER BY s6 DESC, doc_id) AS rank FROM bsc),
+         dr AS (SELECT q_id, n_id AS match_id, CAST(rank AS BIGINT) AS dense_rank
+           FROM r WHERE rank <= 5),
+         br AS (SELECT q_id, doc_id AS match_id, CAST(rank AS BIGINT) AS bm25_rank
+           FROM brk WHERE rank <= 5),""" + hybridFuToFr),
+    // per-dimension embedding health: quantize each element to 1e-4
+    // units FIRST so the three moments are exact int64 in any fold
+    // order; one rounded division each; the collapsed flag compares
+    // the ROUNDED variance on both engines
+    "x2_dim_stats" ->
+      """WITH x AS (SELECT unnest(embedding) AS e,
+             unnest(range(len(embedding))) AS dim FROM embeddings),
+         q AS (SELECT CAST(dim AS BIGINT) AS dim,
+             CAST(floor(CAST(e AS DOUBLE) * 10000 + 0.5) AS BIGINT) AS q FROM x),
+         m AS (SELECT dim, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(q) AS BIGINT) AS s, CAST(sum(q*q) AS BIGINT) AS s2
+           FROM q GROUP BY 1),
+         v AS (SELECT dim, n, s,
+             round(CAST(n*s2 - s*s AS DOUBLE) /
+               (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * 100000000.0), 6)
+               AS variance
+           FROM m)
+         SELECT dim,
+           round(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * 10000.0), 6) AS mean,
+           variance,
+           CAST(CASE WHEN variance < 0.0001 THEN 1 ELSE 0 END AS BIGINT)
+             AS collapsed
+         FROM v""",
+    // row-wise norm z-audit: 1e-4-quantized norms, exact int64 global
+    // moments, z = (n·q − S)/sqrt(n·Q − S²) (the x6_anomaly z form)
+    "x2_norm_outliers" ->
+      (embeddingsE + """
+         nq AS (SELECT vec_id, CAST(floor(
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) * 10000
+               + 0.5) AS BIGINT) AS nq
+           FROM e),
+         m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(nq) AS BIGINT) AS s,
+             CAST(sum(nq*nq) AS BIGINT) AS s2 FROM nq),
+         z AS (SELECT vec_id, round(CAST(nq AS DOUBLE) / 10000.0, 4) AS norm,
+             round(CAST(n*nq - s AS DOUBLE) /
+               sqrt(CAST(n*s2 - s*s AS DOUBLE)), 4) AS z
+           FROM nq, m WHERE n*s2 - s*s > 0)
+         SELECT vec_id, norm, z,
+           CAST(CASE WHEN abs(z) > 2.5 THEN 1 ELSE 0 END AS BIGINT) AS outlier
+         FROM z"""),
+  )
+
   // ---- x3: text statistics, language models and inverted indexes ----
   private def x3: Map[String, String] = Map(
     "x3_textstats" ->
@@ -2345,285 +3197,6 @@ private[graft] object Oracles {
          SELECT doc_id, lang, quality, pr FROM r WHERE pr >= 0.5"""),
   )
 
-  // ---- x1: sampling, splits and data mixtures ----
-  private def x1: Map[String, String] = Map(
-    "x1_sample_split" ->
-      """SELECT doc_id, lang,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS pct,
-         CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-              WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-              ELSE 'test' END AS split
-         FROM documents""",
-    "x1_mixture" ->
-      """SELECT doc_id, source,
-           CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5 ELSE 0.25 END AS frac
-         FROM documents
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
-           < CAST(CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5 ELSE 0.25 END
-                  * 1000000 AS BIGINT)""",
-    "x1_temperature" ->
-      ("""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-         m AS (SELECT min(n_docs) AS n_min FROM c),
-         r AS (SELECT source,
-             """ + temperatureWeight + """ AS frac FROM c, m)
-         SELECT d.doc_id, d.source, r.frac
-         FROM documents d JOIN r ON r.source = d.source
-         WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
-           < CAST(r.frac * 1000000 AS BIGINT)"""),
-    "x1_kfold" ->
-      """WITH f AS (SELECT
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 5
-               AS fold,
-             source, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             n_chars
-           FROM documents)
-         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-             AS mean_chars
-         FROM f GROUP BY 1""",
-    // per-source pow weight quantized to int BEFORE the total (a float
-    // sum of pow values would be fold-order-dependent); shares are one
-    // division each; epochs is the ratio of the ROUNDED shares
-    "x1_epoch_plan" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           FROM documents GROUP BY 1),
-         w AS (SELECT source, n_docs, n_tokens,
-             CAST(floor(power(CAST(n_tokens AS DOUBLE), 0.5) * 1000000 + 0.5)
-               AS BIGINT) AS w6 FROM c),
-         t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
-             CAST(sum(w6) AS BIGINT) AS tot_w6 FROM w),
-         s AS (SELECT source, n_docs, n_tokens,
-             round(CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE), 6)
-               AS natural_share,
-             round(CAST(w6 AS DOUBLE) / CAST(tot_w6 AS DOUBLE), 6)
-               AS target_share
-           FROM w, t)
-         SELECT source, n_docs, n_tokens, natural_share, target_share,
-           round(target_share / natural_share, 4) AS epochs
-         FROM s""",
-    // the x1_temperature thin rolled up against the doc-count n^alpha
-    // target
-    "x1_mixture_audit" ->
-      ("""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-             FROM documents GROUP BY source),
-         m AS (SELECT min(n_docs) AS n_min FROM c),
-         r AS (SELECT source,
-             """ + temperatureWeight + """ AS frac FROM c, m),
-         kd AS (SELECT d.source FROM documents d JOIN r ON r.source = d.source
-           WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
-             < CAST(r.frac * 1000000 AS BIGINT)),
-         k AS (SELECT source, CAST(count(*) AS BIGINT) AS n_kept FROM kd GROUP BY 1),
-         j AS (SELECT c.source, c.n_docs, coalesce(k.n_kept, 0) AS n_kept,
-             CAST(floor(power(CAST(c.n_docs AS DOUBLE), 0.5) * 1000000 + 0.5)
-               AS BIGINT) AS w6
-           FROM c LEFT JOIN k ON k.source = c.source),
-         t AS (SELECT CAST(sum(n_kept) AS BIGINT) AS tot_kept,
-             CAST(sum(w6) AS BIGINT) AS tot_w6 FROM j),
-         z AS (SELECT source, n_docs, n_kept,
-             round(CAST(n_kept AS DOUBLE) / CAST(n_docs AS DOUBLE), 6) AS keep_rate,
-             round(CAST(n_kept AS DOUBLE) / CAST(tot_kept AS DOUBLE), 6)
-               AS achieved_share,
-             round(CAST(w6 AS DOUBLE) / CAST(tot_w6 AS DOUBLE), 6) AS target_share
-           FROM j, t)
-         SELECT source, n_docs, n_kept, keep_rate, achieved_share, target_share,
-           round(achieved_share - target_share, 6) AS miss
-         FROM z"""),
-    "x1_pack_shards" ->
-      """SELECT doc_id, source, n_tokens,
-         CAST((cum - n_tokens) // 500 AS BIGINT) AS shard FROM (
-           SELECT doc_id, source,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(sum(len(string_split(text, ' '))) OVER (PARTITION BY source
-               ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-           FROM documents)""",
-    "x1_curriculum" ->
-      ("""WITH q AS (SELECT doc_id, source, round(""" + qualityScoreFromDocs + """
-         r AS (SELECT doc_id, source, quality, row_number() OVER (
-             PARTITION BY source ORDER BY quality DESC, doc_id) AS rank FROM q),
-         t AS (SELECT * FROM r WHERE rank <= 100),
-         s AS (SELECT source, CAST(row_number() OVER (ORDER BY source) AS BIGINT)
-             AS src_idx FROM (SELECT DISTINCT source FROM t)),
-         n AS (SELECT count(*) AS n_src FROM s)
-         SELECT t.doc_id, t.source, t.quality,
-           CAST((t.rank - 1) * n.n_src + s.src_idx - 1 AS BIGINT) AS global_pos
-         FROM t JOIN s ON t.source = s.source, n"""),
-    "x1_pack_contexts" ->
-      """WITH d AS (SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-             CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-               AS BIGINT) AS cum
-           FROM d),
-         x AS (SELECT doc_id, n_tokens, cum, cum - n_tokens AS strt,
-             unnest(generate_series((cum - n_tokens) // 128, (cum - 1) // 128))
-               AS ctx_id
-           FROM c)
-         SELECT doc_id, ctx_id,
-           greatest(0, ctx_id * 128 - strt) AS tok_from,
-           least(n_tokens, (ctx_id + 1) * 128 - strt) AS tok_to,
-           least(n_tokens, (ctx_id + 1) * 128 - strt)
-             - greatest(0, ctx_id * 128 - strt) AS n_ctx_tokens
-         FROM x""",
-    "x1_source_cap" ->
-      """SELECT doc_id, source, rn FROM (
-           SELECT doc_id, source, CAST(row_number() OVER (PARTITION BY source
-             ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT),
-                      doc_id) AS BIGINT) AS rn
-           FROM documents) WHERE rn <= 15""",
-    "x1_budget_select" ->
-      ("""WITH q AS (SELECT doc_id,
-             round(
-               """ + qualityLengthTerm + """ +
-               0.3 * (len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','and','to'))) /
-                      CAST(len(string_split(text,' ')) AS DOUBLE)) +
-               0.3 * (1.0 - length(regexp_replace(text, '[a-z ]', '', 'g')) /
-                      CAST(greatest(length(text), 1) AS DOUBLE)), 6) AS quality,
-             CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (SELECT doc_id, quality, n_tokens,
-             sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM q)
-         SELECT doc_id, quality, n_tokens, CAST(cum AS BIGINT) AS cum
-         FROM c WHERE cum - n_tokens < 10000"""),
-    "x1_first_event" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us FROM (
-           SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-             ORDER BY ts, event_id) AS rn FROM events) WHERE rn = 1""",
-    "x1_fingerprint_dedup" ->
-      """SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS n_dups
-         FROM documents GROUP BY md5(text)""",
-    "x1_epoch_shuffle" ->
-      """WITH k AS (SELECT CAST(ep.epoch AS BIGINT) AS epoch, d.doc_id,
-             CAST(('0x' || substr(md5(CAST(ep.epoch AS VARCHAR) || ':' ||
-               CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS key
-           FROM documents d, (SELECT unnest(range(3)) AS epoch) ep)
-         SELECT epoch, doc_id,
-           CAST(row_number() OVER (PARTITION BY epoch ORDER BY key, doc_id) AS BIGINT) AS pos
-         FROM k""",
-    // leakage-safe split: the x4_cluster chain through l3 + the
-    // x1_sample_split md5-pct thresholds keyed on the CLUSTER id instead
-    // of doc_id
-    "x1_grouped_split" ->
-      (clusterTkToL3Last + """
-         SELECT doc_id, cluster,
-           CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS pct,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split
-         FROM l3"""),
-    // leakage-safe k-fold: the x4_cluster chain through l3 + fold =
-    // md5-hash(cluster) mod 5 + the x1_kfold balance-report tail
-    "x1_grouped_kfold" ->
-      (clusterTkToL3 + """
-         f AS (SELECT doc_id,
-             CAST(('0x' || substr(md5(CAST(cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 5 AS fold
-           FROM l3),
-         j AS (SELECT f.fold, d.source,
-             CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens, d.n_chars
-           FROM f JOIN documents d ON d.doc_id = f.doc_id)
-         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-             AS mean_chars
-         FROM j GROUP BY 1"""),
-    // the x4_cluster chain plus the x1_sample_split hash assignment,
-    // histogrammed by the split-set signature of each cluster; a comma in
-    // `splits` = leakage
-    "x1_time_split" ->
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day, user_id FROM events),
-         s AS (SELECT min(day) + (max(day) - min(day)) * 4 // 5 AS split_day FROM d),
-         t AS (SELECT d.day, d.user_id, d.day < s.split_day AS is_train FROM d, s),
-         ev AS (SELECT
-             CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-             CAST(sum(CASE WHEN is_train THEN 0 ELSE 1 END) AS BIGINT) AS n_test
-           FROM t),
-         uu AS (SELECT user_id,
-             max(CASE WHEN is_train THEN 1 ELSE 0 END) AS in_train,
-             max(CASE WHEN is_train THEN 0 ELSE 1 END) AS in_test
-           FROM t GROUP BY user_id),
-         us AS (SELECT CAST(sum(in_train) AS BIGINT) AS n_train_users,
-             CAST(sum(in_test) AS BIGINT) AS n_test_users,
-             CAST(sum(CASE WHEN in_train = 1 AND in_test = 1 THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_cross_users
-           FROM uu)
-         SELECT s.split_day, ev.n_train, ev.n_test, us.n_train_users,
-           us.n_test_users, us.n_cross_users,
-           round(CAST(us.n_cross_users AS DOUBLE) /
-             CAST(us.n_train_users AS DOUBLE), 6) AS cross_frac
-         FROM s, ev, us""",
-    "x1_split_leakage" ->
-      (clusterTkToL3 + """
-         sp AS (SELECT doc_id,
-             CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                  ELSE 'test' END AS split
-           FROM documents),
-         cl AS (SELECT l3.cluster,
-             array_to_string(list_sort(list_distinct(list(split))), ',') AS splits,
-             count(*) AS n_docs
-           FROM l3 JOIN sp ON sp.doc_id = l3.doc_id GROUP BY 1)
-         SELECT splits, CAST(count(*) AS BIGINT) AS n_clusters,
-           CAST(sum(n_docs) AS BIGINT) AS n_docs
-         FROM cl GROUP BY 1"""),
-    "x1_systematic_sample" ->
-      """WITH d AS (SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens, CAST(sum(n_tokens) OVER (
-             ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS cum
-           FROM d)
-         SELECT doc_id, n_tokens, cum,
-           (cum // 997) - ((cum - n_tokens) // 997) AS n_ticks
-         FROM c WHERE (cum // 997) > ((cum - n_tokens) // 997)""",
-    "x1_weighted_sample" ->
-      """WITH s AS (SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-             % 2147483647 AS h
-           FROM documents)
-         SELECT doc_id, n_tokens,
-           CAST(floor(ln((h + 1) / 2147483647.0) / n_tokens * 1e6 + 0.5)
-             AS BIGINT) AS lk6
-         FROM s ORDER BY lk6 DESC, doc_id LIMIT 20""",
-    // release-split balance audit: the FULL x7_curate_split oracle as the
-    // `man` CTE (every shared chain) + the per-split
-    // docs/tokens/sources/achieved-pct tail
-    "x1_split_audit" ->
-      (curateSplitKeep1ToL3 + """
-           ON m.doc_id = l.doc_id),
-         man AS (SELECT l3.doc_id, l3.cluster,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           d.lang, d.source,
-           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
-         FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id),
-         ag AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-             CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-           FROM man GROUP BY 1),
-         tot AS (SELECT CAST(sum(sum_tokens) AS BIGINT) AS tot_tokens FROM ag)
-         SELECT split, n_docs, sum_tokens, n_sources,
-           round(CAST(sum_tokens AS DOUBLE) / tot_tokens, 6) AS token_pct
-         FROM ag, tot"""),
-    "x1_heavy_hitters" ->
-      """WITH c AS (SELECT user_id AS key, CAST(count(*) AS BIGINT) AS n
-             FROM events GROUP BY user_id),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS total,
-             CAST(count(*) AS BIGINT) AS n_keys FROM c)
-         SELECT key, n,
-           round(CAST(n AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share,
-           round(CAST(n AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(total AS DOUBLE), 4) AS skew
-         FROM c, t ORDER BY n DESC, key ASC LIMIT 20""",
-  )
-
   // ---- x4: near-duplicate detection ----
   private def x4: Map[String, String] = Map(
     "x4_minhash_sig" ->
@@ -2922,812 +3495,6 @@ private[graft] object Oracles {
              (x,y) -> x+y) / (a.nrm * b.nrm), 6) >= 0.38)
          SELECT vec_id FROM embeddings
          WHERE vec_id NOT IN (SELECT b_id FROM drops)"""),
-  )
-
-  // ---- x7: curation pipelines ----
-  private def x7: Map[String, String] = Map(
-    // composes the stored-artifact probe chains: fingerprint set, the
-    // x4_incremental band chain, the x4_span_incremental span chain, and
-    // the x4_decontaminate 3-gram chain; incoming = 50 <= id < 100, index
-    // = id >= 100, bench = id < 50
-    "x7_curate_incremental" ->
-      ("""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         fps AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id >= 100),
-         fpf AS (SELECT doc_id, CASE WHEN fps.fp IS NOT NULL THEN 1 ELSE 0 END AS fhit
-           FROM (SELECT doc_id, md5(text) AS fp FROM documents
-                 WHERE doc_id >= 50 AND doc_id < 100) i
-           LEFT JOIN fps ON fps.fp = i.fp),
-         mh AS (SELECT doc_id, list_transform(""" + minhashSig + """
-           FROM mh),
-         bd AS (SELECT doc_id, b, array_to_string(s[b*4+1:b*4+4], ':') AS key
-           FROM sig, (SELECT unnest(range(4)) AS b)),
-         bidx AS (SELECT b, key FROM bd WHERE doc_id >= 100 GROUP BY b, key),
-         bh AS (SELECT DISTINCT i.doc_id FROM bd i
-           JOIN bidx x ON i.b = x.b AND i.key = x.key
-           WHERE i.doc_id >= 50 AND i.doc_id < 100),
-         sp AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(t) - 7),
-             i -> CAST(('0x' || substr(md5(array_to_string(t[i+1:i+8], ' ')), 1, 15)) AS BIGINT)))) AS sh
-           FROM tk WHERE len(t) >= 8),
-         sidx AS (SELECT DISTINCT sh FROM sp WHERE doc_id >= 100),
-         sfrac AS (SELECT inc.doc_id,
-             round(CAST(sum(CASE WHEN sidx.sh IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE), 6) AS index_frac
-           FROM (SELECT doc_id, sh FROM sp WHERE doc_id >= 50 AND doc_id < 100) inc
-           LEFT JOIN sidx ON sidx.sh = inc.sh GROUP BY 1),
-         shg AS (SELECT doc_id, list_distinct(list_transform(range(len(t) - 2),
-             i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS shingles
-           FROM tk WHERE len(t) >= 3),
-         inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shg),
-         ct AS (SELECT DISTINCT c.doc_id
-           FROM inv c JOIN inv b ON c.shingle = b.shingle
-           WHERE c.doc_id >= 50 AND c.doc_id < 100 AND b.doc_id < 50
-           GROUP BY c.doc_id, b.doc_id
-           HAVING count(*) >= 5)
-         SELECT d.doc_id,
-           fpf.fhit = 1 AS fp_dup,
-           bh.doc_id IS NOT NULL AS band_hit,
-           COALESCE(sfrac.index_frac, 0.0) AS span_frac,
-           ct.doc_id IS NOT NULL AS contaminated,
-           (fpf.fhit = 0 AND bh.doc_id IS NULL
-             AND COALESCE(sfrac.index_frac, 0.0) <= 0.5
-             AND ct.doc_id IS NULL) AS kept
-         FROM (SELECT doc_id FROM documents
-               WHERE doc_id >= 50 AND doc_id < 100) d
-         JOIN fpf ON fpf.doc_id = d.doc_id
-         LEFT JOIN bh ON bh.doc_id = d.doc_id
-         LEFT JOIN sfrac ON sfrac.doc_id = d.doc_id
-         LEFT JOIN ct ON ct.doc_id = d.doc_id"""),
-    "x7_curate" ->
-      (curateKeep1ToD3 + curatePacked),
-    // perplexity-gated curation: x7_curate's keep1/d1 exact-dedup head +
-    // the x3_unigram_logprob arithmetic (l-prefixed CTEs; integer
-    // micro-nats, one division, one rounding) as the stage-2 gate (drop
-    // the bottom 10% avg logprob per language) + x7_curate's tk..ov
-    // decontam block and packed tail
-    "x7_curate_lm" ->
-      ("""WITH """ + exactDedupKeep1 + """,
-         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
-         ltk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-             FROM documents),
-         lpd AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS k
-           FROM ltk GROUP BY doc_id, tok),
-         lc AS (SELECT tok, CAST(sum(k) AS BIGINT) AS c FROM lpd GROUP BY tok),
-         lnn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM lc),
-         ls AS (SELECT lpd.doc_id, lpd.k,
-             CAST(floor(ln(CAST(lc.c AS DOUBLE) / CAST(lnn.n AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp6
-           FROM lpd JOIN lc ON lc.tok = lpd.tok, lnn),
-         la AS (SELECT doc_id, round(CAST(sum(k * lp6) AS DOUBLE) /
-             (CAST(sum(k) AS BIGINT) * 1000000.0), 6) AS alp
-           FROM ls GROUP BY doc_id),
-         r AS (SELECT d.doc_id,
-             round(percent_rank() OVER (PARTITION BY d.lang
-               ORDER BY la.alp, d.doc_id), 6) AS pr
-           FROM d1 d JOIN la ON la.doc_id = d.doc_id),
-         d2 AS (SELECT d1.* FROM d1 JOIN r ON d1.doc_id = r.doc_id
-           WHERE r.pr >= 0.1 AND d1.doc_id >= 50),""" + curateTkToPacked),
-    // dataset-release build: the x7_curate head through d3 + the
-    // x4_cluster chain retargeted to the survivors (ctk/l0 read FROM d3;
-    // every minhash formula byte-identical) + the x1_grouped_split
-    // hash-split tail
-    "x7_curate_split" ->
-      (curateSplitKeep1ToL3 + """
-           ON m.doc_id = l.doc_id)
-         SELECT l3.doc_id, l3.cluster,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           d.lang, d.source,
-           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
-         FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id"""),
-    // the x7_curate chain with the x1_temperature thin computed over the
-    // SURVIVORS (d3) before packing
-    "x7_curate_mixture" ->
-      (curateKeep1ToD3 + """
-         tc AS (SELECT source, count(*) AS n_docs FROM d3 GROUP BY source),
-         tm AS (SELECT min(n_docs) AS n_min FROM tc),
-         tr AS (SELECT source,
-             """ + temperatureWeight + """ AS frac
-           FROM tc, tm),
-         d4 AS (SELECT d3.* FROM d3 JOIN tr ON tr.source = d3.source
-           WHERE CAST(('0x' || substr(md5(CAST(d3.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
-             < CAST(tr.frac * 1000000 AS BIGINT)),""" + curateMixturePacked),
-    "x7_curate_verbatim" ->
-      (curateKeep1ToD3 + """
-         sp AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(t) - 7),
-             i -> CAST(('0x' || substr(md5(array_to_string(t[i+1:i+8], ' ')), 1, 15)) AS BIGINT)))) AS spanh
-           FROM tk WHERE len(t) >= 8),
-         spdf AS (SELECT spanh, count(*) AS ndocs FROM sp GROUP BY 1),
-         spflag AS (SELECT doc_id FROM sp JOIN spdf USING (spanh)
-           GROUP BY 1
-           HAVING round(CAST(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE) /
-             CAST(count(*) AS DOUBLE), 6) > 0.5),
-         d4 AS (SELECT * FROM d3 WHERE doc_id NOT IN (SELECT doc_id FROM spflag)),""" +
-      curateMixturePacked),
-    "x7_curate_curriculum" ->
-      (curateKeep1ToD3 + """
-         cq AS (SELECT doc_id, source, quality FROM d3
-           JOIN q USING (doc_id)),
-         cr AS (SELECT doc_id, source, quality, row_number() OVER (
-             PARTITION BY source ORDER BY quality DESC, doc_id) AS rank FROM cq),
-         ct AS (SELECT * FROM cr WHERE rank <= 100),
-         cs AS (SELECT source, CAST(row_number() OVER (ORDER BY source) AS BIGINT)
-             AS src_idx FROM (SELECT DISTINCT source FROM ct)),
-         cn AS (SELECT count(*) AS n_src FROM cs)
-         SELECT ct.doc_id, ct.source, ct.quality,
-           CAST((ct.rank - 1) * cn.n_src + cs.src_idx - 1 AS BIGINT) AS global_pos
-         FROM ct JOIN cs ON ct.source = cs.source, cn"""),
-    "x7_curate_semantic" ->
-      ("""WITH """ + exactDedupKeep1 + """,
-         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
-         es AS (SELECT e0.vec_id, list_transform(e0.embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings e0 JOIN d1 ON d1.doc_id = e0.vec_id),
-         n AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM es),""" +
-      ivfC0ToA1 + """
-         dd1 AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM a1),
-         s1 AS (SELECT cell, pos, sum(val) AS s, count(*) AS cnt FROM dd1 GROUP BY cell, pos),""" +
-      ivfU1ToA2 + """
-         dd2 AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM a2),
-         s2 AS (SELECT cell, pos, sum(val) AS s, count(*) AS cnt FROM dd2 GROUP BY cell, pos),
-         u2 AS (SELECT cell, list(round(s / cnt, 6) ORDER BY pos) AS cv FROM s2 GROUP BY cell),
-         c2 AS (SELECT c1.c_id, coalesce(u2.cv, c1.cv) AS cv
-             FROM c1 LEFT JOIN u2 ON u2.cell = c1.c_id),
-         k2 AS (SELECT c_id, cv,
-             sqrt(list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y)) AS cn FROM c2),
-         rk AS (SELECT t.vec_id, t.v, t.nrm, k.c_id,""" + ivfRkArgmax + """
-         asg AS (SELECT vec_id, v, nrm, c_id AS cell FROM rk WHERE ar = 1),
-         pr0 AS (SELECT b.vec_id,
-             round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
-               (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
-           FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-         sem AS (SELECT DISTINCT vec_id FROM pr0 WHERE cos >= 0.38),
-         d1s AS (SELECT * FROM d1 WHERE doc_id NOT IN (SELECT vec_id FROM sem)),""" + curateQ + """
-           FROM d1s),
-         r AS (SELECT d.doc_id,
-             round(percent_rank() OVER (PARTITION BY d.lang
-               ORDER BY q.quality, d.doc_id), 6) AS pr
-           FROM d1s d JOIN q ON d.doc_id = q.doc_id),
-         d2 AS (SELECT d1s.* FROM d1s JOIN r ON d1s.doc_id = r.doc_id
-           WHERE r.pr >= 0.5 AND d1s.doc_id >= 50),""" + curateTkToPacked),
-    "x7_curate_budget" ->
-      (curateKeep1ToD3 + """
-         bq AS (SELECT d3.doc_id, q.quality,
-             CAST(len(string_split(d3.text,' ')) AS BIGINT) AS n_tokens
-           FROM d3 JOIN q ON d3.doc_id = q.doc_id),
-         c AS (SELECT doc_id, quality, n_tokens,
-             sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM bq)
-         SELECT doc_id, quality, n_tokens, CAST(cum AS BIGINT) AS cum
-         FROM c WHERE cum - n_tokens < 5000"""),
-    "x7_report" ->
-      (curateKeep1ToR + """
-         d2q AS (SELECT d1.* FROM d1 JOIN r ON d1.doc_id = r.doc_id
-           WHERE r.pr >= 0.5),
-         d2 AS (SELECT * FROM d2q WHERE doc_id >= 50),""" + curateTkToOv + """
-         d3 AS (SELECT * FROM d2 WHERE doc_id NOT IN (SELECT doc_id FROM ov))
-         SELECT (SELECT count(*) FROM documents) AS n_input,
-           (SELECT count(*) FROM d1) AS n_after_exact,
-           (SELECT count(*) FROM d2q) AS n_after_quality,
-           (SELECT count(*) FROM d2) AS n_candidates,
-           (SELECT count(*) FROM d3) AS n_kept"""),
-    "x7_curate_neardup" ->
-      ("""WITH """ + exactDedupKeep1 + """,
-         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
-         tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM d1),
-         tt AS (SELECT doc_id, list_transform(""" + minhashSig + """
-           FROM tt),""" + minhashRepToE + """
-         l0 AS (SELECT doc_id, doc_id AS cluster FROM d1),""" + clusterL1ToL3 + """
-           ON m.doc_id = l.doc_id),
-         dn AS (SELECT d1.* FROM d1 JOIN l3 ON d1.doc_id = l3.doc_id
-           WHERE l3.cluster = l3.doc_id),""" + curateQ + """
-           FROM dn),
-         r AS (SELECT d.doc_id,
-             round(percent_rank() OVER (PARTITION BY d.lang
-               ORDER BY q.quality, d.doc_id), 6) AS pr
-           FROM dn d JOIN q ON d.doc_id = q.doc_id),
-         d2 AS (SELECT dn.* FROM dn JOIN r ON dn.doc_id = r.doc_id
-           WHERE r.pr >= 0.5 AND dn.doc_id >= 50),
-         tk2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (SELECT doc_id, list_distinct(list_transform(range(len(t) - 2),
-             i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS shingles
-           FROM tk2 WHERE len(t) >= 3),""" + curateInvToPacked),
-  )
-
-  // ---- x2: vector search and its audits ----
-  private def x2: Map[String, String] = Map(
-    "x2_ann_diverse" ->
-      """WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         n AS (SELECT vec_id, label, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
-         s AS (SELECT q.vec_id AS q_id, t.label, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
-           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
-         c AS (SELECT q_id, label, n_id, cos, row_number() OVER (PARTITION BY
-             q_id, label ORDER BY cos DESC, n_id) AS lr FROM s),
-         r AS (SELECT q_id, label, n_id, cos, row_number() OVER (PARTITION BY
-             q_id ORDER BY cos DESC, n_id) AS rank FROM c WHERE lr = 1)
-         SELECT q_id, label, n_id, round(cos, 6) AS cos,
-           CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 5""",
-    "x2_ann_topk" ->
-      (embeddingEToN + """
-         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
-           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
-         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
-             ORDER BY cos DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 5"""),
-    // cosine RANGE search: every neighbor above the rounded-cosine
-    // radius (the FAISS range_search semantics; set-valued output)
-    "x2_range_search" ->
-      (embeddingEToN + """
-         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
-           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id)
-         SELECT q_id, n_id, cos FROM s WHERE cos >= 0.25"""),
-    "x2_mips_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) AS dp
-           FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
-         r AS (SELECT q_id, n_id, dp, row_number() OVER (PARTITION BY q_id
-             ORDER BY dp DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 5""",
-    // the norm-augmented LSH chain: the x2_ann_lsh plane formula lifted
-    // to dim 65 over the UNSCALED augmentation [v, sqrt(M^2 - |v|^2)]
-    // (query lift appends 0) — sign hashes are scale-invariant, so the
-    // unscaled lift buckets identically to the unit-norm reduction
-    "x2_mips_lsh" ->
-      (mipsEToR + """
-             ORDER BY dp DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 3"""),
-    // the x2_mips_lsh mm..r chain followed by the brute-force sb/rb chain
-    // + overlap
-    "x2_mips_recall" ->
-      (mipsEToR + """
-             ORDER BY dp DESC, n_id) AS rank FROM s),""" + mipsSbToOvOpen + """
-           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 3) b
-           LEFT JOIN (SELECT q_id, n_id FROM r WHERE rank <= 3) l
-             ON l.q_id = b.q_id AND l.n_id = b.n_id)
-         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
-           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 3.0, 4) AS recall
-         FROM ov GROUP BY q_id"""),
-    "x2_cosine_pairs" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         n AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e)
-         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
-             (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
-         FROM n a JOIN n b ON a.vec_id < b.vec_id
-         ORDER BY cos DESC, a_id, b_id LIMIT 20""",
-    "x2_ann_filtered" ->
-      ("""WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + filteredNToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
-      filteredCandToTop3),
-    // filtered recall: the labeled e/n head + a brute chain RESTRICTED to
-    // the query's label (the filtered ground truth) + x2_ann_filtered's
-    // bb..r labeled chain
-    "x2_filtered_recall" ->
-      (filteredEToBb + """
-         qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
-      filteredCandToApprox),
-    // filtered ranking audit: the filtered brute head e..xr + the labeled
-    // bb + qp..r chains, keeping RANKS on both sides; graded recall
-    // normalizes by the query's OWN max gain (sum of 4 - e.rank over its
-    // exact rows)
-    "x2_filtered_rank_quality" ->
-      (filteredEToXr + filteredExactToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
-      filteredCandToRankedApprox),
-    // labeled occupancy pre-flight: the labeled e/n head + bb chain rolled
-    // up per (table, label)
-    "x2_filtered_bucket_stats" ->
-      ("""WITH e AS (SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + filteredNToG),
-    // filtered probe-budget curve: x2_filtered_recall's e..exact head +
-    // the labeled bb CTE; the qp probe CTE adds the mask INDEX (zipped
-    // unnest), candidates keep their cheapest discovery, the curve is a
-    // conditional count
-    "x2_filtered_probe_curve" ->
-      (filteredEToBb + """
-         qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + filteredCmToJ),
-    "x2_recall" ->
-      (recallEToBb + """
-         qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
-      recallCandToApprox),
-    // probe-budget curve: x2_recall's brute e..exact head + bb bucket CTE;
-    // the qp probe CTE adds the mask INDEX (zipped unnest), candidates
-    // keep their cheapest discovery, the curve is a conditional count per
-    // budget
-    "x2_probe_curve" ->
-      (recallEToBb + """
-         qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + probeCurveCmToJ),
-    // ranking-quality audit: x2_recall's brute + LSH chains, keeping RANKS
-    // on both sides; graded recall weights hits by exact rank (gains
-    // 3/2/1, /6), mrr = 1/min approx rank holding an exact top-3 item
-    "x2_rank_quality" ->
-      (recallEToXr + """
-         exact AS (SELECT q_id, n_id, rank FROM xr WHERE rank <= 3),""" + lshBbToS + """
-         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id""" + rankQualityApprox),
-    "x2_ann_lsh" ->
-      (lshEToS + """
-         r AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
-             ORDER BY cos DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 3"""),
-    // bucketed radius search: the x2_ann_lsh bucket/candidate chain + the
-    // rounded-cosine range filter instead of the top-k window
-    "x2_range_lsh" ->
-      (lshEToS + """
-         f AS (SELECT q_id, n_id, round(cos, 6) AS cos FROM s)
-         SELECT q_id, n_id, cos FROM f WHERE cos >= 0.25"""),
-    // radius recall audit: the x2_range_lsh bucket/candidate/f chain + a
-    // brute radius leg (bs/rex, the x2_range_search scored stream under
-    // different CTE names) + the per-query hit-count tail; queries with an
-    // empty radius set report NULL recall
-    "x2_range_recall" ->
-      (lshEToS + """
-         f AS (SELECT q_id, n_id, round(cos, 6) AS cos FROM s),
-         app AS (SELECT q_id, n_id, 1 AS hit FROM f WHERE cos >= 0.25),
-         bs AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
-           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
-         rex AS (SELECT q_id, n_id FROM bs WHERE cos >= 0.25),
-         g AS (SELECT rex.q_id, CAST(count(*) AS BIGINT) AS n_true,
-             CAST(sum(coalesce(a.hit, 0)) AS BIGINT) AS n_found
-           FROM rex LEFT JOIN app a ON a.q_id = rex.q_id AND a.n_id = rex.n_id
-           GROUP BY rex.q_id)
-         SELECT qq.vec_id AS q_id,
-           CAST(coalesce(g.n_true, 0) AS BIGINT) AS n_true,
-           CAST(coalesce(g.n_found, 0) AS BIGINT) AS n_found,
-           CASE WHEN coalesce(g.n_true, 0) > 0
-             THEN round(CAST(g.n_found AS DOUBLE) / g.n_true, 4) END AS recall
-         FROM (SELECT vec_id FROM e WHERE vec_id < 20) qq
-         LEFT JOIN g ON g.q_id = qq.vec_id"""),
-    "x2_bucket_stats" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + lshBbToG),
-    "x2_ann_ivf" ->
-      (ivfEToQ + """
-         s AS (SELECT q.q_id, t.vec_id AS n_id, t.cell AS cell,
-             list_reduce(list_transform(range(1, len(q.qv)+1), i -> q.qv[i]*t.v[i]),
-               (x,y) -> x+y) / (q.qn * t.nrm) AS cos
-           FROM asg t JOIN q ON t.cell = q.cell AND t.vec_id <> q.q_id),
-         r AS (SELECT q_id, n_id, cell, cos, row_number() OVER (PARTITION BY q_id
-             ORDER BY cos DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, cell, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 3"""),
-    // the composed IVF x SQ oracle: the x2_ann_ivf training/assignment
-    // chain through prb + the x2_quantize sc/qq encode chain + SQ ADC
-    // scoring on probed cells
-    "x2_ann_ivfsq" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfsqSearchChain),
-    // residual IVF x SQ: the IVF chain + x2_ann_ivfpq_res's slim rk/asg
-    // head, resv residual frame, and pbr/pb/qres probe head + an int8
-    // encode of the residuals on BOTH sides; ranking = estimated residual
-    // L2 (exact int dots + exact dyadic ||qr||^2; the scale products are
-    // the only rounding IEEE ops, fixed operand order)
-    "x2_ann_ivfsq_res" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfsqResSearchChain),
-    // IVF x SQ recall audit: x2_ann_ivfsq_res's FULL chain (IVF training +
-    // residual frame/encode/estimate through srr) + a raw-code L2 leg over
-    // the SAME rivfc candidates (x2_quantize's sc/qq encode chain + the
-    // asymmetric L2 estimate with the exact query norm) +
-    // x2_ivfpq_recall's exact ground-truth chain (xn..ex) and hits tail.
-    // Holding the metric (L2) and (nCells, nProbe) fixed isolates
-    // raw-vs-residual encoding as the only variable.
-    "x2_ivfsq_recall" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfsqRecallChain),
-    "x2_ivf_recall" ->
-      (ivfEToQ + """
-         s AS (SELECT q.q_id, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.qv)+1), i -> q.qv[i]*t.v[i]),
-               (x,y) -> x+y) / (q.qn * t.nrm) AS cos
-           FROM asg t JOIN q ON t.cell = q.cell AND t.vec_id <> q.q_id),
-         r AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
-             ORDER BY cos DESC, n_id) AS rank FROM s),
-         ivf AS (SELECT q_id, n_id FROM r WHERE rank <= 3),""" + ivfBsToBr + """
-         ex AS (SELECT q_id, n_id FROM br WHERE rank <= 3)
-         SELECT ex.q_id, CAST(sum(CASE WHEN ivf.n_id IS NOT NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits,
-           round(CAST(sum(CASE WHEN ivf.n_id IS NOT NULL THEN 1 ELSE 0 END)
-             AS BIGINT) / 3.0, 4) AS recall
-         FROM ex LEFT JOIN ivf ON ivf.q_id = ex.q_id AND ivf.n_id = ex.n_id
-         GROUP BY ex.q_id"""),
-    // IVF probe curve: x2_ivf_recall's full training chain e..asg and its
-    // brute bs/br/ex ground truth; the budget that first reaches an exact
-    // neighbor is the rank (ar) of its cell in the query's centroid order,
-    // so the curve is one conditional count per budget
-    "x2_ivf_probe_curve" ->
-      (ivfEToAsg + """
-         cr AS (SELECT vec_id AS q_id, c_id AS cell, ar FROM rk WHERE vec_id < 20),""" + ivfBsToBr +
-      """
-         ex AS (SELECT q_id, n_id FROM br WHERE rank <= 3),
-         cm AS (SELECT ex.q_id, ex.n_id, cr.ar FROM ex
-           JOIN asg t ON t.vec_id = ex.n_id
-           JOIN cr ON cr.q_id = ex.q_id AND cr.cell = t.cell)
-         SELECT CAST(p AS BIGINT) AS n_probes, CAST(count(*) AS BIGINT) AS n_true,
-           CAST(sum(CASE WHEN ar <= p THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           round(CAST(sum(CASE WHEN ar <= p THEN 1 ELSE 0 END) AS DOUBLE) /
-             CAST(count(*) AS DOUBLE), 4) AS recall
-         FROM cm, (SELECT unnest([1, 2, 3, 4]) AS p)
-         GROUP BY p"""),
-    "x2_mean_pool" ->
-      """WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e)
-         SELECT label, CAST(pos AS BIGINT) AS pos,
-           round(sum(val) / count(*), 6) AS val
-         FROM d GROUP BY label, pos""",
-    "x2_confusion" ->
-      ("""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         n AS (SELECT vec_id, label, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
-         d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e),
-         s AS (SELECT label AS c_id, pos, round(sum(val) / count(*), 6) AS val
-           FROM d GROUP BY 1, 2),
-         m AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM s GROUP BY c_id),
-         k AS (SELECT c_id, cv,
-             sqrt(list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y)) AS cn FROM m),
-         r AS (SELECT t.vec_id, t.label, k.c_id,
-               row_number() OVER (PARTITION BY t.vec_id ORDER BY
-                 """ + ivfArgmaxCosine + """
-             FROM n t, k)
-         SELECT label, c_id AS predicted, CAST(count(*) AS BIGINT) AS n
-         FROM r WHERE ar = 1 GROUP BY label, predicted"""),
-    "x2_knn_accuracy" ->
-      (knnEToS + """
-           FROM n q, n t WHERE t.vec_id <> q.vec_id),""" + knnRToJ),
-    // x2_knn_accuracy's chain with ONE added predicate: the QUERY side
-    // shrinks to the deterministic 37% vec-id hash sample while every
-    // sampled query still votes over the full corpus
-    "x2_knn_sampled" ->
-      (knnEToS + """
-           FROM n q, n t WHERE t.vec_id <> q.vec_id
-             AND CAST(('0x' || substr(md5(CAST(q.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
-               % 100 < 37),""" + knnRToJ),
-    "x2_margin_pairs" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + marginNToP + """
-         FROM p WHERE cos + c2 > 0 AND round(cos * 2 / (cos + c2), 6) >= 1.05"""),
-    "x2_ivf_assign" ->
-      (ivfEToRk + """
-             FROM n t, k2 k)
-         SELECT vec_id, c_id AS cell FROM rk WHERE ar = 1"""),
-    "x2_semdedup" ->
-      (ivfEToAsg + """
-         pr AS (SELECT b.vec_id, b.cell, a.vec_id AS keep_id,
-             round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
-               (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
-           FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-         dup AS (SELECT vec_id, cell, keep_id, cos,
-             row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, keep_id) AS rk2
-           FROM pr WHERE cos >= 0.38)
-         SELECT vec_id, cell, keep_id AS dup_of, cos FROM dup WHERE rk2 = 1"""),
-    "x2_ivf_inertia" ->
-      (ivfInertiaEToRk + """
-         w AS (SELECT c_id AS cell, CAST(floor(sc * 1000000 + 0.5) AS BIGINT) AS q
-             FROM rk WHERE ar = 1)
-         SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(sum(q) AS DOUBLE) / (count(*) * 1000000.0) AS mean_cos
-         FROM w GROUP BY cell"""),
-    "x2_ood" ->
-      (ivfInertiaEToRk + """
-         w AS (SELECT vec_id, c_id AS cell,
-             CAST(floor(sc * 1000000 + 0.5) AS BIGINT) AS q6
-             FROM rk WHERE ar = 1),
-         w4 AS (SELECT vec_id, cell, q6, q6 // 100 AS q4 FROM w),
-         st AS (SELECT cell, CAST(count(*) AS BIGINT) AS c,
-             CAST(sum(q4) AS BIGINT) AS s, CAST(sum(q4 * q4) AS BIGINT) AS qq
-           FROM w4 GROUP BY 1)
-         SELECT vec_id, cell, CAST(q6 AS DOUBLE) / 1000000.0 AS cos_to_centroid,
-           round(CAST(q4 * c - s AS DOUBLE) /
-             sqrt(CAST(qq * c - s * s AS DOUBLE)), 4) AS z,
-           (round(CAST(q4 * c - s AS DOUBLE) /
-             sqrt(CAST(qq * c - s * s AS DOUBLE)), 4) <= -2.0) AS is_outlier
-         FROM w4 JOIN st USING (cell) WHERE qq * c - s * s > 0"""),
-    "x2_incremental" ->
-      (embeddingEToN + lshBb + """
-         cand AS (SELECT DISTINCT i.vec_id, x.vec_id AS match_id
-           FROM bb i JOIN bb x ON i.tt = x.tt AND i.bucket = x.bucket
-           WHERE i.vec_id < 100 AND x.vec_id >= 100),
-         s AS (SELECT c.vec_id, c.match_id,
-             round(list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm), 6) AS cos
-           FROM cand c JOIN n q ON q.vec_id = c.vec_id
-             JOIN n t ON t.vec_id = c.match_id),
-         f AS (SELECT vec_id, match_id, cos, row_number() OVER (PARTITION BY vec_id
-             ORDER BY cos DESC, match_id) AS rk FROM s WHERE cos >= 0.38)
-         SELECT vec_id, match_id, cos FROM f WHERE rk = 1"""),
-    "x2_centroids" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfNToC2 + """
-             FROM c1 LEFT JOIN u2 ON u2.cell = c1.c_id)
-         SELECT c_id, CAST(pos AS BIGINT) AS pos, round(val, 6) AS val
-         FROM (SELECT c_id, generate_subscripts(cv, 1) AS pos, unnest(cv) AS val
-               FROM c2) x"""),
-    "x2_pq_codebook" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqSvToC2 + """
-           FROM c1 LEFT JOIN u2 ON u2.sub = c1.sub AND u2.code = c1.code)
-         SELECT CAST(sub AS BIGINT) AS sub, code, CAST(pos AS BIGINT) AS pos,
-           round(val, 6) AS val
-         FROM (SELECT sub, code, generate_subscripts(cv, 1) AS pos, unnest(cv) AS val
-               FROM c2) x"""),
-    "x2_pq_codes" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqCodesChain),
-    "x2_pq_distortion" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqSvToK2 + """
-         r3 AS (SELECT q.vec_id, q.sub,
-             """ + pqPartialDistance + """
-               (x,y) -> x+y) + c.cn2 AS dist
-           FROM sn q JOIN k2 c ON c.sub = q.sub),
-         md AS (SELECT vec_id, sub,
-             CAST(floor(min(dist) * 1000000 + 0.5) AS BIGINT) AS q
-           FROM r3 GROUP BY vec_id, sub)
-         SELECT CAST(sub AS BIGINT) AS sub, CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(sum(q) AS DOUBLE) / (count(*) * 1000000.0) AS mean_dist,
-           CAST(max(q) AS DOUBLE) / 1000000.0 AS max_dist
-         FROM md GROUP BY sub"""),
-    "x2_ann_pq" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqSearchChain),
-    // flat-ADC recall gate: the FULL x2_ann_pq chain (train/encode/
-    // LUT/ADC rank) kept through r, + the composed gates' exact-L2 xn..ex
-    // head + a single-leg hit rollup
-    "x2_pq_recall" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + pqRecallChain),
-    "x2_ann_pq_rerank" ->
-      (pqRerankEToFr + """
-             ORDER BY dist, n_id) AS rank FROM rr)
-         SELECT q_id, n_id, round(dist, 6) AS dist, CAST(rank AS BIGINT) AS rank
-         FROM fr WHERE rank <= 3"""),
-    // shortlist->rerank recall gate: the FULL x2_ann_pq_rerank chain kept
-    // through fr + the exact-L2 xn..ex ground-truth head + the single-leg
-    // rollup
-    "x2_pq_rerank_recall" ->
-      (pqRerankEToFr + """
-             ORDER BY dist, n_id) AS rank FROM rr),
-         ak AS (SELECT q_id, n_id FROM fr WHERE rank <= 3),""" + pqRecallXnToHits),
-    "x2_ann_ivfpq" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfpqSearchChain),
-    // RESIDUAL IVF-PQ: the x2_ann_ivf IVF chain (e..k2/rk/asg) + the
-    // dyadic residual frame (resv: floor((v - centroid)*2^20 + 0.5)/2^20,
-    // the exactness device) + the r-prefixed PQ chain retargeted to
-    // residuals + x2_ann_ivfpq's probe CTEs (pbr/pb) + the per-(query,
-    // cell) residual LUT tail. The r-chain and tail are shared with
-    // x2_ivfpq_recall.
-    "x2_ann_ivfpq_res" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfpqResSearchChain),
-    // IVF-PQ recall audit: BOTH compositions replayed against exact-L2
-    // top-3 -- the IVF chain + x2_ann_ivfpq's raw p-chain and sc/fr tail +
-    // x2_ann_ivfpq_res's resv/r-chain and rsc/rfr tail (all) + a brute
-    // exact-L2 chain (xn/gs/gr/ex) + the x2_ivf_recall hit-count tail per
-    // leg.
-    "x2_ivfpq_recall" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + ivfpqRecallChain),
-    "x2_quantize" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         sc AS (SELECT vec_id, v,
-             list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-         qq AS (SELECT vec_id, scale,
-             CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-                  ELSE list_transform(v, x -> CAST(least(greatest(
-                    floor(x / scale + 0.5), -127.0), 127.0) AS BIGINT)) END AS q
-           FROM sc)
-         SELECT vec_id, round(scale, 6) AS scale,
-           CAST(list_reduce(list_transform(q, x -> abs(x)), (a, b) -> a + b) AS BIGINT) AS q_l1,
-           CAST(list_reduce(q, (a, b) -> a + b) AS BIGINT) AS q_sum,
-           list_max(q) AS q_max
-         FROM qq""",
-    // SQ int8 ADC search: the x2_quantize encode chain (e/sc/qq), then
-    // rank by the asymmetric estimate ip·scale_q·scale_d. The int8 inner
-    // product is an exact integer (≤ 2^20 at dim 64), so the only doubles
-    // are the two scale factors in ONE fixed operand order.
-    "x2_ann_sq" ->
-      (sqEToROpen + """
-             ORDER BY adot DESC, n_id) AS rank FROM s)
-         SELECT q_id, n_id, round(adot, 6) AS adot, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 5"""),
-    // binary sign-pack search: the b/s/r Hamming chain is shared with
-    // x2_binary_recall
-    "x2_ann_binary" ->
-      (binaryEToROpen + """
-             ORDER BY hamming, n_id) AS rank FROM s)
-         SELECT q_id, n_id, hamming, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 5"""),
-    // binary shortlist (top-20 by Hamming, the shared b/s/r chain) ->
-    // exact cosine rerank of only those pairs
-    "x2_ann_binary_rerank" ->
-      (binaryEToRr + """
-             ORDER BY cos DESC, n_id) AS rank FROM ex)
-         SELECT q_id, n_id, round(cos, 6) AS cos, CAST(rank AS INTEGER) AS rank
-         FROM rr WHERE rank <= 5"""),
-    // Hamming-shortlist -> exact-cosine rerank recall gate: the FULL
-    // x2_ann_binary_rerank chain kept through rr (its n CTE already
-    // carries the norms) + the x2_binary_recall brute cosine sb/rb chain +
-    // the hit rollup
-    "x2_binary_rerank_recall" ->
-      (binaryEToRr + """
-             ORDER BY cos DESC, n_id) AS rank FROM ex),
-         ak AS (SELECT q_id, n_id FROM rr WHERE rank <= 5),""" + cosineSbToRb + """
-         ov AS (SELECT b.q_id, b.n_id,
-             CASE WHEN l.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 5) b
-           LEFT JOIN ak l ON l.q_id = b.q_id AND l.n_id = b.n_id)
-         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
-           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
-         FROM ov GROUP BY q_id"""),
-    // binary recall audit: the SAME b/s/r Hamming chain + the exact
-    // cosine brute-force chain as ground truth
-    "x2_binary_recall" ->
-      (binaryEToR + """
-         n AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),""" +
-      cosineSbToRb + """
-         ov AS (SELECT g.q_id, g.n_id,
-             CASE WHEN l.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM (SELECT q_id, n_id FROM rb WHERE rank <= 5) g
-           LEFT JOIN (SELECT q_id, n_id FROM r WHERE rank <= 5) l
-             ON l.q_id = g.q_id AND l.n_id = g.n_id)
-         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
-           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
-         FROM ov GROUP BY q_id"""),
-    // two-stage SQ serve: the x2_ann_sq chain (e/sc/qq/s/r) proposes 20
-    // candidates, then only those pairs rerank by the EXACT double dot
-    // product.
-    "x2_ann_sq_rerank" ->
-      (sqEToRr + """
-             ORDER BY dp DESC, n_id) AS rank FROM ex)
-         SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
-         FROM rr WHERE rank <= 5"""),
-    // int8-shortlist -> exact-dot rerank recall gate: the FULL
-    // x2_ann_sq_rerank chain kept through rr + the x2_sq_recall brute MIPS
-    // sb/rb chain + the hit rollup
-    "x2_sq_rerank_recall" ->
-      (sqEToRr + """
-             ORDER BY dp DESC, n_id) AS rank FROM ex),
-         ak AS (SELECT q_id, n_id FROM rr WHERE rank <= 5),""" + mipsSbToOv + """
-           LEFT JOIN ak l ON l.q_id = b.q_id AND l.n_id = b.n_id)
-         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
-           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
-         FROM ov GROUP BY q_id"""),
-    // SQ recall audit: exact-MIPS ground truth (the x2_mips_recall sb/rb
-    // brute-force chain) left-joined with the SQ top-5 (qs2/qr2 = the
-    // x2_ann_sq scoring formula over the shared encode chain).
-    "x2_sq_recall" ->
-      ("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),""" + sqScToQs2 + """
-           FROM qq a, qq b WHERE a.vec_id < 20 AND b.vec_id <> a.vec_id),
-         qr2 AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
-             ORDER BY adot DESC, n_id) AS rank FROM qs2),""" + mipsSbToOv + """
-           LEFT JOIN (SELECT q_id, n_id FROM qr2 WHERE rank <= 5) l
-             ON l.q_id = b.q_id AND l.n_id = b.n_id)
-         SELECT q_id, CAST(sum(hit) AS BIGINT) AS n_hits,
-           round(CAST(CAST(sum(hit) AS BIGINT) AS DOUBLE) / 5.0, 4) AS recall
-         FROM ov GROUP BY q_id"""),
-    // hybrid retrieval: the x2_ann_topk cosine chain (e2/n2/s2/r2 = its
-    // e/n/s/r, copied verbatim modulo CTE names) and the x3_bm25_search
-    // terms/dl/nd/dfs/idx chain with the query CTE swapped to doc_id < 20,
-    // fused by integer RRF contributions floor(10^6/(60 + rank)).
-    "x2_hybrid_rrf" ->
-      ("""WITH e2 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         n2 AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e2),
-         s2 AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
-           FROM n2 q, n2 t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
-         r2 AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id
-             ORDER BY cos DESC, n_id) AS rank FROM s2),
-         terms AS (""" + bm25DlToQ + """
-           WHERE doc_id < 20),""" + bm25HitToRk + """
-             PARTITION BY q_id ORDER BY s6 DESC, doc_id) AS rank FROM sc),
-         dr AS (SELECT q_id, n_id AS match_id, CAST(rank AS BIGINT) AS dense_rank
-           FROM r2 WHERE rank <= 5),
-         br AS (SELECT q_id, doc_id AS match_id, CAST(rank AS BIGINT) AS bm25_rank
-           FROM rk WHERE rank <= 5),""" + hybridFuToFr),
-    // ALL-stored hybrid: the x2_ann_sq encode chain (e/sc/qq) + its ADC
-    // top-k (s/r, carries the shared asymmetric-estimate formula) as the
-    // dense leg, the x3_bm25_search terms/dl/nd/dfs/idx chain with the
-    // doc_id < 20 query CTE as the sparse leg (score CTEs renamed bsc/brk:
-    // `sc` is taken by the SQ chain), fused by the same integer RRF tail
-    // as x2_hybrid_rrf.
-    "x2_hybrid_rrf_stored" ->
-      (sqEToR + """
-         terms AS (""" + bm25DlToIdx + """
-         qt AS (SELECT DISTINCT doc_id AS q_id, token FROM terms
-           WHERE doc_id < 20),
-         hit AS (SELECT qt.q_id, i.doc_id,
-             CAST(floor(i.idf6 * ((i.tf * 2.2::DOUBLE) /
-               (i.tf + 1.2::DOUBLE * (0.25 + 0.75::DOUBLE * i.dl / i.avgdl)))
-               + 0.5) AS BIGINT) AS c6
-           FROM qt JOIN idx i ON i.token = qt.token AND i.doc_id <> qt.q_id
-           WHERE i.idf6 > 0),
-         bsc AS (SELECT q_id, doc_id, CAST(count(*) AS BIGINT) AS n_hit,
-             CAST(sum(c6) AS BIGINT) AS s6
-           FROM hit GROUP BY q_id, doc_id),
-         brk AS (SELECT q_id, doc_id, n_hit, s6, row_number() OVER (
-             PARTITION BY q_id ORDER BY s6 DESC, doc_id) AS rank FROM bsc),
-         dr AS (SELECT q_id, n_id AS match_id, CAST(rank AS BIGINT) AS dense_rank
-           FROM r WHERE rank <= 5),
-         br AS (SELECT q_id, doc_id AS match_id, CAST(rank AS BIGINT) AS bm25_rank
-           FROM brk WHERE rank <= 5),""" + hybridFuToFr),
-    // per-dimension embedding health: quantize each element to 1e-4
-    // units FIRST so the three moments are exact int64 in any fold
-    // order; one rounded division each; the collapsed flag compares
-    // the ROUNDED variance on both engines
-    "x2_dim_stats" ->
-      """WITH x AS (SELECT unnest(embedding) AS e,
-             unnest(range(len(embedding))) AS dim FROM embeddings),
-         q AS (SELECT CAST(dim AS BIGINT) AS dim,
-             CAST(floor(CAST(e AS DOUBLE) * 10000 + 0.5) AS BIGINT) AS q FROM x),
-         m AS (SELECT dim, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(q) AS BIGINT) AS s, CAST(sum(q*q) AS BIGINT) AS s2
-           FROM q GROUP BY 1),
-         v AS (SELECT dim, n, s,
-             round(CAST(n*s2 - s*s AS DOUBLE) /
-               (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * 100000000.0), 6)
-               AS variance
-           FROM m)
-         SELECT dim,
-           round(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * 10000.0), 6) AS mean,
-           variance,
-           CAST(CASE WHEN variance < 0.0001 THEN 1 ELSE 0 END AS BIGINT)
-             AS collapsed
-         FROM v""",
-    // row-wise norm z-audit: 1e-4-quantized norms, exact int64 global
-    // moments, z = (n·q − S)/sqrt(n·Q − S²) (the x6_anomaly z form)
-    "x2_norm_outliers" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             FROM embeddings),
-         nq AS (SELECT vec_id, CAST(floor(
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) * 10000
-               + 0.5) AS BIGINT) AS nq
-           FROM e),
-         m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(nq) AS BIGINT) AS s,
-             CAST(sum(nq*nq) AS BIGINT) AS s2 FROM nq),
-         z AS (SELECT vec_id, round(CAST(nq AS DOUBLE) / 10000.0, 4) AS norm,
-             round(CAST(n*nq - s AS DOUBLE) /
-               sqrt(CAST(n*s2 - s*s AS DOUBLE)), 4) AS z
-           FROM nq, m WHERE n*s2 - s*s > 0)
-         SELECT vec_id, norm, z,
-           CAST(CASE WHEN abs(z) > 2.5 THEN 1 ELSE 0 END AS BIGINT) AS outlier
-         FROM z""",
   )
 
   // ---- x5: multimodal (media stub embedding) search ----
@@ -4065,8 +3832,8 @@ private[graft] object Oracles {
          SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
            """ + sessionAggSelect),
     // session-length profile: x6_sessions' value-carrying x/y/z chain +
-    // session agg (both), then the dyadic bucket CASE +
-    // x6_hist_log_quantiles' sk/cu cumulative read and estimate select
+    // session agg, then the dyadic bucket CASE + x6_hist_log_quantiles'
+    // sk/cu cumulative read and estimate select
     "x6_session_lengths" ->
       (valueSessionXToZ + """
            ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM y),
@@ -4091,8 +3858,8 @@ private[graft] object Oracles {
            """ + transitionPNext + """
          FROM c"""),
     // next-best-action: x6_transitions' full chain (x/y/z/t session chain
-    // + c count CTE + the p_next normalize formula, all) + rank 1 per
-    // from_type on the EXACT count with the to_type tie-break
+    // + c count CTE + the p_next normalize formula) + rank 1 per from_type
+    // on the EXACT count with the to_type tie-break
     "x6_next_best" ->
       (transitionsXToC + """
            FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2),
@@ -4809,7 +4576,216 @@ private[graft] object Oracles {
          FROM f JOIN r ON r.user_id = f.user_id AND r.rk = 1""",
   )
 
-  private val base: Map[String, String] = core ++ x3 ++ x1 ++ x4 ++ x7 ++ x2 ++ x5 ++ x6
+  // ---- x7: curation pipelines ----
+  private def x7: Map[String, String] = Map(
+    // composes the stored-artifact probe chains: fingerprint set, the
+    // x4_incremental band chain, the x4_span_incremental span chain, and
+    // the x4_decontaminate 3-gram chain; incoming = 50 <= id < 100, index
+    // = id >= 100, bench = id < 50
+    "x7_curate_incremental" ->
+      ("""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         fps AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id >= 100),
+         fpf AS (SELECT doc_id, CASE WHEN fps.fp IS NOT NULL THEN 1 ELSE 0 END AS fhit
+           FROM (SELECT doc_id, md5(text) AS fp FROM documents
+                 WHERE doc_id >= 50 AND doc_id < 100) i
+           LEFT JOIN fps ON fps.fp = i.fp),
+         mh AS (SELECT doc_id, list_transform(""" + minhashSig + """
+           FROM mh),
+         bd AS (SELECT doc_id, b, array_to_string(s[b*4+1:b*4+4], ':') AS key
+           FROM sig, (SELECT unnest(range(4)) AS b)),
+         bidx AS (SELECT b, key FROM bd WHERE doc_id >= 100 GROUP BY b, key),
+         bh AS (SELECT DISTINCT i.doc_id FROM bd i
+           JOIN bidx x ON i.b = x.b AND i.key = x.key
+           WHERE i.doc_id >= 50 AND i.doc_id < 100),
+         sp AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(t) - 7),
+             i -> CAST(('0x' || substr(md5(array_to_string(t[i+1:i+8], ' ')), 1, 15)) AS BIGINT)))) AS sh
+           FROM tk WHERE len(t) >= 8),
+         sidx AS (SELECT DISTINCT sh FROM sp WHERE doc_id >= 100),
+         sfrac AS (SELECT inc.doc_id,
+             round(CAST(sum(CASE WHEN sidx.sh IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+               / CAST(count(*) AS DOUBLE), 6) AS index_frac
+           FROM (SELECT doc_id, sh FROM sp WHERE doc_id >= 50 AND doc_id < 100) inc
+           LEFT JOIN sidx ON sidx.sh = inc.sh GROUP BY 1),
+         shg AS (SELECT doc_id, list_distinct(list_transform(range(len(t) - 2),
+             i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS shingles
+           FROM tk WHERE len(t) >= 3),
+         inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shg),
+         ct AS (SELECT DISTINCT c.doc_id
+           FROM inv c JOIN inv b ON c.shingle = b.shingle
+           WHERE c.doc_id >= 50 AND c.doc_id < 100 AND b.doc_id < 50
+           GROUP BY c.doc_id, b.doc_id
+           HAVING count(*) >= 5)
+         SELECT d.doc_id,
+           fpf.fhit = 1 AS fp_dup,
+           bh.doc_id IS NOT NULL AS band_hit,
+           COALESCE(sfrac.index_frac, 0.0) AS span_frac,
+           ct.doc_id IS NOT NULL AS contaminated,
+           (fpf.fhit = 0 AND bh.doc_id IS NULL
+             AND COALESCE(sfrac.index_frac, 0.0) <= 0.5
+             AND ct.doc_id IS NULL) AS kept
+         FROM (SELECT doc_id FROM documents
+               WHERE doc_id >= 50 AND doc_id < 100) d
+         JOIN fpf ON fpf.doc_id = d.doc_id
+         LEFT JOIN bh ON bh.doc_id = d.doc_id
+         LEFT JOIN sfrac ON sfrac.doc_id = d.doc_id
+         LEFT JOIN ct ON ct.doc_id = d.doc_id"""),
+    "x7_curate" ->
+      (curateKeep1ToD3 + curatePacked),
+    // perplexity-gated curation: x7_curate's keep1/d1 exact-dedup head +
+    // the x3_unigram_logprob arithmetic (l-prefixed CTEs; integer
+    // micro-nats, one division, one rounding) as the stage-2 gate (drop
+    // the bottom 10% avg logprob per language) + x7_curate's tk..ov
+    // decontam block and packed tail
+    "x7_curate_lm" ->
+      ("""WITH """ + exactDedupKeep1 + """,
+         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
+         ltk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+             FROM documents),
+         lpd AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS k
+           FROM ltk GROUP BY doc_id, tok),
+         lc AS (SELECT tok, CAST(sum(k) AS BIGINT) AS c FROM lpd GROUP BY tok),
+         lnn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM lc),
+         ls AS (SELECT lpd.doc_id, lpd.k,
+             CAST(floor(ln(CAST(lc.c AS DOUBLE) / CAST(lnn.n AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp6
+           FROM lpd JOIN lc ON lc.tok = lpd.tok, lnn),
+         la AS (SELECT doc_id, round(CAST(sum(k * lp6) AS DOUBLE) /
+             (CAST(sum(k) AS BIGINT) * 1000000.0), 6) AS alp
+           FROM ls GROUP BY doc_id),
+         r AS (SELECT d.doc_id,
+             round(percent_rank() OVER (PARTITION BY d.lang
+               ORDER BY la.alp, d.doc_id), 6) AS pr
+           FROM d1 d JOIN la ON la.doc_id = d.doc_id),
+         d2 AS (SELECT d1.* FROM d1 JOIN r ON d1.doc_id = r.doc_id
+           WHERE r.pr >= 0.1 AND d1.doc_id >= 50),""" + curateTkToPacked),
+    // dataset-release build: the x7_curate head through d3 + the
+    // x4_cluster chain retargeted to the survivors (ctk/l0 read FROM d3;
+    // every minhash formula byte-identical) + the x1_grouped_split
+    // hash-split tail
+    "x7_curate_split" ->
+      (curateSplitKeep1ToL3 + """
+           ON m.doc_id = l.doc_id)
+         SELECT l3.doc_id, l3.cluster,
+           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+                ELSE 'test' END AS split,
+           d.lang, d.source,
+           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
+         FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id"""),
+    // the x7_curate chain with the x1_temperature thin computed over the
+    // SURVIVORS (d3) before packing
+    "x7_curate_mixture" ->
+      (curateKeep1ToD3 + """
+         tc AS (SELECT source, count(*) AS n_docs FROM d3 GROUP BY source),
+         tm AS (SELECT min(n_docs) AS n_min FROM tc),
+         tr AS (SELECT source,
+             """ + temperatureWeight + """ AS frac
+           FROM tc, tm),
+         d4 AS (SELECT d3.* FROM d3 JOIN tr ON tr.source = d3.source
+           WHERE CAST(('0x' || substr(md5(CAST(d3.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
+             < CAST(tr.frac * 1000000 AS BIGINT)),""" + curateMixturePacked),
+    "x7_curate_verbatim" ->
+      (curateKeep1ToD3 + """
+         sp AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(t) - 7),
+             i -> CAST(('0x' || substr(md5(array_to_string(t[i+1:i+8], ' ')), 1, 15)) AS BIGINT)))) AS spanh
+           FROM tk WHERE len(t) >= 8),
+         spdf AS (SELECT spanh, count(*) AS ndocs FROM sp GROUP BY 1),
+         spflag AS (SELECT doc_id FROM sp JOIN spdf USING (spanh)
+           GROUP BY 1
+           HAVING round(CAST(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE) /
+             CAST(count(*) AS DOUBLE), 6) > 0.5),
+         d4 AS (SELECT * FROM d3 WHERE doc_id NOT IN (SELECT doc_id FROM spflag)),""" +
+      curateMixturePacked),
+    "x7_curate_curriculum" ->
+      (curateKeep1ToD3 + """
+         cq AS (SELECT doc_id, source, quality FROM d3
+           JOIN q USING (doc_id)),
+         cr AS (SELECT doc_id, source, quality, row_number() OVER (
+             PARTITION BY source ORDER BY quality DESC, doc_id) AS rank FROM cq),
+         ct AS (SELECT * FROM cr WHERE rank <= 100),
+         cs AS (SELECT source, CAST(row_number() OVER (ORDER BY source) AS BIGINT)
+             AS src_idx FROM (SELECT DISTINCT source FROM ct)),
+         cn AS (SELECT count(*) AS n_src FROM cs)
+         SELECT ct.doc_id, ct.source, ct.quality,
+           CAST((ct.rank - 1) * cn.n_src + cs.src_idx - 1 AS BIGINT) AS global_pos
+         FROM ct JOIN cs ON ct.source = cs.source, cn"""),
+    "x7_curate_semantic" ->
+      ("""WITH """ + exactDedupKeep1 + """,
+         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
+         es AS (SELECT e0.vec_id, list_transform(e0.embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings e0 JOIN d1 ON d1.doc_id = e0.vec_id),
+         n AS (SELECT vec_id, v,
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM es),""" +
+      ivfC0ToA1 + """
+         dd1 AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM a1),
+         s1 AS (SELECT cell, pos, sum(val) AS s, count(*) AS cnt FROM dd1 GROUP BY cell, pos),""" +
+      ivfU1ToA2 + """
+         dd2 AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM a2),
+         s2 AS (SELECT cell, pos, sum(val) AS s, count(*) AS cnt FROM dd2 GROUP BY cell, pos),
+         u2 AS (SELECT cell, list(round(s / cnt, 6) ORDER BY pos) AS cv FROM s2 GROUP BY cell),
+         c2 AS (SELECT c1.c_id, coalesce(u2.cv, c1.cv) AS cv
+             FROM c1 LEFT JOIN u2 ON u2.cell = c1.c_id),
+         k2 AS (SELECT c_id, cv,
+             sqrt(list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y)) AS cn FROM c2),
+         rk AS (SELECT t.vec_id, t.v, t.nrm, k.c_id,""" + ivfRkArgmax + """
+         asg AS (SELECT vec_id, v, nrm, c_id AS cell FROM rk WHERE ar = 1),
+         pr0 AS (SELECT b.vec_id,
+             round(list_reduce(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i]),
+               (x,y) -> x+y) / (a.nrm * b.nrm), 6) AS cos
+           FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id),
+         sem AS (SELECT DISTINCT vec_id FROM pr0 WHERE cos >= 0.38),
+         d1s AS (SELECT * FROM d1 WHERE doc_id NOT IN (SELECT vec_id FROM sem)),""" + curateQ + """
+           FROM d1s),
+         r AS (SELECT d.doc_id,
+             round(percent_rank() OVER (PARTITION BY d.lang
+               ORDER BY q.quality, d.doc_id), 6) AS pr
+           FROM d1s d JOIN q ON d.doc_id = q.doc_id),
+         d2 AS (SELECT d1s.* FROM d1s JOIN r ON d1s.doc_id = r.doc_id
+           WHERE r.pr >= 0.5 AND d1s.doc_id >= 50),""" + curateTkToPacked),
+    "x7_curate_budget" ->
+      (curateKeep1ToD3 + """
+         bq AS (SELECT d3.doc_id, q.quality,
+             CAST(len(string_split(d3.text,' ')) AS BIGINT) AS n_tokens
+           FROM d3 JOIN q ON d3.doc_id = q.doc_id),
+         c AS (SELECT doc_id, quality, n_tokens,
+             sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM bq)
+         SELECT doc_id, quality, n_tokens, CAST(cum AS BIGINT) AS cum
+         FROM c WHERE cum - n_tokens < 5000"""),
+    "x7_report" ->
+      (curateKeep1ToR + """
+         d2q AS (SELECT d1.* FROM d1 JOIN r ON d1.doc_id = r.doc_id
+           WHERE r.pr >= 0.5),
+         d2 AS (SELECT * FROM d2q WHERE doc_id >= 50),""" + curateTkToOv + """
+         d3 AS (SELECT * FROM d2 WHERE doc_id NOT IN (SELECT doc_id FROM ov))
+         SELECT (SELECT count(*) FROM documents) AS n_input,
+           (SELECT count(*) FROM d1) AS n_after_exact,
+           (SELECT count(*) FROM d2q) AS n_after_quality,
+           (SELECT count(*) FROM d2) AS n_candidates,
+           (SELECT count(*) FROM d3) AS n_kept"""),
+    "x7_curate_neardup" ->
+      ("""WITH """ + exactDedupKeep1 + """,
+         d1 AS (SELECT d.* FROM documents d JOIN keep1 k ON d.doc_id = k.doc_id),
+         tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM d1),
+         tt AS (SELECT doc_id, list_transform(""" + minhashSig + """
+           FROM tt),""" + minhashRepToE + """
+         l0 AS (SELECT doc_id, doc_id AS cluster FROM d1),""" + clusterL1ToL3 + """
+           ON m.doc_id = l.doc_id),
+         dn AS (SELECT d1.* FROM d1 JOIN l3 ON d1.doc_id = l3.doc_id
+           WHERE l3.cluster = l3.doc_id),""" + curateQ + """
+           FROM dn),
+         r AS (SELECT d.doc_id,
+             round(percent_rank() OVER (PARTITION BY d.lang
+               ORDER BY q.quality, d.doc_id), 6) AS pr
+           FROM dn d JOIN q ON d.doc_id = q.doc_id),
+         d2 AS (SELECT dn.* FROM dn JOIN r ON dn.doc_id = r.doc_id
+           WHERE r.pr >= 0.5 AND dn.doc_id >= 50),
+         tk2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         sh AS (SELECT doc_id, list_distinct(list_transform(range(len(t) - 2),
+             i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS shingles
+           FROM tk2 WHERE len(t) >= 3),""" + curateInvToPacked),
+  )
+
+  private val base: Map[String, String] = core ++ x1 ++ x2 ++ x3 ++ x4 ++ x5 ++ x6 ++ x7
 
   /** The serve-path queries score against a MATERIALIZED model built
     * from the same corpus in the same statement, so each must produce

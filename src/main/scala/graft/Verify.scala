@@ -1,13 +1,19 @@
 package graft
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...] — named
+  * queries restrict both the run and oracle_sql.json to them (fast
+  * iteration on a few oracles; the driver always runs the full set). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd+ args: run only the named queries (fast iteration
-    // on one oracle; the driver always runs the full set)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -33,25 +39,18 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
+    val oracles = SparkEntry.oracleSql.filter { case (name, _) => only.isEmpty || only(name) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), toJson(oracles))
     spark.stop()
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * Exposed (with the full dump) so the spec suite can parse it with a
-    * real JSON parser on every run. */
-  private[graft] def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** One JSON object of name -> SQL, sorted by name, written by the
+    * Jackson mapper Spark ships (every control character escaped, so
+    * the driver's json.load reads it). */
+  private def toJson(oracles: Map[String, String]): String =
+    JsonMapper.builder().build().writeValueAsString(new java.util.TreeMap(oracles.asJava))
 
-  private[graft] def oracleJson: String = SparkEntry.oracleSql
-    .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  /** The full dump, exposed so the spec suite can parse it with a real
+    * JSON parser on every run. */
+  private[graft] def oracleJson: String = toJson(SparkEntry.oracleSql)
 }

@@ -26,13 +26,20 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
   * min(len) elements, centroid norms the same driver-side fold as
   * `Similarity.l2norm`, cosine = dot/(cn·nrm) guarded by den ≠ 0 —
   * so assignments, `best` cosines, and the DuckDB oracle replay are
-  * bit-identical to the expression form.
+  * bit-identical to the expression form for every non-NaN cosine. The
+  * kernel compares with IEEE `>`, while the expression form's struct
+  * ordering is Spark's total order, where NaN is greatest: a NaN
+  * cosine after the first centroid loses here and won there. Finite
+  * vectors and centroids never produce one (den ≠ 0 guard).
   *
   * Null `v`/`nrm` replicates the expression form exactly: every
   * cosine NULLs out and coalesces to −2.0, so the max struct is
-  * (−2.0, max nid) = the LOWEST centroid id, never a NULL row. */
+  * (−2.0, max nid) = the LOWEST centroid id, never a NULL row. An
+  * empty centroid list has no answer and is rejected when the
+  * expression is built. */
 case class ArgmaxCell(left: Expression, right: Expression,
                       cents: Seq[(Long, Seq[Double])]) extends BinaryExpression {
+  require(cents.nonEmpty, "ArgmaxCell needs at least one centroid")
   override def dataType: DataType = ArgmaxCell.schema
   override def nullable: Boolean = false
 

@@ -20,10 +20,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * recomputed internally, bit-identical to the subvectors frame's
   * sn2 column), dist = (sn2 − 2·dot) + cn2 with the same operand
   * order — so codes, and every trained codebook / ADC ranking built
-  * from them, are bit-identical to the join form. A sub with no
-  * codebook entry returns null (the join form dropped such rows;
-  * neither occurs — the codebook covers every subspace by
-  * construction). */
+  * from them, are bit-identical to the join form. The codebook covers
+  * every subspace by construction, so a sub with no codebook entry is
+  * a training bug: the kernel throws, naming the subspace, instead of
+  * pushing a null code into the grouping and ADC joins downstream. */
 case class ArgminCode(left: Expression, right: Expression,
                       codebook: Seq[(Int, Long, Seq[Double])])
     extends BinaryExpression {
@@ -45,10 +45,9 @@ case class ArgminCode(left: Expression, right: Expression,
     t
   }
 
-  def kernel(subObj: Any, svObj: Any): Any = {
-    val sub = subObj.asInstanceOf[Int]
-    if (sub < 0 || sub >= table.length || table(sub).isEmpty) return null
-    val sv = svObj.asInstanceOf[ArrayData]
+  def kernel(sub: Int, sv: ArrayData): Long = {
+    if (sub < 0 || sub >= table.length || table(sub).isEmpty)
+      throw new IllegalStateException(s"ArgminCode: the codebook has no entry for subspace $sub")
     val nv = sv.numElements()
     val x = new Array[Double](nv)
     var j = 0
@@ -70,25 +69,16 @@ case class ArgminCode(left: Expression, right: Expression,
       }
       c += 1
     }
-    java.lang.Long.valueOf(bestC)
+    bestC
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = kernel(a, b)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[Int], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("argminExpr", this, classOf[ArgminCode].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("code")
-      s"""
-         |Object $boxed = $ref.kernel((Object) java.lang.Integer.valueOf($a), (Object) $b);
-         |if ($boxed == null) { ${ev.isNull} = true; } else {
-         |  ${ev.value} = ((java.lang.Long) $boxed).longValue();
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
   }
-
-  override def nullable: Boolean = true
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): ArgminCode = copy(left = newLeft, right = newRight)

@@ -276,8 +276,10 @@ object TextAnalysis {
     // expression — the zip_with/filter higher-order form ran an
     // interpreted lambda per TOKEN on the corpus scan; same rows, the
     // concat happens post-explode as a plain projection): the last
-    // slot pairs with NULL and is dropped by the b-not-null filter —
-    // robust for 0/1-token docs where sequence() would run descending
+    // slot pairs with NULL and is dropped by the p.r-not-null filter —
+    // robust for 0/1-token docs where sequence() would run descending.
+    // split() never yields a null token, so p.t is never null and the
+    // filter on p.r alone drops exactly the pairs the concat would null
     val counts = base
       .select(col("doc_id"), col("t"),
         slice(col("t"), lit(2), greatest(size(col("t")) - 1, lit(0))).as("r"))

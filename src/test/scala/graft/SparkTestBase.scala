@@ -17,6 +17,13 @@ object SparkTestBase {
 
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Runs `body` with the given session confs, restoring them after. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Queries DELIBERATELY declared without oracle SQL (the driver
     * records its weaker rows-only check for these). Every entry needs
     * a reason here, and ContractSpec/CoreQueriesSpec fail on any

@@ -8,6 +8,7 @@ import graft.streaming.StreamPipeline
 import graft.functions.{OrderEventDecode, SeededUuid}
 import graft.operators.Windows
 import graft.gen.DataGen
+import graft.SparkTestBase.withConfs
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -666,13 +667,6 @@ class StreamingSpec extends AnyFunSuite {
         .select("order_id", "customer_name").as[(String, String)].head() ===
         (("k1", "Walker Wong")))
     } finally q.stop()
-  }
-
-  /** Runs `body` with the given session confs, restoring them after. */
-  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** Decode fuzz inputs, each tagged with its kind: the producer's

@@ -8,9 +8,10 @@ package graft
   * fragment below, written once; an oracle is its own text and its
   * fragments joined with `+`, so no oracle can drift from a chain it
   * shares. A fragment named `aToB` spans the CTEs `a` through `b`;
-  * `Open` marks one that stops inside its last CTE and `Last` one that
-  * closes the WITH list. Fragments keep the exact bytes, indentation
-  * included, of the oracles that use them.
+  * where two span the same CTEs, `Open` marks the one that stops inside
+  * its last CTE and `Last` the one that closes the WITH list. Fragments
+  * keep the exact bytes, indentation included, of the oracles that use
+  * them.
   *
   * Compose with plain `"""` literals and `+`, never `s"""`: the
   * interpolator processes escapes, and DuckDB's `'$.k'` would need `$$`.

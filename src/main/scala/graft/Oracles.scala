@@ -2,7 +2,7 @@ package graft
 
 /** The DuckDB oracles behind `SparkEntry.oracleSql`: for each query SQL
   * can express, equivalent SQL that DuckDB runs on the same parquet
-  * tables; the driver's hash compare needs the results to match exactly.
+  * tables; the correctness gate needs the results to match exactly.
   *
   * Every CTE chain or formula that more than one oracle uses is a named
   * fragment below, written once; an oracle is its own text and its
@@ -4792,7 +4792,7 @@ private[graft] object Oracles {
     * from the same corpus in the same statement, so each must produce
     * EXACTLY its self-contained form's result — the oracle is shared
     * by reference, not copied: the strongest possible statement that
-    * serve ≡ train-and-serve, enforced by the driver's hash compare. */
+    * serve ≡ train-and-serve, enforced by the oracle hash compare. */
   private val serve: Map[String, String] = Map(
     "x2_ann_ivf_serve" -> base("x2_ann_ivf"),
     "x2_ann_ivfpq_serve" -> base("x2_ann_ivfpq"),

@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB compare (`tools/compare.py`).
   *
   * Usage: runMain graft.Verify <sfDir> <outDir> [query...] — named
   * queries restrict both the run and oracle_sql.json to them (fast
-  * iteration on a few oracles; the driver always runs the full set). */
+  * iteration on a few oracles); with none, every query runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
@@ -46,7 +46,7 @@ object Verify {
 
   /** One JSON object of name -> SQL, sorted by name, written by the
     * Jackson mapper Spark ships (every control character escaped, so
-    * the driver's json.load reads it). */
+    * any JSON reader, such as compare.py's json.load, parses it). */
   private def toJson(oracles: Map[String, String]): String =
     JsonMapper.builder().build().writeValueAsString(new java.util.TreeMap(oracles.asJava))
 

@@ -1,8 +1,11 @@
 package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
+import org.apache.spark.sql.graft.ListenerBridge
 object Bench {
   /** Consume a result so EVERY output column is evaluated: count()
     * lets Catalyst prune unevaluated projections, silently timing a
@@ -20,6 +23,41 @@ object Bench {
       .agg(expr("bit_xor(h)")).collect()
     ()
   }
+
+  /** Reads every corpus table once. The first read of a parquet path
+    * runs a footer-inference job; `graft.sources.Tables` caches the
+    * schema, so after this call building a lazy query starts no job. */
+  private[graft] def readTables(spark: SparkSession, sfDir: String): Unit =
+    graft.sources.Tables.names.foreach(graft.sources.Tables(spark, sfDir, _))
+
+  /** Measures which queries are eager: a query is eager iff building
+    * its DataFrame (fixpoint loops, model-training collects,
+    * `localCheckpoint` materialization) starts a Spark job. Each
+    * construction runs with a local property naming the query, and the
+    * listener keeps every name a started job carries. Call
+    * [[readTables]] first, or first-read schema inference counts as
+    * construction. */
+  private[graft] final class EagerProbe(spark: SparkSession) extends SparkListener {
+    private val sc = spark.sparkContext
+    private val key = "graft.bench.construct"
+    private val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    sc.addSparkListener(this)
+
+    override def onJobStart(job: SparkListenerJobStart): Unit =
+      Option(job.properties).flatMap(p => Option(p.getProperty(key)))
+        .foreach { name => started.add(name); () }
+
+    def construct(name: String)(build: => DataFrame): DataFrame = {
+      sc.setLocalProperty(key, name)
+      try build finally sc.setLocalProperty(key, null)
+    }
+
+    /** Whether a construction of `name` has started a job so far. */
+    def eager(name: String): Boolean = { ListenerBridge.drain(sc); started.contains(name) }
+
+    def close(): Unit = sc.removeSparkListener(this)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -34,6 +72,8 @@ object Bench {
     // Warm-up: JVM/codegen/parquet-reader initialization otherwise lands
     // entirely on whichever query happens to run first.
     try consume(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    readTables(spark, sfDir)
+    val probe = new EagerProbe(spark)
     // A failed query is REPORTED, never swallowed: its time still counts
     // (time-to-failure) but it carries an "errors" entry and decrements
     // "ok", so a query broken only at bench scale cannot hide behind a
@@ -41,16 +81,13 @@ object Bench {
     //
     // Each query is consumed FOUR times: the first (cold) run pays that
     // query's codegen/JIT/first-parquet-touch; the next three are warm
-    // and "warm" reports their MEDIAN — the plan's steady-state cost,
-    // the number a plan regression shows up in. Previous rounds
-    // reported a single warm run, and two consecutive benches were
-    // poisoned by transient machine load (r6→r7 phantom improvement,
-    // r7→r8 phantom 2–10× regressions on byte-identical code); a
-    // median of 3 survives one loaded pass. Cold stays single-run by
-    // nature (first-touch cost exists once).
-    // query isolation AND eager-run isolation share this: drop whatever
-    // the last run cached/checkpointed and collect the dead heap in
-    // UNTIMED space (see the long rationale below).
+    // and "warm" reports their MEDIAN — the plan's steady-state cost. A
+    // median of 3 survives one pass slowed by transient machine load.
+    //
+    // settle: drop what the last run cached or checkpointed (clearCache()
+    // misses localCheckpoint blocks, which are persistent RDDs) and
+    // collect the dead heap in UNTIMED space; a non-blocking unpersist
+    // would do that work during the next timed run.
     def settle(spark: SparkSession): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -59,75 +96,54 @@ object Bench {
     val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def run(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
-        val err = try { consume(fn(spark, sfDir)); None } catch {
+        val err = try { consume(probe.construct(name)(fn(spark, sfDir))); None } catch {
           case e: Throwable =>
-            Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200)}")
+            // control chars (tabs, stray \r) are blanked so the message
+            // reads as one plain line
+            Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200)}"
+              .replaceAll("[\\p{Cntrl}]", " "))
         }
         ((System.nanoTime() - t0) / 1e9, err)
       }
       val (cold, err1) = run()
+      // "eager" (measured on the cold run, outside its timing): the
+      // construction work re-runs on every invocation, so its warm median
+      // ≈ cold BY DESIGN. Each run leaves checkpoint blocks + a dead heap
+      // the next run would pay for mid-timing; settling between an eager
+      // query's runs makes its warm median measure what a fresh
+      // `PlanDump --time q q q` session does.
+      val eager = probe.eager(name)
       // don't re-run (and double-count the time of) a failing query
-      val res = if (err1.isDefined) (name, cold, cold, err1)
+      val res = if (err1.isDefined) (name, cold, cold, eager, err1)
       else {
-        // EAGER queries re-run their construction work (fixpoint
-        // localCheckpoints, training persists) on every invocation, so
-        // each timed run leaves checkpoint blocks + a dead heap that the
-        // NEXT run would otherwise pay to evict/collect mid-timing —
-        // round 13's in-suite eager warms read up to 2× their fresh
-        // steady state (x4_cluster 4.3 s vs 2.0 s) for exactly this
-        // reason. Settling BETWEEN an eager query's own runs (untimed)
-        // makes its warm median measure the same thing a fresh
-        // `PlanDump --time q q q` session does. Lazy queries cache
-        // nothing between runs, so they keep the tighter loop.
-        val eager = SparkEntry.eagerQueries(name)
         val warms = Seq.fill(3) { if (eager) settle(spark); run() }
         val err = warms.flatMap(_._2).headOption
         val warm = warms.map(_._1).sorted.apply(1) // median of 3
-        (name, cold, warm, err)
+        (name, cold, warm, eager, err)
       }
-      // query isolation: whatever a query cached is dropped before the
-      // next query's timing starts, so one operator's cache hygiene
-      // can't inflate (or subsidize) another's warm median.
-      // clearCache() only empties the catalog cache; localCheckpoint
-      // blocks from eager operators live as persistent RDDs until the
-      // frame is GC'd + ContextCleaner runs — on a GC-quiet 128 GiB
-      // heap that's "never during the bench", so release them
-      // explicitly or storage memory accumulates across 86 queries.
-      //
-      // BLOCKING unpersist + explicit GC: with blocking=false the block
-      // removal (and the collection of the dead heap behind it) runs
-      // DURING the next query's timed passes — round 12's
-      // x4_band_recall read warm 5.2 s in-suite vs 1.6-2.4 s in a fresh
-      // session purely because it ran right after the eager fixpoint
-      // queries' garbage. Draining the debt here moves that cost into
-      // untimed inter-query space, where it belongs.
+      // query isolation: one query's caches and garbage can't inflate
+      // (or subsidize) the next query's timings
       settle(spark)
       res
     }
-    // control chars (tabs, stray \r) inside exception text would break
-    // the JSON line even after taking the first linesIterator line
-    def jstr(s: String) =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\p{Cntrl}]", " ") + "\""
-    // "eager": this query's construction itself runs the work
-    // (fixpoint/training/prefix-sum/localCheckpoint re-executed every
-    // invocation) — its warm median ≈ cold BY DESIGN, so compare its
-    // warm to a fresh steady state, never to its own lucky cold run.
-    // The set is pinned to reality by EagerQueriesSpec.
-    val qs = timed.map { case (k, c, w, _) =>
-      val eager = if (SparkEntry.eagerQueries(k)) ""","eager":true""" else ""
-      s"""${jstr(k)}:{"cold":$c,"warm":$w$eager}"""
-    }.mkString("{", ",", "}")
-    val errs = timed.collect { case (k, _, _, Some(e)) => s"${jstr(k)}:${jstr(e)}" }
-      .mkString("{", ",", "}")
-    // "value" stays the sum of COLD runs so it remains comparable with
-    // earlier rounds' single-run totals; "value_warm" is the
-    // steady-state total.
-    val total = timed.map(_._2).sum
-    val totalWarm = timed.map(_._3).sum
-    val ok = timed.count(_._4.isEmpty)
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_warm":$totalWarm,"queries":$qs,"ok":$ok,"failed":${timed.size - ok},"errors":$errs,"sf":"$sfDir"}"""
+    probe.close()
+    // "value" stays the sum of COLD runs, comparable with earlier
+    // single-run totals; "value_warm" is the steady-state total.
+    val ok = timed.count(_._5.isEmpty)
+    val mapper = JsonMapper.builder().build()
+    val record = mapper.createObjectNode()
+      .put("metric", "total").put("value", timed.map(_._2).sum).put("unit", "sec")
+      .put("value_warm", timed.map(_._3).sum)
+    val queries = record.putObject("queries")
+    timed.foreach { case (k, c, w, eager, _) =>
+      val q = queries.putObject(k).put("cold", c).put("warm", w)
+      if (eager) q.put("eager", true)
+    }
+    record.put("ok", ok).put("failed", timed.size - ok)
+    val errors = record.putObject("errors")
+    timed.foreach { case (k, _, _, _, e) => e.foreach(errors.put(k, _)) }
+    record.put("sf", sfDir)
+    val line = mapper.writeValueAsString(record)
     println(line)
     // sbt interleaves Spark logs with stdout; also drop the metric on a
     // clean channel (a file) so harnesses can parse it reliably.

@@ -1228,69 +1228,6 @@ object SparkEntry {
     }),
   )
 
-  /** Queries whose CONSTRUCTION already runs Spark jobs — fixpoint
-    * loops, driver-synchronized model training, prefix-sum offset
-    * collects, `localCheckpoint` materialization. Their warm timing ≈
-    * cold by design (the eager work re-runs every invocation), so a
-    * "warm must beat cold" criterion is meaningless for them; Bench
-    * tags each with `"eager":true` so bench readers compare their warm
-    * medians to a fresh steady state instead. EagerQueriesSpec DETECTS
-    * this set empirically (jobs launched during construction at
-    * sf0.001) and fails on any drift, so it cannot go stale. */
-  val eagerQueries: Set[String] = Set(
-    "x1_budget_select", "x1_grouped_kfold", "x1_grouped_split",
-    "x1_pack_contexts", "x1_split_audit", "x1_split_leakage",
-    "x1_systematic_sample",
-    // ModelCache makes several search forms LAZY at construction: they
-    // sort after the pair member that first trains the shared model
-    // (Bench and EagerQueriesSpec both run in sorted order), and their
-    // corpus-side assignment/encoding is lazy in the plan — so
-    // x2_ann_ivfsq, x2_ann_ivfsq_res, x2_ann_pq, x2_ann_pq_rerank, and
-    // x5_mm_search_pq are NOT here; the serve twins localCheckpoint
-    "x2_ann_ivfsq_serve", "x5_mm_search_sq_serve",
-    "x2_ann_ivfsq_res_serve",
-    "x2_ann_ivf", "x2_ann_ivf_serve", "x2_ann_ivfpq", "x2_ann_ivfpq_serve",
-    "x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-    "x2_ivfsq_recall",
-    "x2_ann_filtered_serve", "x2_ann_lsh_serve", "x2_range_lsh_serve",
-    "x2_ann_pq_serve", "x2_mips_lsh_serve",
-    // round 19: x2_ivf_recall / x2_ivf_probe_curve / x2_ood moved to
-    // the shared memoized model (they audit the index/data, not the
-    // training) and sort after the first memo user — LAZY now;
-    // x2_semdedup shares the memo too but stays eager (localCheckpoint)
-    "x2_centroids", "x2_ivf_assign", "x2_ivf_inertia",
-    "x2_pq_codebook", "x2_pq_codes", "x2_pq_distortion", "x2_semdedup",
-    "x3_bigram_score_serve", "x3_bm25_rebuild", "x3_bm25_serve",
-    "x3_phrase_serve", "x3_unigram_score_serve", "x4_bloom_merge",
-    "x6_cms_merge",
-    "x4_cluster", "x4_cluster_cohesion", "x4_dup_stats", "x4_simhash_topk",
-    "x4_source_dup_rate",
-    // round 22: the signature-array localCheckpoint makes the three
-    // MinHash audits eager (one sig pass feeds every subtree)
-    "x4_minhash_est", "x4_band_recall", "x4_band_recall_sampled",
-    // round 20: x5_mm_pq_recall sorts BEFORE every other media-pq memo
-    // user, so it is the one that trains the shared media codebook
-    "x5_mm_pq_recall",
-    "x4_source_overlap", "x4_survivors", "x5_mm_ivf", "x5_mm_pq",
-    "x5_mm_search_lsh_serve", "x5_mm_search_filtered_serve", "x5_mm_search_pq_serve",
-    "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-    "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-    "x5_mm_search_ivfsq_serve", "x5_mm_search_ivfsq_res_serve",
-    "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall",
-    "x2_ann_sq_serve", "x2_ann_binary_serve", "x2_hybrid_rrf_serve",
-    "x2_hybrid_rrf_stored",
-    "x5_mm_search_binary_serve",
-    "x6_ab_serve",
-    "x6_also_viewed_serve", "x6_also_viewed_session_serve",
-    "x6_anomaly_serve", "x6_cms_serve",
-    "x6_covisit_merge", "x6_covisit_session_merge", "x6_seasonal_serve",
-    "x6_hist_log_merge",
-    "x6_hist_log_serve", "x6_hist_merge", "x6_hist_serve",
-    "x6_hll_serve", "x6_kmv_serve",
-    "x7_curate_budget", "x7_curate_neardup", "x7_curate_semantic",
-    "x7_curate_split",
-  )
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Oracles.sql

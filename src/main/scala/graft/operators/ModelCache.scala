@@ -38,8 +38,7 @@ object ModelCache {
     d
   }
 
-  /** Test hook: EagerQueriesSpec clears the memo so its construction-
-    * launches-jobs detection is independent of suite ordering. */
+  /** Test hook: specs clear the memo to start from a known state. */
   def clear(): Unit = cache.clear()
 
   /** Growth bound: entries are NEVER reused across corpus dirs (the

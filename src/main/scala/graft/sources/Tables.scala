@@ -23,7 +23,7 @@ object Tables {
     * cache the inferred schema per path and pass it explicitly on
     * repeat reads: identical schema (it IS the inferred one), zero
     * inference jobs, and lazy queries stay job-free at construction
-    * (which EagerQueriesSpec relies on). */
+    * (which Bench's eager measurement relies on). */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 

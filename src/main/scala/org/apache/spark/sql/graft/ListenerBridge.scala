@@ -3,8 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.SparkContext
 
 /** `SparkContext.listenerBus` is `private[spark]`; the job-accounting
-  * tools (PlanDump's per-query job breakdown, the eager-query
-  * detection spec) need a synchronous drain so listener-side counters
+  * tools (PlanDump's per-query job breakdown, Bench's eager-query
+  * measurement) need a synchronous drain so listener-side counters
   * are exact at the moment they are read. Same in-tree-package bridge
   * pattern as [[ColumnBridge]]. */
 object ListenerBridge {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * `customers` is 10k rows — ASA likewise snapshots it to every node,
   * `README.md:145-153`). At 100 TB the fact side scales with
   * partitions while the broadcast side stays O(reference-table); if the
-  * reference side ever outgrows the broadcast threshold, drop
-  * `broadcastRef` and Catalyst degrades to a shuffled hash/sort-merge
+  * reference side ever outgrows the broadcast threshold, drop the
+  * `broadcast` hint and Catalyst degrades to a shuffled hash/sort-merge
   * join on the equi-key — no code change in the callers.
   *
   * The same function serves batch and streaming inputs: with a
@@ -25,17 +25,14 @@ object Enrich {
   /** C8+C9 on the driver corpus roles (FIXTURES.md §B): `orders` is the
     * stream-role fact, `customer` the reference-role dimension.
     * Projection renames mirror reference `README.md:166`. */
-  def enrich(orders: DataFrame, customers: DataFrame,
-             broadcastRef: Boolean = true): DataFrame = {
-    val ref = if (broadcastRef) broadcast(customers) else customers
-    orders.join(ref, orders("o_custkey") === customers("c_custkey"), "inner")
+  def enrich(orders: DataFrame, customers: DataFrame): DataFrame =
+    orders.join(broadcast(customers), orders("o_custkey") === customers("c_custkey"), "inner")
       .select(
         orders("o_orderkey").as("order_id"),
         orders("o_custkey").as("customer_id"),
         customers("c_name").as("customer_name"),
         customers("c_mktsegment").as("city"),
         orders("o_totalprice").as("purchase_amount"))
-  }
 
   /** Reference-fidelity flavor over the reference's own schemas
     * (orders events ⋈ customers CSV) — used by the golden sample test

@@ -32,11 +32,9 @@ import graft.sources.Tables
 object StreamPipeline {
 
   /** One stream source abstraction over the three input flavors. Each
-    * yields an `orders` streaming DataFrame carrying at least the event
-    * schema (orderID, customerID, amount); `FileOrders(quarantine =
-    * true)` adds a `_corrupt` column for callers that route rejects to
-    * a dead-letter sink BEFORE enrichment — the enrichment join itself
-    * drops unparseable rows either way (null keys never match). */
+    * yields an `orders` streaming DataFrame carrying the event schema
+    * (orderID, customerID, amount); the enrichment join drops rows whose
+    * key did not parse (null keys never match). */
   sealed trait OrderSource { def load(spark: SparkSession): DataFrame }
 
   /** C1: Event Hubs over the Kafka wire protocol (reference
@@ -82,25 +80,17 @@ object StreamPipeline {
 
   /** C5 as a stream: JSON-lines files appearing in a directory — the
     * offline stand-in for the broker, and the replay path for any
-    * landed raw data. Malformed events are quarantined into a
-    * `_corrupt` column (PERMISSIVE mode) rather than failing the
-    * query — at production scale a poison message must never stop the
-    * pipeline; `quarantine=false` drops them silently. */
-  final case class FileOrders(dir: String, quarantine: Boolean = false)
-      extends OrderSource {
-    def load(spark: SparkSession): DataFrame = {
-      val schema =
-        if (quarantine) Tables.orderEventSchema.add("_corrupt", "string")
-        else Tables.orderEventSchema
-      val raw = spark.readStream
-        .schema(schema)
+    * landed raw data. A malformed event parses to nulls (PERMISSIVE
+    * mode) and is dropped rather than failing the query — at
+    * production scale a poison message must never stop the pipeline. */
+  final case class FileOrders(dir: String) extends OrderSource {
+    def load(spark: SparkSession): DataFrame =
+      spark.readStream
+        .schema(Tables.orderEventSchema)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
         .json(dir)
-      if (quarantine) raw
-      else raw.filter(col("orderID").isNotNull)
+        .filter(col("orderID").isNotNull)
         .select("orderID", "customerID", "amount")
-    }
   }
 
   /** C15–C17: rate-source generator reproducing the reference
@@ -126,8 +116,8 @@ object StreamPipeline {
     * overwrite semantics, so a batch REPLAYED after a failure (run
     * again before its checkpoint committed) overwrites its previous
     * attempt instead of appending duplicates — the idempotence that
-    * makes foreachBatch exactly-once. `coalesceTo` caps files per
-    * batch (tiny-file control at scale).
+    * makes foreachBatch exactly-once. Each batch is at most 4 files
+    * (tiny-file control at scale).
     *
     * No per-batch value may enter generated code: Spark caches compiled
     * classes by their source text, so a batch id or seed written into
@@ -135,14 +125,14 @@ object StreamPipeline {
     * inlines its seed; [[graft.functions.SeededUuid]] draws the same v4
     * ids from a fresh per-batch seed passed through `references[]`, so
     * ids stay distinct across batches and the code is reused. */
-  def writeEnriched(enriched: DataFrame, outDir: String, checkpointDir: String,
-                    coalesceTo: Int = 4): DataStreamWriter[org.apache.spark.sql.Row] =
+  def writeEnriched(enriched: DataFrame, outDir: String,
+                    checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
     enriched.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("id", SeededUuid.seeded_uuid(scala.util.Random.nextLong()))
-          .repartition(coalesceTo, col("customer_id"))
+          .repartition(4, col("customer_id"))
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
 

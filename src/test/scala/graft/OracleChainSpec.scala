@@ -2,25 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Mechanical enforcement of CLAUDE.md's "change together" invariant:
-  * many `SparkEntry.oracleSql` entries COPY a shared CTE chain or
-  * formula (MinHash signatures, IVF/PQ training, LSH hyperplanes, HLL
-  * registers, the quality score, …). A one-sided edit used to surface
-  * only as a confusing hash mismatch rounds later; this spec turns the
-  * convention into a gate.
+/** Guards the shared oracle text that `graft/Oracles.scala` still writes
+  * out more than once. Every other shared CTE chain or formula is one
+  * fragment there, so it holds by construction, and `OracleHashSpec`
+  * pins every oracle's bytes. The families below are the exceptions:
+  * short chains and formulas copied literally into several oracles,
+  * where a fragment would save too little. A one-sided edit of one copy
+  * fails here by name rather than as a bare hash mismatch.
   *
-  * Two mechanisms, both exact-byte:
+  * Both mechanisms are exact-byte:
   *  - chain families extract the shared region from a CANONICAL oracle
   *    between two anchors and require every member to contain it
   *    verbatim;
-  *  - formula families pin the shared formula as a literal (which the
-  *    canonical must contain too).
-  * Each test also scans ALL oracles and fails on an UNREGISTERED carrier
-  * of the chain, so a new query that copies a family must be added here
-  * — the list stays the single inventory of each family's members.
-  * Serve aliases share their base oracle BY REFERENCE (`serveOracles`),
-  * so they appear in member sets automatically and a final test pins
-  * the alias map itself.
+  *  - formula families pin the shared formula as a literal.
+  * Each test also scans ALL oracles and fails on an unregistered carrier
+  * of the text, so a new oracle that copies one of these literals must
+  * be added to the family's member list.
   */
 class OracleChainSpec extends AnyFunSuite {
   private val sql: Map[String, String] = SparkEntry.oracleSql
@@ -58,49 +55,7 @@ class OracleChainSpec extends AnyFunSuite {
       checkFamily(name, snippet, members)
     }
 
-  // ---- chain families (long CTE regions, extracted from the canonical) ----
-
-  chainFamily("minhash tk/t/sig/rep core", "x4_minhash_pairs",
-    "WITH tk AS", "FROM sig GROUP BY s)",
-    Set("x1_grouped_kfold", "x1_grouped_split", "x1_split_leakage", "x4_cluster",
-      "x4_cluster_cohesion", "x4_dup_stats", "x4_minhash_est", "x4_minhash_pairs",
-      "x4_source_dup_rate", "x4_source_overlap", "x4_survivors"))
-
-  chainFamily("MIPS augmented-LSH mm..r chain", "x2_mips_lsh",
-    "mm AS (SELECT max(nrm) AS m FROM n)", "ORDER BY dp DESC, n_id) AS rank FROM s)",
-    Set("x2_mips_lsh", "x2_mips_lsh_serve", "x2_mips_recall"))
-
-  chainFamily("phrase t/idx positional chain", "x3_phrase_index",
-    "WITH t AS", "unnest(s) AS token FROM t)",
-    Set("x3_phrase_index", "x3_phrase_search", "x3_phrase_serve"))
-
-  chainFamily("Bloom idx/bits chain", "x4_bloom_bits",
-    "WITH idx AS", "CROSS JOIN (SELECT unnest(range(4)) AS i) ii)",
-    Set("x4_bloom_bits", "x4_bloom_gate", "x4_bloom_merge"))
-
-  chainFamily("CMS cnt/sk sketch chain", "x6_cms_sketch",
-    "WITH cnt AS", "GROUP BY 1, 2)",
-    Set("x6_cms_sketch", "x6_cms_topk", "x6_cms_serve", "x6_cms_merge"))
-
-  // anchor starts at "terms AS" (not "WITH terms AS") because
-  // x2_hybrid_rrf carries the chain mid-WITH after its dense CTEs
-  chainFamily("BM25 index terms/dl/nd/dfs/idx", "x3_bm25_index",
-    "terms AS (", "JOIN dl ON dl.doc_id = t.doc_id, nd)",
-    Set("x3_bm25_index", "x3_bm25_rebuild", "x3_bm25_search", "x3_bm25_serve",
-      "x2_hybrid_rrf", "x2_hybrid_rrf_serve", "x2_hybrid_rrf_stored"))
-
-  chainFamily("SQ int8 encode chain sc/qq", "x2_quantize",
-    "sc AS (SELECT vec_id, v,", "FROM sc)",
-    Set("x2_quantize", "x2_ann_sq", "x2_ann_sq_serve", "x2_ann_sq_rerank",
-      "x2_sq_recall", "x2_ann_ivfsq", "x2_ann_ivfsq_serve", "x2_ivfsq_recall",
-      "x2_hybrid_rrf_stored", "x5_mm_search_sq", "x5_mm_search_sq_serve",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve",
-      "x5_mm_ivfsq_recall", "x5_mm_sq_recall", "x2_sq_rerank_recall"))
-
-  chainFamily("binary sign-pack b/s/r Hamming chain", "x2_ann_binary",
-    "b AS (SELECT vec_id,", "ORDER BY hamming, n_id) AS rank FROM s)",
-    Set("x2_ann_binary", "x2_ann_binary_serve", "x2_binary_recall",
-      "x2_ann_binary_rerank", "x2_binary_rerank_recall"))
+  // ---- chain families (CTE regions, extracted from the canonical) ----
 
   chainFamily("brute MIPS dp stream", "x2_mips_topk",
     "FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id)",
@@ -108,309 +63,42 @@ class OracleChainSpec extends AnyFunSuite {
     Set("x2_mips_topk", "x2_mips_recall", "x2_sq_recall",
       "x2_sq_rerank_recall"))
 
-  chainFamily("IVF Lloyd training c0..c2", "x2_ann_ivf",
-    "c0 AS (SELECT vec_id AS c_id", "FROM c1 LEFT JOIN u2 ON u2.cell = c1.c_id)",
-    Set("x2_ann_ivf", "x2_ann_ivf_serve", "x2_ann_ivfpq", "x2_ann_ivfpq_serve",
-      "x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x2_ann_ivfsq", "x2_ann_ivfsq_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x2_centroids", "x2_ivf_assign", "x2_ivf_inertia", "x2_ivf_recall",
-      "x2_ivf_probe_curve",
-      "x2_ood", "x2_semdedup", "x5_mm_ivf", "x5_mm_search_ivfpq",
-      "x5_mm_search_ivfpq_serve", "x5_mm_search_ivfpq_res",
-      "x5_mm_search_ivfpq_res_serve",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  chainFamily("IVF brute ground truth bs/br/ex", "x2_ivf_recall",
-    "bs AS (SELECT q.vec_id AS q_id", "ex AS (SELECT q_id, n_id FROM br WHERE rank <= 3)",
-    Set("x2_ivf_recall", "x2_ivf_probe_curve"))
-
-  // residual IVF-PQ: the dyadic residual frame + r-prefixed PQ
-  // training chain, and the per-(query, cell) residual search tail —
-  // both copied verbatim between the search oracle and the recall
-  // audit (change together)
-  chainFamily("residual dyadic frame + r-PQ training", "x2_ann_ivfpq_res",
-    "resv AS (SELECT a.vec_id",
-    "rpa3 AS (SELECT vec_id, sub, code FROM rpr3 WHERE rn = 1),",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x5_mm_ivfpq_recall"))
-
-  chainFamily("residual per-(query, cell) ADC tail", "x2_ann_ivfpq_res",
-    "qres AS (SELECT p.q_id",
-    "ORDER BY adist_u, n_id) AS rank FROM rsc)",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x5_mm_ivfpq_recall"))
-
-  // the residual IVF×SQ composition copies the residual FRAME and the
-  // per-query probe head but swaps the PQ training/ADC for an int8
-  // encode — three finer-grained guards pin the copied spans
-  formulaFamily("dyadic residual snap",
-    "floor((e.v[i+1] - k.cv[i+1]) * 1048576::DOUBLE + 0.5) / 1048576::DOUBLE",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  chainFamily("residual corpus frame resv", "x2_ann_ivfpq_res",
-    "resv AS (SELECT a.vec_id",
-    "JOIN k2 k ON k.c_id = a.cell),",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  // pbr/pb and qres pinned separately: x2_ivfpq_recall interposes its
-  // raw-PQ lut CTE between pb and qres, so the span is not contiguous
-  // in every carrier
-  chainFamily("residual probe head pbr/pb", "x2_ann_ivfpq_res",
-    "pbr AS (SELECT t.vec_id",
-    "pb AS (SELECT vec_id AS q_id, c_id AS cell FROM pbr WHERE ar <= 2),",
-    Set("x2_ann_ivfpq", "x2_ann_ivfpq_serve",
-      "x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  chainFamily("query residual frame qres", "x2_ann_ivfpq_res",
-    "qres AS (SELECT p.q_id",
-    "JOIN k2 k ON k.c_id = p.cell),",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  formulaFamily("residual candidate join rivfc",
-    "rivfc AS (SELECT p.q_id, p.cell, a.vec_id FROM asg a JOIN pb p ON a.cell = p.cell\n" +
-      "           AND a.vec_id <> p.q_id),",
-    Set("x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  // the residual int8 encode + residual-L2 estimate chain (dsc..srr):
-  // shared verbatim between the residual IVF×SQ search, the SQ recall
-  // audit's residual leg, and the media twin — change together
-  chainFamily("residual SQ encode + estimate dsc..srr", "x2_ann_ivfsq_res",
-    "dsc AS (SELECT vec_id, cell, rv,",
-    "ORDER BY adist, n_id) AS rank FROM ssc)",
-    Set("x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfsq_recall"))
-
-  // the raw IVF×SQ candidate/estimate tail (rk with v/nrm, asg, the
-  // ar<=4 probe head, the sc/qq encode, and the adot candidate
-  // pricing) — shared verbatim between x2_ann_ivfsq and its media twin
-  chainFamily("IVF×SQ rk..rr tail", "x2_ann_ivfsq",
-    "rk AS (SELECT t.vec_id, t.v, t.nrm, k.c_id,",
-    "ORDER BY adot DESC, n_id) AS rank FROM sq)",
-    Set("x2_ann_ivfsq", "x2_ann_ivfsq_serve",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve"))
-
-  // the exact-L2 ground-truth chain + hits/recall tail shared by the
-  // two composed-recall audits (raw vs residual at fixed params) —
-  // change together
-  chainFamily("composed-recall exact L2 ground truth xn..tail", "x2_ivfpq_recall",
-    "xn AS (SELECT vec_id, v,",
-    "GROUP BY ex.q_id",
-    Set("x2_ivfpq_recall", "x2_ivfsq_recall",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  // the exact-L2 ground-truth HEAD alone (xn/gs/gr/ex) — the flat-ADC
-  // recall gates carry it with a single-leg rollup, so the two-leg
-  // tail family above cannot span them (round 20)
-  chainFamily("exact L2 ground truth head xn..ex", "x2_ivfpq_recall",
-    "xn AS (SELECT vec_id, v,",
-    "ex AS (SELECT q_id, n_id FROM gr WHERE rank <= 3)",
-    Set("x2_ivfpq_recall", "x2_ivfsq_recall",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall",
-      "x2_pq_recall", "x5_mm_pq_recall", "x2_pq_rerank_recall"))
-
-  // the media centered-binary chain (raw e0 head, v−0.5 centering,
-  // sign-pack words, Hamming rank) shared by the flat search, its
-  // serve alias, and the round-20 rerank pair — change together
-  chainFamily("media centered binary e0..r chain", "x5_mm_search_binary",
-    "WITH e0 AS (SELECT doc_id AS vec_id",
-    "ORDER BY hamming, n_id) AS rank FROM s)",
-    Set("x5_mm_search_binary", "x5_mm_search_binary_serve",
-      "x5_mm_search_binary_rerank", "x5_mm_binary_rerank_recall"))
-
-  // the media binary rerank tail (20-candidate shortlist, raw-e0 norms,
-  // exact-cosine re-rank) shared by the rerank search and its recall
-  // gate — change together
-  chainFamily("media binary rerank cd..rr tail", "x5_mm_search_binary_rerank",
-    "cd AS (SELECT q_id, n_id FROM r WHERE rank <= 20)",
-    "ORDER BY cos DESC, n_id) AS rank FROM ex)",
-    Set("x5_mm_search_binary_rerank", "x5_mm_binary_rerank_recall"))
-
-  // the exact-cosine brute sb/rb ground truth shared by the binary
-  // flat and rerank recall gates (round 20) — change together
-  chainFamily("binary brute cosine sb/rb", "x2_binary_recall",
-    "sb AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,\n" +
-      "             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),\n" +
-      "               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos\n" +
-      "           FROM n q, n t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id)",
-    "ORDER BY cos DESC, n_id) AS rank FROM sb)",
-    Set("x2_binary_recall", "x2_binary_rerank_recall"))
-
-  // the flat ADC broadcast-LUT tail (lut/sc/r, contiguous) — shared
-  // verbatim by the flat PQ search on both modalities and their
-  // recall gates (the composed IVF×PQ oracles interpose the cell
-  // restriction inside sc, so they are NOT carriers of this span)
-  chainFamily("flat ADC lut..r tail", "x2_ann_pq",
-    "lut AS (SELECT q.vec_id AS q_id, q.sub, c.code,",
-    "ORDER BY adist_u, n_id) AS rank FROM sc)",
-    Set("x2_ann_pq", "x2_ann_pq_serve", "x2_pq_recall",
-      "x5_mm_search_pq", "x5_mm_search_pq_serve", "x5_mm_pq_recall"))
-
-  chainFamily("PQ per-subspace Lloyd training sv..c2", "x2_pq_codebook",
-    "sv AS (SELECT vec_id, tt AS sub",
-    "c2 AS (SELECT c1.sub, c1.code, coalesce(u2.cv, c1.cv) AS cv",
-    Set("x2_ann_pq", "x2_ann_pq_rerank", "x2_ann_pq_serve", "x2_pq_codebook",
-      "x2_pq_codes", "x2_pq_distortion", "x5_mm_pq", "x5_mm_search_pq",
-      "x5_mm_search_pq_serve", "x2_pq_recall", "x5_mm_pq_recall",
-      "x2_pq_rerank_recall"))
-
-  // the p-prefixed spelling of the same PQ training chain, carried by
-  // the composed IVF-PQ oracles (and the recall audit's raw leg)
-  chainFamily("composed p-PQ training chain pc0..pa3", "x2_ann_ivfpq",
-    "pc0 AS (SELECT sub, vec_id AS code",
-    "pa3 AS (SELECT vec_id, sub, code FROM pr3 WHERE rn = 1),",
-    Set("x2_ann_ivfpq", "x2_ann_ivfpq_serve", "x2_ivfpq_recall",
-      "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_ivfpq_recall"))
-
-  chainFamily("verbatim-span tokenize/hash head", "x4_span_dedup",
-    "WITH tk AS", "FROM tk WHERE len(t) >= 8),",
-    Set("x4_span_dedup", "x4_span_incremental", "x4_span_pairs"))
-
   chainFamily("bigram pair-stream head d/z/bg", "x3_bigram_logprob",
     "WITH d AS", "WHERE p[2] IS NOT NULL),",
     Set("x3_bigram_logprob", "x3_bigram_model", "x3_bigram_score_serve",
       "x3_interp_logprob"))
 
-  chainFamily("daily-volume OLS moments", "x6_trend",
-    "WITH", "HAVING count(*) >= 2)",
-    Set("x6_trend", "x6_trend_anomaly"))
-
-  // the one-CTE daily-count head alone is ALSO copied by the dow
-  // seasonality pair (which diverges after c) — pin it across all four
-  formulaFamily("daily-count c head",
-    "c AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,\n" +
-      "             CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2)",
-    Set("x6_trend", "x6_trend_anomaly", "x6_seasonality", "x6_seasonal_anomaly",
-      "x6_seasonal_serve"))
-
-  chainFamily("dow-moment c/d/g head", "x6_seasonality",
-    "WITH c AS", "FROM d GROUP BY 1, 2)",
-    Set("x6_seasonality", "x6_seasonal_anomaly", "x6_seasonal_serve"))
-
-  chainFamily("session gaps-and-islands x/y/z/t chain", "x6_session_paths",
-    "WITH x AS", "AS to_type\n           FROM z)",
-    Set("x6_session_paths", "x6_transitions", "x6_next_best"))
-
-  formulaFamily("transition count c CTE",
-    "c AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_transitions\n" +
-      "           FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2)",
-    Set("x6_transitions", "x6_next_best"))
-
-  formulaFamily("transition p_next normalize",
-    "round(CAST(n_transitions AS DOUBLE) /\n" +
-      "             CAST(sum(n_transitions) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p_next",
-    Set("x6_transitions", "x6_next_best"))
+  chainFamily("phrase t/idx positional chain", "x3_phrase_index",
+    "WITH t AS", "unnest(s) AS token FROM t)",
+    Set("x3_phrase_index", "x3_phrase_search", "x3_phrase_serve"))
 
   chainFamily("attribution purchase/touch head", "x6_attribution",
     "WITH p AS", "event_type IN ('view', 'click'))",
     Set("x6_attribution", "x6_attribution_decay"))
 
-  chainFamily("covisit p/ui/cap/pr chain", "x6_covisit",
-    "WITH p AS", "AND a.item < b.item\n           GROUP BY 1, 2)",
-    Set("x6_covisit", "x6_also_viewed", "x6_also_viewed_serve",
-      "x6_covisit_merge", "x6_item_lift"))
+  chainFamily("inter-event gap stream e/g/b", "x6_gap_hist",
+    "WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)",
+    "WHERE gap_us IS NOT NULL)",
+    Set("x6_gap_hist", "x6_hist_log_sketch", "x6_hist_log_quantiles",
+      "x6_hist_log_serve", "x6_hist_log_accuracy", "x6_hist_log_merge"))
 
-  formulaFamily("props item extract",
-    "CAST(nullif(regexp_extract(props, '\"k\": ([0-9]+)', 1), '') AS BIGINT)",
-    Set("x6_trending", "x6_covisit", "x6_also_viewed", "x6_also_viewed_serve",
-      "x6_covisit_merge", "x6_item_lift", "x6_covisit_session",
-      "x6_also_viewed_session", "x6_also_viewed_session_serve",
-      "x6_covisit_session_merge"))
-
-  // the canonical session RULE itself — the 5-minute gap literal and
-  // the new_session CASE + session_seq window text — pinned as
-  // formulas ACROSS the session-paths, value-session, and
-  // session-covisit chain groups (whose x heads differ, so the chain
-  // families above cannot catch a one-sided gap-rule edit)
-  formulaFamily("session gap rule y CASE (300000000 µs)",
-    "y AS (SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 300000000\n" +
-      "           THEN 1 ELSE 0 END AS new_session FROM x),",
-    Set("x6_sessions", "x6_session_lengths", "x6_session_paths",
-      "x6_transitions", "x6_next_best", "x6_covisit_session",
-      "x6_also_viewed_session", "x6_also_viewed_session_serve",
-      "x6_covisit_session_merge"))
-
-  formulaFamily("session_seq running-sum z window",
-    "z AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id\n" +
-      "           ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM y)",
-    Set("x6_sessions", "x6_session_lengths", "x6_session_paths",
-      "x6_transitions", "x6_next_best", "x6_covisit_session",
-      "x6_also_viewed_session", "x6_also_viewed_session_serve",
-      "x6_covisit_session_merge"))
-
-  // the props-carrying session x..pr chain (gaps-and-islands with
-  // props in place of event_type, items ranked per session) — shared
-  // by the session covisit build and its shelf read
-  chainFamily("session covisit x..pr chain", "x6_covisit_session",
-    "WITH x AS (SELECT user_id, event_id, props,",
-    "AND a.session_seq = b.session_seq AND a.item < b.item\n           GROUP BY 1, 2)",
-    Set("x6_covisit_session", "x6_also_viewed_session",
-      "x6_also_viewed_session_serve", "x6_covisit_session_merge"))
-
-  chainFamily("shingle inverted-index head (df-capped)", "x4_band_recall",
-    "WITH", "shingle FROM hot)",
-    Set("x4_band_recall", "x4_band_recall_sampled", "x4_containment",
-      "x4_ngram_jaccard"))
-
-  chainFamily("leave-one-out kNN pair stream", "x2_knn_accuracy",
-    "WITH", "WHERE t.vec_id <> q.vec_id",
-    Set("x2_knn_accuracy", "x2_knn_sampled"))
-
-  chainFamily("decontamination tk/sh/inv/ov head", "x4_decontaminate",
-    "WITH", "AS bench_id,",
-    Set("x4_decontaminate", "x4_decontam_profile"))
-
-  chainFamily("KMV signature head", "x6_audience_overlap",
-    "WITH", "AS db",
-    Set("x6_audience_overlap", "x6_kmv_serve"))
+  chainFamily("Bloom idx/bits chain", "x4_bloom_bits",
+    "WITH idx AS", "CROSS JOIN (SELECT unnest(range(4)) AS i) ii)",
+    Set("x4_bloom_bits", "x4_bloom_gate", "x4_bloom_merge"))
 
   // ---- formula families (shared arithmetic pinned as literals) ----
 
-  formulaFamily("minhash shingle hash",
-    "s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647) AS hs",
-    Set("x4_cluster_cohesion", "x1_grouped_kfold", "x1_grouped_split", "x1_split_audit",
-      "x1_split_leakage", "x4_band_index", "x4_band_recall",
-      "x4_band_recall_sampled", "x4_cluster", "x4_dup_stats", "x4_incremental",
-      "x4_minhash_est", "x4_minhash_pairs", "x4_minhash_sig",
-      "x4_source_dup_rate", "x4_source_overlap", "x4_survivors",
-      "x7_curate_incremental", "x7_curate_neardup", "x7_curate_split"))
+  formulaFamily("class-mean prototype fold",
+    "round(sum(val) / count(*), 6)",
+    Set("x2_confusion", "x2_mean_pool"))
 
-  formulaFamily("minhash permutation",
-    "((((1103515245*(i+1) + 12345) % 2147483646) + 1)*h + " +
-      "(1103515245*(i+17) + 54321) % 2147483647) % 2147483647",
-    Set("x4_cluster_cohesion", "x1_grouped_kfold", "x1_grouped_split", "x1_split_audit",
-      "x1_split_leakage", "x4_band_index", "x4_band_recall",
-      "x4_band_recall_sampled", "x4_cluster", "x4_dup_stats", "x4_incremental",
-      "x4_minhash_est", "x4_minhash_pairs", "x4_minhash_sig",
-      "x4_source_dup_rate", "x4_source_overlap", "x4_survivors",
-      "x7_curate_incremental", "x7_curate_neardup", "x7_curate_split"))
+  formulaFamily("SQ asymmetric ADC estimate",
+    "AS DOUBLE) * a.scale * b.scale AS adot",
+    Set("x2_ann_sq", "x2_ann_sq_serve", "x2_ann_sq_rerank", "x2_sq_recall",
+      "x2_ann_ivfsq", "x2_ann_ivfsq_serve", "x2_hybrid_rrf_stored",
+      "x5_mm_search_sq", "x5_mm_search_sq_serve",
+      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve", "x5_mm_sq_recall",
+      "x2_sq_rerank_recall"))
 
   formulaFamily("minhash band key",
     "array_to_string(s[b*4+1:b*4+4]",
@@ -420,49 +108,6 @@ class OracleChainSpec extends AnyFunSuite {
       "x4_minhash_est", "x4_minhash_pairs", "x4_source_dup_rate",
       "x4_source_overlap", "x4_survivors", "x7_curate_incremental",
       "x7_curate_neardup", "x7_curate_split"))
-
-  formulaFamily("PQ argmin partial distance",
-    "q.n2 - 2 * list_reduce(list_transform(range(1, 9), i -> q.s[i]*c.cv[i]),",
-    Set("x2_ann_ivfpq", "x2_ann_ivfpq_serve", "x2_ann_ivfpq_res",
-      "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x2_ann_pq", "x2_ann_pq_rerank",
-      "x2_ann_pq_serve", "x2_pq_codebook", "x2_pq_codes", "x2_pq_distortion",
-      "x5_mm_pq", "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x5_mm_search_pq", "x5_mm_search_pq_serve",
-      "x5_mm_ivfpq_recall", "x2_pq_recall", "x5_mm_pq_recall",
-      "x2_pq_rerank_recall"))
-
-  formulaFamily("IVF argmax-cosine cell assignment",
-    "list_reduce(list_transform(range(1, len(k.cv)+1), i -> k.cv[i]*t.v[i]),\n" +
-      "                   (x,y) -> x+y) / (k.cn * t.nrm) DESC, k.c_id) AS ar",
-    Set("x2_ann_ivf", "x2_ann_ivf_serve", "x2_ann_ivfpq", "x2_ann_ivfpq_serve",
-      "x2_ann_ivfpq_res", "x2_ann_ivfpq_res_serve", "x2_ivfpq_recall",
-      "x2_ann_ivfsq", "x2_ann_ivfsq_serve",
-      "x2_ann_ivfsq_res", "x2_ann_ivfsq_res_serve", "x2_ivfsq_recall",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x2_centroids", "x2_confusion", "x2_ivf_assign", "x2_ivf_inertia",
-      "x2_ivf_recall", "x2_ivf_probe_curve", "x2_ood", "x2_semdedup", "x5_mm_ivf",
-      "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x7_curate_semantic",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall"))
-
-  formulaFamily("LSH search hyperplane (8 tables x 4 bits)",
-    "(CAST((1103515245::BIGINT * ((tt*4 + j)*64 + d) + 12345) % 2147483648 AS DOUBLE)",
-    Set("x2_ann_filtered", "x2_ann_filtered_serve", "x2_ann_lsh",
-      "x2_ann_lsh_serve", "x2_bucket_stats",
-      "x2_incremental", "x2_range_lsh", "x2_range_lsh_serve", "x2_range_recall",
-      "x2_rank_quality", "x2_recall", "x2_probe_curve", "x2_filtered_recall",
-      "x2_filtered_probe_curve", "x2_filtered_rank_quality",
-      "x2_filtered_bucket_stats", "x5_mm_search_filtered",
-      "x5_mm_search_filtered_serve", "x5_mm_filtered_recall",
-      "x5_mm_filtered_probe_curve", "x5_mm_filtered_rank_quality",
-      "x5_mm_filtered_bucket_stats",
-      "x5_mm_bucket_stats",
-      "x5_mm_rank_quality", "x5_mm_recall", "x5_mm_search_lsh",
-      "x5_mm_search_lsh_serve", "x5_mm_probe_curve"))
 
   formulaFamily("LSH Hamming-1 probe masks",
     "[0, 1, 2, 4, 8]",
@@ -476,338 +121,4 @@ class OracleChainSpec extends AnyFunSuite {
       "x5_mm_filtered_probe_curve", "x5_mm_filtered_rank_quality",
       "x5_mm_rank_quality", "x5_mm_recall", "x5_mm_search_lsh",
       "x5_mm_search_lsh_serve", "x5_mm_probe_curve"))
-
-  // the labeled e/n head: every filtered-leg oracle starts here (the
-  // diversified-retrieval oracle shares the same labeled head too)
-  chainFamily("labeled e/n head", "x2_ann_filtered",
-    "WITH e AS (SELECT vec_id, label,",
-    "AS nrm FROM e),",
-    Set("x2_ann_filtered", "x2_ann_filtered_serve", "x2_ann_diverse",
-      "x2_filtered_recall", "x2_filtered_probe_curve",
-      "x2_filtered_rank_quality", "x2_filtered_bucket_stats"))
-
-  // the labeled index's bucket CTE (label rides IN the row): shared by
-  // the filtered search, its serve alias, and every filtered audit
-  chainFamily("labeled LSH bucket bb CTE", "x2_ann_filtered",
-    "bb AS (SELECT vec_id, label, tt,",
-    "FROM n, (SELECT unnest(range(8)) AS tt)),",
-    Set("x2_ann_filtered", "x2_ann_filtered_serve", "x2_filtered_recall",
-      "x2_filtered_probe_curve", "x2_filtered_rank_quality",
-      "x2_filtered_bucket_stats", "x5_mm_search_filtered",
-      "x5_mm_search_filtered_serve", "x5_mm_filtered_recall",
-      "x5_mm_filtered_probe_curve", "x5_mm_filtered_rank_quality",
-      "x5_mm_filtered_bucket_stats"))
-
-  // the media labeled head + the (vec_id < 5) probe/score tail —
-  // shared by the filtered media search, its serve alias, and its
-  // recall gate
-  chainFamily("media labeled head e/n", "x5_mm_search_filtered",
-    "WITH e AS (SELECT doc_id AS vec_id, lang AS label,",
-    "AS nrm FROM e),",
-    Set("x5_mm_search_filtered", "x5_mm_search_filtered_serve",
-      "x5_mm_filtered_recall", "x5_mm_filtered_probe_curve",
-      "x5_mm_filtered_rank_quality", "x5_mm_filtered_bucket_stats"))
-
-  chainFamily("media labeled qp..r tail (vec_id < 5)", "x5_mm_search_filtered",
-    "qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket\n" +
-      "           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),",
-    "ORDER BY cos DESC, n_id) AS rank FROM s)",
-    Set("x5_mm_search_filtered", "x5_mm_search_filtered_serve",
-      "x5_mm_filtered_recall", "x5_mm_filtered_rank_quality"))
-
-  // the media filtered audits' shared brute head (ground truth
-  // restricted to the query's LANGUAGE) — the media twin of the x2
-  // filtered-brute pair below: rank_quality keeps rank in its exact
-  // CTE, so e..xr pins all three while e..exact pins recall + curve
-  chainFamily("media filtered brute head e..xr", "x5_mm_filtered_recall",
-    "WITH e AS (SELECT doc_id AS vec_id, lang AS label,",
-    "ORDER BY cos DESC, n_id) AS rank FROM xs),",
-    Set("x5_mm_filtered_recall", "x5_mm_filtered_probe_curve",
-      "x5_mm_filtered_rank_quality"))
-
-  chainFamily("media filtered brute head e..exact", "x5_mm_filtered_recall",
-    "WITH e AS (SELECT doc_id AS vec_id, lang AS label,",
-    "exact AS (SELECT q_id, n_id FROM xr WHERE rank <= 3)",
-    Set("x5_mm_filtered_recall", "x5_mm_filtered_probe_curve"))
-
-  // the filtered probe curve's min-probe-index + budget-count tail
-  // (label in the cm join key) — shared verbatim between the x2 and
-  // media filtered curves; the unfiltered curves' cm has no label
-  chainFamily("filtered probe-curve cm..curve tail", "x2_filtered_probe_curve",
-    "cm AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id, min(q.idx) AS min_idx",
-    "GROUP BY m",
-    Set("x2_filtered_probe_curve", "x5_mm_filtered_probe_curve"))
-
-  // the filtered rank-quality normalizer: the query's OWN max gain
-  // (the unfiltered audits divide by the fixed 6.0 floor instead)
-  formulaFamily("filtered graded-recall own-max-gain tail",
-    "/ CAST(sum(4 - e.rank) AS DOUBLE), 4)",
-    Set("x2_filtered_rank_quality", "x5_mm_filtered_rank_quality"))
-
-  // the labeled occupancy rollup (g + report tail at (table, label)
-  // grain) — shared verbatim between the x2 and media pre-flights
-  chainFamily("labeled bucket-stats g/report tail", "x2_filtered_bucket_stats",
-    "g AS (SELECT tt, label, bucket, CAST(count(*) AS BIGINT) AS n",
-    "FROM g GROUP BY tt, label",
-    Set("x2_filtered_bucket_stats", "x5_mm_filtered_bucket_stats"))
-
-  // the filtered search's probe/candidate/score tail (label in the
-  // candidate key); the probe curve's qp adds the mask index and the
-  // bucket-stats report stops at bb, so neither carries this tail
-  chainFamily("labeled qp..r probe/score tail", "x2_ann_filtered",
-    "qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket\n",
-    "ORDER BY cos DESC, n_id) AS rank FROM s)",
-    Set("x2_ann_filtered", "x2_ann_filtered_serve", "x2_filtered_recall",
-      "x2_filtered_rank_quality"))
-
-  // brute ground truth RESTRICTED to the query's label — the filtered
-  // audits' shared head; the rank-quality oracle keeps rank in its
-  // exact CTE, so the full e..exact span pins only recall + curve
-  // while the e..xr span pins all three
-  chainFamily("filtered brute head e..xr", "x2_filtered_recall",
-    "WITH e AS (SELECT vec_id, label,",
-    "ORDER BY cos DESC, n_id) AS rank FROM xs),",
-    Set("x2_filtered_recall", "x2_filtered_probe_curve",
-      "x2_filtered_rank_quality"))
-
-  chainFamily("filtered brute head e..exact", "x2_filtered_recall",
-    "WITH e AS (SELECT vec_id, label,",
-    "exact AS (SELECT q_id, n_id FROM xr WHERE rank <= 3)",
-    Set("x2_filtered_recall", "x2_filtered_probe_curve"))
-
-  chainFamily("brute exact-top-3 head e..exact", "x2_recall",
-    "WITH e AS (SELECT vec_id, list_transform(embedding",
-    "exact AS (SELECT q_id, n_id FROM xr WHERE rank <= 3)",
-    Set("x2_recall", "x2_probe_curve"))
-
-  chainFamily("media brute e..exact head", "x5_mm_recall",
-    "WITH e AS (SELECT doc_id AS vec_id",
-    "exact AS (SELECT q_id, n_id FROM xr WHERE rank <= 3)",
-    Set("x5_mm_recall", "x5_mm_probe_curve", "x5_mm_binary_recall"))
-
-  formulaFamily("MIPS augmented hyperplane (dim 65)",
-    "(CAST((1103515245::BIGINT * ((tt*4 + j)*65 + d) + 12345) % 2147483648 AS DOUBLE)",
-    Set("x2_mips_lsh", "x2_mips_lsh_serve", "x2_mips_recall"))
-
-  formulaFamily("LSH dedup hyperplane (4 tables x 16 bits, centered)",
-    "(CAST((1103515245::BIGINT * ((tt*16 + j)*64 + d) + 12345) % 2147483648 AS DOUBLE)",
-    Set("x5_mm_dedup", "x5_mm_incremental"))
-
-  formulaFamily("HLL user hash",
-    "CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT)\n" +
-      "             % 2147483647 AS h",
-    Set("x6_audience_overlap", "x6_hll_global", "x6_hll_serve", "x6_hll_users",
-      "x6_kmv_serve", "x6_rolling_hll"))
-
-  formulaFamily("HLL register rank",
-    "MAX(CASE WHEN h >> 6 = 0 THEN 26\n" +
-      "                 ELSE 26 - length(bin(h >> 6)) END) AS reg",
-    Set("x6_hll_global", "x6_hll_serve", "x6_hll_users", "x6_rolling_hll"))
-
-  formulaFamily("HLL harmonic sum",
-    "CAST(SUM(CAST(1 AS BIGINT) << (26 - reg)) AS BIGINT) AS z",
-    Set("x6_hll_global", "x6_hll_serve", "x6_hll_users", "x6_rolling_hll"))
-
-  formulaFamily("exact-dedup keep1 head",
-    "keep1 AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))",
-    Set("x7_curate", "x7_curate_split", "x1_split_audit", "x7_curate_mixture",
-      "x7_curate_verbatim", "x7_curate_curriculum", "x7_curate_semantic",
-      "x7_curate_budget", "x7_report", "x7_curate_neardup", "x7_curate_lm"))
-
-  chainFamily("curate decontam tk..ov gate", "x7_curate",
-    "tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)",
-    "GROUP BY c.doc_id, b.doc_id HAVING count(*) >= 5)",
-    Set("x7_curate", "x7_curate_split", "x1_split_audit", "x7_curate_mixture",
-      "x7_curate_verbatim", "x7_curate_curriculum", "x7_curate_semantic",
-      "x7_curate_budget", "x7_report", "x7_curate_lm"))
-
-  formulaFamily("composite quality score",
-    "0.4 * least(1.0, len(string_split(text,' ')) / 50.0)",
-    Set("x1_budget_select", "x1_curriculum", "x1_split_audit",
-      "x3_quality", "x3_quality_deciles",
-      "x3_quality_filter", "x3_signal_corr", "x7_curate", "x7_curate_budget",
-      "x7_curate_curriculum", "x7_curate_mixture", "x7_curate_neardup",
-      "x7_curate_semantic", "x7_curate_split", "x7_curate_verbatim",
-      "x7_report"))
-
-  formulaFamily("temperature n^alpha weight",
-    "round(power(CAST(n_min AS DOUBLE) / n_docs, 0.5), 6)",
-    Set("x1_mixture_audit", "x1_temperature", "x7_curate_mixture"))
-
-  formulaFamily("entropy micro-nat term",
-    "CAST(floor(ln(k) * 1000000 + 0.5) AS BIGINT)",
-    Set("x3_entropy", "x3_signal_corr", "x6_bot_score"))
-
-  formulaFamily("SQ asymmetric ADC estimate",
-    "AS DOUBLE) * a.scale * b.scale AS adot",
-    Set("x2_ann_sq", "x2_ann_sq_serve", "x2_ann_sq_rerank", "x2_sq_recall",
-      "x2_ann_ivfsq", "x2_ann_ivfsq_serve", "x2_hybrid_rrf_stored",
-      "x5_mm_search_sq", "x5_mm_search_sq_serve",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve", "x5_mm_sq_recall",
-      "x2_sq_rerank_recall"))
-
-  formulaFamily("histogram sketch bucket",
-    "CAST(floor(value / 5::DOUBLE) AS BIGINT) AS bucket",
-    Set("x6_hist_sketch", "x6_hist_quantiles", "x6_hist_merge",
-      "x6_hist_serve", "x6_hist_accuracy", "x6_hist_daily",
-      "x6_hist_rolling"))
-
-  chainFamily("histogram daily-sketch dsk grain", "x6_hist_daily",
-    "WITH dsk AS", "FROM events GROUP BY 1, 2, 3),",
-    Set("x6_hist_daily", "x6_hist_rolling"))
-
-  chainFamily("inter-event gap stream e/g/b", "x6_gap_hist",
-    "WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)",
-    "WHERE gap_us IS NOT NULL)",
-    Set("x6_gap_hist", "x6_hist_log_sketch", "x6_hist_log_quantiles",
-      "x6_hist_log_serve", "x6_hist_log_accuracy", "x6_hist_log_merge"))
-
-  chainFamily("dyadic log-bucket lb CTE", "x6_hist_log_sketch",
-    "lb AS (SELECT CASE WHEN gap_s <= 0", "END AS bucket FROM b)",
-    Set("x6_hist_log_sketch", "x6_hist_log_quantiles", "x6_hist_log_serve",
-      "x6_hist_log_accuracy", "x6_hist_log_merge", "x6_session_lengths"))
-
-  chainFamily("log-sketch cumulative read sk/cu", "x6_hist_log_quantiles",
-    "sk AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM lb GROUP BY 1)",
-    "CAST(sum(c) OVER () AS BIGINT) AS n\n           FROM sk)",
-    Set("x6_hist_log_quantiles", "x6_hist_log_serve", "x6_hist_log_accuracy",
-      "x6_session_lengths"))
-
-  chainFamily("session frame x/y/z (value-carrying)", "x6_sessions",
-    "WITH x AS", "ROWS UNBOUNDED PRECEDING) AS session_seq FROM y)",
-    Set("x6_sessions", "x6_session_lengths"))
-
-  formulaFamily("session agg select",
-    "min(ts_us) AS session_start_us, max(ts_us) AS session_end_us,\n" +
-      "           count(*) AS n_events, round(sum(value), 4) AS sum_value\n" +
-      "         FROM z GROUP BY user_id, session_seq",
-    Set("x6_sessions", "x6_session_lengths"))
-
-  formulaFamily("dyadic bucket upper edge",
-    "CASE WHEN bucket = 0 THEN CAST(0 AS DOUBLE) ELSE CAST((1::BIGINT << " +
-      "CAST((bucket - 1) // 4 AS INTEGER)) * ((bucket - 1) % 4 + 5) " +
-      "AS DOUBLE) / 4.0 END",
-    Set("x6_hist_log_sketch", "x6_hist_log_quantiles", "x6_hist_log_serve",
-      "x6_hist_log_accuracy", "x6_hist_log_merge", "x6_funnel_latency",
-      "x6_hist_log_daily", "x6_hist_log_rolling", "x6_session_lengths"))
-
-  chainFamily("day-grain log-gap head e..sk", "x6_hist_log_daily",
-    "WITH e AS", "FROM lb GROUP BY 1, 2),",
-    Set("x6_hist_log_daily", "x6_hist_log_rolling"))
-
-  chainFamily("funnel earliest-completion s1/s2/s3 head", "x6_funnel",
-    "WITH s1 AS", "epoch_us(e.ts) > s2.t2_us",
-    Set("x6_funnel", "x6_funnel_latency", "x6_funnel_rates"))
-
-  // the bucket arithmetic alone (the lb-CTE chain pins it for the
-  // gap-stream family; the funnel-latency lb is step-keyed so only
-  // the CASE text is shared)
-  formulaFamily("dyadic log-bucket CASE",
-    "CASE WHEN gap_s <= 0 THEN CAST(0 AS BIGINT)\n" +
-      "             ELSE CAST(1 + (length(bin(gap_s)) - 1) * 4\n" +
-      "               + ((gap_s * 4) // (1::BIGINT << (length(bin(gap_s)) - 1)) - 4)\n" +
-      "               AS BIGINT) END AS bucket FROM ",
-    Set("x6_hist_log_sketch", "x6_hist_log_quantiles", "x6_hist_log_serve",
-      "x6_hist_log_accuracy", "x6_hist_log_merge", "x6_funnel_latency",
-      "x6_hist_log_daily", "x6_hist_log_rolling", "x6_session_lengths"))
-
-  formulaFamily("class-mean prototype fold",
-    "round(sum(val) / count(*), 6)",
-    Set("x2_confusion", "x2_mean_pool"))
-
-  formulaFamily("media dyadic 2^-20 snap",
-    "list_transform(v, x -> floor(x * 1048576 + 0.5) / 1048576.0) AS v",
-    Set("x5_mm_ivf", "x5_mm_pq", "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve",
-      "x5_mm_search_pq", "x5_mm_search_pq_serve",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall", "x5_mm_pq_recall"))
-
-  formulaFamily("media stub embedding formula",
-    "CAST(ord(text[(i * 7) % length(text) + 1]) AS DOUBLE) / 255.0",
-    Set("x5_mm_align", "x5_mm_bucket_stats", "x5_mm_dedup", "x5_mm_incremental",
-      "x5_mm_ivf", "x5_mm_pq", "x5_mm_rank_quality", "x5_mm_recall", "x5_mm_search",
-      "x5_mm_search_ivfpq", "x5_mm_search_ivfpq_serve",
-      "x5_mm_search_ivfpq_res", "x5_mm_search_ivfpq_res_serve", "x5_mm_search_lsh",
-      "x5_mm_search_lsh_serve", "x5_mm_search_pq", "x5_mm_search_pq_serve",
-      "x5_mm_search_sq", "x5_mm_search_sq_serve", "x5_mm_search_binary",
-      "x5_mm_search_binary_serve", "x5_mm_probe_curve",
-      "x5_mm_search_filtered", "x5_mm_search_filtered_serve",
-      "x5_mm_filtered_recall", "x5_mm_filtered_probe_curve",
-      "x5_mm_filtered_rank_quality", "x5_mm_filtered_bucket_stats",
-      "x5_mm_search_ivfsq", "x5_mm_search_ivfsq_serve",
-      "x5_mm_search_ivfsq_res", "x5_mm_search_ivfsq_res_serve",
-      "x5_mm_ivfpq_recall", "x5_mm_ivfsq_recall",
-      "x5_mm_sq_recall", "x5_mm_binary_recall", "x5_mm_pq_recall",
-      "x5_mm_search_binary_rerank", "x5_mm_binary_rerank_recall"))
-
-  // the binary sign-pack WORD fold and Hamming estimate are shared by
-  // every binary carrier on BOTH modalities (the x2 chain family can't
-  // span the media copies — query bounds differ), so the formulas get
-  // their own cross-modality families: a one-sided edit to the packing
-  // or the distance fails here no matter which side moved
-  formulaFamily("binary sign-pack word fold",
-    "list_reduce(list_transform(range(32), i -> CASE WHEN v[i+1] > 0\n" +
-      "               THEN (1::BIGINT << i) ELSE 0::BIGINT END), (x,y) -> x+y) AS w0,\n" +
-      "             list_reduce(list_transform(range(32), i -> CASE WHEN v[i+33] > 0\n" +
-      "               THEN (1::BIGINT << i) ELSE 0::BIGINT END), (x,y) -> x+y) AS w1",
-    Set("x2_ann_binary", "x2_ann_binary_serve", "x2_binary_recall",
-      "x2_ann_binary_rerank", "x5_mm_search_binary",
-      "x5_mm_search_binary_serve", "x5_mm_binary_recall",
-      "x2_binary_rerank_recall", "x5_mm_search_binary_rerank",
-      "x5_mm_binary_rerank_recall"))
-
-  formulaFamily("binary Hamming estimate",
-    "CAST(bit_count(xor(a.w0, t.w0)) + bit_count(xor(a.w1, t.w1)) AS BIGINT) AS hamming",
-    Set("x2_ann_binary", "x2_ann_binary_serve", "x2_binary_recall",
-      "x2_ann_binary_rerank", "x5_mm_search_binary",
-      "x5_mm_search_binary_serve", "x5_mm_binary_recall",
-      "x2_binary_rerank_recall", "x5_mm_search_binary_rerank",
-      "x5_mm_binary_rerank_recall"))
-
-  // ---- serve aliases: shared BY REFERENCE, pinned here ----
-
-  test("serve oracles alias their base oracle verbatim") {
-    val aliases = Map(
-      "x2_ann_ivf_serve" -> "x2_ann_ivf",
-      "x2_ann_ivfpq_serve" -> "x2_ann_ivfpq",
-      "x2_ann_ivfpq_res_serve" -> "x2_ann_ivfpq_res",
-      "x2_ann_lsh_serve" -> "x2_ann_lsh",
-      "x2_ann_filtered_serve" -> "x2_ann_filtered",
-      "x2_range_lsh_serve" -> "x2_range_lsh",
-      "x2_ann_pq_serve" -> "x2_ann_pq",
-      "x2_mips_lsh_serve" -> "x2_mips_lsh",
-      "x3_bigram_score_serve" -> "x3_bigram_logprob",
-      "x3_bm25_rebuild" -> "x3_bm25_index",
-      "x3_bm25_serve" -> "x3_bm25_search",
-      "x3_phrase_serve" -> "x3_phrase_search",
-      "x3_unigram_score_serve" -> "x3_unigram_logprob",
-      "x2_ann_sq_serve" -> "x2_ann_sq",
-      "x2_ann_binary_serve" -> "x2_ann_binary",
-      "x2_hybrid_rrf_serve" -> "x2_hybrid_rrf",
-      "x2_ann_ivfsq_serve" -> "x2_ann_ivfsq",
-      "x2_ann_ivfsq_res_serve" -> "x2_ann_ivfsq_res",
-      "x5_mm_search_sq_serve" -> "x5_mm_search_sq",
-      "x5_mm_search_binary_serve" -> "x5_mm_search_binary",
-      "x4_bloom_merge" -> "x4_bloom_bits",
-      "x6_cms_merge" -> "x6_cms_sketch",
-      "x6_hist_merge" -> "x6_hist_sketch",
-      "x6_hist_log_merge" -> "x6_hist_log_sketch",
-      "x6_hist_serve" -> "x6_hist_quantiles",
-      "x5_mm_search_lsh_serve" -> "x5_mm_search_lsh",
-      "x5_mm_search_filtered_serve" -> "x5_mm_search_filtered",
-      "x5_mm_search_pq_serve" -> "x5_mm_search_pq",
-      "x5_mm_search_ivfpq_serve" -> "x5_mm_search_ivfpq",
-      "x5_mm_search_ivfpq_res_serve" -> "x5_mm_search_ivfpq_res",
-      "x6_covisit_session_merge" -> "x6_covisit_session",
-      "x6_also_viewed_session_serve" -> "x6_also_viewed_session",
-      "x5_mm_search_ivfsq_serve" -> "x5_mm_search_ivfsq",
-      "x5_mm_search_ivfsq_res_serve" -> "x5_mm_search_ivfsq_res",
-      "x6_anomaly_serve" -> "x6_anomaly")
-    aliases.foreach { case (serve, base) =>
-      assert(sql.contains(serve), s"$serve missing from oracleSql")
-      assert(sql(serve) == sql(base), s"$serve no longer aliases $base verbatim")
-    }
-  }
 }

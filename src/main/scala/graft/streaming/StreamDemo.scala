@@ -1,13 +1,20 @@
 package graft.streaming
 
+import com.fasterxml.jackson.databind.json.JsonMapper
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.DataGen
 
 /** End-to-end streaming smoke: rate-source order events (reference
   * producer distributions) → stream-static broadcast enrichment against
   * a generated customers table → id-stamped parquet sink, then reads
-  * the sink back and prints one JSON status line.
+  * the sink back and prints one JSON status line: rows, distinct cities
+  * and ids, whether the last trigger's executed plan joined by broadcast
+  * hash join, and the sink's bytes on disk per stored row.
   *
   * Usage: runMain graft.streaming.StreamDemo [seconds] [rowsPerSecond]
   */
@@ -22,18 +29,33 @@ object StreamDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val dir = java.nio.file.Files.createTempDirectory("graft-demo")
+    val dir = Files.createTempDirectory("graft-demo")
     val out = s"$dir/out"; val ck = s"$dir/ck"
     val customers = DataGen.customersBatch(spark, 10000)
     val q = StreamPipeline.run(spark, StreamPipeline.RateOrders(rps), customers,
       out, ck, Trigger.ProcessingTime("1 second"))
     Thread.sleep(runSeconds * 1000L)
     q.stop()
+    // null when no trigger ran
+    val lastPlan = Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+      .map(_.executedPlan)
     val sink = spark.read.parquet(out)
     val n = sink.count()
-    val nCities = sink.select("city").distinct().count()
-    val idsDistinct = sink.select("id").distinct().count()
-    println(s"""{"demo":"stream","rows":$n,"cities":$nCities,"distinct_ids":$idsDistinct,"join_plan_broadcast":${sink.columns.mkString(",").contains("customer_name")}}""")
+    val files = Files.walk(Paths.get(out))
+    val storeBytes =
+      try files.filter(p => Files.isRegularFile(p)).mapToLong(p => Files.size(p)).sum()
+      finally files.close()
+    val mapper = JsonMapper.builder().build()
+    val record = mapper.createObjectNode()
+      .put("demo", "stream").put("rows", n)
+      .put("cities", sink.select("city").distinct().count())
+      .put("distinct_ids", sink.select("id").distinct().count())
+      // the helper looks inside adaptive plans and their query stages
+      .put("join_plan_broadcast", lastPlan.exists(p => new AdaptiveSparkPlanHelper {}
+        .find(p)(_.isInstanceOf[BroadcastHashJoinExec]).isDefined))
+    if (n > 0) record.put("store_bytes_per_row", storeBytes.toDouble / n)
+    else record.putNull("store_bytes_per_row")
+    println(mapper.writeValueAsString(record))
     spark.stop()
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName.{SNAPPY, ZSTD}
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -71,6 +74,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.select("id").distinct().count() === 2) // generated per-row ids
     assert(got.filter(col("customer_id") === 1)
       .select("customer_name").head.getString(0) === "Willis Collins")
+    // the store encoding: zstd pages, and no dictionary for the unique id
+    val written = chunks(out)
+    assert(written.map(_._1).toSet === got.columns.toSet - "batch")
+    assert(written.forall(_._2 == ZSTD), written)
+    assert(written.filter(_._1 == "id").forall(!_._3), written)
   }
 
   test("upsert sink merges on key: update, in-batch dup, and replay are all one row per key") {
@@ -223,6 +231,20 @@ class StreamingSpec extends AnyFunSuite {
         g.getFileName.toString.stripPrefix("gen=").toLong) ->
         (if (Files.exists(m)) Some(Files.readString(m)) else None)
     }).toMap
+
+  /** Every column chunk of the parquet files under `dir`, read from their
+    * footers: (column, codec, has a dictionary page). */
+  private def chunks(dir: Path) = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.toList.filter(_.getFileName.toString.endsWith(".parquet"))
+      .flatMap { f =>
+        val r = ParquetFileReader.open(new LocalInputFile(f))
+        try r.getFooter.getBlocks.asScala.toList.flatMap(_.getColumns.asScala)
+          .map(c => (c.getPath.toDotString, c.getCodec, c.hasDictionaryPage))
+        finally r.close()
+      }
+    finally s.close()
+  }
 
   private def markerField(marker: String, k: String): String =
     marker.linesIterator.collectFirst { case l if l.startsWith(s"$k=") => l.drop(k.length + 1) }
@@ -434,7 +456,8 @@ class StreamingSpec extends AnyFunSuite {
     def legacyGen(gen: Long, t: Seq[(String, Long, Long)]): Unit = {
       t.toDF("order_id", "customer_id", "amount")
         .withColumn("bucket", lit(0L)).withColumn("gen", lit(gen))
-        .write.mode("append").partitionBy("bucket", "gen").parquet(out.toString)
+        .write.mode("append").option("compression", "snappy")
+        .partitionBy("bucket", "gen").parquet(out.toString)
       Files.createFile(out.resolve("bucket=0").resolve(s"gen=$gen").resolve("_graft_commit"))
     }
     val g0 = Seq(("a", 1L, 10L), ("b", 2L, 20L), ("c", 3L, 30L), ("d", 4L, 40L))
@@ -446,9 +469,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap() === g1.toSet)
     StreamPipeline.upsertBatch(Seq(("b", 2L, 21L), ("f", 6L, 60L))
       .toDF("order_id", "customer_id", "amount"), out.toString, 2L, nBuckets = 1)
-    assert(snap() === (g1.filterNot(_._1 == "b") ++ Seq(("b", 2L, 21L), ("f", 6L, 60L))).toSet)
+    val g2 = g1.filterNot(_._1 == "b") ++ Seq(("b", 2L, 21L), ("f", 6L, 60L))
+    assert(snap() === g2.toSet)
     // the old base gen=1 stays under the new delta; gen=0 is retired
     assert(storeGens(out).keySet === Set((0L, 1L), (0L, 2L)))
+    // the bucket now mixes codecs: the old base stays snappy, the new
+    // delta is zstd with no dictionary on its key
+    def genChunks(g: Long) = chunks(out.resolve("bucket=0").resolve(s"gen=$g"))
+    val (old, fresh) = (genChunks(1L), genChunks(2L))
+    assert(old.nonEmpty && old.forall(_._2 == SNAPPY), old)
+    assert(fresh.nonEmpty && fresh.forall(_._2 == ZSTD), fresh)
+    assert(fresh.filter(_._1 == "order_id").forall(!_._3), fresh)
+    // 2 delta rows + 3 batch rows reach the 5-row base: the compaction
+    // rewrites the whole bucket as zstd
+    val b3 = Seq(("c", 3L, 31L), ("g", 7L, 70L), ("h", 8L, 80L))
+    StreamPipeline.upsertBatch(b3.toDF("order_id", "customer_id", "amount"),
+      out.toString, 3L, nBuckets = 1)
+    assert(snap() === (g2.filterNot(_._1 == "c") ++ b3).toSet)
+    assert(storeGens(out).keySet === Set((0L, 3L)))
+    val compacted = genChunks(3L)
+    assert(compacted.nonEmpty && compacted.forall(_._2 == ZSTD), compacted)
   }
 
   test("streaming dedup keeps one row per order id within the watermark") {

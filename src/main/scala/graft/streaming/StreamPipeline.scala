@@ -118,8 +118,9 @@ object StreamPipeline {
     * again before its checkpoint committed) overwrites its previous
     * attempt instead of appending duplicates — the idempotence that
     * makes foreachBatch exactly-once. Each batch is at most 4 files
-    * (tiny-file control at scale), encoded as [[storeWrite]] describes;
-    * `id` is unique, so it is written without a dictionary.
+    * (tiny-file control at scale), each holding its rows sorted by
+    * `customer_id`, laid out as [[storeWrite]] describes: `id`,
+    * `customer_id` and `customer_name` are written without a dictionary.
     *
     * No per-batch value may enter generated code: Spark caches compiled
     * classes by their source text, so a batch id or seed written into
@@ -134,7 +135,8 @@ object StreamPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         storeWrite(batch.withColumn("id", SeededUuid.seeded_uuid(scala.util.Random.nextLong()))
-          .repartition(4, col("customer_id")), uniqueCol = "id")
+          .repartition(4, col("customer_id")), Seq("customer_id"),
+          "id" +: EnrichedPlain)
           .parquet(s"$outDir/batch=$batchId")
       }
 
@@ -154,11 +156,11 @@ object StreamPipeline {
     * Replay-idempotent: a replayed batch skips every bucket it already
     * committed.
     *
-    * Every generation is parquet encoded as [[storeWrite]] describes,
-    * with `keyCol` written without a dictionary (a generation holds one
-    * row per key). A store written before that encoding (snappy
-    * generations) still reads and takes writes; a bucket holds both
-    * codecs until its next compaction rewrites it.
+    * Every generation is laid out as [[storeWrite]] describes: sorted
+    * by key, with `keyCol`, `customer_id` and `customer_name` written
+    * without a dictionary. Stores written before that layout (v1 pages,
+    * zstd or snappy) still read and take writes; a bucket holds both
+    * until its next compaction rewrites it.
     *
     * Sizing: all touched buckets commit in one Spark job, so `nBuckets`
     * sets the files per trigger and the unit of compaction, not the
@@ -170,24 +172,46 @@ object StreamPipeline {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, outDir, batchId, keyCol, nBuckets)
+        upsertInto(batch, outDir, batchId, keyCol, nBuckets, (keyCol +: EnrichedPlain).distinct)
       }
 
-  /** The encoding of both streaming stores: parquet pages compressed
-    * with zstd, not Spark's default snappy. Most of a stored row is
-    * 36-character hex UUIDs, 4 bits of information per byte; snappy only
-    * finds repeated runs and leaves them at full size, zstd entropy-codes
-    * them to about half. Set per write, so the session's codec stays as
-    * it is for every other parquet write.
+  /** The layout of both streaming stores, set per write so the session's
+    * parquet settings stay as they are for every other write:
     *
-    * `uniqueCol` is a column whose values are all distinct in every file
-    * the write produces. Its dictionary would always fall back to plain
-    * encoding, so the attempt is skipped: the same bytes for less CPU. */
-  private def storeWrite(rows: DataFrame,
-                         uniqueCol: String): DataFrameWriter[org.apache.spark.sql.Row] =
-    rows.write.mode("overwrite")
+    *  - rows sorted by `sortCols` within each file, so equal and nearby
+    *    values sit together (the append store by its partition key, an
+    *    upsert generation by key);
+    *  - parquet v2 data pages (`parquet.writer.version=v2`): a column
+    *    without a dictionary is written `DELTA_BYTE_ARRAY` (strings:
+    *    each value stores only its suffix after the previous value's
+    *    prefix, lengths bit-packed) or `DELTA_BINARY_PACKED` (longs:
+    *    bit-packed differences), instead of v1's length-prefixed plain
+    *    values;
+    *  - pages compressed with zstd, not Spark's default snappy. Most of a
+    *    stored row is 36-character hex UUIDs, 4 bits of information per
+    *    byte; snappy only finds repeated runs and leaves them at full
+    *    size, zstd entropy-codes them to about half;
+    *  - no dictionary for `plainCols`: columns with about one distinct
+    *    value per row in a file, where a dictionary page plus its indices
+    *    cost more than the delta encoding (measured per column at
+    *    trigger- and base-sized files). Every other column keeps its
+    *    dictionary.
+    *
+    * Readers need v2 delta-encoding support: Spark 3.3 or later. */
+  private def storeWrite(rows: DataFrame, sortCols: Seq[String],
+                         plainCols: Seq[String]): DataFrameWriter[org.apache.spark.sql.Row] = {
+    val writer = rows.sortWithinPartitions(sortCols.map(col): _*).write.mode("overwrite")
       .option("compression", "zstd")
-      .option(s"parquet.enable.dictionary#$uniqueCol", "false")
+      .option("parquet.writer.version", "v2")
+    plainCols.foldLeft(writer)((w, c) => w.option(s"parquet.enable.dictionary#$c", "false"))
+  }
+
+  /** The columns of the enriched schema written without a dictionary,
+    * besides the sink's unique column: with 10k customers, a file of a
+    * few thousand to tens of thousands of rows holds about one distinct
+    * customer per row. `city` (14 values) and `purchase_amount` (480
+    * values) keep theirs. */
+  private val EnrichedPlain = Seq("customer_id", "customer_name")
 
   /** Marker written by the sink itself after a generation's parquet
     * write returns — NOT the committer's _SUCCESS, which a cluster may
@@ -300,7 +324,13 @@ object StreamPipeline {
     * above every stored generation, and the `gen` partition value is a
     * string literal, which generated code reads from `references[]`. */
   def upsertBatch(batch: DataFrame, outDir: String, batchId: Long,
-                  keyCol: String = "order_id", nBuckets: Int = 8): Unit = {
+                  keyCol: String = "order_id", nBuckets: Int = 8): Unit =
+    upsertInto(batch, outDir, batchId, keyCol, nBuckets, Seq(keyCol))
+
+  /** [[upsertBatch]], writing `plainCols` without a dictionary
+    * ([[storeWrite]]). */
+  private def upsertInto(batch: DataFrame, outDir: String, batchId: Long,
+                         keyCol: String, nBuckets: Int, plainCols: Seq[String]): Unit = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -366,14 +396,16 @@ object StreamPipeline {
               :+ col("gen").cast("long").as("_pri"): _*))
         // the bucket is a function of the key, so partitioning the window
         // by (bucket, key) keeps it on the bucket exchange: one shuffle,
-        // and each task writes whole buckets
+        // and each task writes whole buckets. The window's own sort
+        // already orders each task by (bucket, key): Spark drops the
+        // layout's sort as satisfied, and the write adds none
         val w = Window.partitionBy(col("_bucket"), col(keyCol))
           .orderBy(col("_pri").desc +: dataCols.filterNot(_ == keyCol)
             .map(c => col(c).desc): _*)
         storeWrite(rows.repartition(col("_bucket"))
           .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
           .select(dataCols.map(col) :+ col("_bucket").as("bucket")
-            :+ lit(batchId.toString).as("gen"): _*), uniqueCol = keyCol)
+            :+ lit(batchId.toString).as("gen"): _*), Seq("bucket", keyCol), plainCols)
           // truncate ONLY the (bucket, gen) partitions this job writes —
           // a replay overwrites its own torn generation; every other
           // generation is untouched

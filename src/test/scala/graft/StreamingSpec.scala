@@ -1,7 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.metadata.CompressionCodecName.{SNAPPY, ZSTD}
 import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,6 +25,9 @@ case class DocEvent(doc_id: Long, text: String, lang: String,
                     source: String, ts: Timestamp)
 case class UserEvent(event_id: Long, ts: Timestamp, user_id: Long,
                      event_type: String, value: Double)
+/** One column chunk of a parquet file, read from its footer. */
+case class Chunk(column: String, codec: CompressionCodecName, dict: Boolean,
+                 encodings: Set[Encoding], v2: Boolean)
 case class PropsEvent(event_id: Long, ts: Timestamp, user_id: Long,
                       event_type: String, value: Double, props: String)
 
@@ -64,21 +71,38 @@ class StreamingSpec extends AnyFunSuite {
     Files.writeString(in.resolve("batch1.json"),
       """{"orderID":"a1","customerID":1,"amount":182}
         |{"orderID":"a2","customerID":2,"amount":33}""".stripMargin)
+    // enough repeats that a dictionary pays where the layout keeps one
+    Files.writeString(in.resolve("batch2.json"), (0 until 300).map { i =>
+      s"""{"orderID":"b$i","customerID":${5 - i % 5},"amount":${i % 7}}"""
+    }.mkString("\n"))
     val q = StreamPipeline.run(spark, StreamPipeline.FileOrders(in.toString),
       customersHead, out.toString, ck.toString,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination()
     val got = spark.read.parquet(out.toString)
-    assert(got.count() === 2)
+    assert(got.count() === 302)
     assert(got.columns.contains("id"))
-    assert(got.select("id").distinct().count() === 2) // generated per-row ids
+    assert(got.select("id").distinct().count() === 302) // generated per-row ids
     assert(got.filter(col("customer_id") === 1)
-      .select("customer_name").head.getString(0) === "Willis Collins")
-    // the store encoding: zstd pages, and no dictionary for the unique id
+      .select("customer_name").distinct().head.getString(0) === "Willis Collins")
+    // the store layout: zstd v2 pages, no dictionary for the unique id and
+    // the customer columns, one for city and amount
     val written = chunks(out)
-    assert(written.map(_._1).toSet === got.columns.toSet - "batch")
-    assert(written.forall(_._2 == ZSTD), written)
-    assert(written.filter(_._1 == "id").forall(!_._3), written)
+    assert(written.map(_.column).toSet === got.columns.toSet - "batch")
+    assert(written.forall(c => c.codec == ZSTD && c.v2), written)
+    val plain = Set("id", "customer_id", "customer_name")
+    assert(written.filter(c => plain(c.column)).forall(c => !c.dict &&
+      !c.encodings.exists(_.usesDictionary)), written)
+    assert(written.filter(c => Set("city", "purchase_amount")(c.column)).forall(_.dict), written)
+    assert(written.filter(_.column == "customer_id").forall(
+      _.encodings.contains(Encoding.DELTA_BINARY_PACKED)), written)
+    // every file holds its rows sorted by the partition key
+    val files = parquetFiles(out)
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val ids = fileColumn(f, "customer_id")(_.getLong(_, 0))
+      assert(ids === ids.sorted, f)
+    }
   }
 
   test("upsert sink merges on key: update, in-batch dup, and replay are all one row per key") {
@@ -197,6 +221,18 @@ class StreamingSpec extends AnyFunSuite {
       assert(snap.count() === 2)
       assert(snap.filter(col("order_id") === "o1")
         .select("purchase_amount").head.getLong(0) === 250L)
+      // the enriched store: no dictionary for the key and the customer
+      // columns, one for city and amount. Enough repeats that a dictionary
+      // would pay; they rewrite every bucket they touch as a new base
+      mem.addData((0 until 200).map(i => OrderEvent(s"p$i", 1 + i % 5, i % 7)))
+      q.processAllAvailable()
+      val store = dir.resolve("store")
+      assert(StreamPipeline.readUpserted(spark, store.toString).count() === 202)
+      val written = ls(store).map(_.resolve("gen=2")).filter(Files.exists(_)).flatMap(chunks)
+      assert(written.nonEmpty && written.forall(_.v2), written)
+      assert(written.filter(c => Set("order_id", "customer_id", "customer_name")(c.column))
+        .forall(c => !c.dict && !c.encodings.exists(_.usesDictionary)), written)
+      assert(written.filter(c => Set("city", "purchase_amount")(c.column)).forall(_.dict), written)
     } finally q.stop()
   }
 
@@ -232,18 +268,30 @@ class StreamingSpec extends AnyFunSuite {
         (if (Files.exists(m)) Some(Files.readString(m)) else None)
     }).toMap
 
-  /** Every column chunk of the parquet files under `dir`, read from their
-    * footers: (column, codec, has a dictionary page). */
-  private def chunks(dir: Path) = {
+  private def parquetFiles(dir: Path): List[Path] = {
     val s = Files.walk(dir)
     try s.iterator().asScala.toList.filter(_.getFileName.toString.endsWith(".parquet"))
-      .flatMap { f =>
-        val r = ParquetFileReader.open(new LocalInputFile(f))
-        try r.getFooter.getBlocks.asScala.toList.flatMap(_.getColumns.asScala)
-          .map(c => (c.getPath.toDotString, c.getCodec, c.hasDictionaryPage))
-        finally r.close()
-      }
     finally s.close()
+  }
+
+  /** Every column chunk of the parquet files under `dir`, read from their
+    * footers. */
+  private def chunks(dir: Path): List[Chunk] = parquetFiles(dir).flatMap { f =>
+    val r = ParquetFileReader.open(new LocalInputFile(f))
+    try r.getFooter.getBlocks.asScala.toList.flatMap(_.getColumns.asScala).map { c =>
+      Chunk(c.getPath.toDotString, c.getCodec, c.hasDictionaryPage,
+        c.getEncodings.asScala.toSet, c.getEncodingStats.usesV2Pages)
+    }
+    finally r.close()
+  }
+
+  /** One column of a parquet file in stored row order, read with
+    * parquet's own reader, not Spark. */
+  private def fileColumn[T](f: Path, column: String)(get: (Group, String) => T): Vector[T] = {
+    val r = ParquetReader.builder(new GroupReadSupport(),
+      new org.apache.hadoop.fs.Path(f.toUri)).build()
+    try Iterator.continually(r.read()).takeWhile(_ != null).map(get(_, column)).toVector
+    finally r.close()
   }
 
   private def markerField(marker: String, k: String): String =
@@ -473,22 +521,102 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap() === g2.toSet)
     // the old base gen=1 stays under the new delta; gen=0 is retired
     assert(storeGens(out).keySet === Set((0L, 1L), (0L, 2L)))
-    // the bucket now mixes codecs: the old base stays snappy, the new
-    // delta is zstd with no dictionary on its key
+    // the bucket now mixes layouts: the old base stays snappy v1, the new
+    // delta is zstd v2 with no dictionary on its key
     def genChunks(g: Long) = chunks(out.resolve("bucket=0").resolve(s"gen=$g"))
     val (old, fresh) = (genChunks(1L), genChunks(2L))
-    assert(old.nonEmpty && old.forall(_._2 == SNAPPY), old)
-    assert(fresh.nonEmpty && fresh.forall(_._2 == ZSTD), fresh)
-    assert(fresh.filter(_._1 == "order_id").forall(!_._3), fresh)
+    assert(old.nonEmpty && old.forall(c => c.codec == SNAPPY && !c.v2), old)
+    assert(fresh.nonEmpty && fresh.forall(c => c.codec == ZSTD && c.v2), fresh)
+    assert(fresh.filter(_.column == "order_id").forall(!_.dict), fresh)
     // 2 delta rows + 3 batch rows reach the 5-row base: the compaction
-    // rewrites the whole bucket as zstd
+    // rewrites the whole bucket as zstd v2
     val b3 = Seq(("c", 3L, 31L), ("g", 7L, 70L), ("h", 8L, 80L))
     StreamPipeline.upsertBatch(b3.toDF("order_id", "customer_id", "amount"),
       out.toString, 3L, nBuckets = 1)
     assert(snap() === (g2.filterNot(_._1 == "c") ++ b3).toSet)
     assert(storeGens(out).keySet === Set((0L, 3L)))
     val compacted = genChunks(3L)
-    assert(compacted.nonEmpty && compacted.forall(_._2 == ZSTD), compacted)
+    assert(compacted.nonEmpty && compacted.forall(c => c.codec == ZSTD && c.v2), compacted)
+  }
+
+  test("upsert sink reads, merges and compacts v1 zstd generations next to v2 ones") {
+    val out = Files.createTempDirectory("graft-upsert-v1").resolve("store")
+    // the layout before v2 pages: zstd v1 pages in shuffle order, no
+    // dictionary on the key, and markers with content
+    def v1Gen(gen: Long, kind: String, t: Seq[(String, Long, Long)]): Unit = {
+      t.toDF("order_id", "customer_id", "amount")
+        .withColumn("bucket", lit(0L)).withColumn("gen", lit(gen))
+        .write.mode("append").option("compression", "zstd")
+        .option("parquet.enable.dictionary#order_id", "false")
+        .partitionBy("bucket", "gen").parquet(out.toString)
+      Files.writeString(out.resolve("bucket=0").resolve(s"gen=$gen").resolve("_graft_commit"),
+        s"kind=$kind\nkey=order_id\nrows=${t.size}\nfrom=$gen\n")
+    }
+    val model = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    def put(t: Seq[(String, Long, Long)]): Unit = t.foreach(r => model(r._1) = (r._2, r._3))
+    def check(when: String): Unit = {
+      val got = StreamPipeline.readUpserted(spark, out.toString)
+        .as[(String, Long, Long)].collect()
+      assert(got.length === model.size, when)
+      assert(got.map(r => r._1 -> (r._2, r._3)).toMap === model.toMap, when)
+    }
+    def upsert(id: Long, t: Seq[(String, Long, Long)]): Unit = {
+      StreamPipeline.upsertBatch(t.toDF("order_id", "customer_id", "amount"),
+        out.toString, id, nBuckets = 1)
+      put(t)
+    }
+    def genChunks(g: Long) = chunks(out.resolve("bucket=0").resolve(s"gen=$g"))
+    val base = (0 until 40).map(i => (s"k${i * 17 % 40}", i % 3L, i.toLong))
+    val delta = Seq(("k1", 2L, 100L), ("k50", 1L, 50L))
+    v1Gen(0L, "base", base); put(base)
+    v1Gen(1L, "delta", delta); put(delta)
+    assert((genChunks(0L) ++ genChunks(1L)).forall(c => c.codec == ZSTD && !c.v2))
+    check("v1 store")
+    // a v2 delta over the v1 chain: updates of base and delta keys, a new key
+    upsert(2L, Seq(("k3", 0L, 300L), ("k50", 2L, 51L), ("k60", 1L, 60L)))
+    assert(storeGens(out).keySet === Set((0L, 0L), (0L, 1L), (0L, 2L)))
+    assert(genChunks(2L).forall(c => c.codec == ZSTD && c.v2))
+    check("v2 delta over v1 generations")
+    // deltas plus batch reach the base: one v2 base replaces them all
+    upsert(3L, (0 until 40).map(i => (s"k${i * 3}", 1L, 1000L + i)))
+    assert(storeGens(out).keySet === Set((0L, 3L)))
+    assert(markerField(storeGens(out)((0L, 3L)).get, "kind") === "base")
+    assert(genChunks(3L).forall(c => c.codec == ZSTD && c.v2))
+    check("compacted")
+  }
+
+  test("upsert sink writes every generation sorted by key, read from its files") {
+    val out = Files.createTempDirectory("graft-upsert-sorted").resolve("store")
+    val rnd = new scala.util.Random(7)
+    // keys in random order, some re-delivered, five customers
+    def batch(n: Int, from: Int) = rnd.shuffle((from until from + n).toList)
+      .map(i => (s"o${rnd.nextInt(4 * n + from)}", (i % 5).toLong, s"c${i % 5}", i.toLong))
+      .toDF("order_id", "customer_id", "customer_name", "amount")
+    // generations are retired as the store grows: check each one once
+    val seen = scala.collection.mutable.Set.empty[Path]
+    var compacted = false
+    for (id <- 0 to 12) {
+      StreamPipeline.upsertBatch(if (id == 0) batch(400, 0) else batch(60, id * 100),
+        out.toString, id.toLong, nBuckets = 2)
+      compacted |= id > 0 && storeGens(out).exists {
+        case ((_, g), Some(m)) => g == id && markerField(m, "kind") == "base"
+        case _ => false
+      }
+      parquetFiles(out).filterNot(seen).foreach { f =>
+        seen += f
+        val keys = fileColumn(f, "order_id")(_.getString(_, 0))
+        assert(keys.nonEmpty && keys.distinct.size === keys.size, f)
+        assert(keys === keys.sorted, f)
+      }
+    }
+    // every trigger wrote both buckets, and one of them compacted
+    assert(compacted && seen.size >= 2 * 13, seen.size)
+    // upsertBatch keeps every dictionary but the key's: the customer
+    // columns lose theirs only in the enriched store (upsertEnriched)
+    val written = chunks(out)
+    assert(written.forall(c => c.codec == ZSTD && c.v2), written)
+    assert(written.filter(_.column == "order_id").forall(!_.dict), written)
+    assert(written.filter(_.column.startsWith("customer_")).forall(_.dict), written)
   }
 
   test("streaming dedup keeps one row per order id within the watermark") {

@@ -28,9 +28,25 @@ private[graft] object Oracles {
 
   private val entropyMicroNatTerm = """CAST(floor(ln(k) * 1000000 + 0.5) AS BIGINT)"""
 
-  private val bigramDToCa = """WITH d AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
+  private val classMeanVal = """round(sum(val) / count(*), 6) AS val"""
+
+  private val sqAdot = """
+             CAST(list_reduce(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]),
+               (x,y) -> x+y) AS DOUBLE) * a.scale * b.scale AS adot"""
+
+  private val minhashBandKey = """array_to_string(s[b*4+1:b*4+4], ':') AS key"""
+
+  // Hamming-1 probing of a 4-bit bucket: itself and its four one-bit flips
+  private val lshProbeMasks = """unnest([0, 1, 2, 4, 8]) AS fl"""
+
+  private val lshProbeMasksIdx = lshProbeMasks + """,
+               unnest([0, 1, 2, 3, 4]) AS idx"""
+
+  private val bigramDToBg = """WITH d AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
          z AS (SELECT doc_id, unnest(list_zip(s, s[2:])) AS p FROM d),
-         bg AS (SELECT doc_id, p[1] AS a, p[2] AS b FROM z WHERE p[2] IS NOT NULL),
+         bg AS (SELECT doc_id, p[1] AS a, p[2] AS b FROM z WHERE p[2] IS NOT NULL),"""
+
+  private val bigramDToCa = bigramDToBg + """
          pd AS (SELECT doc_id, a, b, CAST(count(*) AS BIGINT) AS k
            FROM bg GROUP BY doc_id, a, b),
          cb AS (SELECT a, b, CAST(sum(k) AS BIGINT) AS cb FROM pd GROUP BY a, b),
@@ -70,6 +86,43 @@ private[graft] object Oracles {
            FROM hit GROUP BY q_id, doc_id),
          rk AS (SELECT q_id, doc_id, n_hit, s6, row_number() OVER ("""
 
+  // DuckDB zips the two parallel unnests positionally (same length)
+  private val phraseTToIdx = """WITH t AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
+         idx AS (SELECT doc_id, unnest(range(1, len(s) + 1)) AS pos,
+             unnest(s) AS token FROM t)"""
+
+  private val langidScores = """
+           len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','and','to'))) AS s_en,
+           len(list_filter(string_split(text,' '), x -> x IN ('der','die','das','und','ist'))) AS s_de,
+           len(list_filter(string_split(text,' '), x -> x IN ('el','la','los','que','es'))) AS s_es,
+           len(list_filter(string_split(text,' '), x -> x IN ('le','les','des','et','est'))) AS s_fr,
+           len(list_filter(string_split(text,' '), x -> x IN ('的','是','了','在','和'))) AS s_zh
+           FROM documents)"""
+
+  private val langidPred = """
+           CASE WHEN s_en > 0 AND s_en >= s_en AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
+                WHEN s_de > 0 AND s_de >= s_en AND s_de >= s_de AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
+                WHEN s_es > 0 AND s_es >= s_en AND s_es >= s_de AND s_es >= s_es AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
+                WHEN s_fr > 0 AND s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_fr AND s_fr >= s_zh THEN 'fr'
+                WHEN s_zh > 0 AND s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_es AND s_zh >= s_fr AND s_zh >= s_zh THEN 'zh'
+                ELSE 'und' END AS lang_pred"""
+
+  private val tfidfTermsToNd = """WITH terms AS (
+           SELECT doc_id, token, count(*) AS tf
+           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
+           GROUP BY doc_id, token),
+         dfs AS (SELECT token, count(DISTINCT doc_id) AS df FROM terms GROUP BY token),
+         nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)"""
+
+  private val tfidfScore = """round(t.tf * ln(nd.n_docs / CAST(d.df AS DOUBLE)), 6) AS tfidf"""
+
+  private val kfoldBalance = """
+         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
+             AS mean_chars"""
+
   private val temperatureWeight = """round(power(CAST(n_min AS DOUBLE) / n_docs, 0.5), 6)"""
 
   private val qualityScoreFromDocs = qualityScore + """
@@ -95,7 +148,7 @@ private[graft] object Oracles {
          rep AS (SELECT s, min(doc_id) AS rep FROM sig GROUP BY s),
          stars AS (SELECT r.rep AS doc_a, g.doc_id AS doc_b
            FROM sig g JOIN rep r ON g.s = r.s WHERE g.doc_id <> r.rep),
-         band AS (SELECT rep, b, array_to_string(s[b*4+1:b*4+4], ':') AS key
+         band AS (SELECT rep, b, """ + minhashBandKey + """
            FROM rep, (SELECT unnest(range(4)) AS b)),
          cp AS (SELECT DISTINCT x.rep AS doc_a, y.rep AS doc_b"""
 
@@ -133,7 +186,14 @@ private[graft] object Oracles {
            ON m.doc_id = l.doc_id),"""
 
   private val minhashTkToBd = minhashTkToSig + """
-         bd AS (SELECT doc_id, b, array_to_string(s[b*4+1:b*4+4], ':') AS key"""
+         bd AS (SELECT doc_id, b, """ + minhashBandKey
+
+  private val bloomIdxToBits = """WITH idx AS (SELECT DISTINCT md5(text) AS fp FROM documents
+           WHERE doc_id >= 100),
+         bits AS (SELECT DISTINCT
+             CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || fp), 1, 15))
+               AS BIGINT) % 4096 AS bit
+           FROM idx CROSS JOIN (SELECT unnest(range(4)) AS i) ii)"""
 
   private val spanTkToSp = """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          sp AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(t) - 7),
@@ -175,7 +235,7 @@ private[graft] object Oracles {
            FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
          th AS (SELECT doc_id, list_transform(""" + minhashSig + """
            FROM th),
-         bd AS (SELECT doc_id, b, array_to_string(s[b*4+1:b*4+4], ':') AS key
+         bd AS (SELECT doc_id, b, """ + minhashBandKey + """
            FROM sig, (SELECT unnest(range(4)) AS b)),
          caught AS (SELECT DISTINCT e.doc_a, e.doc_b FROM exf e
            JOIN bd x ON x.doc_id = e.doc_a
@@ -219,7 +279,7 @@ private[graft] object Oracles {
                THEN (1 << j) ELSE 0 END), (x,y) -> x+y) AS bucket
            FROM qa, (SELECT unnest(range(8)) AS tt)),
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
-           FROM qb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl)),
+           FROM qb, (SELECT """ + lshProbeMasks + """)),
          cand AS (SELECT DISTINCT q.vec_id AS q_id, t.vec_id AS n_id
            FROM qp q JOIN bb t ON q.tt = t.tt AND q.bucket = t.bucket
              AND t.vec_id <> q.vec_id),
@@ -229,11 +289,13 @@ private[graft] object Oracles {
            FROM cand c JOIN e q ON q.vec_id = c.q_id JOIN e t ON t.vec_id = c.n_id),
          r AS (SELECT q_id, n_id, dp, row_number() OVER (PARTITION BY q_id"""
 
-  private val mipsSbToOvOpen = """
-         sb AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
+  private val mipsBruteDp = """
              list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
                (x,y) -> x+y) AS dp
-           FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+           FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id)"""
+
+  private val mipsSbToOvOpen = """
+         sb AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,""" + mipsBruteDp + """,
          rb AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
              ORDER BY dp DESC, n_id) AS rank FROM sb),
          ov AS (SELECT b.q_id, b.n_id,
@@ -384,13 +446,15 @@ private[graft] object Oracles {
                row_number() OVER (PARTITION BY t.vec_id ORDER BY
                  """ + ivfArgmaxCosine
 
-  private val sqScaleToQq = """
+  private val sqScaleToQqLast = """
              list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
          qq AS (SELECT vec_id, scale,
              CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
                   ELSE list_transform(v, x -> CAST(least(greatest(
                     floor(x / scale + 0.5), -127.0), 127.0) AS BIGINT)) END AS q
-           FROM sc),"""
+           FROM sc)"""
+
+  private val sqScaleToQq = sqScaleToQqLast + ","
 
   private val ivfsqSearchChain = ivfNToRk + """
              FROM n t, k2 k),
@@ -400,9 +464,7 @@ private[graft] object Oracles {
                   sc AS (SELECT vec_id, v,""" + sqScaleToQq + """
          cnd AS (SELECT p.q_id, t.vec_id AS n_id, t.cell
            FROM asg t JOIN prb p ON t.cell = p.cell AND t.vec_id <> p.q_id),
-         sq AS (SELECT c.q_id, c.n_id, c.cell,
-             CAST(list_reduce(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]),
-               (x,y) -> x+y) AS DOUBLE) * a.scale * b.scale AS adot
+         sq AS (SELECT c.q_id, c.n_id, c.cell,""" + sqAdot + """
            FROM cnd c JOIN qq a ON a.vec_id = c.q_id JOIN qq b ON b.vec_id = c.n_id),
          rr AS (SELECT q_id, n_id, cell, adot, row_number() OVER (PARTITION BY q_id
              ORDER BY adot DESC, n_id) AS rank FROM sq)
@@ -724,7 +786,7 @@ private[graft] object Oracles {
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket"""
 
   private val lshBbToS = lshBbToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" + lshCandToS
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 20),""" + lshCandToS
 
   private val rankQualityApprox = """
              ORDER BY cos DESC, n_id) AS rank FROM s),
@@ -927,9 +989,7 @@ private[graft] object Oracles {
          FROM rfr WHERE rank <= 3"""
 
   private val sqQqToS = sqScaleToQq + """
-         s AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-             CAST(list_reduce(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]),
-               (x,y) -> x+y) AS DOUBLE) * a.scale * b.scale AS adot"""
+         s AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,""" + sqAdot
 
   private val sqEToROpen = embeddingsE + """
          sc AS (SELECT vec_id, v,""" + sqQqToS + """
@@ -990,9 +1050,7 @@ private[graft] object Oracles {
            FROM (SELECT q_id, n_id FROM rb WHERE rank <= 5) b"""
 
   private val sqScToQs2 = sqScToQq + """
-         qs2 AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-             CAST(list_reduce(list_transform(range(1, len(a.q)+1), i -> a.q[i]*b.q[i]),
-               (x,y) -> x+y) AS DOUBLE) * a.scale * b.scale AS adot"""
+         qs2 AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,""" + sqAdot
 
   private val hybridFuToFr = """
          fu AS (SELECT coalesce(dr.q_id, br.q_id) AS q_id,
@@ -1077,6 +1135,13 @@ private[graft] object Oracles {
          e AS (SELECT doc_a AS src, doc_b AS dst FROM p
                UNION ALL SELECT doc_b AS src, doc_a AS dst FROM p),"""
 
+  private val curateSplitColumns = """
+           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
+                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
+                ELSE 'test' END AS split,
+           d.lang, d.source,
+           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens"""
+
   private val curateSplitKeep1ToL3 = curateKeep1ToD3 + """
                   ctk AS (SELECT doc_id, string_split(text, ' ') AS t FROM d3),
          t AS (SELECT doc_id, list_transform(
@@ -1128,7 +1193,7 @@ private[graft] object Oracles {
          rr AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id"""
 
   private val mediaLshBbToR = lshBbToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),""" + lshCandToR
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" + lshCandToR
 
   private val mediaLabeledE = """WITH e AS (SELECT doc_id AS vec_id, lang AS label,
              list_transform(range(64), i -> CASE WHEN length(text) = 0 THEN 0.0
@@ -1303,11 +1368,30 @@ private[graft] object Oracles {
            round((min(CASE WHEN cum >= CAST(ceil(0.99::DOUBLE * CAST(n AS DOUBLE)) AS BIGINT)
              THEN bucket END) + 1) * 5::DOUBLE, 2) AS p99_est"""
 
-  private val gapEToB = """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+  private val gapEToBLast = """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
          g AS (SELECT us - lag(us) OVER (PARTITION BY user_id
              ORDER BY us, event_id) AS gap_us FROM e),
          b AS (SELECT gap_us // 1000000 AS gap_s FROM g
-           WHERE gap_us IS NOT NULL),"""
+           WHERE gap_us IS NOT NULL)"""
+
+  private val gapEToB = gapEToBLast + ","
+
+  private val attributionPToTch = """WITH p AS (SELECT event_id AS p_id, epoch_us(ts) AS p_us, user_id, value
+           FROM events WHERE event_type = 'purchase'),
+         tch AS (SELECT user_id, event_id AS t_id, epoch_us(ts) AS t_us,
+             event_type AS touch_type
+           FROM events WHERE event_type IN ('view', 'click')),"""
+
+  private val histSkToCu = """sk AS (SELECT event_type, """ + histBucket + """,
+             CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2),
+         cu AS (SELECT event_type, bucket, c,
+             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY bucket) AS BIGINT) AS cum,
+             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
+           FROM sk)"""
+
+  private val histEstimate = """SELECT event_type, CAST(max(n) AS BIGINT) AS n,""" + histQuantileEstimates + """
+         FROM cu GROUP BY 1"""
 
   private val histLogDailyEToSk = """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
          g AS (SELECT us, us - lag(us) OVER (PARTITION BY user_id
@@ -1325,6 +1409,11 @@ private[graft] object Oracles {
   private val histDailyEstimate = """
          SELECT event_type, CAST(day AS BIGINT) AS day, CAST(max(n) AS BIGINT) AS n,""" +
     histQuantileEstimates
+
+  private val histDsk = """WITH dsk AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+             """ + histBucket + """,
+             CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2, 3),"""
 
   private val cmsCntToSkOpen = """WITH cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS c
            FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
@@ -1373,6 +1462,13 @@ private[graft] object Oracles {
          m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
              CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
              CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx"""
+
+  // dow = (day + 4) % 7 so 0 = Sunday
+  private val dowCToG = """WITH """ + dailyCountC + """,
+         d AS (SELECT *, (day + 4) % 7 AS dow FROM c),
+         g AS (SELECT event_type, dow, CAST(count(*) AS BIGINT) AS n_days,
+             CAST(sum(n) AS BIGINT) AS s, CAST(sum(n*n) AS BIGINT) AS s2
+           FROM d GROUP BY 1, 2)"""
 
   // ---- core: the reference pipeline, its analytics, and the TPC-H-style batch queries ----
   private def core: Map[String, String] = Map(
@@ -1902,18 +1998,13 @@ private[graft] object Oracles {
          WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
            < CAST(r.frac * 1000000 AS BIGINT)"""),
     "x1_kfold" ->
-      """WITH f AS (SELECT
+      ("""WITH f AS (SELECT
              CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 5
                AS fold,
              source, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              n_chars
-           FROM documents)
-         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-             AS mean_chars
-         FROM f GROUP BY 1""",
+           FROM documents)""" + kfoldBalance + """
+         FROM f GROUP BY 1"""),
     // per-source pow weight quantized to int BEFORE the total (a float
     // sum of pow values would be fold-order-dependent); shares are one
     // division each; epochs is the ratio of the ROUNDED shares
@@ -2055,12 +2146,7 @@ private[graft] object Oracles {
            FROM l3),
          j AS (SELECT f.fold, d.source,
              CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens, d.n_chars
-           FROM f JOIN documents d ON d.doc_id = f.doc_id)
-         SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-           round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-             AS mean_chars
+           FROM f JOIN documents d ON d.doc_id = f.doc_id)""" + kfoldBalance + """
          FROM j GROUP BY 1"""),
     // the x4_cluster chain plus the x1_sample_split hash assignment,
     // histogrammed by the split-set signature of each cluster; a comma in
@@ -2128,12 +2214,7 @@ private[graft] object Oracles {
     "x1_split_audit" ->
       (curateSplitKeep1ToL3 + """
            ON m.doc_id = l.doc_id),
-         man AS (SELECT l3.doc_id, l3.cluster,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           d.lang, d.source,
-           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
+         man AS (SELECT l3.doc_id, l3.cluster,""" + curateSplitColumns + """
          FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id),
          ag AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
@@ -2194,10 +2275,7 @@ private[graft] object Oracles {
          SELECT q_id, n_id, cos FROM s WHERE cos >= 0.25"""),
     "x2_mips_topk" ->
       (embeddingsE + """
-         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) AS dp
-           FROM e q, e t WHERE q.vec_id < 20 AND t.vec_id <> q.vec_id),
+         s AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,""" + mipsBruteDp + """,
          r AS (SELECT q_id, n_id, dp, row_number() OVER (PARTITION BY q_id
              ORDER BY dp DESC, n_id) AS rank FROM s)
          SELECT q_id, n_id, round(dp, 6) AS dp, CAST(rank AS INTEGER) AS rank
@@ -2235,7 +2313,7 @@ private[graft] object Oracles {
       ("""WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
              FROM embeddings),""" + filteredNToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 20),""" +
       filteredCandToTop3),
     // filtered recall: the labeled e/n head + a brute chain RESTRICTED to
     // the query's label (the filtered ground truth) + x2_ann_filtered's
@@ -2243,7 +2321,7 @@ private[graft] object Oracles {
     "x2_filtered_recall" ->
       (filteredEToBb + """
          qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 20),""" +
       filteredCandToApprox),
     // filtered ranking audit: the filtered brute head e..xr + the labeled
     // bb + qp..r chains, keeping RANKS on both sides; graded recall
@@ -2251,7 +2329,7 @@ private[graft] object Oracles {
     // exact rows)
     "x2_filtered_rank_quality" ->
       (filteredEToXr + filteredExactToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 20),""" +
       filteredCandToRankedApprox),
     // labeled occupancy pre-flight: the labeled e/n head + bb chain rolled
     // up per (table, label)
@@ -2266,12 +2344,11 @@ private[graft] object Oracles {
     "x2_filtered_probe_curve" ->
       (filteredEToBb + """
          qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + filteredCmToJ),
+           FROM bb, (SELECT """ + lshProbeMasksIdx + """) WHERE vec_id < 20),""" + filteredCmToJ),
     "x2_recall" ->
       (recallEToBb + """
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 20),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 20),""" +
       recallCandToApprox),
     // probe-budget curve: x2_recall's brute e..exact head + bb bucket CTE;
     // the qp probe CTE adds the mask INDEX (zipped unnest), candidates
@@ -2280,8 +2357,7 @@ private[graft] object Oracles {
     "x2_probe_curve" ->
       (recallEToBb + """
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 20),""" + probeCurveCmToJ),
+           FROM bb, (SELECT """ + lshProbeMasksIdx + """) WHERE vec_id < 20),""" + probeCurveCmToJ),
     // ranking-quality audit: x2_recall's brute + LSH chains, keeping RANKS
     // on both sides; graded recall weights hits by exact rank (gains
     // 3/2/1, /6), mrr = 1/min approx rank holding an exact top-3 item
@@ -2393,19 +2469,19 @@ private[graft] object Oracles {
          FROM cm, (SELECT unnest([1, 2, 3, 4]) AS p)
          GROUP BY p"""),
     "x2_mean_pool" ->
-      """WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      ("""WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
              FROM embeddings),
          d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e)
          SELECT label, CAST(pos AS BIGINT) AS pos,
-           round(sum(val) / count(*), 6) AS val
-         FROM d GROUP BY label, pos""",
+           """ + classMeanVal + """
+         FROM d GROUP BY label, pos"""),
     "x2_confusion" ->
       ("""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
              FROM embeddings),
          n AS (SELECT vec_id, label, v,
              sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
          d AS (SELECT label, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e),
-         s AS (SELECT label AS c_id, pos, round(sum(val) / count(*), 6) AS val
+         s AS (SELECT label AS c_id, pos, """ + classMeanVal + """
            FROM d GROUP BY 1, 2),
          m AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM s GROUP BY c_id),
          k AS (SELECT c_id, cv,
@@ -2532,8 +2608,7 @@ private[graft] object Oracles {
     // dyadic residual frame (resv: floor((v - centroid)*2^20 + 0.5)/2^20,
     // the exactness device) + the r-prefixed PQ chain retargeted to
     // residuals + x2_ann_ivfpq's probe CTEs (pbr/pb) + the per-(query,
-    // cell) residual LUT tail. The r-chain and tail are shared with
-    // x2_ivfpq_recall.
+    // cell) residual LUT tail.
     "x2_ann_ivfpq_res" ->
       (embeddingsE + ivfpqResSearchChain),
     // IVF-PQ recall audit: BOTH compositions replayed against exact-L2
@@ -2544,13 +2619,7 @@ private[graft] object Oracles {
       (embeddingsE + ivfpqRecallChain),
     "x2_quantize" ->
       (embeddingsE + """
-         sc AS (SELECT vec_id, v,
-             list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-         qq AS (SELECT vec_id, scale,
-             CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-                  ELSE list_transform(v, x -> CAST(least(greatest(
-                    floor(x / scale + 0.5), -127.0), 127.0) AS BIGINT)) END AS q
-           FROM sc)
+         sc AS (SELECT vec_id, v,""" + sqScaleToQqLast + """
          SELECT vec_id, round(scale, 6) AS scale,
            CAST(list_reduce(list_transform(q, x -> abs(x)), (a, b) -> a + b) AS BIGINT) AS q_l1,
            CAST(list_reduce(q, (a, b) -> a + b) AS BIGINT) AS q_sum,
@@ -2565,14 +2634,13 @@ private[graft] object Oracles {
              ORDER BY adot DESC, n_id) AS rank FROM s)
          SELECT q_id, n_id, round(adot, 6) AS adot, CAST(rank AS INTEGER) AS rank
          FROM r WHERE rank <= 5"""),
-    // binary sign-pack search: the b/s/r Hamming chain is shared with
-    // x2_binary_recall
+    // binary sign-pack search: the b/s/r Hamming chain
     "x2_ann_binary" ->
       (binaryEToROpen + """
              ORDER BY hamming, n_id) AS rank FROM s)
          SELECT q_id, n_id, hamming, CAST(rank AS INTEGER) AS rank
          FROM r WHERE rank <= 5"""),
-    // binary shortlist (top-20 by Hamming, the shared b/s/r chain) ->
+    // binary shortlist (top-20 by Hamming, the b/s/r chain) ->
     // exact cosine rerank of only those pairs
     "x2_ann_binary_rerank" ->
       (binaryEToRr + """
@@ -2744,39 +2812,15 @@ private[graft] object Oracles {
       """SELECT doc_id, len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
          AS n_bpe_tokens FROM documents""",
     "x3_langid" ->
-      """WITH s AS (SELECT doc_id,
-           len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','and','to'))) AS s_en,
-           len(list_filter(string_split(text,' '), x -> x IN ('der','die','das','und','ist'))) AS s_de,
-           len(list_filter(string_split(text,' '), x -> x IN ('el','la','los','que','es'))) AS s_es,
-           len(list_filter(string_split(text,' '), x -> x IN ('le','les','des','et','est'))) AS s_fr,
-           len(list_filter(string_split(text,' '), x -> x IN ('的','是','了','在','和'))) AS s_zh
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN s_en > 0 AND s_en >= s_en AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                WHEN s_de > 0 AND s_de >= s_en AND s_de >= s_de AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                WHEN s_es > 0 AND s_es >= s_en AND s_es >= s_de AND s_es >= s_es AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                WHEN s_fr > 0 AND s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_fr AND s_fr >= s_zh THEN 'fr'
-                WHEN s_zh > 0 AND s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_es AND s_zh >= s_fr AND s_zh >= s_zh THEN 'zh'
-                ELSE 'und' END AS lang_pred,
+      ("""WITH s AS (SELECT doc_id,""" + langidScores + """
+         SELECT doc_id,""" + langidPred + """,
            s_en
-         FROM s""",
+         FROM s"""),
     "x3_langid_confusion" ->
-      """WITH s AS (SELECT doc_id, lang,
-           len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','and','to'))) AS s_en,
-           len(list_filter(string_split(text,' '), x -> x IN ('der','die','das','und','ist'))) AS s_de,
-           len(list_filter(string_split(text,' '), x -> x IN ('el','la','los','que','es'))) AS s_es,
-           len(list_filter(string_split(text,' '), x -> x IN ('le','les','des','et','est'))) AS s_fr,
-           len(list_filter(string_split(text,' '), x -> x IN ('的','是','了','在','和'))) AS s_zh
-           FROM documents),
-         p AS (SELECT lang,
-           CASE WHEN s_en > 0 AND s_en >= s_en AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                WHEN s_de > 0 AND s_de >= s_en AND s_de >= s_de AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                WHEN s_es > 0 AND s_es >= s_en AND s_es >= s_de AND s_es >= s_es AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                WHEN s_fr > 0 AND s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_fr AND s_fr >= s_zh THEN 'fr'
-                WHEN s_zh > 0 AND s_zh >= s_en AND s_zh >= s_de AND s_zh >= s_es AND s_zh >= s_fr AND s_zh >= s_zh THEN 'zh'
-                ELSE 'und' END AS lang_pred
+      ("""WITH s AS (SELECT doc_id, lang,""" + langidScores + """,
+         p AS (SELECT lang,""" + langidPred + """
            FROM s)
-         SELECT lang, lang_pred, count(*) AS n FROM p GROUP BY 1, 2""",
+         SELECT lang, lang_pred, count(*) AS n FROM p GROUP BY 1, 2"""),
     "x3_quality" ->
       ("""SELECT doc_id, round(""" + qualityScore + """
          FROM documents"""),
@@ -2796,15 +2840,10 @@ private[graft] object Oracles {
          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
          GROUP BY token""",
     "x3_tfidf" ->
-      """WITH terms AS (
-           SELECT doc_id, token, count(*) AS tf
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-           GROUP BY doc_id, token),
-         dfs AS (SELECT token, count(DISTINCT doc_id) AS df FROM terms GROUP BY token),
-         nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
+      (tfidfTermsToNd + """
          SELECT t.doc_id, t.token, t.tf,
-           round(t.tf * ln(nd.n_docs / CAST(d.df AS DOUBLE)), 6) AS tfidf
-         FROM terms t JOIN dfs d ON t.token = d.token, nd""",
+           """ + tfidfScore + """
+         FROM terms t JOIN dfs d ON t.token = d.token, nd"""),
     "x3_repetition" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
@@ -2985,12 +3024,10 @@ private[graft] object Oracles {
     // the x3_bigram_logprob pair/count chain truncated at the model grain:
     // the stored (a, b, cb, ca) artifact itself
     "x3_bigram_model" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
-         z AS (SELECT doc_id, unnest(list_zip(s, s[2:])) AS p FROM d),
-         bg AS (SELECT doc_id, p[1] AS a, p[2] AS b FROM z WHERE p[2] IS NOT NULL),
+      (bigramDToBg + """
          cb AS (SELECT a, b, CAST(count(*) AS BIGINT) AS cb FROM bg GROUP BY a, b),
          ca AS (SELECT a, CAST(sum(cb) AS BIGINT) AS ca FROM cb GROUP BY a)
-         SELECT cb.a, cb.b, cb.cb, ca.ca FROM cb JOIN ca ON ca.a = cb.a""",
+         SELECT cb.a, cb.b, cb.cb, ca.ca FROM cb JOIN ca ON ca.a = cb.a"""),
     "x3_backoff_score" ->
       """WITH trd AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents
            WHERE doc_id >= 100),
@@ -3113,32 +3150,20 @@ private[graft] object Oracles {
            CAST(sum(term) AS DOUBLE) / (CAST(t_s AS DOUBLE) * 1000000.0) AS kl_nats
          FROM s GROUP BY source, t_s""",
     "x3_keywords" ->
-      """WITH terms AS (
-           SELECT doc_id, token, count(*) AS tf
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-           GROUP BY doc_id, token),
-         dfs AS (SELECT token, count(DISTINCT doc_id) AS df FROM terms GROUP BY token),
-         nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+      (tfidfTermsToNd + """,
          sc AS (SELECT t.doc_id, t.token, t.tf,
-             round(t.tf * ln(nd.n_docs / CAST(d.df AS DOUBLE)), 6) AS tfidf
+             """ + tfidfScore + """
            FROM terms t JOIN dfs d ON t.token = d.token, nd),
          r AS (SELECT doc_id, token, tf, tfidf, row_number() OVER (
              PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rank FROM sc)
          SELECT doc_id, token, tf, tfidf, CAST(rank AS INTEGER) AS rank
-         FROM r WHERE rank <= 3""",
-    // the phrase t/idx chain is shared by x3_phrase_index and
-    // x3_phrase_search; x3_phrase_serve aliases x3_phrase_search by
-    // reference. DuckDB zips the two parallel unnests positionally (same
-    // length).
+         FROM r WHERE rank <= 3"""),
     "x3_phrase_index" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
-         idx AS (SELECT doc_id, unnest(range(1, len(s) + 1)) AS pos,
-             unnest(s) AS token FROM t)
-         SELECT doc_id, pos, token FROM idx""",
+      (phraseTToIdx + """
+         SELECT doc_id, pos, token FROM idx"""),
+    // x3_phrase_serve aliases x3_phrase_search by reference
     "x3_phrase_search" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS s FROM documents),
-         idx AS (SELECT doc_id, unnest(range(1, len(s) + 1)) AS pos,
-             unnest(s) AS token FROM t),
+      (phraseTToIdx + """,
          q AS (SELECT doc_id AS q_id, s[1] AS p1, s[2] AS p2, s[3] AS p3
            FROM t WHERE len(s) >= 3 AND
              CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
@@ -3150,9 +3175,8 @@ private[graft] object Oracles {
            JOIN idx i3 ON i3.doc_id = i1.doc_id AND i3.pos = i1.pos + 2
              AND i3.token = q.p3)
          SELECT q_id, doc_id, CAST(count(*) AS BIGINT) AS n_occ
-         FROM m GROUP BY q_id, doc_id""",
-    // the BM25 index chain (terms/dl/nd/dfs/idx CTEs) is shared with
-    // x3_bm25_search; x3_bm25_serve aliases x3_bm25_search by reference.
+         FROM m GROUP BY q_id, doc_id"""),
+    // x3_bm25_serve aliases x3_bm25_search by reference.
     // All BM25 literals that multiply integers carry ::DOUBLE — DuckDB
     // parses bare decimal literals as DECIMAL and exact-decimal products
     // round differently from Spark's double arithmetic.
@@ -3276,23 +3300,11 @@ private[graft] object Oracles {
                  CAST(sum(df) AS DOUBLE), 6) AS dup_frac,
            max(df) AS max_df
          FROM d GROUP BY 1""",
-    // the Bloom idx/bits chain is shared by x4_bloom_bits and
-    // x4_bloom_gate
     "x4_bloom_bits" ->
-      """WITH idx AS (SELECT DISTINCT md5(text) AS fp FROM documents
-           WHERE doc_id >= 100),
-         bits AS (SELECT DISTINCT
-             CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || fp), 1, 15))
-               AS BIGINT) % 4096 AS bit
-           FROM idx CROSS JOIN (SELECT unnest(range(4)) AS i) ii)
-         SELECT bit FROM bits""",
+      (bloomIdxToBits + """
+         SELECT bit FROM bits"""),
     "x4_bloom_gate" ->
-      """WITH idx AS (SELECT DISTINCT md5(text) AS fp FROM documents
-           WHERE doc_id >= 100),
-         bits AS (SELECT DISTINCT
-             CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || fp), 1, 15))
-               AS BIGINT) % 4096 AS bit
-           FROM idx CROSS JOIN (SELECT unnest(range(4)) AS i) ii),
+      (bloomIdxToBits + """,
          inc AS (SELECT doc_id, md5(text) AS fp FROM documents
            WHERE doc_id < 100),
          pr AS (SELECT doc_id, fp,
@@ -3304,7 +3316,7 @@ private[graft] object Oracles {
                AS bloom_hit
            FROM pr LEFT JOIN bits b ON b.bit = pr.bit GROUP BY pr.doc_id, pr.fp)
          SELECT h.doc_id, h.fp, h.bloom_hit, (i.fp IS NOT NULL) AS is_dup
-         FROM hv h LEFT JOIN idx i ON i.fp = h.fp""",
+         FROM hv h LEFT JOIN idx i ON i.fp = h.fp"""),
     "x4_incremental" ->
       (minhashTkToBd + """
            FROM sig, (SELECT unnest(range(4)) AS b)),
@@ -3605,7 +3617,7 @@ private[graft] object Oracles {
     // qp CTE narrows to the media query batch, vec_id < 5)
     "x5_mm_search_filtered" ->
       (mediaLabeledE + filteredNToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" +
       filteredCandToTop3),
     // the filtered media leg's recall gate: the media labeled head + a
     // brute chain restricted to the query's LANGUAGE + the labeled
@@ -3614,7 +3626,7 @@ private[graft] object Oracles {
     "x5_mm_filtered_recall" ->
       (mediaFilteredEToBb + """
          qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" +
       filteredCandToApprox),
     // the filtered media probe curve: x5_mm_filtered_recall's media brute
     // head e..exact + the labeled bb CTE + x2_filtered_probe_curve's
@@ -3622,14 +3634,13 @@ private[graft] object Oracles {
     "x5_mm_filtered_probe_curve" ->
       (mediaFilteredEToBb + """
          qp AS (SELECT vec_id, label, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 5),""" + filteredCmToJ),
+           FROM bb, (SELECT """ + lshProbeMasksIdx + """) WHERE vec_id < 5),""" + filteredCmToJ),
     // the filtered media ranking audit: the media brute head keeping RANK
     // in its exact CTE + x5_mm_search_filtered's labeled bb/qp/cand/s/r
     // chains + x2_filtered_rank_quality's graded-recall/MRR tail
     "x5_mm_filtered_rank_quality" ->
       (mediaFilteredEToXr + filteredExactToQp + """
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" +
       filteredCandToRankedApprox),
     // labeled media occupancy pre-flight: the media labeled head + bb
     // chain rolled up per (table, LANGUAGE) with x2_filtered_bucket_stats'
@@ -3679,7 +3690,7 @@ private[graft] object Oracles {
     "x5_mm_recall" ->
       (mediaEToBb + """
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl) WHERE vec_id < 5),""" +
+           FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" +
       recallCandToApprox),
     // media flat-SQ recall gate: the x2_sq_recall structure head-swapped
     // onto the media stub e source -- the sc/qq encode chain + the SQ
@@ -3729,8 +3740,7 @@ private[graft] object Oracles {
     "x5_mm_probe_curve" ->
       (mediaEToBb + """
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket, idx
-           FROM bb, (SELECT unnest([0, 1, 2, 4, 8]) AS fl,
-               unnest([0, 1, 2, 3, 4]) AS idx) WHERE vec_id < 5),""" + probeCurveCmToJ),
+           FROM bb, (SELECT """ + lshProbeMasksIdx + """) WHERE vec_id < 5),""" + probeCurveCmToJ),
     // media ranking-quality audit: x5_mm_recall's brute + LSH chains
     // keeping ranks on both sides, with x2_rank_quality's
     // graded-recall/MRR tail
@@ -3969,8 +3979,7 @@ private[graft] object Oracles {
          FROM zc""",
     // co-visitation: x6_trending's props item-extract formula; capped
     // per-user items (rank by exact count, item tie-break) before the
-    // user-keyed pair self-join; the p/ui/cap/pr chain is shared with
-    // x6_also_viewed
+    // user-keyed pair self-join
     "x6_covisit" ->
       (covisitPToPr + """
            GROUP BY 1, 2)
@@ -4116,7 +4125,7 @@ private[graft] object Oracles {
              ELSE 0.709::DOUBLE * 64 * 64 * 67108864.0 / z END, 4) AS hll_active
          FROM s"""),
     // fixed-width histogram sketch: floor(value/5) bucket counts per event
-    // type — the bucket formula is shared with x6_hist_quantiles' sk CTE
+    // type
     "x6_hist_sketch" ->
       ("""SELECT event_type, """ + histBucket + """,
            CAST(count(*) AS BIGINT) AS c
@@ -4125,32 +4134,20 @@ private[graft] object Oracles {
     // ceil(p·n) computed in DOUBLE on both engines, estimate = upper
     // bucket edge (exact multiple of the width)
     "x6_hist_quantiles" ->
-      ("""WITH sk AS (SELECT event_type, """ + histBucket + """,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         cu AS (SELECT event_type, bucket, c,
-             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY bucket) AS BIGINT) AS cum,
-             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM sk)
-         SELECT event_type, CAST(max(n) AS BIGINT) AS n,""" + histQuantileEstimates + """
-         FROM cu GROUP BY 1"""),
-    // LOG-width (dyadic) gap histogram: the e/g/b gap stream is shared
-    // with x6_gap_hist, and the lb dyadic bucket CTE + the single-line
-    // upper-edge CASE are shared with x6_hist_log_quantiles /
-    // x6_hist_log_accuracy
+      ("""WITH """ + histSkToCu + """
+         """ + histEstimate),
+    // LOG-width (dyadic) gap histogram over the e/g/b gap stream
     "x6_hist_log_sketch" ->
       (gapEToB + """
          lb AS (SELECT """ + dyadicLogBucket + """b)
          SELECT bucket, CAST(count(*) AS BIGINT) AS n_gaps,
            round(""" + dyadicBucketUpperEdge + """, 2) AS hi_edge
          FROM lb GROUP BY 1"""),
-    // gap quantiles from the dyadic buckets: chain + sk/cu shared with
-    // x6_hist_log_accuracy (which wraps the same select as its es CTE)
+    // gap quantiles from the dyadic buckets
     "x6_hist_log_quantiles" ->
       (gapEToB + histLogLbToEstimate),
-    // log-sketch accuracy: exact integer-gap order statistics (the
-    // shared e/g/b stream) vs the dyadic estimates (the shared
-    // lb/sk/cu chain + the quantiles select as es); error bound uses
+    // log-sketch accuracy: exact integer-gap order statistics vs the
+    // dyadic estimates (the quantiles select as es); error bound uses
     // the PER-BUCKET width 2^octave/4 of the bucket the exact
     // quantile lands in
     "x6_hist_log_accuracy" ->
@@ -4189,9 +4186,8 @@ private[graft] object Oracles {
                (CASE WHEN p99_exact <= 0 THEN CAST(0 AS DOUBLE) ELSE CAST(1::BIGINT << (length(bin(p99_exact)) - 1) AS DOUBLE) / 4.0 END)
              THEN 1 ELSE 0 END AS BIGINT) AS within_width
          FROM j"""),
-    // per-day gap quantiles at the dyadic daily grain: the day-keyed gap
-    // head e..sk is shared with x6_hist_log_rolling; a gap belongs to the
-    // day of its CLOSING event
+    // per-day gap quantiles at the dyadic daily grain; a gap belongs to
+    // the day of its CLOSING event
     "x6_hist_log_daily" ->
       (histLogDailyEToSk + """
          cu AS (SELECT day, bucket, c,
@@ -4200,7 +4196,7 @@ private[graft] object Oracles {
            FROM sk)""" + histLogDailyEstimate + """
          FROM cu GROUP BY 1"""),
     // rolling 7-day gap quantiles by SUM-MERGING the daily dyadic sketches
-    // over x6_hist_log_daily's e..sk head
+    // over the day-keyed e..sk gap head
     "x6_hist_log_rolling" ->
       (histLogDailyEToSk + """
          fan AS (SELECT day + o AS day, bucket, c
@@ -4215,25 +4211,18 @@ private[graft] object Oracles {
              CAST(sum(c) OVER (PARTITION BY day) AS BIGINT) AS n
            FROM rs2)""" + histLogDailyEstimate + """
          FROM rcu GROUP BY 1"""),
-    // per-(type, day) sketch quantiles: the dsk day CTE is shared with
-    // x6_hist_rolling
+    // per-(type, day) sketch quantiles over the dsk day CTE
     "x6_hist_daily" ->
-      ("""WITH dsk AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-             """ + histBucket + """,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2, 3),
+      (histDsk + """
          dcu AS (SELECT event_type, day, bucket, c,
              CAST(sum(c) OVER (PARTITION BY event_type, day ORDER BY bucket) AS BIGINT) AS cum,
              CAST(sum(c) OVER (PARTITION BY event_type, day) AS BIGINT) AS n
            FROM dsk)""" + histDailyEstimate + """
          FROM dcu GROUP BY 1, 2"""),
     // rolling 7-day quantiles by SUM-MERGING the daily sketches (the
-    // x6_rolling_hll fan pattern on counters) over the shared dsk day CTE
+    // x6_rolling_hll fan pattern on counters) over the dsk day CTE
     "x6_hist_rolling" ->
-      ("""WITH dsk AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-             """ + histBucket + """,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2, 3),
+      (histDsk + """
          fan AS (SELECT event_type, day + o AS day, bucket, c
            FROM dsk, (SELECT unnest(range(7)) AS o)),
          rs AS (SELECT event_type, day, bucket, CAST(sum(c) AS BIGINT) AS c
@@ -4247,8 +4236,7 @@ private[graft] object Oracles {
            FROM rs2)""" + histDailyEstimate + """
          FROM rcu GROUP BY 1, 2"""),
     // sketch accuracy audit: centi-quantized exact order statistics
-    // (bounded-domain cumulative window) vs the sketch estimates; the
-    // sk/cu chain + estimate select are x6_hist_quantiles'
+    // (bounded-domain cumulative window) vs the sketch estimates
     "x6_hist_accuracy" ->
       ("""WITH qg AS (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS q,
              CAST(count(*) AS BIGINT) AS c
@@ -4265,15 +4253,8 @@ private[graft] object Oracles {
              round(CAST(min(CASE WHEN cum >= CAST(ceil(0.99::DOUBLE * CAST(n AS DOUBLE)) AS BIGINT)
                THEN q END) AS DOUBLE) / 100.0, 2) AS p99_exact
            FROM qc GROUP BY 1),
-         sk AS (SELECT event_type, """ + histBucket + """,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         cu AS (SELECT event_type, bucket, c,
-             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY bucket) AS BIGINT) AS cum,
-             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM sk),
-         es AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n,""" + histQuantileEstimates + """
-         FROM cu GROUP BY 1),
+         """ + histSkToCu + """,
+         es AS (""" + histEstimate + """),
          j AS (SELECT ex.event_type, ex.n,
              ex.p50_exact, es.p50_est, round(es.p50_est - ex.p50_exact, 2) AS p50_err,
              ex.p90_exact, es.p90_est, round(es.p90_est - ex.p90_exact, 2) AS p90_err,
@@ -4435,30 +4416,21 @@ private[graft] object Oracles {
          SELECT event_type, day, n, resid, z,
            CAST(CASE WHEN abs(z) > 2.0 THEN 1 ELSE 0 END AS BIGINT) AS anomaly
          FROM z"""),
-    // weekly seasonality: the c/d/g dow-moment head (shared with
-    // x6_seasonal_anomaly); dow = (day + 4) % 7 so 0 = Sunday, pure int64
+    // weekly seasonality: the c/d/g dow-moment head, pure int64
     // arithmetic; the share window runs over the O(types*7) profile frame
     "x6_seasonality" ->
-      ("""WITH """ + dailyCountC + """,
-         d AS (SELECT *, (day + 4) % 7 AS dow FROM c),
-         g AS (SELECT event_type, dow, CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum(n) AS BIGINT) AS s, CAST(sum(n*n) AS BIGINT) AS s2
-           FROM d GROUP BY 1, 2)
+      (dowCToG + """
          SELECT event_type, dow, n_days, s AS n_events,
            round(CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE), 4) AS mean_daily,
            round(CAST(s AS DOUBLE) /
              CAST(sum(s) OVER (PARTITION BY event_type) AS DOUBLE), 6) AS share
          FROM g"""),
-    // dow-aware anomaly: the same c/d/g head + the exact-int64
+    // dow-aware anomaly: the c/d/g head + the exact-int64
     // (n·q − S)/sqrt(n·Q − S²) z within each (type, dow) group
     // (x6_trend_anomaly's form; counts are already integers so no
     // quantization step)
     "x6_seasonal_anomaly" ->
-      ("""WITH """ + dailyCountC + """,
-         d AS (SELECT *, (day + 4) % 7 AS dow FROM c),
-         g AS (SELECT event_type, dow, CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum(n) AS BIGINT) AS s, CAST(sum(n*n) AS BIGINT) AS s2
-           FROM d GROUP BY 1, 2),
+      (dowCToG + """,
          m AS (SELECT * FROM g WHERE n_days * s2 - s * s > 0),
          z AS (SELECT d.event_type, d.day, d.dow, d.n,
              round(CAST(m.n_days * d.n - m.s AS DOUBLE) /
@@ -4473,11 +4445,7 @@ private[graft] object Oracles {
     // quantizes to 1e-4 int64 units BEFORE summing so the totals are
     // addition-order-independent on both engines
     "x6_attribution" ->
-      """WITH p AS (SELECT event_id AS p_id, epoch_us(ts) AS p_us, user_id, value
-           FROM events WHERE event_type = 'purchase'),
-         tch AS (SELECT user_id, event_id AS t_id, epoch_us(ts) AS t_us,
-             event_type AS touch_type
-           FROM events WHERE event_type IN ('view', 'click')),
+      (attributionPToTch + """
          j AS (SELECT p.p_id, p.value, t.touch_type, t.t_us, t.t_id
            FROM p JOIN tch t ON t.user_id = p.user_id AND t.t_us < p.p_us
              AND p.p_us - t.t_us <= 604800000000),
@@ -4506,17 +4474,13 @@ private[graft] object Oracles {
            round(CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS DOUBLE)
              / 10000.0, 4)
          FROM p LEFT JOIN (SELECT DISTINCT p_id FROM j) a ON a.p_id = p.p_id
-         WHERE a.p_id IS NULL""",
-    // time-decay attribution: x6_attribution's p/tch head; weight = 1 <<
+         WHERE a.p_id IS NULL"""),
+    // time-decay attribution: weight = 1 <<
     // (7 - age_days) is an EXACT int64 (never libm pow), the per-purchase
     // share w/sw an exact rational; credit quantizes to 1e-4 units before
     // summing
     "x6_attribution_decay" ->
-      """WITH p AS (SELECT event_id AS p_id, epoch_us(ts) AS p_us, user_id, value
-           FROM events WHERE event_type = 'purchase'),
-         tch AS (SELECT user_id, event_id AS t_id, epoch_us(ts) AS t_us,
-             event_type AS touch_type
-           FROM events WHERE event_type IN ('view', 'click')),
+      (attributionPToTch + """
          j AS (SELECT p.p_id, p.p_us, p.value, t.touch_type, t.t_us, t.t_id
            FROM p JOIN tch t ON t.user_id = p.user_id AND t.t_us < p.p_us
              AND p.p_us - t.t_us <= 604800000000),
@@ -4527,17 +4491,13 @@ private[graft] object Oracles {
          SELECT touch_type, CAST(count(DISTINCT p_id) AS BIGINT) AS n_conversions,
            round(CAST(sum(CAST(floor(value * CAST(w AS DOUBLE) / CAST(sw AS DOUBLE)
              * 10000 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0, 4) AS credit
-         FROM s GROUP BY 1""",
+         FROM s GROUP BY 1"""),
     "x6_gap_hist" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-         g AS (SELECT us - lag(us) OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS gap_us FROM e),
-         b AS (SELECT gap_us // 1000000 AS gap_s FROM g
-           WHERE gap_us IS NOT NULL)
+      (gapEToBLast + """
          SELECT CAST(length(bin(gap_s)) AS BIGINT) AS bucket,
            CAST(count(*) AS BIGINT) AS n_gaps,
            min(gap_s) AS min_gap_s, max(gap_s) AS max_gap_s
-         FROM b GROUP BY 1""",
+         FROM b GROUP BY 1"""),
     "x6_cohort_value" ->
       """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day, value
              FROM events),
@@ -4592,7 +4552,7 @@ private[graft] object Oracles {
            LEFT JOIN fps ON fps.fp = i.fp),
          mh AS (SELECT doc_id, list_transform(""" + minhashSig + """
            FROM mh),
-         bd AS (SELECT doc_id, b, array_to_string(s[b*4+1:b*4+4], ':') AS key
+         bd AS (SELECT doc_id, b, """ + minhashBandKey + """
            FROM sig, (SELECT unnest(range(4)) AS b)),
          bidx AS (SELECT b, key FROM bd WHERE doc_id >= 100 GROUP BY b, key),
          bh AS (SELECT DISTINCT i.doc_id FROM bd i
@@ -4665,12 +4625,7 @@ private[graft] object Oracles {
     "x7_curate_split" ->
       (curateSplitKeep1ToL3 + """
            ON m.doc_id = l.doc_id)
-         SELECT l3.doc_id, l3.cluster,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(l3.cluster AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           d.lang, d.source,
-           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
+         SELECT l3.doc_id, l3.cluster,""" + curateSplitColumns + """
          FROM l3 JOIN d3 d ON d.doc_id = l3.doc_id"""),
     // the x7_curate chain with the x1_temperature thin computed over the
     // SURVIVORS (d3) before packing

@@ -106,26 +106,6 @@ object Tables {
   def customersCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(customerRefSchema).option("header", "false").csv(path)
 
-  /** C3 production flavor: the reference table straight from the
-    * OLTP store over JDBC (reference `README.md:145-153` reads
-    * `Crm.Customers` from Azure SQL). Partitioned read on the dense
-    * primary key so a large reference table scans in parallel.
-    * Untestable offline (zero egress) — the offline stand-ins are
-    * [[customersCsv]] and parquet; swapping is a format change only. */
-  def customersJdbc(spark: SparkSession, url: String, table: String,
-                    user: String, password: String,
-                    numPartitions: Int = 8, upperBound: Long = 10000): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("user", user)
-      .option("password", password)
-      .option("partitionColumn", "cust_id")
-      .option("lowerBound", "1")
-      .option("upperBound", upperBound.toString)
-      .option("numPartitions", numPartitions.toString)
-      .load()
-
   /** C5: the reference's offline test path — a multiline JSON array of
     * order objects (`sample-orders.json`). Batch mode of the same plan
     * the stream runs (stream/batch unification). */

@@ -3,11 +3,11 @@ package graft.streaming
 import com.fasterxml.jackson.databind.json.JsonMapper
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.Trigger
+import graft.LocalSession
 import graft.gen.DataGen
 
 /** End-to-end streaming smoke: rate-source order events (reference
@@ -24,13 +24,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSeconds = args.headOption.map(_.toInt).getOrElse(10)
     val rps = args.lift(1).map(_.toInt).getOrElse(500)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
     val dir = Files.createTempDirectory("graft-demo")
     try {
       val out = s"$dir/out"; val ck = s"$dir/ck"

@@ -119,8 +119,8 @@ object StreamPipeline {
     * attempt instead of appending duplicates — the idempotence that
     * makes foreachBatch exactly-once. Each batch is at most 4 files
     * (tiny-file control at scale), each holding its rows sorted by
-    * `customer_id`, laid out as [[storeWrite]] describes: `id`,
-    * `customer_id` and `customer_name` are written without a dictionary.
+    * `customer_id`, laid out as [[storeWrite]] describes: `id` and the
+    * columns of [[EnrichedPlain]] are written without a dictionary.
     *
     * No per-batch value may enter generated code: Spark caches compiled
     * classes by their source text, so a batch id or seed written into
@@ -157,7 +157,7 @@ object StreamPipeline {
     * committed.
     *
     * Every generation is laid out as [[storeWrite]] describes: sorted
-    * by key, with `keyCol`, `customer_id` and `customer_name` written
+    * by key, with `keyCol` and the columns of [[EnrichedPlain]] written
     * without a dictionary. Stores written before that layout (v1 pages,
     * zstd or snappy) still read and take writes; a bucket holds both
     * until its next compaction rewrites it.
@@ -206,12 +206,12 @@ object StreamPipeline {
     plainCols.foldLeft(writer)((w, c) => w.option(s"parquet.enable.dictionary#$c", "false"))
   }
 
-  /** The columns of the enriched schema written without a dictionary,
-    * besides the sink's unique column: with 10k customers, a file of a
-    * few thousand to tens of thousands of rows holds about one distinct
-    * customer per row. `city` (14 values) and `purchase_amount` (480
-    * values) keep theirs. */
-  private val EnrichedPlain = Seq("customer_id", "customer_name")
+  /** The columns of the enriched schema written without a dictionary:
+    * `order_id` is distinct per order, and with 10k customers a file of
+    * a few thousand to tens of thousands of rows holds about one
+    * distinct customer per row. `city` (14 values) and `purchase_amount`
+    * (480 values) keep theirs. */
+  private val EnrichedPlain = Seq("order_id", "customer_id", "customer_name")
 
   /** Marker written by the sink itself after a generation's parquet
     * write returns — NOT the committer's _SUCCESS, which a cluster may
@@ -485,12 +485,6 @@ object StreamPipeline {
       col("order_id").cast("string").as("key"),
       to_json(struct(col("order_id"), col("customer_id"),
         col("customer_name"), col("city"), col("purchase_amount"))).as("value"))
-
-  /** C7: console/log sink — the debug path mirroring the reference
-    * generator's per-record logging (`main.go:93`). */
-  def consoleSink(df: DataFrame, rows: Int = 20): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.format("console").option("numRows", rows.toString)
-      .outputMode("append")
 
   /** X1 streaming dedup: exactly-once semantics on the event id within
     * the watermark horizon — state is bounded by the watermark, the

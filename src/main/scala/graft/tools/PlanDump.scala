@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Prints the formatted physical plan (and optionally times) for named
   * SparkEntry queries. Usage:
@@ -18,14 +18,7 @@ object PlanDump {
     val rest = args.filterNot(a => a == "--time" || a == "--final")
     val sfDir = rest.head
     val names = rest.tail
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCores)
     // job accounting per query: how many Spark jobs a query launches
     // (driver-synchronized eager phases show up here) and how long
     // each ran — the first thing to look at when a composed eager

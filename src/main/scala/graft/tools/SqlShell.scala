@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Ad-hoc SQL entry point: registers the driver corpus tables as temp
   * views plus the graft custom functions, runs each argument as a SQL
@@ -11,14 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SqlShell {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCores)
     graft.GraftFunctions.register(spark)
     graft.sources.Tables.names.foreach { n =>
       graft.sources.Tables(spark, sfDir, n).createOrReplaceTempView(n)

@@ -4,16 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.codegen.cache.maxEntries", "16384")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  spark.sparkContext.setLogLevel("WARN")
+  lazy val spark: SparkSession = LocalSession(4)
 
   val sf0001 = "/root/testdata/sf0.001"
 

@@ -85,12 +85,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.select("id").distinct().count() === 302) // generated per-row ids
     assert(got.filter(col("customer_id") === 1)
       .select("customer_name").distinct().head.getString(0) === "Willis Collins")
-    // the store layout: zstd v2 pages, no dictionary for the unique id and
+    // the store layout: zstd v2 pages, no dictionary for the unique ids and
     // the customer columns, one for city and amount
     val written = chunks(out)
     assert(written.map(_.column).toSet === got.columns.toSet - "batch")
     assert(written.forall(c => c.codec == ZSTD && c.v2), written)
-    val plain = Set("id", "customer_id", "customer_name")
+    val plain = Set("id", "order_id", "customer_id", "customer_name")
     assert(written.filter(c => plain(c.column)).forall(c => !c.dict &&
       !c.encodings.exists(_.usesDictionary)), written)
     assert(written.filter(c => Set("city", "purchase_amount")(c.column)).forall(_.dict), written)

@@ -258,6 +258,14 @@ private[graft] object Oracles {
 
   private val mipsHyperplane = """(CAST((1103515245::BIGINT * ((tt*4 + j)*65 + d) + 12345) % 2147483648 AS DOUBLE)"""
 
+  // the LSH candidate pairs and the head of their dot-product scoring
+  private val lshCandToSOpen = """
+         cand AS (SELECT DISTINCT q.vec_id AS q_id, t.vec_id AS n_id
+           FROM qp q JOIN bb t ON q.tt = t.tt AND q.bucket = t.bucket
+             AND t.vec_id <> q.vec_id),
+         s AS (SELECT c.q_id, c.n_id,
+             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),"""
+
   private val mipsEToR = embeddingEToN + """
          mm AS (SELECT max(nrm) AS m FROM n),
          da AS (SELECT vec_id,
@@ -279,12 +287,7 @@ private[graft] object Oracles {
                THEN (1 << j) ELSE 0 END), (x,y) -> x+y) AS bucket
            FROM qa, (SELECT unnest(range(8)) AS tt)),
          qp AS (SELECT vec_id, tt, xor(bucket, fl) AS bucket
-           FROM qb, (SELECT """ + lshProbeMasks + """)),
-         cand AS (SELECT DISTINCT q.vec_id AS q_id, t.vec_id AS n_id
-           FROM qp q JOIN bb t ON q.tt = t.tt AND q.bucket = t.bucket
-             AND t.vec_id <> q.vec_id),
-         s AS (SELECT c.q_id, c.n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+           FROM qb, (SELECT """ + lshProbeMasks + """)),""" + lshCandToSOpen + """
                (x,y) -> x+y) AS dp
            FROM cand c JOIN e q ON q.vec_id = c.q_id JOIN e t ON t.vec_id = c.n_id),
          r AS (SELECT q_id, n_id, dp, row_number() OVER (PARTITION BY q_id"""
@@ -533,13 +536,16 @@ private[graft] object Oracles {
          SELECT q_id, n_id, cell, round(adist, 6) AS adist, CAST(rank AS INTEGER) AS rank
          FROM srr WHERE rank <= 3"""
 
-  private val pqPartialDistance = """q.n2 - 2 * list_reduce(list_transform(range(1, 9), i -> q.s[i]*c.cv[i]),"""
-
-  private val ivfpqNToFr = ivfNToAsg + """
+  // the PQ sub-vectors (8 dims each) and their squared norms
+  private val pqSvToSn = """
          sv AS (SELECT vec_id, tt AS sub, v[tt*8+1 : tt*8+8] AS s
            FROM e, (SELECT unnest(range(8)) AS tt)),
          sn AS (SELECT vec_id, sub, s,
-             list_reduce(list_transform(s, x -> x*x), (x,y) -> x+y) AS n2 FROM sv),
+             list_reduce(list_transform(s, x -> x*x), (x,y) -> x+y) AS n2 FROM sv),"""
+
+  private val pqPartialDistance = """q.n2 - 2 * list_reduce(list_transform(range(1, 9), i -> q.s[i]*c.cv[i]),"""
+
+  private val ivfpqNToFr = ivfNToAsg + pqSvToSn + """
          pc0 AS (SELECT sub, vec_id AS code, s AS cv FROM sv WHERE vec_id < 16),
          pk0 AS (SELECT sub, code, cv,
              list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y) AS cn2 FROM pc0),
@@ -757,12 +763,7 @@ private[graft] object Oracles {
   private val recallEToBb = recallEToXr + """
          exact AS (SELECT q_id, n_id FROM xr WHERE rank <= 3),""" + lshBb
 
-  private val lshCandToS = """
-         cand AS (SELECT DISTINCT q.vec_id AS q_id, t.vec_id AS n_id
-           FROM qp q JOIN bb t ON q.tt = t.tt AND q.bucket = t.bucket
-             AND t.vec_id <> q.vec_id),
-         s AS (SELECT c.q_id, c.n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
+  private val lshCandToS = lshCandToSOpen + """
                (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
            FROM cand c JOIN n q ON q.vec_id = c.q_id JOIN n t ON t.vec_id = c.n_id),"""
 
@@ -875,11 +876,7 @@ private[graft] object Oracles {
                list_reduce(list_transform(range(1, len(k.cv)+1), i -> k.cv[i]*t.v[i]),
                  (x,y) -> x+y) / (k.cn * t.nrm) AS sc,""" + ivfRkArgmax
 
-  private val pqSvToC2 = """
-         sv AS (SELECT vec_id, tt AS sub, v[tt*8+1 : tt*8+8] AS s
-           FROM e, (SELECT unnest(range(8)) AS tt)),
-         sn AS (SELECT vec_id, sub, s,
-             list_reduce(list_transform(s, x -> x*x), (x,y) -> x+y) AS n2 FROM sv),
+  private val pqSvToC2 = pqSvToSn + """
          c0 AS (SELECT sub, vec_id AS code, s AS cv FROM sv WHERE vec_id < 16),
          k0 AS (SELECT sub, code, cv,
              list_reduce(list_transform(cv, x -> x*x), (x,y) -> x+y) AS cn2 FROM c0),
@@ -1017,15 +1014,22 @@ private[graft] object Oracles {
   private val binaryEToR = binaryEToROpen + """
              ORDER BY hamming, n_id) AS rank FROM s),"""
 
-  private val binaryEToRr = binaryEToR + """
+  // the binary shortlist's exact-cosine rerank: candidates `cd`, then
+  // norms `n` over the oracle's own vector CTE, then `ex`/`rr`
+  private val binaryRerankCdToN = """
          cd AS (SELECT q_id, n_id FROM r WHERE rank <= 20),
-         n AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),
+         n AS (SELECT vec_id, v,"""
+
+  private val binaryRerankExToRr = """
          ex AS (SELECT c.q_id, c.n_id,
              list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
                (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
            FROM cd c JOIN n q ON q.vec_id = c.q_id JOIN n t ON t.vec_id = c.n_id),
          rr AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id"""
+
+  private val binaryEToRr = binaryEToR + binaryRerankCdToN + """
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e),""" +
+    binaryRerankExToRr
 
   private val cosineSbToRb = """
          sb AS (SELECT q.vec_id AS q_id, t.vec_id AS n_id,
@@ -1182,15 +1186,9 @@ private[graft] object Oracles {
          r AS (SELECT q_id, n_id, hamming, row_number() OVER (PARTITION BY q_id"""
 
   private val mediaBinaryE0ToRr = mediaBinaryE0ToR + """
-             ORDER BY hamming, n_id) AS rank FROM s),
-         cd AS (SELECT q_id, n_id FROM r WHERE rank <= 20),
-         n AS (SELECT vec_id, v,
-             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e0),
-         ex AS (SELECT c.q_id, c.n_id,
-             list_reduce(list_transform(range(1, len(q.v)+1), i -> q.v[i]*t.v[i]),
-               (x,y) -> x+y) / (q.nrm * t.nrm) AS cos
-           FROM cd c JOIN n q ON q.vec_id = c.q_id JOIN n t ON t.vec_id = c.n_id),
-         rr AS (SELECT q_id, n_id, cos, row_number() OVER (PARTITION BY q_id"""
+             ORDER BY hamming, n_id) AS rank FROM s),""" + binaryRerankCdToN + """
+             sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)) AS nrm FROM e0),""" +
+    binaryRerankExToRr
 
   private val mediaLshBbToR = lshBbToQp + """
            FROM bb, (SELECT """ + lshProbeMasks + """) WHERE vec_id < 5),""" + lshCandToR

@@ -367,60 +367,6 @@ object Multimodal {
     documents.select(col("doc_id").as("vec_id"),
       graft.functions.MediaEmbed.media_embed_dyadic(col("text"), dims, 7).as("v"))
 
-  /** X5 COMPRESSED-DOMAIN media retrieval — the ADC search over the
-    * media PQ index: queries probe the m-codes-per-asset table with a
-    * broadcast lookup table; raw media embeddings (let alone blobs)
-    * are never read corpus-side at query time. Completes the media
-    * retrieval ladder: exact ([[mediaSearch]]) → LSH-bucketed
-    * ([[mediaSearchLsh]]) → PQ compressed-domain, mirroring the
-    * embedding table's `x2_ann_topk`/`x2_ann_lsh`/`x2_ann_pq`
-    * progression. */
-  def mediaSearchPq(documents: DataFrame, m: Int = 8, k: Int = 16,
-                    rounds: Int = 2, dims: Int = 64,
-                    nQueries: Int = 20, kNn: Int = 3): DataFrame = {
-    val vecs = dyadicMediaVectors(documents, dims)
-    val pq = Similarity.trainPqModelOnVectors(vecs, m, k, rounds, dims)
-    val codes = Similarity.pqCodesAgainstOnVectors(vecs, pq, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-    Similarity.pqAdcTopKOnVectors(vecs, codes, pq, m, dims, nQueries, kNn)
-  }
-
-  /** The media PQ SERVE path — [[mediaSearchPq]]'s ADC search over
-    * the STORED compressed collection: the (vec_id, sub, code) table
-    * is the ingest-time artifact (`x5_mm_pq`'s output, m bytes per
-    * asset) and the codebook is driver-side model state, so the
-    * search plan never re-trains or re-encodes — the collection
-    * appears ONLY as codes; raw media embeddings exist on the query
-    * side alone. Must equal [[mediaSearchPq]] exactly:
-    * `x5_mm_search_pq_serve` shares its oracle by reference. */
-  def mediaSearchPqServe(documents: DataFrame, m: Int = 8, k: Int = 16,
-                         rounds: Int = 2, dims: Int = 64,
-                         nQueries: Int = 20, kNn: Int = 3): DataFrame = {
-    val vecs = dyadicMediaVectors(documents, dims)
-    val pq = Similarity.trainPqModelOnVectors(vecs, m, k, rounds, dims)
-    val codes = Similarity.pqCodesAgainstOnVectors(vecs, pq, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
-    Similarity.pqAdcTopKOnVectors(vecs, codes, pq, m, dims, nQueries, kNn)
-  }
-
-  /** X5 COMPOSED media IVF-PQ search — the two media index legs
-    * ([[mediaIvfAssign]]'s partition map, [[mediaPqCodes]]'s code
-    * table) MARRIED into the billion-asset retrieval architecture
-    * (the media twin of `x2_ann_ivfpq`): a query probes its `nProbe`
-    * closest trained cells, and within the probed cells the score is
-    * the ADC sum over the code table — candidate volume bounded by
-    * cell population, I/O by m bytes per candidate, raw media blobs
-    * and embeddings never read collection-side at query time. Both
-    * models train on the same dyadic-quantized stub embeddings the
-    * leg queries hash-verify, so the composition is oracle-exact. */
-  def mediaSearchIvfPq(documents: DataFrame, nCells: Int = 8,
-                       trainRounds: Int = 2, m: Int = 8, kCodes: Int = 16,
-                       dims: Int = 64, nQueries: Int = 20, kNn: Int = 3,
-                       nProbe: Int = 2): DataFrame =
-    Similarity.annIvfPqOnVectors(dyadicMediaVectors(documents, dims),
-      nCells, trainRounds, m, kCodes, dims, nQueries, kNn, nProbe)
-
   /** The media PQ codebook through [[ModelCache]] — shared by the
     * flat-ADC and IVF×PQ media search pairs (one per-subspace Lloyd
     * run per collection, ever); the model-BUILD query `x5_mm_pq`
@@ -469,8 +415,14 @@ object Multimodal {
     (mediaIvfModelCached(documents, modelKey, nCells, trainRounds, dims),
       mediaPqModelCached(documents, modelKey, m, kCodes, trainRounds, dims))
 
-  /** [[mediaSearchIvfPq]] with both models supplied — assignment and
-    * encoding stay lazy; only the training collects are skipped. */
+  /** X5 COMPOSED media IVF-PQ search (`x5_mm_search_ivfpq`, both
+    * models via [[mediaIvfPqModels]]) — [[mediaIvfAssign]]'s partition
+    * map and [[mediaPqCodes]]' code table married into the
+    * billion-asset retrieval architecture (the media twin of
+    * `x2_ann_ivfpq`): a query probes its `nProbe` closest trained
+    * cells, and within them the score is the ADC sum over the code
+    * table, so raw media embeddings are never read collection-side at
+    * query time. Assignment and encoding stay lazy in the plan. */
   def mediaSearchIvfPqWithModels(documents: DataFrame,
                                  cmodel: Seq[(Long, Seq[Double])],
                                  codebook: Seq[(Int, Long, Seq[Double])],
@@ -480,8 +432,12 @@ object Multimodal {
     Similarity.annIvfPqWithModelsOnVectors(dyadicMediaVectors(documents, dims),
       cmodel, codebook, m, dims, nQueries, kNn, nProbe)
 
-  /** [[mediaSearchIvfPqServe]] with both models supplied — the stored
-    * cell-map + code-table serve plan unchanged. */
+  /** [[mediaSearchIvfPqWithModels]]'s SERVE path — the (vec_id,
+    * cell) partition map and the (vec_id, sub, code) compressed
+    * collection materialize as stored artifacts, both trained models
+    * are driver-side state, and nothing in the retrieval plan trains,
+    * assigns, or encodes the collection. `x5_mm_search_ivfpq_serve`
+    * shares `x5_mm_search_ivfpq`'s oracle by reference. */
   def mediaSearchIvfPqServeWithModels(documents: DataFrame,
                                       cmodel: Seq[(Long, Seq[Double])],
                                       codebook: Seq[(Int, Long, Seq[Double])],
@@ -502,8 +458,13 @@ object Multimodal {
       m, dims, nQueries, kNn, nProbe)
   }
 
-  /** [[mediaSearchPq]] with the codebook supplied — encoding stays
-    * lazy; only the training collects are skipped. */
+  /** X5 COMPRESSED-DOMAIN media retrieval (`x5_mm_search_pq`, the
+    * codebook via [[mediaPqModelCached]]) — the ADC search over the
+    * media PQ index: queries probe the m-codes-per-asset table with a
+    * broadcast lookup table; raw media embeddings are never read
+    * collection-side. The media ladder's exact ([[mediaSearch]]) →
+    * LSH ([[mediaSearchLsh]]) → PQ step, mirroring
+    * `x2_ann_topk`/`x2_ann_lsh`/`x2_ann_pq`. Encoding stays lazy. */
   def mediaSearchPqWithModel(documents: DataFrame,
                              codebook: Seq[(Int, Long, Seq[Double])],
                              m: Int = 8, dims: Int = 64,
@@ -514,8 +475,11 @@ object Multimodal {
     Similarity.pqAdcTopKOnVectors(vecs, codes, codebook, m, dims, nQueries, kNn)
   }
 
-  /** [[mediaSearchPqServe]] with the codebook supplied — the stored
-    * code-table serve plan unchanged. */
+  /** [[mediaSearchPqWithModel]]'s SERVE path — the ADC search over
+    * the STORED compressed collection: the (vec_id, sub, code) table
+    * is the ingest-time artifact and the codebook driver-side state,
+    * so the collection appears ONLY as codes. `x5_mm_search_pq_serve`
+    * shares `x5_mm_search_pq`'s oracle by reference. */
   def mediaSearchPqServeWithModel(documents: DataFrame,
                                   codebook: Seq[(Int, Long, Seq[Double])],
                                   m: Int = 8, dims: Int = 64,
@@ -526,49 +490,6 @@ object Multimodal {
       .localCheckpoint()
     Similarity.pqAdcTopKOnVectors(vecs, codes, codebook, m, dims, nQueries, kNn)
   }
-
-  /** [[mediaSearchIvfPq]]'s SERVE path — the search over STORED
-    * artifacts: the (vec_id, cell) partition map and the (vec_id,
-    * sub, code) compressed collection materialize at ingest, both
-    * trained models are driver-side state, and nothing in the
-    * retrieval plan trains, assigns, or encodes the collection. Must
-    * equal [[mediaSearchIvfPq]] exactly: `x5_mm_search_ivfpq_serve`
-    * shares its oracle by reference — with this, every media search
-    * shape (LSH, flat ADC, composed IVF-PQ) has its stored-artifact
-    * serve form, closing the media half of the serve ≡ self-contained
-    * contract. */
-  def mediaSearchIvfPqServe(documents: DataFrame, nCells: Int = 8,
-                            trainRounds: Int = 2, m: Int = 8, kCodes: Int = 16,
-                            dims: Int = 64, nQueries: Int = 20, kNn: Int = 3,
-                            nProbe: Int = 2): DataFrame = {
-    val vecs = dyadicMediaVectors(documents, dims)
-    val cmodel = Similarity.trainIvfModelOnVectors(vecs, nCells, trainRounds)
-    val pq = Similarity.trainPqModelOnVectors(vecs, m, kCodes, trainRounds, dims)
-    val asg = Similarity.ivfAssignmentsForOnVectors(vecs, cmodel).localCheckpoint()
-    val codes = Similarity.pqCodesAgainstOnVectors(vecs, pq, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
-    Similarity.annIvfPqOnArtifactsVectors(vecs, asg, codes, cmodel, pq,
-      m, dims, nQueries, kNn, nProbe)
-  }
-
-  /** X5 media RESIDUAL IVF-PQ search — [[mediaSearchIvfPq]] upgraded
-    * to the true FAISS layout for the media modality: within each
-    * trained cell the PQ codebook encodes the RESIDUAL
-    * (v − centroid[cell]) snapped to the dyadic 2⁻²⁰ grid, so the
-    * fixed code budget prices WITHIN-cell variance (the between-cell
-    * component already rides in the cell id); the query builds one
-    * ADC lookup table per probed cell from its own residual. The
-    * embedding table got this composition as `x2_ann_ivfpq_res` —
-    * this is the same modality-agnostic core
-    * ([[Similarity.annIvfPqResOnVectors]]) over the dyadic media stub
-    * embeddings, completing the media index ladder's residual rung. */
-  def mediaSearchIvfPqRes(documents: DataFrame, nCells: Int = 8,
-                          trainRounds: Int = 2, m: Int = 8, kCodes: Int = 16,
-                          dims: Int = 64, nQueries: Int = 20, kNn: Int = 3,
-                          nProbe: Int = 2): DataFrame =
-    Similarity.annIvfPqResOnVectors(dyadicMediaVectors(documents, dims),
-      nCells, trainRounds, m, kCodes, dims, nQueries, kNn, nProbe)
 
   /** X5 media IVF×SQ — the composed third index leg on the media
     * modality (`x2_ann_ivfsq`'s twin, FAISS IVF_SQ8 for a media
@@ -715,9 +636,15 @@ object Multimodal {
     (cmodel, pq)
   }
 
-  /** [[mediaSearchIvfPqRes]] with both models supplied — assignment and
-    * residual encoding stay lazy in the plan exactly as in the
-    * self-contained form; only the training collects are skipped. */
+  /** X5 media RESIDUAL IVF-PQ search (`x5_mm_search_ivfpq_res`, both
+    * models via [[mediaResModels]]) — [[mediaSearchIvfPqWithModels]]
+    * in the true FAISS layout: within each trained cell the PQ
+    * codebook encodes the RESIDUAL (v − centroid[cell]) snapped to the
+    * dyadic 2⁻²⁰ grid, so the fixed code budget prices WITHIN-cell
+    * variance; the query builds one ADC lookup table per probed cell
+    * from its own residual. Same modality-agnostic core as
+    * `x2_ann_ivfpq_res` ([[Similarity.annIvfPqResWithModelsOnVectors]]).
+    * Assignment and residual encoding stay lazy in the plan. */
   def mediaSearchIvfPqResWithModels(documents: DataFrame,
                                     cmodel: Seq[(Long, Seq[Double])],
                                     codebook: Seq[(Int, Long, Seq[Double])],
@@ -727,10 +654,12 @@ object Multimodal {
     Similarity.annIvfPqResWithModelsOnVectors(dyadicMediaVectors(documents, dims),
       cmodel, codebook, m, dims, nQueries, kNn, nProbe)
 
-  /** [[mediaSearchIvfPqResServe]] with both models supplied — the
-    * stored-artifact serve plan unchanged (cell map + residual codes
-    * localCheckpointed, models driver-side); only the training collects
-    * are skipped. */
+  /** [[mediaSearchIvfPqResWithModels]]'s SERVE path — stored (vec_id,
+    * cell) partition map + stored (vec_id, sub, code) RESIDUAL-code
+    * collection + both trained models driver-side: nothing in the
+    * retrieval plan trains, assigns, or encodes the collection.
+    * `x5_mm_search_ivfpq_res_serve` shares `x5_mm_search_ivfpq_res`'s
+    * oracle by reference. */
   def mediaSearchIvfPqResServeWithModels(documents: DataFrame,
                                          cmodel: Seq[(Long, Seq[Double])],
                                          codebook: Seq[(Int, Long, Seq[Double])],
@@ -745,31 +674,6 @@ object Multimodal {
         .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
         .localCheckpoint())
     Similarity.annIvfPqResOnArtifactsVectors(vecs, asg, codes, cmodel, codebook,
-      m, dims, nQueries, kNn, nProbe)
-  }
-
-  /** [[mediaSearchIvfPqRes]]'s SERVE path — stored (vec_id, cell)
-    * partition map + stored (vec_id, sub, code) RESIDUAL-code
-    * collection + both trained models driver-side: nothing in the
-    * retrieval plan trains, assigns, or encodes the collection; the
-    * query batch brings raw stub vectors (probe ranking + per-cell
-    * residual LUTs are query-side arithmetic). Must equal
-    * [[mediaSearchIvfPqRes]] exactly: `x5_mm_search_ivfpq_res_serve`
-    * shares its oracle by reference. */
-  def mediaSearchIvfPqResServe(documents: DataFrame, nCells: Int = 8,
-                               trainRounds: Int = 2, m: Int = 8,
-                               kCodes: Int = 16, dims: Int = 64,
-                               nQueries: Int = 20, kNn: Int = 3,
-                               nProbe: Int = 2): DataFrame = {
-    val vecs = dyadicMediaVectors(documents, dims)
-    val cmodel = Similarity.trainIvfModelOnVectors(vecs, nCells, trainRounds)
-    val pq = Similarity.trainResPqModelOnVectors(vecs, cmodel, m, kCodes,
-      trainRounds, dims)
-    val asg = Similarity.ivfAssignmentsForOnVectors(vecs, cmodel).localCheckpoint()
-    val codes = Similarity.resPqCodesAgainstOnVectors(vecs, cmodel, pq, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
-    Similarity.annIvfPqResOnArtifactsVectors(vecs, asg, codes, cmodel, pq,
       m, dims, nQueries, kNn, nProbe)
   }
 

@@ -243,8 +243,7 @@ object Profiling {
   private def hllBase(events: DataFrame): DataFrame = events.select(
     expr("unix_micros(ts) div 86400000000").as("day"),
     col("user_id"),
-    (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-      .cast("long") % lit(2147483647L)).as("h"))
+    (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
 
   /** The per-day HLL register table `(day, j, reg)` — the STORED
     * sketch artifact of the family: what a nightly job persists so
@@ -572,9 +571,7 @@ object Profiling {
   /** The deterministic serve batch `x6_cms_serve` estimates: the
     * distinct tokens of a doc-id hash sample of the corpus. */
   def cmsServeBatch(documents: DataFrame, samplePct: Int = 7): DataFrame =
-    documents.filter(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 100 < samplePct)
+    documents.filter(Sampling.hash60(col("doc_id")) % 100 < samplePct)
       .select(explode(split(col("text"), " ")).as("token")).distinct()
 
   /** X6 FIXED-WIDTH HISTOGRAM SKETCH — the quantile member of the

@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** 60-bit md5 integer of a column, identical across engines. */
-  private def hash60(c: Column): Column =
+  /** 60-bit md5 integer of a column, identical across engines — the
+    * house key hash: sampling, folds, A/B arms and the HLL/KMV user
+    * hash all take it from here. */
+  private[graft] def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
   /** X1 deterministic train/val/test split: percentile bucket =

@@ -424,11 +424,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"))
     val approx = mipsLsh(embeddings, nQueries, k)
       .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(k.toDouble), 4).as("recall"))
+    recallRollup(exact, approx, k)
   }
 
   /** LSH-bucketed ANN over any (vec_id, v: array<double>) frame —
@@ -460,7 +456,7 @@ object Similarity {
     * corpus re-hash in the search plan. One row per (vector, table):
     * 8·N slim rows regardless of dimensionality. */
   def lshBucketIndex(embeddings: DataFrame): DataFrame =
-    bucketTableOf(withVec(embeddings))
+    lshBucketIndexOnVectors(withVec(embeddings).select(col("vec_id"), col("v")))
 
   /** The LSH SERVE path — [[annLsh]] answered from a STORED
     * [[lshBucketIndex]]: the query side derives its probe buckets by
@@ -472,7 +468,7 @@ object Similarity {
     * contract as `x2_ann_ivf_serve`. */
   def annLshOnBucketIndex(embeddings: DataFrame, buckets: DataFrame,
                           nQueries: Int = 20, k: Int = 3): DataFrame =
-    annLshCore(withVec(embeddings).select(col("vec_id"), col("v"), col("nrm")),
+    annLshOnBucketIndexVectors(withVec(embeddings).select(col("vec_id"), col("v")),
       buckets, nQueries, k)
 
   /** [[lshBucketIndex]] over any (vec_id, v: array<double>) frame —
@@ -592,8 +588,7 @@ object Similarity {
     * the media index's occupancy pre-flight (`x5_mm_bucket_stats`):
     * the modality where the one-bucket collapse actually happened. */
   def lshBucketStatsOnVectors(vectors: DataFrame): DataFrame =
-    vectors.withColumn("bkts", bucketsCol)
-      .select(col("vec_id"), posexplode(col("bkts"))).toDF("vec_id", "tbl", "bucket")
+    bucketTableOf(vectors)
       .groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("n"))
       .groupBy(col("tbl").cast("long").as("tbl"))
       .agg(count(lit(1)).as("n_buckets"), sum(col("n")).as("n_vecs"),
@@ -625,11 +620,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"))
     val approx = annLshOnVectors(vectors, nQueries, k)
       .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(k.toDouble), 4).as("recall"))
+    recallRollup(exact, approx, k)
   }
 
   /** X2 RANKING-quality audit — [[lshRecallReport]] counts WHICH exact
@@ -722,21 +713,11 @@ object Similarity {
     * the nProbe-cell IVF search returns. The recall/cost knob audit
     * (more probes or more training rounds → higher recall, more
     * candidates); run together with [[ivfInertia]] before an IVF
-    * index replaces an exact path. Same one (q_id, n_id) equi join of
-    * two k·nQueries frames; the oracle replays the full training
-    * chain inside the comparison. */
-  def ivfRecallReport(embeddings: DataFrame, nQueries: Int = 20,
-                      k: Int = 3, nCells: Int = 8, nProbe: Int = 4,
-                      trainRounds: Int = 2): DataFrame =
-    ivfRecallReportWithModel(embeddings,
-      trainIvfModel(embeddings, nCells, trainRounds), nQueries, k, nProbe)
-
-  /** [[ivfRecallReport]] over a PRETRAINED model — the memo entry
-    * (`x2_ivf_recall` passes [[ivfModelCached]]): this audit measures
-    * the trained index's RECALL, not the training itself, so sharing
-    * the deterministic Lloyd run changes cost only — hits are
-    * bit-identical ([[ivfPqRecallReport]]-style audits that PROVE a
-    * training property keep their own runs). */
+    * index replaces an exact path. `x2_ivf_recall` passes
+    * [[ivfModelCached]]: the audit measures the trained index's
+    * RECALL, not the training, so the shared deterministic Lloyd run
+    * changes cost only ([[ivfPqRecallReport]]-style audits that PROVE
+    * a training property keep their own runs). */
   def ivfRecallReportWithModel(embeddings: DataFrame,
                                cmodel: Seq[(Long, Seq[Double])],
                                nQueries: Int = 20, k: Int = 3,
@@ -745,11 +726,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"))
     val approx = annIvfWithCentroids(embeddings, cmodel, nQueries, k, nProbe)
       .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(k.toDouble), 4).as("recall"))
+    recallRollup(exact, approx, k)
   }
 
   /** X2 IVF PROBE-BUDGET tuning curve — [[lshProbeCurve]]'s companion
@@ -761,34 +738,16 @@ object Similarity {
     * global rank bounds its subset rank), so reached ⟺ hit and the
     * whole curve is a conditional count per budget over the
     * k·nQueries exact pairs. nProbe = `maxProbe` reproduces
-    * [[ivfRecallReport]]'s hit total exactly (spec-pinned) — the
-    * "probe more cells or train more rounds?" knob answered by
-    * measurement. Eager (trains the coarse quantizer). */
-  def ivfProbeCurve(embeddings: DataFrame, nQueries: Int = 20, k: Int = 3,
-                    nCells: Int = 8, maxProbe: Int = 4,
-                    trainRounds: Int = 2): DataFrame =
-    ivfProbeCurveWithModel(embeddings,
-      trainIvfModel(embeddings, nCells, trainRounds), nQueries, k, maxProbe)
-
-  /** [[ivfProbeCurve]] over a PRETRAINED model — the memo entry
-    * (`x2_ivf_probe_curve` passes [[ivfModelCached]]; cost-only, same
-    * curve — and the max-budget ≡ [[ivfRecallReport]] consistency pin
-    * holds a fortiori when both read the SAME memoized model). */
+    * [[ivfRecallReportWithModel]]'s hit total over the same model
+    * exactly (spec-pinned) — the "probe more cells or train more
+    * rounds?" knob answered by measurement. `x2_ivf_probe_curve`
+    * passes [[ivfModelCached]]. */
   def ivfProbeCurveWithModel(embeddings: DataFrame,
                              centroids: Seq[(Long, Seq[Double])],
                              nQueries: Int = 20, k: Int = 3,
                              maxProbe: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val all = withVec(embeddings)
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
-    val cellRank = all.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw))
+    val cellRank = rankProbeCells(all, centroids, nQueries)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"), col("arank"))
     val assigned = argmaxCell(all, centroids)
       .select(col("vec_id").as("n_id"), col("cell"))
@@ -1182,11 +1141,9 @@ object Similarity {
                                  tau: Double = 0.38): DataFrame = {
     val incV = withVec(incoming)
     val idxV = withVec(indexed)
-    val incB = incV.withColumn("bkts", bucketsCol)
-      .select(col("vec_id"), posexplode(col("bkts"))).toDF("vec_id", "tbl", "bucket")
-    val idxB = idxV.withColumn("bkts", bucketsCol)
-      .select(col("vec_id"), posexplode(col("bkts"))).toDF("match_id", "tbl", "bucket")
-    val cands = incB.join(idxB, Seq("tbl", "bucket"))
+    val cands = bucketTableOf(incV)
+      .join(bucketTableOf(idxV).withColumnRenamed("vec_id", "match_id"),
+        Seq("tbl", "bucket"))
       .select(col("vec_id"), col("match_id")).distinct()
     val scored = cands
       .join(incV.select(col("vec_id"), col("v").as("qv"), col("nrm").as("qn")),
@@ -1334,10 +1291,8 @@ object Similarity {
     * the COORDINATE axes as planes). Two uint32 words, not one int64,
     * so neither engine touches the sign bit. */
   def binaryCodes(embeddings: DataFrame): DataFrame =
-    embeddings
-      .withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("b", graft.functions.SignPack.sign_pack(col("v")))
-      .select(col("vec_id"), col("b.w0").as("w0"), col("b.w1").as("w1"))
+    binaryCodesOnVectors(embeddings
+      .withColumn("v", col("embedding").cast("array<double>")))
 
   /** X2 binary Hamming ANN — top-k by Hamming distance over the
     * [[binaryCodes]] table: per candidate the corpus-side read is 8
@@ -1573,20 +1528,14 @@ object Similarity {
     * cell population; per candidate the corpus-side read is 1 byte/dim
     * + one scale; raw floats appear only on the query side (probe
     * selection). Both the IVF training chain and the SQ encode chain
-    * are the audited ones — the composition is oracle-exact. */
-  def annIvfSq(embeddings: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
-               nQueries: Int = 20, k: Int = 3, nProbe: Int = 4): DataFrame = {
-    val cmodel = trainIvfModel(embeddings, nCells, trainRounds)
-    annIvfSqOnArtifacts(embeddings, ivfAssignmentsFor(embeddings, cmodel),
-      sqCodes(embeddings), cmodel, nQueries, k, nProbe)
-  }
-
-  /** [[annIvfSq]]'s SERVE form — search over the STORED (vec_id, cell)
-    * partition map and STORED int8 code table, with the trained
-    * centroids as driver-side state: nothing in the search plan
-    * trains, assigns, or encodes the corpus; only the query slice
-    * ranks against the broadcast centroids. `x2_ann_ivfsq_serve`
-    * shares `x2_ann_ivfsq`'s oracle by reference. */
+    * are the audited ones — the composition is oracle-exact.
+    *
+    * Takes the (vec_id, cell) partition map ([[ivfAssignmentsFor]]),
+    * the int8 code table ([[sqCodes]]) and the trained centroids as
+    * driver-side state: `x2_ann_ivfsq` passes lazy artifacts,
+    * `x2_ann_ivfsq_serve` stored ones (nothing in its search plan
+    * trains, assigns, or encodes the corpus) and shares the oracle by
+    * reference. */
   def annIvfSqOnArtifacts(embeddings: DataFrame, assignments: DataFrame,
                           codes: DataFrame,
                           centroids: Seq[(Long, Seq[Double])],
@@ -1603,16 +1552,9 @@ object Similarity {
                                  centroids: Seq[(Long, Seq[Double])],
                                  nQueries: Int = 20, k: Int = 3,
                                  nProbe: Int = 4): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val all = vectors.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
     val qCodes = codes.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("scale").as("qs"), col("q").as("qq"))
@@ -1631,7 +1573,7 @@ object Similarity {
 
   /** X2 RESIDUAL IVF×SQ search — the one asymmetry left in the
     * composition matrix closed: PQ got its residual rung
-    * ([[annIvfPqRes]]) while SQ encoded raw vectors; here the int8
+    * ([[annIvfPqResWithModels]]) while SQ encoded raw vectors; here the int8
     * code quantizes the dyadic RESIDUAL (v − centroid[cell]), so the
     * full ±127 range prices WITHIN-cell variance (the between-cell
     * component already rides in the cell id — exactly why residual
@@ -1644,7 +1586,7 @@ object Similarity {
     * ‖qr‖² is an exact dyadic fold, and the scale products are the
     * only rounding IEEE ops (fixed operand order — engine-identical).
     * The query encodes ONE residual per probed cell (the
-    * [[annIvfPqResCore]] per-(query, cell) discipline); the corpus
+    * [[annIvfPqResOnArtifactsVectors]] per-(query, cell) discipline); the corpus
     * side reads 1 byte/dim + one scale per candidate. */
   def annIvfSqRes(embeddings: DataFrame, cmodel: Seq[(Long, Seq[Double])],
                   nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame =
@@ -1687,16 +1629,9 @@ object Similarity {
                                     centroids: Seq[(Long, Seq[Double])],
                                     nQueries: Int = 20, k: Int = 3,
                                     nProbe: Int = 2): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val all = vectors.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"),
         graft.functions.ResidualDyadic.residual_dyadic(col("v"), col("cv")).as("qr"))
     val qsq = probes
@@ -1780,7 +1715,7 @@ object Similarity {
 
   /** X2 NORM-OUTLIER audit — every vector's L2 norm z-scored against
     * the corpus norm distribution: the row-wise companion to
-    * [[dimStats]] (column health) and [[ivfOutliers]] (direction
+    * [[dimStats]] (column health) and [[ivfOutliersWithModel]] (direction
     * health) that catches broken encoder ROWS — near-zero norms
     * (failed encodes that cosine silently drops), exploding norms
     * (un-normalized batches mixed into a normalized corpus) — before
@@ -1917,30 +1852,14 @@ object Similarity {
       .select(col("c_id"), col("pos"), round(col("val"), 6).as("val"))
   }
 
-  /** X2 IVF-flat ANN with k-means-TRAINED centroids: `trainRounds`
-    * deterministic Lloyd iterations from the fixed seeds
-    * ([[kmeansCentroids]]), then every vector is assigned to its
-    * max-cosine centroid (tie → lowest centroid id); a query probes
-    * its `nProbe` closest cells (standard IVF multi-probe —
-    * single-probe recall was ~0.52 on this corpus with UNtrained seed
-    * centroids because arbitrary seeds don't balance the cells; the
-    * nearest neighbor often sits just across a cell boundary). At
-    * scale the cell id partitions the index — probing more cells =
-    * joining more cell ids, never a full scan; candidate volume grows
-    * linearly in nProbe. */
-  def annIvf(embeddings: DataFrame, nCells: Int = 8,
-             nQueries: Int = 20, k: Int = 3, nProbe: Int = 4,
-             trainRounds: Int = 2): DataFrame =
-    annIvfWithCentroids(embeddings,
-      trainIvfModel(embeddings, nCells, trainRounds), nQueries, k, nProbe)
-
   /** Train the IVF coarse-quantizer MODEL and return it as driver-side
     * state (O(nCells·dims) doubles) — the train-once API: a resident
     * pipeline trains here and serves every subsequent query through
     * [[annIvfWithCentroids]] instead of re-running Lloyd per call. */
   def trainIvfModel(embeddings: DataFrame, nCells: Int = 8,
                     trainRounds: Int = 2): Seq[(Long, Seq[Double])] =
-    kmeansCentroids(withVec(embeddings), nCells, trainRounds)
+    trainIvfModelOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      nCells, trainRounds)
 
   /** [[trainIvfModel]] over any (vec_id, v: array<double>) frame —
     * the modality-agnostic form, [[trainPqModelOnVectors]]' contract:
@@ -1996,9 +1915,7 @@ object Similarity {
       col("nrm").as("qn"), col("label").as("q_label"))
     val q =
       if (samplePct >= 100) qAll
-      else qAll.filter(
-        conv(substring(md5(col("q_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 100 < samplePct)
+      else qAll.filter(Sampling.hash60(col("q_id")) % 100 < samplePct)
     val top = all.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"),
@@ -2121,7 +2038,8 @@ object Similarity {
     * batch, store (vec_id, cell)); no Lloyd rounds run here. */
   def ivfAssignmentsFor(embeddings: DataFrame,
                         centroids: Seq[(Long, Seq[Double])]): DataFrame =
-    argmaxCell(withVec(embeddings), centroids).select(col("vec_id"), col("cell"))
+    ivfAssignmentsForOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      centroids)
 
   /** IVF model-quality audit: per cell, how many vectors it holds and
     * their mean cosine to the centroid they chose — the inertia report
@@ -2159,20 +2077,11 @@ object Similarity {
     * cell sizing (n/cells ~ 10⁶) never approaches it, where 1e6
     * units would overflow at a plausible 10⁷-vector cell.
     *
-    * 100 TB: the training replay is the oracle form ([[annIvf]]'s
-    * serve-path note applies — production scores stored
-    * `ivfAssignments`); the moment table is O(cells) and broadcasts;
-    * the audit itself is one map-side-combined aggregation plus a
+    * `x2_ood` passes [[ivfModelCached]]: the audit measures the DATA,
+    * not the training, so the shared deterministic model changes cost
+    * only. 100 TB: the moment table is O(cells) and broadcasts; the
+    * audit itself is one map-side-combined aggregation plus a
     * broadcast join — no extra corpus shuffle. */
-  def ivfOutliers(embeddings: DataFrame, nCells: Int = 8,
-                  trainRounds: Int = 2, threshold: Double = 2.0): DataFrame =
-    ivfOutliersWithModel(embeddings,
-      trainIvfModel(embeddings, nCells, trainRounds), threshold)
-
-  /** [[ivfOutliers]] over a PRETRAINED model — the memo entry
-    * (`x2_ood` passes [[ivfModelCached]]; the audit z-scores rows
-    * against their cell's moments — it measures the DATA, not the
-    * training, so the shared deterministic model changes cost only). */
   def ivfOutliersWithModel(embeddings: DataFrame,
                            cmodel: Seq[(Long, Seq[Double])],
                            threshold: Double = 2.0): DataFrame = {
@@ -2252,21 +2161,24 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("dup_of"), col("cos"))
   }
 
-  /** [[annIvf]] over a PRETRAINED centroid model. Corpus-side cell
+  /** X2 IVF-flat ANN over a TRAINED centroid model ([[trainIvfModel]]
+    * or [[ivfModelCached]]): every vector is assigned to its
+    * max-cosine centroid (tie → lowest centroid id); a query probes
+    * its `nProbe` closest cells (standard IVF multi-probe —
+    * single-probe recall was ~0.52 on this corpus with UNtrained seed
+    * centroids because arbitrary seeds don't balance the cells; the
+    * nearest neighbor often sits just across a cell boundary). At
+    * scale the cell id partitions the index — probing more cells =
+    * joining more cell ids, never a full scan. Corpus-side cell
     * assignment is map-side ([[argmaxCell]] — no corpus-wide shuffle
     * or window sort, evaluated once); query-side probe ranking windows
-    * only the nQueries×nCells slice, so the n×nCells subtree the
-    * round-9 version evaluated twice exists nowhere. */
+    * only the nQueries×nCells slice. */
   def annIvfWithCentroids(embeddings: DataFrame,
                           centroids: Seq[(Long, Seq[Double])],
                           nQueries: Int = 20, k: Int = 3,
                           nProbe: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val all = withVec(embeddings)
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    ivfSearch(all, argmaxCell(all, centroids), cents, nQueries, k, nProbe)
+    ivfSearch(all, argmaxCell(all, centroids), centroids, nQueries, k, nProbe)
   }
 
   /** The fully-RESIDENT IVF serve path: pretrained model AND
@@ -2280,24 +2192,39 @@ object Similarity {
                           centroids: Seq[(Long, Seq[Double])],
                           nQueries: Int = 20, k: Int = 3,
                           nProbe: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val all = withVec(embeddings)
+    ivfSearch(all, all.join(assignments, "vec_id"), centroids, nQueries, k, nProbe)
+  }
+
+  /** The IVF probe-cell ranking every IVF search and audit shares:
+    * each query vector (vec_id < nQueries) against every broadcast
+    * centroid, ranked by centroid cosine (desc, nulls last — a
+    * zero-norm vector has no direction — tie → lower c_id) as
+    * `arank`. The window covers only the tiny nQueries×nCells slice;
+    * rows keep the query's columns plus `c_id`, `cv` and `cn`, so a
+    * caller filters `arank <= nProbe` and derives per-cell values
+    * (the residual rungs' `residual_dyadic(v, cv)`). */
+  private def rankProbeCells(all: DataFrame, centroids: Seq[(Long, Seq[Double])],
+                             nQueries: Int): DataFrame = {
+    val spark = all.sparkSession
+    import spark.implicits._
     val cents = centroids.toDF("c_id", "cv")
       .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    ivfSearch(all, all.join(assignments, "vec_id"), cents, nQueries, k, nProbe)
+    val aw = Window.partitionBy(col("vec_id")).orderBy(
+      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
+      col("c_id"))
+    all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
+      .withColumn("arank", row_number().over(aw))
   }
 
   /** Shared IVF query stage: rank each query vector's `nProbe` closest
-    * cells (window over the tiny nQueries×nCells slice only), join the
-    * probed cells of the assigned corpus, exact-cosine top-k per query
-    * with id tie-break. */
-  private def ivfSearch(all: DataFrame, assigned: DataFrame, cents: DataFrame,
+    * cells, join the probed cells of the assigned corpus, exact-cosine
+    * top-k per query with id tie-break. */
+  private def ivfSearch(all: DataFrame, assigned: DataFrame,
+                        centroids: Seq[(Long, Seq[Double])],
                         nQueries: Int, k: Int, nProbe: Int): DataFrame = {
-    val aw = Window.partitionBy(col("vec_id"))
-      .orderBy(cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last, col("c_id"))
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
     val q = probes.join(
       all.filter(col("vec_id") < nQueries)
@@ -2489,48 +2416,21 @@ object Similarity {
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
   }
 
-  /** X2 ADC (asymmetric distance computation) top-k — approximate
-    * nearest neighbors where the corpus side is ONLY the PQ code
-    * table: each query precomputes a lookup table of partial distances
-    * to every codeword (m·k entries), and a corpus vector's score is
-    * the sum of m table hits. The raw corpus vectors are never read —
-    * the 100 TB point of PQ: the scan touches n·m bytes of codes plus
-    * a broadcast LUT of O(queries·m·k).
-    *
-    * Partial distances are quantized to integer MICRO-UNITS before the
-    * per-vector sum: the m partials arrive in arbitrary order under a
-    * hash aggregation, and a float sum would be evaluation-order-
-    * dependent (the moving-average lesson); the int64 sum is exact and
-    * the ranking (distance asc, id tie-break) engine-deterministic.
-    * Each partial is itself bit-identical cross-engine (same expanded
-    * form, same fold order as [[argminCode]]). */
-  def pqAdcTopK(embeddings: DataFrame, m: Int = 8, k: Int = 16,
-                rounds: Int = 2, dims: Int = 64,
-                nQueries: Int = 20, kNn: Int = 3): DataFrame =
-    adcRanked(embeddings, m, k, rounds, dims, nQueries)
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("n_id"),
-        round(col("adist_u").cast("double") / 1000000.0, 6).as("adist"), col("rank"))
-
-  /** The full ADC ranking frame (q_id, n_id, adist_u, rank) — shared
-    * by the ADC top-k and the re-ranked search. */
-  private def adcRanked(embeddings: DataFrame, m: Int, k: Int,
-                        rounds: Int, dims: Int, nQueries: Int): DataFrame = {
-    val pq = trainPqModel(embeddings, m, k, rounds, dims)
-    val codes = argminCode(subvectors(withVec(embeddings), m, dims / m), pq)
-      .select(col("vec_id"), col("sub"), col("code"))
-    adcRankedOnCodes(embeddings, codes, pq, m, dims, nQueries)
-  }
-
-  /** The ADC ranking over a STORED code table + codebook — the serve
-    * half [[pqAdcTopKOnCodes]] exposes; the corpus appears ONLY as m
-    * codes per vector. */
-  private def adcRankedOnCodes(embeddings: DataFrame, codes: DataFrame,
-                               codebook: Seq[(Int, Long, Seq[Double])],
-                               m: Int, dims: Int, nQueries: Int): DataFrame =
-    adcRankedOnCodesVectors(withVec(embeddings), codes, codebook,
-      m, dims, nQueries)
-
+  /** The full ADC (asymmetric distance computation) ranking frame
+    * (q_id, n_id, adist_u, rank) over a code table + codebook, shared
+    * by the ADC top-k and the re-ranked search: each query
+    * precomputes a lookup table of partial distances to every
+    * codeword (m·k entries), and a corpus vector's score is the sum
+    * of m table hits — the corpus appears ONLY as m codes per vector
+    * (the 100 TB point of PQ: the scan touches n·m bytes of codes
+    * plus a broadcast LUT of O(queries·m·k)). Partial distances are
+    * quantized to integer MICRO-UNITS before the per-vector sum: the
+    * m partials arrive in arbitrary order under a hash aggregation, so
+    * a float sum would be evaluation-order-dependent; the int64 sum is
+    * exact and the ranking (distance asc, id tie-break)
+    * engine-deterministic. Each partial is itself bit-identical
+    * cross-engine (same expanded form, same fold order as
+    * [[argminCode]]). */
   private def adcRankedOnCodesVectors(vecs: DataFrame, codes: DataFrame,
                                       codebook: Seq[(Int, Long, Seq[Double])],
                                       m: Int, dims: Int, nQueries: Int): DataFrame = {
@@ -2551,7 +2451,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
   }
 
-  /** X2 flat-ADC SERVE — [[pqAdcTopK]] over the STORED compressed
+  /** X2 flat-ADC SERVE — the ADC top-k over the STORED compressed
     * corpus: the search plan reads the (vec_id, sub, code) table and
     * the driver-side codebook only; the raw corpus vectors exist in
     * the query batch alone (LUT construction is query-side
@@ -2562,10 +2462,8 @@ object Similarity {
                        codebook: Seq[(Int, Long, Seq[Double])],
                        m: Int = 8, dims: Int = 64,
                        nQueries: Int = 20, kNn: Int = 3): DataFrame =
-    adcRankedOnCodes(embeddings, codes, codebook, m, dims, nQueries)
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("n_id"),
-        round(col("adist_u").cast("double") / 1000000.0, 6).as("adist"), col("rank"))
+    pqAdcTopKOnVectors(withVec(embeddings), codes, codebook, m, dims,
+      nQueries, kNn)
 
   /** [[pqAdcTopKOnCodes]] over any (vec_id, v) query frame — the
     * modality-agnostic form the media retrieval path composes. */
@@ -2578,31 +2476,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"),
         round(col("adist_u").cast("double") / 1000000.0, 6).as("adist"), col("rank"))
 
-  /** X2 IVF-PQ search — the two index legs COMPOSED, the standard
-    * billion-scale ANN architecture (FAISS IVFPQ): the trained IVF
-    * coarse quantizer PARTITIONS the corpus (a query scores only its
-    * `nProbe` closest cells), and PQ COMPRESSES it (within the probed
-    * cells the score is the ADC sum over the code table — raw vectors
-    * are never read at query time). Candidate volume is bounded by
-    * the probed cells' population, ADC I/O by m bytes per candidate:
-    * the two knobs (cells, code size) tune cost independently.
-    * Both models are the same deterministic artifacts the standalone
-    * queries verify (`x2_ivf_assign`, `x2_pq_codes`); the integer
-    * micro-unit ADC discipline keeps the ranking engine-exact. */
-  def annIvfPq(embeddings: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
-               m: Int = 8, kCodes: Int = 16, dims: Int = 64,
-               nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val all = withVec(embeddings)
-    val cmodel = trainIvfModel(embeddings, nCells, trainRounds)
-    val pq = trainPqModel(embeddings, m, kCodes, trainRounds, dims)
-    val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(all, m, dims / m), pq)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqOnArtifacts(embeddings, asg, codes, cmodel, pq,
-      m, dims, nQueries, k, nProbe)
-  }
-
-  /** X2 IVF-PQ SERVE — [[annIvfPq]]'s search over STORED index
+  /** X2 IVF-PQ SERVE — the composed IVF-PQ search over STORED index
     * artifacts: the (vec_id, cell) partition map and the (vec_id,
     * sub, code) compressed corpus, with both trained models
     * ([[trainIvfModel]] centroids, [[trainPqModel]] codebook) as
@@ -2620,7 +2494,7 @@ object Similarity {
                           codebook: Seq[(Int, Long, Seq[Double])],
                           m: Int = 8, dims: Int = 64, nQueries: Int = 20,
                           k: Int = 3, nProbe: Int = 2): DataFrame =
-    annIvfPqOnArtifactsCore(withVec(embeddings), asg, codes, centroids,
+    annIvfPqOnArtifactsVectors(withVec(embeddings), asg, codes, centroids,
       codebook, m, dims, nQueries, k, nProbe)
 
   /** [[annIvfPqOnArtifacts]] over any (vec_id, v: array<double>) frame
@@ -2631,48 +2505,12 @@ object Similarity {
                                  centroids: Seq[(Long, Seq[Double])],
                                  codebook: Seq[(Int, Long, Seq[Double])],
                                  m: Int = 8, dims: Int = 64, nQueries: Int = 20,
-                                 k: Int = 3, nProbe: Int = 2): DataFrame =
-    annIvfPqOnArtifactsCore(
-      vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v")))),
-      asg, codes, centroids, codebook, m, dims, nQueries, k, nProbe)
-
-  /** The composed IVF-PQ search over any (vec_id, v) frame with BOTH
-    * models trained in place — the self-contained media twin of
-    * [[annIvfPq]] (`x5_mm_search_ivfpq`): the IVF partition map bounds
-    * the candidate set to the probed cells, the PQ code table prices
-    * each candidate by the ADC sum, and raw vectors appear only on
-    * the query side. Caller supplies dyadic component values so both
-    * trainings are fold-order-exact cross-engine. */
-  def annIvfPqOnVectors(vecs: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
-                        m: Int = 8, kCodes: Int = 16, dims: Int = 64,
-                        nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
+                                 k: Int = 3, nProbe: Int = 2): DataFrame = {
     val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    val cmodel = kmeansCentroids(all, nCells, trainRounds)
-    val pq = trainPqModelOnVectors(vecs, m, kCodes, trainRounds, dims)
-    val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(all, m, dims / m), pq)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqOnArtifactsCore(all, asg, codes, cmodel, pq,
-      m, dims, nQueries, k, nProbe)
-  }
-
-  private def annIvfPqOnArtifactsCore(all: DataFrame, asg: DataFrame,
-                                      codes: DataFrame,
-                                      centroids: Seq[(Long, Seq[Double])],
-                                      codebook: Seq[(Int, Long, Seq[Double])],
-                                      m: Int, dims: Int, nQueries: Int,
-                                      k: Int, nProbe: Int): DataFrame = {
-    val spark = all.sparkSession
-    import spark.implicits._
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val cdf = pqCodebookDF(spark, codebook)
+    val cdf = pqCodebookDF(all.sparkSession, codebook)
     val subs = subvectors(all, m, dims / m)
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
     val lut = subs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("sub"), col("sv"), col("sn2"))
@@ -2692,38 +2530,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("n_id"),
         round(col("adist_u").cast("double") / 1000000.0, 6).as("adist"), col("rank"))
-  }
-
-  /** X2 PQ search with EXACT RE-RANKING — the production IVF-PQ serve
-    * shape: the ADC pass over the code table yields a `shortlist` of
-    * candidates per query (cheap, compressed-domain), and only those
-    * S vectors are fetched raw and re-scored by exact L2 for the
-    * final top-k. Quantization error then costs RECALL only when a
-    * true neighbor falls outside the shortlist, not rank accuracy
-    * inside it — the standard answer to a coarse codebook. Per query
-    * the raw-vector I/O is S rows instead of the corpus (at 100 TB:
-    * S point lookups against the vec_id-keyed store vs a full scan);
-    * the re-rank window input is O(queries·S). Exact distances use
-    * the same expanded form and fold order as the oracle, ranked raw
-    * with id tie-breaks (the house rule). */
-  def pqRerankTopK(embeddings: DataFrame, m: Int = 8, k: Int = 16,
-                   rounds: Int = 2, dims: Int = 64, nQueries: Int = 20,
-                   shortlist: Int = 64, kNn: Int = 3): DataFrame = {
-    val vecs = withVec(embeddings)
-      .select(col("vec_id"), col("v"), dot_product(col("v"), col("v")).as("n2"))
-    val short = adcRanked(embeddings, m, k, rounds, dims, nQueries)
-      .filter(col("rank") <= shortlist).select(col("q_id"), col("n_id"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("n_id"))
-    short
-      .join(vecs.select(col("vec_id").as("n_id"), col("v"), col("n2")), Seq("n_id"))
-      .join(vecs.select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2")), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        (col("n2") - lit(2.0) * dot_product(col("qv"), col("v")) + col("qn2"))
-          .as("dist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= kNn)
-      .select(col("q_id"), col("n_id"), round(col("dist"), 6).as("dist"), col("rank"))
   }
 
   // --------------------------------------------------------------------
@@ -2761,47 +2567,17 @@ object Similarity {
   def trainResPqModel(embeddings: DataFrame, cmodel: Seq[(Long, Seq[Double])],
                       m: Int = 8, kCodes: Int = 16, rounds: Int = 2,
                       dims: Int = 64): Seq[(Int, Long, Seq[Double])] =
-    trainPqModelOnVectors(
-      residualVectors(withVec(embeddings), cmodel).select(col("vec_id"), col("v")),
-      m, kCodes, rounds, dims)
+    trainResPqModelOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      cmodel, m, kCodes, rounds, dims)
 
   /** Corpus-side residual-PQ encoding against stored models — the
     * (vec_id, sub, code) compressed corpus where each code indexes the
     * RESIDUAL codebook of the vector's own cell assignment. */
   def resPqCodesAgainst(embeddings: DataFrame, cmodel: Seq[(Long, Seq[Double])],
                         codebook: Seq[(Int, Long, Seq[Double])],
-                        m: Int = 8, dims: Int = 64): DataFrame = {
-    val resv = residualVectors(withVec(embeddings), cmodel)
-    argminCode(subvectors(resv, m, dims / m), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-  }
-
-  /** X2 RESIDUAL IVF-PQ search — [[annIvfPq]] with the FAISS residual
-    * refinement: the trained IVF coarse quantizer still bounds the
-    * candidate set to nProbe cells, but the code table stores
-    * per-subspace codewords of (v − centroid[cell]) and the query
-    * builds ONE ADC lookup table PER PROBED CELL from its own residual
-    * (q − centroid[cell]) — the distance estimate is then
-    * ‖(q−c) − r‖² per candidate, the within-cell geometry both sides
-    * share. Costs one LUT per (query, cell) instead of per query
-    * (nProbe× LUT arithmetic, still O(m·kCodes) driver-broadcast
-    * rows); candidate I/O is unchanged at m bytes per candidate.
-    * [[ivfPqRecallReport]] is the measured gate: at identical
-    * (nCells, m, kCodes, nProbe) the residual composition's recall is
-    * pinned ≥ the raw-vector one. */
-  def annIvfPqRes(embeddings: DataFrame, nCells: Int = 8, trainRounds: Int = 2,
-                  m: Int = 8, kCodes: Int = 16, dims: Int = 64,
-                  nQueries: Int = 20, k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val all = withVec(embeddings)
-    val cmodel = trainIvfModel(embeddings, nCells, trainRounds)
-    val resv = residualVectors(all, cmodel)
-    val pq = trainPqModelOnVectors(resv.select(col("vec_id"), col("v")),
-      m, kCodes, trainRounds, dims)
-    val asg = resv.select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(resv, m, dims / m), pq)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqResCore(all, asg, codes, cmodel, pq, m, dims, nQueries, k, nProbe)
-  }
+                        m: Int = 8, dims: Int = 64): DataFrame =
+    resPqCodesAgainstOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      cmodel, codebook, m, dims)
 
   /** The residual pair's TRAIN-ONCE entry: IVF centroids + residual-PQ
     * codebook through [[ModelCache]], keyed by corpus path — the
@@ -2861,25 +2637,28 @@ object Similarity {
     (ivfModelCached(embeddings, modelKey, nCells, trainRounds),
       pqModelCached(embeddings, modelKey, m, kCodes, trainRounds, dims))
 
-  /** [[annIvfPq]] with both models supplied — assignment and encoding
-    * stay lazy in the plan exactly as in the self-contained form; only
-    * the training collects are skipped. */
+  /** X2 IVF-PQ search — the two index legs COMPOSED, the standard
+    * billion-scale ANN architecture (FAISS IVFPQ): the trained IVF
+    * coarse quantizer PARTITIONS the corpus (a query scores only its
+    * `nProbe` closest cells), and PQ COMPRESSES it (within the probed
+    * cells the score is the ADC sum over the code table — raw vectors
+    * are never read at query time). Candidate volume is bounded by
+    * the probed cells' population, ADC I/O by m bytes per candidate:
+    * the two knobs (cells, code size) tune cost independently. Both
+    * models are passed in ([[ivfPqModels]] for `x2_ann_ivfpq`);
+    * assignment and encoding stay lazy in the plan. */
   def annIvfPqWithModels(embeddings: DataFrame,
                          cmodel: Seq[(Long, Seq[Double])],
                          codebook: Seq[(Int, Long, Seq[Double])],
                          m: Int = 8, dims: Int = 64, nQueries: Int = 20,
-                         k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val all = withVec(embeddings)
-    val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(all, m, dims / m), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqOnArtifacts(embeddings, asg, codes, cmodel, codebook,
-      m, dims, nQueries, k, nProbe)
-  }
+                         k: Int = 3, nProbe: Int = 2): DataFrame =
+    annIvfPqWithModelsOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      cmodel, codebook, m, dims, nQueries, k, nProbe)
 
-  /** [[annIvfPqOnVectors]] with both models supplied — the
-    * modality-agnostic train-once self-contained form
-    * (`x5_mm_search_ivfpq` through [[Multimodal.mediaIvfPqModels]]). */
+  /** [[annIvfPqWithModels]] over any (vec_id, v) frame — the
+    * modality-agnostic form (`x5_mm_search_ivfpq` through
+    * [[Multimodal.mediaIvfPqModels]], whose trainings need dyadic
+    * component values to stay fold-order-exact cross-engine). */
   def annIvfPqWithModelsOnVectors(vecs: DataFrame,
                                   cmodel: Seq[(Long, Seq[Double])],
                                   codebook: Seq[(Int, Long, Seq[Double])],
@@ -2890,12 +2669,13 @@ object Similarity {
     val asg = argmaxCell(all, cmodel).select(col("vec_id"), col("cell"))
     val codes = argminCode(subvectors(all, m, dims / m), codebook)
       .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqOnArtifactsCore(all, asg, codes, cmodel, codebook,
+    annIvfPqOnArtifactsVectors(vecs, asg, codes, cmodel, codebook,
       m, dims, nQueries, k, nProbe)
   }
 
-  /** [[pqAdcTopK]] with the codebook supplied — corpus encoding stays
-    * lazy; only the training collects are skipped. */
+  /** X2 flat-ADC top-k with the codebook passed in ([[pqModelCached]]
+    * for `x2_ann_pq`) — corpus encoding stays lazy in the plan; the
+    * ranking is [[adcRankedOnCodesVectors]]'. */
   def pqAdcTopKWithModel(embeddings: DataFrame,
                          codebook: Seq[(Int, Long, Seq[Double])],
                          m: Int = 8, dims: Int = 64,
@@ -2905,8 +2685,17 @@ object Similarity {
     pqAdcTopKOnCodes(embeddings, codes, codebook, m, dims, nQueries, kNn)
   }
 
-  /** [[pqRerankTopK]] with the codebook supplied — same two-stage
-    * shortlist → exact-L2 rerank, training collects skipped. */
+  /** X2 PQ search with EXACT RE-RANKING — the production IVF-PQ serve
+    * shape: the ADC pass over the code table yields a `shortlist` of
+    * candidates per query (cheap, compressed-domain), and only those
+    * S vectors are fetched raw and re-scored by exact L2 for the
+    * final top-k. Quantization error then costs RECALL only when a
+    * true neighbor falls outside the shortlist, not rank accuracy
+    * inside it — the standard answer to a coarse codebook. Per query
+    * the raw-vector I/O is S rows instead of the corpus (at 100 TB:
+    * S point lookups against the vec_id-keyed store vs a full scan).
+    * Exact distances use the same expanded form and fold order as the
+    * oracle, ranked raw with id tie-breaks (the house rule). */
   def pqRerankTopKWithModel(embeddings: DataFrame,
                             codebook: Seq[(Int, Long, Seq[Double])],
                             m: Int = 8, dims: Int = 64, nQueries: Int = 20,
@@ -2915,7 +2704,8 @@ object Similarity {
       .select(col("vec_id"), col("sub"), col("code"))
     val vecs = withVec(embeddings)
       .select(col("vec_id"), col("v"), dot_product(col("v"), col("v")).as("n2"))
-    val short = adcRankedOnCodes(embeddings, codes, codebook, m, dims, nQueries)
+    val short = adcRankedOnCodesVectors(withVec(embeddings), codes, codebook,
+        m, dims, nQueries)
       .filter(col("rank") <= shortlist).select(col("q_id"), col("n_id"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("n_id"))
     short
@@ -2930,64 +2720,47 @@ object Similarity {
       .select(col("q_id"), col("n_id"), round(col("dist"), 6).as("dist"), col("rank"))
   }
 
-  /** [[annIvfPqRes]] with BOTH models supplied (pre-trained or memoized
-    * via [[resModels]]) — the corpus-side assignment and residual
-    * encoding stay lazy in the plan exactly as in the self-contained
-    * form, so the query plan is unchanged; only the driver-side
-    * training collects are skipped. */
+  /** X2 RESIDUAL IVF-PQ search — [[annIvfPqWithModels]] with the FAISS
+    * residual refinement: the trained IVF coarse quantizer still
+    * bounds the candidate set to nProbe cells, but the code table
+    * stores per-subspace codewords of (v − centroid[cell]) and the
+    * query builds ONE ADC lookup table PER PROBED CELL from its own
+    * residual (q − centroid[cell]) — the distance estimate is then
+    * ‖(q−c) − r‖² per candidate, the within-cell geometry both sides
+    * share. Costs one LUT per (query, cell) instead of per query;
+    * candidate I/O is unchanged at m bytes per candidate.
+    * [[ivfPqRecallReport]] is the measured gate. Both models are
+    * passed in ([[resModels]] for `x2_ann_ivfpq_res`); assignment and
+    * residual encoding stay lazy in the plan. */
   def annIvfPqResWithModels(embeddings: DataFrame,
                             cmodel: Seq[(Long, Seq[Double])],
                             codebook: Seq[(Int, Long, Seq[Double])],
                             m: Int = 8, dims: Int = 64, nQueries: Int = 20,
-                            k: Int = 3, nProbe: Int = 2): DataFrame = {
-    val all = withVec(embeddings)
-    val resv = residualVectors(all, cmodel)
-    val asg = resv.select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(resv, m, dims / m), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqResCore(all, asg, codes, cmodel, codebook, m, dims, nQueries, k, nProbe)
-  }
+                            k: Int = 3, nProbe: Int = 2): DataFrame =
+    annIvfPqResWithModelsOnVectors(withVec(embeddings).select(col("vec_id"), col("v")),
+      cmodel, codebook, m, dims, nQueries, k, nProbe)
 
-  /** X2 residual IVF-PQ SERVE — [[annIvfPqRes]] over STORED artifacts:
-    * the (vec_id, cell) partition map, the (vec_id, sub, code)
-    * residual-code corpus, and both trained models as driver state.
-    * The search plan assigns/encodes nothing corpus-side; the query
-    * batch brings its raw vectors (probe ranking + per-cell residual
-    * LUTs are query-side arithmetic). `x2_ann_ivfpq_res_serve` shares
-    * `x2_ann_ivfpq_res`'s oracle by reference. */
+  /** X2 residual IVF-PQ SERVE — [[annIvfPqResWithModels]] over STORED
+    * artifacts: the (vec_id, cell) partition map, the (vec_id, sub,
+    * code) residual-code corpus, and both trained models as driver
+    * state. The search plan assigns/encodes nothing corpus-side; the
+    * query batch brings its raw vectors (probe ranking + per-cell
+    * residual LUTs are query-side arithmetic). `x2_ann_ivfpq_res_serve`
+    * shares `x2_ann_ivfpq_res`'s oracle by reference. */
   def annIvfPqResOnArtifacts(embeddings: DataFrame, asg: DataFrame,
                              codes: DataFrame,
                              centroids: Seq[(Long, Seq[Double])],
                              codebook: Seq[(Int, Long, Seq[Double])],
                              m: Int = 8, dims: Int = 64, nQueries: Int = 20,
                              k: Int = 3, nProbe: Int = 2): DataFrame =
-    annIvfPqResCore(withVec(embeddings), asg, codes, centroids, codebook,
-      m, dims, nQueries, k, nProbe)
-
-  /** [[annIvfPqRes]] over any (vec_id, v: array<double>) frame with
-    * both models trained in place — the modality-agnostic residual
-    * composition the media retrieval path mirrors
-    * (`x5_mm_search_ivfpq_res`). Caller supplies dyadic component
-    * values so the residual snap and both trainings stay
-    * fold-order-exact cross-engine. */
-  def annIvfPqResOnVectors(vecs: DataFrame, nCells: Int = 8,
-                           trainRounds: Int = 2, m: Int = 8, kCodes: Int = 16,
-                           dims: Int = 64, nQueries: Int = 20, k: Int = 3,
-                           nProbe: Int = 2): DataFrame = {
-    val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    val cmodel = kmeansCentroids(all, nCells, trainRounds)
-    val resv = residualVectors(all, cmodel)
-    val pq = trainPqModelOnVectors(resv.select(col("vec_id"), col("v")),
-      m, kCodes, trainRounds, dims)
-    val asg = resv.select(col("vec_id"), col("cell"))
-    val codes = argminCode(subvectors(resv, m, dims / m), pq)
-      .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqResCore(all, asg, codes, cmodel, pq, m, dims, nQueries, k, nProbe)
-  }
+    annIvfPqResOnArtifactsVectors(withVec(embeddings), asg, codes, centroids,
+      codebook, m, dims, nQueries, k, nProbe)
 
   /** [[annIvfPqResWithModels]] over any (vec_id, v) frame — the
-    * modality-agnostic train-once self-contained form
-    * (`x5_mm_search_ivfpq_res` through [[Multimodal.mediaResModels]]). */
+    * modality-agnostic form (`x5_mm_search_ivfpq_res` through
+    * [[Multimodal.mediaResModels]]). Caller supplies the dyadic
+    * component values the models were trained on, so the residual
+    * snap stays fold-order-exact cross-engine. */
   def annIvfPqResWithModelsOnVectors(vecs: DataFrame,
                                      cmodel: Seq[(Long, Seq[Double])],
                                      codebook: Seq[(Int, Long, Seq[Double])],
@@ -2999,7 +2772,8 @@ object Similarity {
     val asg = resv.select(col("vec_id"), col("cell"))
     val codes = argminCode(subvectors(resv, m, dims / m), codebook)
       .select(col("vec_id"), col("sub"), col("code"))
-    annIvfPqResCore(all, asg, codes, cmodel, codebook, m, dims, nQueries, k, nProbe)
+    annIvfPqResOnArtifactsVectors(vecs, asg, codes, cmodel, codebook,
+      m, dims, nQueries, k, nProbe)
   }
 
   /** [[trainResPqModel]] over any (vec_id, v) frame — the
@@ -3034,29 +2808,14 @@ object Similarity {
                                     codebook: Seq[(Int, Long, Seq[Double])],
                                     m: Int = 8, dims: Int = 64,
                                     nQueries: Int = 20, k: Int = 3,
-                                    nProbe: Int = 2): DataFrame =
-    annIvfPqResCore(
-      vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v")))),
-      asg, codes, centroids, codebook, m, dims, nQueries, k, nProbe)
-
-  private def annIvfPqResCore(all: DataFrame, asg: DataFrame, codes: DataFrame,
-                              centroids: Seq[(Long, Seq[Double])],
-                              codebook: Seq[(Int, Long, Seq[Double])],
-                              m: Int, dims: Int, nQueries: Int,
-                              k: Int, nProbe: Int): DataFrame = {
-    val spark = all.sparkSession
-    import spark.implicits._
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val cdf = pqCodebookDF(spark, codebook)
+                                    nProbe: Int = 2): DataFrame = {
+    val all = vecs.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
+    val cdf = pqCodebookDF(all.sparkSession, codebook)
     val dsub = dims / m
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
     // probes CARRY the query's dyadic residual against each probed
     // centroid — the per-(query, cell) LUT input
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"),
         graft.functions.ResidualDyadic.residual_dyadic(col("v"), col("cv")).as("qr"))
     val qsubs = probes.select(col("q_id"), col("cell"),
@@ -3087,8 +2846,8 @@ object Similarity {
   /** X2 IVF-PQ recall audit — the measured half of the residual claim:
     * per query, how many of the EXACT-L2 top-k (the metric ADC
     * approximates) each composition returns — `n_hits_raw` for the
-    * raw-vector codes ([[annIvfPq]]) and `n_hits_res` for the residual
-    * codes ([[annIvfPqRes]]), at IDENTICAL (nCells, m, kCodes,
+    * raw-vector codes ([[annIvfPqWithModels]]) and `n_hits_res` for the residual
+    * codes ([[annIvfPqResWithModels]]), at IDENTICAL (nCells, m, kCodes,
     * nProbe). The spec pins Σ n_hits_res ≥ Σ n_hits_raw — "residual
     * encoding helps" as a regression gate, not a slogan. Ground truth
     * uses the bounded-state top-k aggregate on −dist (expanded form,
@@ -3328,7 +3087,7 @@ object Similarity {
     composedRecallReport(slim, raw, res, nQueries, k)
   }
 
-  /** [[ivfSqRecallReport]]'s raw-code leg: [[annIvfSq]]'s candidate
+  /** [[ivfSqRecallReport]]'s raw-code leg: [[annIvfSqOnArtifacts]]'s candidate
     * plan (same trained cells, same cosine probe ranking) priced by
     * [[annIvfSqResOnArtifacts]]'s asymmetric L2 estimate over RAW
     * [[sqCodes]] — the exact query norm stands where the residual
@@ -3339,16 +3098,9 @@ object Similarity {
   private def annIvfSqL2OnVectors(vectors: DataFrame,
                                   centroids: Seq[(Long, Seq[Double])],
                                   nQueries: Int, k: Int, nProbe: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val all = vectors.withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    val cents = centroids.toDF("c_id", "cv")
-      .withColumn("cn", sqrt(dot_product(col("cv"), col("cv"))))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(
-      cosine(dot(col("cv"), col("v")), col("cn"), col("nrm")).desc_nulls_last,
-      col("c_id"))
-    val probes = all.filter(col("vec_id") < nQueries).crossJoin(broadcast(cents))
-      .withColumn("arank", row_number().over(aw)).filter(col("arank") <= nProbe)
+    val probes = rankProbeCells(all, centroids, nQueries)
+      .filter(col("arank") <= nProbe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
     val codes = sqCodesOnVectors(vectors)
     val qside = all.filter(col("vec_id") < nQueries)

@@ -991,9 +991,7 @@ object TextAnalysis {
     * exposed so the serve path (`x3_bm25_serve`) scores the SAME
     * query set against the stored index. */
   def bm25QuerySample(documents: DataFrame, samplePct: Int = 11): DataFrame =
-    documents.filter(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 100 < samplePct)
+    documents.filter(Sampling.hash60(col("doc_id")) % 100 < samplePct)
 
   /** X3 positional inverted-index export — BM25's postings with the
     * token POSITION kept: one (doc_id, pos, token) row per token
@@ -1010,8 +1008,7 @@ object TextAnalysis {
     * guaranteed ≥ 1 occurrence — its own source doc). */
   def phraseQueries(documents: DataFrame, samplePct: Int = 7): DataFrame =
     documents
-      .filter(conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 100 < samplePct)
+      .filter(Sampling.hash60(col("doc_id")) % 100 < samplePct)
       .select(col("doc_id").as("q_id"), toks.as("s"))
       .filter(size(col("s")) >= 3)
       .select(col("q_id"), element_at(col("s"), 1).as("p1"),

@@ -589,11 +589,7 @@ object Windows {
     * counter rows forever). */
   private[graft] def abMoments(events: DataFrame): DataFrame = {
     val vq = floor(col("value") * 100 + 0.5).cast("long")
-    // the house md5-hash60 assignment (Sampling.hash60's expression) —
-    // change together with StreamPipeline.abMomentsStream and the
-    // x6_ab_test oracle
-    val arm = conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-      .cast("long") % 2
+    val arm = Sampling.hash60(col("user_id")) % 2
     events
       .select(col("event_type"), arm.as("variant"), vq.as("v"))
       .groupBy(col("event_type"), col("variant"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.functions.{OrderEventDecode, SeededUuid}
-import graft.operators.Enrich
+import graft.operators.{Enrich, Sampling}
 import graft.sources.Tables
 
 /** The reference pipeline as Structured Streaming (SURVEY §3.2):
@@ -753,10 +753,7 @@ object StreamPipeline {
   def abMomentsStream(events: DataFrame): DataFrame =
     events
       .select(col("event_type"),
-        // the house md5-hash60 arm assignment — change together with
-        // Windows.abMoments and the x6_ab_test oracle
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).as("variant"),
+        (Sampling.hash60(col("user_id")) % 2).as("variant"),
         floor(col("value") * 100 + 0.5).cast("long").as("v"))
       .groupBy(col("event_type"), col("variant"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
@@ -816,8 +813,7 @@ object StreamPipeline {
     import spark.implicits._
     val hashed = events.select(
       expr("unix_micros(ts) div 86400000000").as("day"),
-      (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % lit(2147483647L)).as("h"))
+      (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
       .select(col("day"),
         col("h").bitwiseAND(lit(63L)).cast("int").as("j"),
         when(shiftright(col("h"), 6) === 0, lit(26))
@@ -877,8 +873,7 @@ object StreamPipeline {
     import spark.implicits._
     val hashed = events.select(
       expr("unix_micros(ts) div 86400000000").as("day"),
-      (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % lit(2147483647L)).as("h"))
+      (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
       .as[(Long, Long)]
     hashed.groupByKey(_._1).flatMapGroupsWithState(
       OutputMode.Update(), GroupStateTimeout.NoTimeout()) {

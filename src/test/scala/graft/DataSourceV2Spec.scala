@@ -113,7 +113,7 @@ class DataSourceV2Spec extends AnyFunSuite {
 
   test("streaming write: generator source to mem-table sink, exactly-once across restarts") {
     import graft.sources.v2.GraftStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-swrite")
+    val dir = SparkTestBase.tempDir("graft-dsv2-swrite")
     val ck = dir.resolve("ck").toString
     def runOnce(): Unit = {
       val q = spark.readStream.format("graft_orders")
@@ -286,7 +286,7 @@ class DataSourceV2Spec extends AnyFunSuite {
   }
 
   test("streaming read honors an id-range predicate (clamped batches)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-clamp")
+    val dir = SparkTestBase.tempDir("graft-dsv2-clamp")
     val q = spark.readStream.format("graft_orders")
       .option("numRows", "100").option("numPartitions", "4").load()
       .where($"id" >= 20 && $"id" < 50)
@@ -313,7 +313,7 @@ class DataSourceV2Spec extends AnyFunSuite {
   }
 
   test("streaming read: deterministic offsets resume exactly-once from the checkpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-stream")
+    val dir = SparkTestBase.tempDir("graft-dsv2-stream")
     val ck = dir.resolve("ck").toString
     def runOnce(out: String) = {
       val q = spark.readStream.format("graft_orders")

@@ -220,7 +220,8 @@ class EdgeCaseSpec extends AnyFunSuite {
     codes.foreach { case (_, sub, code) =>
       assert(sub >= 0 && sub < 8 && code >= 0 && code < 3)
     }
-    assert(Similarity.pqAdcTopK(e, nQueries = 2, kNn = 5).count() > 0)
+    assert(Similarity.pqAdcTopKWithModel(e, Similarity.trainPqModel(e),
+      nQueries = 2, kNn = 5).count() > 0)
     // empty corpus: empty model, empty codes, no crash
     assert(Similarity.pqCodes(e.limit(0)).count() === 0)
   }

@@ -53,7 +53,7 @@ class EnrichSpec extends AnyFunSuite {
   }
 
   test("C4/C5 loaders: headerless CSV and multiline JSON round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fixtures")
+    val dir = SparkTestBase.tempDir("graft-fixtures")
     val csv = dir.resolve("customers.csv")
     java.nio.file.Files.writeString(csv,
       customersHead.map { case (i, n, c) => s"$i,$n,$c" }.mkString("\n"))

@@ -21,7 +21,7 @@ class FormatsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars"))
     val expected = src.collect().toSet
     Formats.supported.foreach { fmt =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-fmt-$fmt").toString
+      val dir = SparkTestBase.tempDir(s"graft-fmt-$fmt").toString
       Formats.write(src, dir, fmt)
       val back = Formats.read(spark, dir, fmt, src.schema)
       assert(back.schema === src.schema, s"$fmt schema drift")
@@ -30,7 +30,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes partitions at plan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt-part").toString
+    val dir = SparkTestBase.tempDir("graft-fmt-part").toString
     val ev = Tables(spark, SparkTestBase.sf0001, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     Formats.write(ev, dir, "parquet", partitionBy = Seq("event_type"))
@@ -49,7 +49,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("bucketed tables join with no shuffle exchange on either side") {
     import org.apache.spark.sql.functions.sum
-    val wh = java.nio.file.Files.createTempDirectory("graft-bkt-wh").toString
+    val wh = SparkTestBase.tempDir("graft-bkt-wh").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS bkt LOCATION '$wh'")
     val orders = Tables(spark, SparkTestBase.sf0001, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -77,7 +77,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("binaryFile ingestion globs, caps length, and preserves bytes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
+    val dir = SparkTestBase.tempDir("graft-bin")
     java.nio.file.Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3, 4))
     java.nio.file.Files.write(dir.resolve("b.img"), Array.fill[Byte](64)(7))
     java.nio.file.Files.write(dir.resolve("skip.txt"), Array[Byte](9))
@@ -92,8 +92,8 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("compaction collapses a many-small-files directory, content preserved") {
-    val in = java.nio.file.Files.createTempDirectory("graft-compact-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-out").toString + "/d"
+    val in = SparkTestBase.tempDir("graft-compact-in").toString
+    val out = SparkTestBase.tempDir("graft-compact-out").toString + "/d"
     // 40 tiny files (one per partition)
     docs.repartition(40).write.mode("overwrite").parquet(in)
     val (before, after) = Formats.compact(spark, in, out, "parquet")
@@ -103,8 +103,8 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("compaction preserves a hive-partitioned layout, per partition") {
-    val in = java.nio.file.Files.createTempDirectory("graft-compact-pin").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-pout").toString + "/d"
+    val in = SparkTestBase.tempDir("graft-compact-pin").toString
+    val out = SparkTestBase.tempDir("graft-compact-pout").toString + "/d"
     // 10 tiny files inside EACH lang= partition directory
     docs.repartition(10).write.mode("overwrite").partitionBy("lang").parquet(in)
     def perPartition(root: String) = new java.io.File(root).listFiles()
@@ -128,7 +128,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("compaction refuses same or nested in/out directories") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-guard").toString
+    val dir = SparkTestBase.tempDir("graft-compact-guard").toString
     docs.limit(10).write.mode("overwrite").parquet(dir)
     // textual variants of the SAME path must be caught (trailing slash)
     intercept[IllegalArgumentException](Formats.compact(spark, dir, dir + "/"))
@@ -141,7 +141,7 @@ class FormatsSpec extends AnyFunSuite {
     // generation 1 lacks the column generation 2 added — the standard
     // crawl-over-time drift; a merged read must surface the union
     // schema with nulls for the older generation
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt-drift").toString
+    val dir = SparkTestBase.tempDir("graft-fmt-drift").toString
     Seq((1L, "a")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/g=1")
     Seq((2L, "b", "en")).toDF("doc_id", "text", "lang")
@@ -158,7 +158,7 @@ class FormatsSpec extends AnyFunSuite {
     // ingestion robustness: one malformed line in a billion-line crawl
     // must neither kill the job (FAILFAST) nor vanish silently — the
     // corrupt text lands in its own column for quarantine
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt-corrupt")
+    val dir = SparkTestBase.tempDir("graft-fmt-corrupt")
     val f = dir.resolve("part-0.json")
     java.nio.file.Files.writeString(f,
       """{"doc_id": 1, "text": "good"}
@@ -183,7 +183,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("orc predicate pushdown reaches the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt-orc").toString
+    val dir = SparkTestBase.tempDir("graft-fmt-orc").toString
     Formats.write(docs, dir, "orc")
     val q = Formats.read(spark, dir, "orc", docs.schema)
       .filter(col("doc_id") >= 40)

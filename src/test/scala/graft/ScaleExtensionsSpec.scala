@@ -209,7 +209,7 @@ class ScaleExtensionsSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join without a shuffle (co-located join)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-wh")
+    val wh = SparkTestBase.tempDir("graft-wh")
     spark.conf.set("spark.sql.legacy.allowNonEmptyLocationInCTAS", "true")
     val prev = spark.catalog.currentDatabase
     val orders = Tables(spark, SparkTestBase.sf0001, "orders")

@@ -14,6 +14,14 @@ class SimilarityWindowsSpec extends AnyFunSuite {
   private def embs(rows: (Long, Seq[Float], Int)*) =
     rows.toDF("vec_id", "embedding", "label")
 
+  // fresh media trainings (PQ codebook, IVF centroids) over the dyadic
+  // stub vectors the media searches embed: the train half of a
+  // self-contained "train + WithModel" reference
+  private def mediaPq(d: org.apache.spark.sql.DataFrame) =
+    Similarity.trainPqModelOnVectors(Multimodal.dyadicMediaVectors(d, 64))
+  private def mediaIvf(d: org.apache.spark.sql.DataFrame) =
+    Similarity.trainIvfModelOnVectors(Multimodal.dyadicMediaVectors(d, 64))
+
   private val e = embs(
     (0L, Seq(1f, 0f, 0f, 0f), 0), (1L, Seq(0f, 1f, 0f, 0f), 0),
     (2L, Seq(1f, 0.01f, 0f, 0f), 0), (25L, Seq(0.99f, 0f, 0.01f, 0f), 1))
@@ -96,7 +104,7 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     assert(got(2L)._4 === 1L && got(3L)._4 === 1L)
   }
 
-  test("pqAdcTopKOnCodes (stored code table) matches self-contained pqAdcTopK") {
+  test("pqAdcTopKOnCodes (stored code table) matches train + pqAdcTopKWithModel") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val pq = Similarity.trainPqModel(emb)
     val codes = Similarity.pqCodesAgainst(emb, pq)
@@ -104,14 +112,14 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       .localCheckpoint()
     val served = Similarity.pqAdcTopKOnCodes(emb, codes, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val self = Similarity.pqAdcTopK(emb)
+    val self = Similarity.pqAdcTopKWithModel(emb, Similarity.trainPqModel(emb))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(served.nonEmpty && served === self)
   }
 
   test("media PQ search: top-k per query, ranks dense, self never retrieved") {
     val d = graft.sources.Tables(spark, SparkTestBase.sf0001, "documents")
-    val got = Multimodal.mediaSearchPq(d, nQueries = 5, kNn = 3)
+    val got = Multimodal.mediaSearchPqWithModel(d, mediaPq(d), nQueries = 5, kNn = 3)
       .as[(Long, Long, Double, Long)].collect()
     val byQ = got.groupBy(_._1)
     assert(byQ.keySet === (0L until 5L).toSet)
@@ -124,11 +132,12 @@ class SimilarityWindowsSpec extends AnyFunSuite {
 
   test("media IVF-PQ: composed scores agree with the media flat ADC pair-for-pair") {
     val d = graft.sources.Tables(spark, SparkTestBase.sf0001, "documents")
-    val ivfpq = Multimodal.mediaSearchIvfPq(d)
+    val pq = mediaPq(d)
+    val ivfpq = Multimodal.mediaSearchIvfPqWithModels(d, mediaIvf(d), pq)
       .as[(Long, Long, Double, Long)].collect()
     // the cell filter changes WHICH pairs are scored, never their score:
     // every composed result must carry exactly the flat ADC distance
-    val flat = Multimodal.mediaSearchPq(d, kNn = 600)
+    val flat = Multimodal.mediaSearchPqWithModel(d, pq, kNn = 600)
       .as[(Long, Long, Double, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(ivfpq.nonEmpty)
@@ -149,21 +158,25 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     val lshSelf = Multimodal.mediaSearchLsh(d)
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(lshServed.nonEmpty && lshServed === lshSelf)
-    val pqServed = Multimodal.mediaSearchPqServe(d)
+    val pq = mediaPq(d)
+    val pqServed = Multimodal.mediaSearchPqServeWithModel(d, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val pqSelf = Multimodal.mediaSearchPq(d)
+    val pqSelf = Multimodal.mediaSearchPqWithModel(d, mediaPq(d))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(pqServed.nonEmpty && pqServed === pqSelf)
-    val cServed = Multimodal.mediaSearchIvfPqServe(d)
+    val cServed = Multimodal.mediaSearchIvfPqServeWithModels(d, mediaIvf(d), pq)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val cSelf = Multimodal.mediaSearchIvfPq(d)
+    val cSelf = Multimodal.mediaSearchIvfPqWithModels(d, mediaIvf(d), mediaPq(d))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(cServed.nonEmpty && cServed === cSelf)
   }
 
   test("media residual IVF-PQ: serve over stored cell map + residual codes equals self-contained") {
     val d = graft.sources.Tables(spark, SparkTestBase.sf0001, "documents")
-    val self = Multimodal.mediaSearchIvfPqRes(d)
+    val cmodel = mediaIvf(d)
+    val resPq = Similarity.trainResPqModelOnVectors(
+      Multimodal.dyadicMediaVectors(d, 64), cmodel)
+    val self = Multimodal.mediaSearchIvfPqResWithModels(d, cmodel, resPq)
       .as[(Long, Long, Double, Long)].collect()
     assert(self.nonEmpty)
     // ranks dense per query, self never retrieved
@@ -172,7 +185,8 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       assert(rs.map(_._4).sorted.toSeq === (1 to rs.length).map(_.toLong))
       rs.foreach(r => assert(r._2 !== r._1))
     }
-    val served = Multimodal.mediaSearchIvfPqResServe(d)
+    val served = Multimodal.mediaSearchIvfPqResServeWithModels(d, mediaIvf(d),
+      Similarity.trainResPqModelOnVectors(Multimodal.dyadicMediaVectors(d, 64), cmodel))
     assert(served.as[(Long, Long, Double, Long)].collect().toSet === self.toSet)
     // the serve plan reads the stored artifacts as LogicalRDDs
     val plan = served.queryExecution.executedPlan.toString
@@ -926,13 +940,14 @@ class SimilarityWindowsSpec extends AnyFunSuite {
 
   test("ivf probe curve: monotone, full budget equals the ivf recall report") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
-    val curve = Similarity.ivfProbeCurve(emb)
+    val model = Similarity.trainIvfModel(emb)
+    val curve = Similarity.ivfProbeCurveWithModel(emb, model)
       .orderBy("n_probes").as[(Long, Long, Long, Double)].collect()
     assert(curve.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L))
     assert(curve.forall(_._2 == 60L))
     assert(curve.sliding(2).forall(p => p(0)._3 <= p(1)._3))
-    // reached == hit: nProbe=4 IS ivfRecallReport's configuration
-    val full = Similarity.ivfRecallReport(emb)
+    // reached == hit: nProbe=4 IS ivfRecallReportWithModel's configuration
+    val full = Similarity.ivfRecallReportWithModel(emb, model)
       .agg(sum(col("n_hits"))).as[Long].head()
     assert(curve.last._3 === full)
   }
@@ -987,7 +1002,8 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     val bf = Similarity.annBruteForce(emb, 20, 3)
       .select("q_id", "n_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val ivf = Similarity.annIvf(emb, nCells = 8, nQueries = 20, k = 3)
+    val ivf = Similarity.annIvfWithCentroids(emb,
+        Similarity.trainIvfModel(emb, nCells = 8), nQueries = 20, k = 3)
       .select("q_id", "n_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recall = bf.keys.toSeq.map { q =>
@@ -999,28 +1015,30 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     assert(recall >= 0.84, f"IVF recall@3 dropped to $recall%.2f")
   }
 
-  test("annIvfWithCentroids over a pretrained model matches self-contained annIvf") {
+  test("annIvfWithCentroids over a pretrained model matches a fresh train + search") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val model = Similarity.trainIvfModel(emb, nCells = 8, trainRounds = 2)
     val reused = Similarity.annIvfWithCentroids(emb, model, nQueries = 20, k = 3)
       .as[(Long, Long, Long, Double, Int)].collect().toSet
-    val self = Similarity.annIvf(emb, nCells = 8, nQueries = 20, k = 3)
+    val self = Similarity.annIvfWithCentroids(emb,
+        Similarity.trainIvfModel(emb, nCells = 8, trainRounds = 2), nQueries = 20, k = 3)
       .as[(Long, Long, Long, Double, Int)].collect().toSet
     assert(reused === self)
   }
 
-  test("annIvfOnAssignments (resident serve path) matches self-contained annIvf") {
+  test("annIvfOnAssignments (resident serve path) matches train + annIvfWithCentroids") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val model = Similarity.trainIvfModel(emb, nCells = 8, trainRounds = 2)
     val idx = Similarity.ivfAssignments(emb, nCells = 8, trainRounds = 2)
     val served = Similarity.annIvfOnAssignments(emb, idx, model, nQueries = 20, k = 3)
       .as[(Long, Long, Long, Double, Int)].collect().toSet
-    val self = Similarity.annIvf(emb, nCells = 8, nQueries = 20, k = 3)
+    val self = Similarity.annIvfWithCentroids(emb,
+        Similarity.trainIvfModel(emb, nCells = 8, trainRounds = 2), nQueries = 20, k = 3)
       .as[(Long, Long, Long, Double, Int)].collect().toSet
     assert(served === self)
   }
 
-  test("annIvfPqOnArtifacts (stored cell map + code table) matches self-contained annIvfPq") {
+  test("annIvfPqOnArtifacts (stored cell map + code table) matches train + annIvfPqWithModels") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val cmodel = Similarity.trainIvfModel(emb)
     val pq = Similarity.trainPqModel(emb)
@@ -1030,7 +1048,8 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       .localCheckpoint()
     val served = Similarity.annIvfPqOnArtifacts(emb, asg, codes, cmodel, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val self = Similarity.annIvfPq(emb)
+    val self = Similarity.annIvfPqWithModels(emb,
+        Similarity.trainIvfModel(emb), Similarity.trainPqModel(emb))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(served.nonEmpty && served === self)
     // the serve plan reads the stored artifacts as LogicalRDDs (the
@@ -1157,11 +1176,12 @@ class SimilarityWindowsSpec extends AnyFunSuite {
 
   test("IVF-PQ: composed scores agree with the flat ADC scores pair-for-pair") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
-    val ivfpq = Similarity.annIvfPq(emb)
+    val pq = Similarity.trainPqModel(emb)
+    val ivfpq = Similarity.annIvfPqWithModels(emb, Similarity.trainIvfModel(emb), pq)
       .as[(Long, Long, Double, Long)].collect()
     // the cell filter changes WHICH pairs are scored, never their score:
     // every composed result must carry exactly the flat ADC distance
-    val flat = Similarity.pqAdcTopK(emb, kNn = 600)
+    val flat = Similarity.pqAdcTopKWithModel(emb, pq, kNn = 600)
       .as[(Long, Long, Double, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(ivfpq.nonEmpty)
@@ -1190,10 +1210,11 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     }.toMap
     def recall(hits: Map[Long, Set[Long]]) =
       exact.map { case (q, ex) => (ex & hits.getOrElse(q, Set())).size }.sum / 60.0
-    val rer = Similarity.pqRerankTopK(emb).select("q_id", "n_id")
+    val pq = Similarity.trainPqModel(emb)
+    val rer = Similarity.pqRerankTopKWithModel(emb, pq).select("q_id", "n_id")
       .as[(Long, Long)].collect().groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
-    val adc = Similarity.pqAdcTopK(emb).select("q_id", "n_id")
+    val adc = Similarity.pqAdcTopKWithModel(emb, pq).select("q_id", "n_id")
       .as[(Long, Long)].collect().groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
     val (rRer, rAdc) = (recall(rer), recall(adc))
@@ -1430,7 +1451,8 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       (9L, Array(0.866f, 0.5f), 0),
       (10L, Array(0.02f, 1f), 0), (11L, Array(-0.02f, 1f), 0)
     ) ++ tight).toDF("vec_id", "embedding", "label")
-    val got = Similarity.ivfOutliers(emb, nCells = 2, trainRounds = 2)
+    val got = Similarity.ivfOutliersWithModel(emb,
+        Similarity.trainIvfModel(emb, nCells = 2, trainRounds = 2))
       .select("vec_id", "is_outlier").as[(Long, Boolean)].collect().toMap
     assert(got(9L), "the off-axis vector must flag")
     assert(got.filter(_._2).keySet === Set(9L))
@@ -1532,7 +1554,9 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       (2L, Seq(0.98f, 0.02f, 0f, 0f), 0), (3L, Seq(0.97f, 0.01f, 0f, 0f), 0),
       (4L, Seq(0.02f, 0.99f, 0f, 0f), 0), (5L, Seq(0.01f, 0.98f, 0f, 0f), 0))
     ).toDF("vec_id", "embedding", "label")
-    val self = Similarity.annIvfSq(emb, nCells = 2, trainRounds = 2,
+    val trained = Similarity.trainIvfModel(emb, nCells = 2, trainRounds = 2)
+    val self = Similarity.annIvfSqOnArtifacts(emb,
+        Similarity.ivfAssignmentsFor(emb, trained), Similarity.sqCodes(emb), trained,
         nQueries = 2, k = 2, nProbe = 1)
       .as[(Long, Long, Long, Double, Int)].collect().toSet
     assert(self.nonEmpty)
@@ -1967,7 +1991,7 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     }
   }
 
-  test("annIvfPqResOnArtifacts (stored residual codes) matches self-contained annIvfPqRes") {
+  test("annIvfPqResOnArtifacts (stored residual codes) matches train + annIvfPqResWithModels") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val cmodel = Similarity.trainIvfModel(emb)
     val pq = Similarity.trainResPqModel(emb, cmodel)
@@ -1977,7 +2001,9 @@ class SimilarityWindowsSpec extends AnyFunSuite {
       .localCheckpoint()
     val served = Similarity.annIvfPqResOnArtifacts(emb, asg, codes, cmodel, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val self = Similarity.annIvfPqRes(emb)
+    val trained = Similarity.trainIvfModel(emb)
+    val self = Similarity.annIvfPqResWithModels(emb, trained,
+        Similarity.trainResPqModel(emb, trained))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(served.nonEmpty && served === self)
     // serve reads the stored artifacts as LogicalRDDs

@@ -1,10 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
   lazy val spark: SparkSession = LocalSession(4)
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+  sys.addShutdownHook(tempDirs.synchronized(tempDirs.toList).foreach(deleteTree))
+
+  /** A fresh directory under `java.io.tmpdir` named `prefix…`; it and
+    * everything written into it are deleted when the test JVM exits.
+    * Every test that needs scratch space on disk takes it from here. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.synchronized(tempDirs += dir)
+    dir
+  }
+
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
+      finally paths.close()
+    }
 
   val sf0001 = "/root/testdata/sf0.001"
 

@@ -65,7 +65,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file-source pipeline writes id-stamped parquet partituioned by customer (C6)") {
-    val dir = Files.createTempDirectory("graft-stream")
+    val dir = SparkTestBase.tempDir("graft-stream")
     val in = dir.resolve("in"); val out = dir.resolve("out"); val ck = dir.resolve("ck")
     Files.createDirectories(in)
     Files.writeString(in.resolve("batch1.json"),
@@ -106,7 +106,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink merges on key: update, in-batch dup, and replay are all one row per key") {
-    val dir = Files.createTempDirectory("graft-upsert")
+    val dir = SparkTestBase.tempDir("graft-upsert")
     val out = dir.resolve("store").toString
     def rows(t: (String, Long, Long)*) = t.toDF("order_id", "customer_id", "amount")
     StreamPipeline.upsertBatch(rows(("a", 1L, 10L), ("b", 2L, 20L)), out, 0L)
@@ -138,7 +138,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink merges all affected buckets in one write, not a per-bucket job loop") {
-    val dir = Files.createTempDirectory("graft-upsert-onejob")
+    val dir = SparkTestBase.tempDir("graft-upsert-onejob")
     val out = dir.resolve("store").toString
     def rows(t: (String, Long, Long)*) = t.toDF("order_id", "customer_id", "amount")
     val keys = (0 until 32).map(i => (s"k$i", i.toLong, i.toLong))
@@ -179,7 +179,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink: torn generations are invisible to readers and retired by the next batch") {
-    val dir = Files.createTempDirectory("graft-upsert-torn")
+    val dir = SparkTestBase.tempDir("graft-upsert-torn")
     val out = dir.resolve("store").toString
     def rows(t: (String, Long, Long)*) = t.toDF("order_id", "customer_id", "amount")
     // empty/uninitialized store reads as an empty frame, not an error
@@ -208,7 +208,7 @@ class StreamingSpec extends AnyFunSuite {
   test("upsert sink end-to-end: re-delivered order replaces its row") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[OrderEvent]
-    val dir = Files.createTempDirectory("graft-upsert-e2e")
+    val dir = SparkTestBase.tempDir("graft-upsert-e2e")
     val enriched = graft.operators.Enrich.enrichReference(mem.toDF(), customersHead)
     val q = StreamPipeline.upsertEnriched(enriched, dir.resolve("store").toString,
       dir.resolve("ck").toString).start()
@@ -324,7 +324,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     for (nBuckets <- Seq(1, 8); keyCol <- Seq("order_id", "fp")) {
       val ctx = s"nBuckets=$nBuckets keyCol=$keyCol"
-      val out = Files.createTempDirectory("graft-upsert-model").resolve("store")
+      val out = SparkTestBase.tempDir("graft-upsert-model").resolve("store")
       // the curate path appends its key `fp` last; the order sink leads with `order_id`
       val cols = if (keyCol == "fp") Seq("n", "s", "fp") else Seq("order_id", "n", "s")
       val schema = StructType(cols.map(c => StructField(c, if (c == "n") LongType else StringType)))
@@ -401,7 +401,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink work is O(batch) amortized: rows written per input row and generations stay bounded") {
-    val out = Files.createTempDirectory("graft-upsert-amortized").resolve("store")
+    val out = SparkTestBase.tempDir("graft-upsert-amortized").resolve("store")
     var next = 0
     def batch(n: Int) = {
       val rows = (next until next + n).map(i => (s"o$i", (i % 97).toLong, i.toLong))
@@ -435,7 +435,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink merges an over-cap delta with its newest similar-sized peers, never the base") {
-    val out = Files.createTempDirectory("graft-upsert-tiers").resolve("store")
+    val out = SparkTestBase.tempDir("graft-upsert-tiers").resolve("store")
     var next = 0
     def upsert(n: Int, id: Long): Unit = {
       StreamPipeline.upsertBatch((next until next + n).map(i => (s"o$i", 1L, i.toLong))
@@ -466,7 +466,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    val out = Files.createTempDirectory("graft-upsert-plan").resolve("store").toString
+    val out = SparkTestBase.tempDir("graft-upsert-plan").resolve("store").toString
     def rows(t: Seq[(String, Long, Long)]) = t.toDF("order_id", "customer_id", "amount")
     val h = new AdaptiveSparkPlanHelper {}
     // bases are read without partition columns, deltas with them
@@ -497,7 +497,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink reads and continues a store written with empty markers (two full generations)") {
-    val out = Files.createTempDirectory("graft-upsert-legacy").resolve("store")
+    val out = SparkTestBase.tempDir("graft-upsert-legacy").resolve("store")
     // the earlier layout: each batch rewrote the bucket's whole state as a
     // new generation, kept the previous one and marked both with an empty
     // _graft_commit
@@ -540,7 +540,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink reads, merges and compacts v1 zstd generations next to v2 ones") {
-    val out = Files.createTempDirectory("graft-upsert-v1").resolve("store")
+    val out = SparkTestBase.tempDir("graft-upsert-v1").resolve("store")
     // the layout before v2 pages: zstd v1 pages in shuffle order, no
     // dictionary on the key, and markers with content
     def v1Gen(gen: Long, kind: String, t: Seq[(String, Long, Long)]): Unit = {
@@ -586,7 +586,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert sink writes every generation sorted by key, read from its files") {
-    val out = Files.createTempDirectory("graft-upsert-sorted").resolve("store")
+    val out = SparkTestBase.tempDir("graft-upsert-sorted").resolve("store")
     val rnd = new scala.util.Random(7)
     // keys in random order, some re-delivered, five customers
     def batch(n: Int, from: Int) = rnd.shuffle((from until from + n).toList)
@@ -743,7 +743,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("restart from checkpoint resumes exactly-once (no reprocessing)") {
-    val dir = Files.createTempDirectory("graft-ckpt")
+    val dir = SparkTestBase.tempDir("graft-ckpt")
     val in = dir.resolve("in"); val out = dir.resolve("out"); val ck = dir.resolve("ck")
     Files.createDirectories(in)
     Files.writeString(in.resolve("b1.json"),
@@ -766,7 +766,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("malformed events are dropped, not fatal (corrupt-record handling)") {
-    val dir = Files.createTempDirectory("graft-corrupt")
+    val dir = SparkTestBase.tempDir("graft-corrupt")
     val in = dir.resolve("in"); val out = dir.resolve("out"); val ck = dir.resolve("ck")
     Files.createDirectories(in)
     Files.writeString(in.resolve("b.json"),
@@ -920,7 +920,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("order-event decode: the byte-level fast path equals from_json row for row (fuzz, codegen and interpreted)") {
-    val dir = Files.createTempDirectory("graft-decode-fuzz")
+    val dir = SparkTestBase.tempDir("graft-decode-fuzz")
     val inputs = decodeFuzz(20261017L, 30000) ++ decodeFuzz(7L, 30000)
     // materialized, so the optimizer cannot fold the input into eval
     inputs.toDF("kind", "value").coalesce(1).write.parquet(dir.resolve("in").toString)
@@ -954,7 +954,7 @@ class StreamingSpec extends AnyFunSuite {
   test("sinks reuse compiled code: steady-state triggers of both sinks compile nothing") {
     import org.apache.spark.metrics.source.CodegenMetrics
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-codegen-reuse")
+    val dir = SparkTestBase.tempDir("graft-codegen-reuse")
     // compiles added by 3 same-shape triggers after one warm-up trigger
     def steadyCompiles(name: String,
         sink: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
@@ -987,7 +987,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("append sink ids are v4 UUIDs, disjoint across identically partitioned batches") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-ids")
+    val dir = SparkTestBase.tempDir("graft-ids")
     val out = dir.resolve("out").toString
     val mem = MemoryStream[OrderEvent]
     val q = StreamPipeline.writeEnriched(
@@ -1178,7 +1178,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming curation: cross-batch dedup, quality gate, post-watermark upsert replace, idempotent replay (X7)") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-stream")
+    val dir = SparkTestBase.tempDir("graft-curate-stream")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     // ~0.63 quality (20 tokens, stopword-rich) — above the 0.5 gate
     val good = "the cat and the dog walk to the park and the bird sings " +
@@ -1233,7 +1233,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming curation drops micro-batch docs contaminated by the static benchmark") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-bench")
+    val dir = SparkTestBase.tempDir("graft-curate-bench")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     val leaked = "the cat and the dog walk to the park and the bird sings " +
       "of the sun and the rain today"
@@ -1256,7 +1256,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming curation span gate drops a byte-distinct doc of recycled spans") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-span")
+    val dir = SparkTestBase.tempDir("graft-curate-span")
     val indexed = Seq((0L, "the cat and the dog walk to the park and " +
       "the bird sings of the sun and the rain today")).toDF("doc_id", "text")
     // byte-distinct AND band-distinct enough for exact dedup, but 5 of
@@ -1284,7 +1284,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming curation drops micro-batch docs near-duplicating the static index") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-index")
+    val dir = SparkTestBase.tempDir("graft-curate-index")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     val indexed = "the cat and the dog walk to the park and the bird sings " +
       "of the sun and the rain today"
@@ -1310,7 +1310,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("rolling index: docs accepted in generation N gate generation N+1 without restarting the query") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-rolling")
+    val dir = SparkTestBase.tempDir("graft-curate-rolling")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     val genN = "the cat and the dog walk to the park and the bird sings " +
       "of the sun and the rain today"
@@ -1347,7 +1347,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("rolling index auto-refresh: accepted docs gate the next batch with NO manual refresh call") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-curate-autoroll")
+    val dir = SparkTestBase.tempDir("graft-curate-autoroll")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     val genN = "the cat and the dog walk to the park and the bird sings " +
       "of the sun and the rain today"
@@ -1468,7 +1468,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     import graft.sources.v2.GraftStore
     val mem = MemoryStream[UserEvent]
-    val dir = Files.createTempDirectory("graft-hist-store")
+    val dir = SparkTestBase.tempDir("graft-hist-store")
     // complete-mode DSv2 sink: each epoch's snapshot REPLACES the
     // stored table (SupportsTruncate), so the store always holds
     // exactly the current daily sketch — the nightly artifact a
@@ -1511,7 +1511,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.v2.GraftStore
     import graft.operators.Windows
     val mem = MemoryStream[UserEvent]
-    val dir = Files.createTempDirectory("graft-dow-store")
+    val dir = SparkTestBase.tempDir("graft-dow-store")
     val q = StreamPipeline.dowDailyStream(mem.toDF())
       .writeStream.outputMode("complete")
       .format("graft_orders").option("table", "dow_daily_store")
@@ -1546,7 +1546,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.v2.GraftStore
     import graft.operators.Windows
     val mem = MemoryStream[UserEvent]
-    val dir = Files.createTempDirectory("graft-ab-store")
+    val dir = SparkTestBase.tempDir("graft-ab-store")
     val q = StreamPipeline.abMomentsStream(mem.toDF())
       .writeStream.outputMode("complete")
       .format("graft_orders").option("table", "ab_moments_store")
@@ -1573,7 +1573,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("rolling vector index: assets accepted in generation N gate generation N+1 without restart") {
     implicit val sc = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-media-roll")
+    val dir = SparkTestBase.tempDir("graft-media-roll")
     val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
     // stub embedding samples codepoints at stride 7: a 14-char payload
     // exposes only positions 0 and 7, so editing position 2 changes the
@@ -1713,7 +1713,7 @@ class StreamingSpec extends AnyFunSuite {
       // user 3, one session: {5, 9}
       ev(13, 3, 0, 5), ev(14, 3, 1, 9))
     val mem = MemoryStream[PropsEvent]
-    val dir = Files.createTempDirectory("graft-covisit-store")
+    val dir = SparkTestBase.tempDir("graft-covisit-store")
     val out = dir.resolve("store").toString
     val q = StreamPipeline.upsertEnriched(
         StreamPipeline.covisitSessionStream(mem.toDF(), capPerSession = 2),
@@ -1771,7 +1771,7 @@ class StreamingSpec extends AnyFunSuite {
       ev(8, 3, 0, 7), ev(9, 3, 1, 9),
       ev(10, 4, 0, 5), ev(11, 4, 1, 9))
     val mem = MemoryStream[PropsEvent]
-    val dir = Files.createTempDirectory("graft-covisit-life-store")
+    val dir = SparkTestBase.tempDir("graft-covisit-life-store")
     val out = dir.resolve("store").toString
     val q = StreamPipeline.upsertEnriched(
         StreamPipeline.covisitStream(mem.toDF(), capPerUser = 2),

@@ -372,7 +372,7 @@ class TextDedupSpec extends AnyFunSuite {
     val d = docs((1L, "a a b"), (2L, "b c"), (3L, "a c c b"))
     // round-trip the model through parquet — the stored-artifact path,
     // exactly how a resident pipeline serves it
-    val dir = java.nio.file.Files.createTempDirectory("unigram_model").toString
+    val dir = SparkTestBase.tempDir("unigram_model").toString
     TextAnalysis.unigramModel(d).write.mode("overwrite").parquet(dir)
     val model = spark.read.parquet(dir)
     val served = TextAnalysis.unigramLogProbAgainst(d, model)
@@ -387,7 +387,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("bigram model: batch scored against a stored model equals self-contained") {
     val d = docs((1L, "a a b"), (2L, "b c a"), (3L, "a c c b a b"))
-    val dir = java.nio.file.Files.createTempDirectory("bigram_model").toString
+    val dir = SparkTestBase.tempDir("bigram_model").toString
     TextAnalysis.bigramModel(d).write.mode("overwrite").parquet(dir)
     val model = spark.read.parquet(dir)
     val served = TextAnalysis.bigramLogProbAgainst(d, model)
@@ -940,7 +940,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("shard export writes per-shard directories and a trustworthy manifest") {
     val d = graft.sources.Tables(spark, SparkTestBase.sf0001, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = SparkTestBase.tempDir("graft-shards").toString
     val manifest = Curation.exportShards(d, dir)
       .as[(String, Long, Long, Long, String)].collect()
     // every document landed in exactly one shard directory (root read:

@@ -507,10 +507,7 @@ object SparkEntry {
     "x2_ann_pq_serve" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val pq = Similarity.pqModelCached(emb, d)
-      import org.apache.spark.sql.functions.col
-      val codes = Similarity.pqCodesAgainst(emb, pq)
-        .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-        .localCheckpoint()
+      val codes = Similarity.pqCodesAgainst(emb, pq).localCheckpoint()
       Similarity.pqAdcTopKOnCodes(emb, codes, pq)
     }),
     // flat-ADC recall gate: how many exact-L2 top-3 the code-table
@@ -544,13 +541,10 @@ object SparkEntry {
     "x2_ann_ivfpq_serve" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val (cmodel, pq) = Similarity.ivfPqModels(emb, d)
-      import org.apache.spark.sql.functions.col
       // the two stored artifacts build as concurrent jobs (Par.both)
       val (asg, codes) = graft.operators.Par.both(
         Similarity.ivfAssignmentsFor(emb, cmodel).localCheckpoint(),
-        Similarity.pqCodesAgainst(emb, pq)
-          .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-          .localCheckpoint())
+        Similarity.pqCodesAgainst(emb, pq).localCheckpoint())
       Similarity.annIvfPqOnArtifacts(emb, asg, codes, cmodel, pq)
     }),
     // the TRUE FAISS IVFPQ: PQ codes encode the dyadic RESIDUAL
@@ -570,13 +564,10 @@ object SparkEntry {
     "x2_ann_ivfpq_res_serve" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val (cmodel, pq) = Similarity.resModels(emb, d)
-      import org.apache.spark.sql.functions.col
       // the two stored artifacts build as concurrent jobs (Par.both)
       val (asg, codes) = graft.operators.Par.both(
         Similarity.ivfAssignmentsFor(emb, cmodel).localCheckpoint(),
-        Similarity.resPqCodesAgainst(emb, cmodel, pq)
-          .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-          .localCheckpoint())
+        Similarity.resPqCodesAgainst(emb, cmodel, pq).localCheckpoint())
       Similarity.annIvfPqResOnArtifacts(emb, asg, codes, cmodel, pq)
     }),
     // the measured residual claim: recall@k of BOTH compositions vs

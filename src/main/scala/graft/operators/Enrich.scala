@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** The flagship reference computation: continuous stream-to-reference
   * inner equi-join with projection/renaming (SURVEY §2 C8/C9; ASA query
@@ -19,6 +20,15 @@ import org.apache.spark.sql.functions._
   * The same function serves batch and streaming inputs: with a
   * streaming `orders` this is exactly Spark's stream-static join —
   * unbounded-state-free, no watermark required (SURVEY §2.5).
+  *
+  * Reading the reference: a stream-static join re-reads its reference
+  * side on every micro-batch to rebuild the broadcast, so
+  * [[enrichReference]] reads it in ONE task when its optimized plan's
+  * size estimate is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * (AQE's size for one task's data): a small table spread over many
+  * partitions otherwise pays one task launch per partition per trigger.
+  * A larger reference keeps its own partitioning. [[enrich]] reads its
+  * reference once and takes it as it is.
   */
 object Enrich {
 
@@ -37,14 +47,21 @@ object Enrich {
   /** Reference-fidelity flavor over the reference's own schemas
     * (orders events ⋈ customers CSV) — used by the golden sample test
     * that ports the reference's manual "Test query" flow
-    * (`README.md:182`). */
-  def enrichReference(orderEvents: DataFrame, customers: DataFrame): DataFrame =
-    orderEvents.join(broadcast(customers),
-        orderEvents("customerID") === customers("cust_id"), "inner")
+    * (`README.md:182`). The reference side is read in one task when it
+    * is small (see the object doc); the estimate comes from the plan's
+    * statistics and starts no job. */
+  def enrichReference(orderEvents: DataFrame, customers: DataFrame): DataFrame = {
+    val oneTask = customers.sparkSession.sessionState.conf.getConf(
+      SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val ref = if (customers.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTask)
+      customers.coalesce(1) else customers
+    orderEvents.join(broadcast(ref),
+        orderEvents("customerID") === ref("cust_id"), "inner")
       .select(
         orderEvents("orderID").as("order_id"),
         orderEvents("customerID").as("customer_id"),
-        customers("cust_name").as("customer_name"),
-        customers("city"),
+        ref("cust_name").as("customer_name"),
+        ref("city"),
         orderEvents("amount").as("purchase_amount"))
+  }
 }

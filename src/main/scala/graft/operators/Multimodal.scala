@@ -451,9 +451,7 @@ object Multimodal {
     val vecs = dyadicMediaVectors(documents, dims).localCheckpoint()
     val (asg, codes) = Par.both(
       Similarity.ivfAssignmentsForOnVectors(vecs, cmodel).localCheckpoint(),
-      Similarity.pqCodesAgainstOnVectors(vecs, codebook, m, dims)
-        .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-        .localCheckpoint())
+      Similarity.pqCodesAgainstOnVectors(vecs, codebook, m, dims).localCheckpoint())
     Similarity.annIvfPqOnArtifactsVectors(vecs, asg, codes, cmodel, codebook,
       m, dims, nQueries, kNn, nProbe)
   }
@@ -471,7 +469,6 @@ object Multimodal {
                              nQueries: Int = 20, kNn: Int = 3): DataFrame = {
     val vecs = dyadicMediaVectors(documents, dims)
     val codes = Similarity.pqCodesAgainstOnVectors(vecs, codebook, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
     Similarity.pqAdcTopKOnVectors(vecs, codes, codebook, m, dims, nQueries, kNn)
   }
 
@@ -485,9 +482,7 @@ object Multimodal {
                                   m: Int = 8, dims: Int = 64,
                                   nQueries: Int = 20, kNn: Int = 3): DataFrame = {
     val vecs = dyadicMediaVectors(documents, dims)
-    val codes = Similarity.pqCodesAgainstOnVectors(vecs, codebook, m, dims)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
+    val codes = Similarity.pqCodesAgainstOnVectors(vecs, codebook, m, dims).localCheckpoint()
     Similarity.pqAdcTopKOnVectors(vecs, codes, codebook, m, dims, nQueries, kNn)
   }
 
@@ -670,9 +665,7 @@ object Multimodal {
     val vecs = dyadicMediaVectors(documents, dims).localCheckpoint()
     val (asg, codes) = Par.both(
       Similarity.ivfAssignmentsForOnVectors(vecs, cmodel).localCheckpoint(),
-      Similarity.resPqCodesAgainstOnVectors(vecs, cmodel, codebook, m, dims)
-        .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-        .localCheckpoint())
+      Similarity.resPqCodesAgainstOnVectors(vecs, cmodel, codebook, m, dims).localCheckpoint())
     Similarity.annIvfPqResOnArtifactsVectors(vecs, asg, codes, cmodel, codebook,
       m, dims, nQueries, kNn, nProbe)
   }

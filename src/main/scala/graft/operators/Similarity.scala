@@ -2413,7 +2413,7 @@ object Similarity {
                               m: Int = 8, dims: Int = 64): DataFrame = {
     val subs = subvectors(vecs, m, dims / m)
     argminCode(subs, codebook)
-      .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
+      .select(col("vec_id"), col("sub"), col("code"))
   }
 
   /** The full ADC (asymmetric distance computation) ranking frame

@@ -16,7 +16,7 @@ import graft.sources.Tables
 /** The reference pipeline as Structured Streaming (SURVEY §3.2):
   * Kafka-protocol source (C1) → JSON decode (C2) → stream-static
   * broadcast join (C9) → projection (C8) → document-store-style sink
-  * with generated ids, partitioned by customer (C6).
+  * with generated ids, each file sorted by customer (C6).
   *
   * Connector choice is isolated behind [[OrderSource]] because the
   * offline environment has no Event Hubs/Kafka broker: production uses
@@ -110,17 +110,19 @@ object StreamPipeline {
     Enrich.enrichReference(source.load(spark), customers)
 
   /** C6: document-store-style sink — per-row generated `id` (Cosmos
-    * system `id`, reference `README.md:118`), physically clustered by
-    * the partition key `/customer_id` (`README.md:129`). foreachBatch
+    * system `id`, reference `README.md:118`), each file sorted by the
+    * partition key `/customer_id` (`README.md:129`). foreachBatch
     * gives upsert-shaped batch writes on any target; here parquet.
     * Each micro-batch writes its own `batch=<id>` directory with
     * overwrite semantics, so a batch REPLAYED after a failure (run
     * again before its checkpoint committed) overwrites its previous
     * attempt instead of appending duplicates — the idempotence that
-    * makes foreachBatch exactly-once. Each batch is at most 4 files
-    * (tiny-file control at scale), each holding its rows sorted by
-    * `customer_id`, laid out as [[storeWrite]] describes: `id` and the
-    * columns of [[EnrichedPlain]] are written without a dictionary.
+    * makes foreachBatch exactly-once. Each input partition writes one
+    * file, its rows sorted by `customer_id`, in the same stage that
+    * decodes and joins them (no shuffle; as many files per batch as
+    * Spark's own file sink), laid out as [[storeWrite]] describes: `id`
+    * and the columns of [[EnrichedPlain]] are written without a
+    * dictionary.
     *
     * No per-batch value may enter generated code: Spark caches compiled
     * classes by their source text, so a batch id or seed written into
@@ -134,9 +136,8 @@ object StreamPipeline {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        storeWrite(batch.withColumn("id", SeededUuid.seeded_uuid(scala.util.Random.nextLong()))
-          .repartition(4, col("customer_id")), Seq("customer_id"),
-          "id" +: EnrichedPlain)
+        storeWrite(batch.withColumn("id", SeededUuid.seeded_uuid(scala.util.Random.nextLong())),
+          Seq("customer_id"), "id" +: EnrichedPlain)
           .parquet(s"$outDir/batch=$batchId")
       }
 

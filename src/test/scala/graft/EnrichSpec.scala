@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.gen.DataGen
 import graft.operators.Enrich
 import graft.sources.Tables
 
@@ -50,6 +51,47 @@ class EnrichSpec extends AnyFunSuite {
       Tables(spark, SparkTestBase.sf0001, "customer"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
+  }
+
+  test("enrichReference reads a small reference in one task and keeps a large one's partitions") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val orders = sampleOrders.toDF("orderID", "customerID", "amount")
+    def repartitions(customers: org.apache.spark.sql.DataFrame) =
+      Enrich.enrichReference(orders, customers).queryExecution.optimizedPlan
+        .collect { case r: Repartition => (r.numPartitions, r.shuffle) }
+    // about 0.5 MB and 2.6 GB estimated against the 64 MB advisory size;
+    // neither plan is run
+    assert(repartitions(DataGen.customersBatch(spark, 10000)) === Seq((1, false)))
+    assert(repartitions(DataGen.customersBatch(spark, 50000000L)) === Seq())
+    // the rule follows the session's advisory size
+    SparkTestBase.withConfs("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      assert(repartitions(DataGen.customersBatch(spark, 10000)) === Seq())
+    }
+  }
+
+  test("enrichReference estimates a file reference's size without starting a job") {
+    val dir = SparkTestBase.tempDir("graft-ref-estimate")
+    val csv = dir.resolve("customers.csv")
+    java.nio.file.Files.writeString(csv,
+      customersHead.map { case (i, n, c) => s"$i,$n,$c" }.mkString("\n"))
+    val custs = Tables.customersCsv(spark, csv.toString)
+    val orders = sampleOrders.toDF("orderID", "customerID", "amount")
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    }
+    SparkTestBase.drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    val df = try {
+      val df = Enrich.enrichReference(orders, custs)
+      SparkTestBase.drainListenerBus()
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs === 0)
+    assert(df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => (r.numPartitions, r.shuffle)
+    } === Seq((1, false)))
+    assert(df.count() === 5)
   }
 
   test("C4/C5 loaders: headerless CSV and multiline JSON round-trip") {

@@ -107,9 +107,7 @@ class SimilarityWindowsSpec extends AnyFunSuite {
   test("pqAdcTopKOnCodes (stored code table) matches train + pqAdcTopKWithModel") {
     val emb = graft.sources.Tables(spark, SparkTestBase.sf0001, "embeddings")
     val pq = Similarity.trainPqModel(emb)
-    val codes = Similarity.pqCodesAgainst(emb, pq)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
+    val codes = Similarity.pqCodesAgainst(emb, pq).localCheckpoint()
     val served = Similarity.pqAdcTopKOnCodes(emb, codes, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
     val self = Similarity.pqAdcTopKWithModel(emb, Similarity.trainPqModel(emb))
@@ -1043,9 +1041,7 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     val cmodel = Similarity.trainIvfModel(emb)
     val pq = Similarity.trainPqModel(emb)
     val asg = Similarity.ivfAssignmentsFor(emb, cmodel).localCheckpoint()
-    val codes = Similarity.pqCodesAgainst(emb, pq)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
+    val codes = Similarity.pqCodesAgainst(emb, pq).localCheckpoint()
     val served = Similarity.annIvfPqOnArtifacts(emb, asg, codes, cmodel, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
     val self = Similarity.annIvfPqWithModels(emb,
@@ -1996,9 +1992,7 @@ class SimilarityWindowsSpec extends AnyFunSuite {
     val cmodel = Similarity.trainIvfModel(emb)
     val pq = Similarity.trainResPqModel(emb, cmodel)
     val asg = Similarity.ivfAssignmentsFor(emb, cmodel).localCheckpoint()
-    val codes = Similarity.resPqCodesAgainst(emb, cmodel, pq)
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-      .localCheckpoint()
+    val codes = Similarity.resPqCodesAgainst(emb, cmodel, pq).localCheckpoint()
     val served = Similarity.annIvfPqResOnArtifacts(emb, asg, codes, cmodel, pq)
       .as[(Long, Long, Double, Long)].collect().toSet
     val trained = Similarity.trainIvfModel(emb)

@@ -29,6 +29,14 @@ object SparkTestBase {
 
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Waits until the listener bus has delivered every posted event (the
+    * wait is Spark-internal, so it is reached reflectively). */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** Runs `body` with the given session confs, restoring them after. */
   def withConfs[T](kv: (String, String)*)(body: => T): T = {
     val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -68,13 +68,16 @@ class StreamingSpec extends AnyFunSuite {
     val dir = SparkTestBase.tempDir("graft-stream")
     val in = dir.resolve("in"); val out = dir.resolve("out"); val ck = dir.resolve("ck")
     Files.createDirectories(in)
+    // enough repeats in each input file that a dictionary pays where the
+    // layout keeps one: each input file is written as its own store file
+    def repeats(r: Range) = r.map { i =>
+      s"""{"orderID":"b$i","customerID":${5 - i % 5},"amount":${i % 7}}"""
+    }.mkString("\n")
     Files.writeString(in.resolve("batch1.json"),
       """{"orderID":"a1","customerID":1,"amount":182}
-        |{"orderID":"a2","customerID":2,"amount":33}""".stripMargin)
-    // enough repeats that a dictionary pays where the layout keeps one
-    Files.writeString(in.resolve("batch2.json"), (0 until 300).map { i =>
-      s"""{"orderID":"b$i","customerID":${5 - i % 5},"amount":${i % 7}}"""
-    }.mkString("\n"))
+        |{"orderID":"a2","customerID":2,"amount":33}
+        |""".stripMargin + repeats(0 until 100))
+    Files.writeString(in.resolve("batch2.json"), repeats(100 until 300))
     val q = StreamPipeline.run(spark, StreamPipeline.FileOrders(in.toString),
       customersHead, out.toString, ck.toString,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -983,6 +986,63 @@ class StreamingSpec extends AnyFunSuite {
     assert((append, upsert) === ((0L, 0L)))
     // the triggers really went through the delta path
     assert(StreamPipeline.readUpserted(spark, dir.resolve("upsert").toString).count() === 520)
+  }
+
+  test("append trigger: the reference is read in one task and rows are written without a shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    implicit val sc = spark.sqlContext
+    val dir = SparkTestBase.tempDir("graft-append-jobs")
+    val out = dir.resolve("out")
+    val parts = 3
+    val mem = MemoryStream[OrderEvent](parts)
+    // the benchmark's reference: 10k rows over 32 partitions
+    val customers = DataGen.customersBatch(spark, 10000)
+    final case class Job(batch: Long, tasks: Int, broadcast: Boolean, stages: Seq[Int])
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val shuffled = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.add(Job(b.toLong, j.stageInfos.map(_.numTasks).sum,
+            Option(j.properties.getProperty("spark.job.tags")).exists(_.contains("broadcast")),
+            j.stageIds)))
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => shuffled.merge(t.stageId,
+          m.shuffleWriteMetrics.recordsWritten, (a: java.lang.Long, b: java.lang.Long) => a + b))
+    }
+    val rows = 300
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = StreamPipeline.writeEnriched(
+        graft.operators.Enrich.enrichReference(mem.toDF(), customers), out.toString,
+        dir.resolve("ck").toString).start()
+      try (0 until 4).foreach { b =>
+        mem.addData((0 until rows).map(i => OrderEvent(s"$b-$i", 1 + (i * 7919 + b) % 10000, i % 480)))
+        q.processAllAvailable()
+      } finally q.stop()
+      SparkTestBase.drainListenerBus()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val byBatch = jobs.asScala.toSeq.groupBy(_.batch)
+    assert(byBatch.keySet === (0L until 4L).toSet, jobs)
+    // steady triggers: the broadcast job in 1 task, the write in one task
+    // per input partition, and no stage of either writes shuffle
+    (1L until 4L).foreach { b =>
+      val js = byBatch(b)
+      assert(js.size === 2, js)
+      assert(js.filter(_.broadcast).map(_.tasks) === Seq(1), js)
+      assert(js.map(_.tasks).sum === 1 + parts, js)
+      js.flatMap(_.stages).foreach(s => assert(shuffled.getOrDefault(s, 0L) === 0L, s"stage $s of $js"))
+    }
+    // each batch: at most one file per input partition, each sorted
+    (0 until 4).foreach { b =>
+      val files = parquetFiles(out.resolve(s"batch=$b"))
+      assert(files.nonEmpty && files.size <= parts, files)
+      files.foreach { f =>
+        val ids = fileColumn(f, "customer_id")(_.getLong(_, 0))
+        assert(ids === ids.sorted, f)
+      }
+      assert(files.map(fileColumn(_, "order_id")(_.getString(_, 0)).size).sum === rows)
+    }
   }
 
   test("append sink ids are v4 UUIDs, disjoint across identically partitioned batches") {

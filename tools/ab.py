@@ -18,13 +18,20 @@ BENCHMARK.json and every recorded wall-clock metric:
 - the pairs the change won, ties counting for neither;
 - for gated metrics, whether a gain holds (the change wins at least 9/10
   of the pairs and the medians differ, in the better direction, by more
-  than the parent's Q3-Q1) and whether the bound holds (the change's
+  than the parent's Q3-Q1; "n<10" when fewer than 10 pairs had both runs
+  correct, too few to tell) and whether the bound holds (the change's
   median is no worse than the parent's by more than the metric's bound).
 
 A run fails when run.py exits non-zero or its result is not correct or
 counts failed operations. Every run is made whatever fails; the script
 then exits 1 if any run failed, else 0. --out writes every run's result
 and wall-clock metrics as JSON.
+
+    python3 tools/ab.py --report runs1.json runs2.json ...
+
+re-prints the table from saved --out files without running anything,
+pooling the pairs of every file by workload, so that sets run in
+separate sessions combine into one table.
 """
 import argparse
 import json
@@ -35,6 +42,9 @@ import sys
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 SIDES = ("parent", "change")
+# fewer pairs than this cannot show a gain: at 3 pairs, identical code
+# wins all three one time in eight
+MIN_PAIRS = 10
 
 
 def run(checkout, workload, seed, seconds):
@@ -83,25 +93,32 @@ def report(workload, pairs, spec, lower_is_better):
             gain = bound = "-"
             if n in spec:
                 gap = (ma - mb) if lower else (mb - ma)
-                gain = "yes" if wins >= 0.9 * len(got) and gap > qa3 - qa1 else "no"
+                if len(got) < MIN_PAIRS:
+                    gain = f"n<{MIN_PAIRS}"
+                else:
+                    gain = "yes" if wins >= 0.9 * len(got) and gap > qa3 - qa1 else "no"
                 worse = -gap / abs(ma) if ma else 0.0
                 bound = "holds" if worse <= spec[n]["bound"] else "BROKEN"
             print(f"  {n:24s} {ma:12.4g} [{qa1:.4g}-{qa3:.4g}]".ljust(57)
                   + f" {mb:12.4g} [{qb1:.4g}-{qb3:.4g}]".ljust(31)
-                  + f" {d:+8.1%} {wins:>3d}/{len(got):<2d}  {gain:4s}  {bound}")
+                  + f" {d:+8.1%} {wins:>3d}/{len(got):<2d}  {gain:5s} {bound}")
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("parent", type=pathlib.Path)
-    ap.add_argument("change", type=pathlib.Path)
-    ap.add_argument("--workload", action="append", required=True,
+    ap.add_argument("parent", type=pathlib.Path, nargs="?")
+    ap.add_argument("change", type=pathlib.Path, nargs="?")
+    ap.add_argument("--report", type=pathlib.Path, nargs="+", metavar="RUNS.json",
+                    help="re-print the table from saved --out files, pooled by workload")
+    ap.add_argument("--workload", action="append",
                     choices=("enrich_append", "upsert_growing"))
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
+    ap.add_argument("--seed", type=int, help="seed of the first pair")
     ap.add_argument("--seconds", type=int, default=6)
     ap.add_argument("--out", type=pathlib.Path)
     a = ap.parse_args()
+    if not a.report and not (a.parent and a.change and a.workload and a.seed is not None):
+        ap.error("PARENT, CHANGE, --workload and --seed are required unless --report is given")
 
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     spec = {m["name"]: m for m in bench["end_to_end"]}
@@ -109,6 +126,17 @@ def main():
 
     def lower_is_better(name):
         return layer.get(f"wall.{name}", {}).get("better", "lower") == "lower"
+
+    if a.report:
+        pooled = {}
+        for i, path in enumerate(a.report):
+            for r in json.loads(path.read_text()):
+                pair = pooled.setdefault(r["workload"], {}).setdefault((i, r["pair"]), {})
+                pair[r["side"]] = r
+        for w, pairs in pooled.items():
+            report(w, [p for p in pairs.values() if all(s in p for s in SIDES)],
+                   spec, lower_is_better)
+        return
 
     checkouts = {"parent": a.parent.resolve(), "change": a.change.resolve()}
     runs, failed = [], 0

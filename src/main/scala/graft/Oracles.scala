@@ -4091,8 +4091,8 @@ private[graft] object Oracles {
          FROM est"""),
     // x6_hll_global's register/estimate chain WITHOUT the exact-audit
     // branch — the serve path folds stored sketches only, so its output is
-    // what a raw-free plan can produce (the Scala HLL sites re-derive the
-    // same hash/m/K/estimate; see CLAUDE.md)
+    // what a raw-free plan can produce (Profiling's register table and
+    // its one estimate fold derive the same hash/m/K/estimate; see CLAUDE.md)
     "x6_hll_serve" ->
       (hllHToS + """
            FROM grid)

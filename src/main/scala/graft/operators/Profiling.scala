@@ -203,44 +203,59 @@ object Profiling {
     *
     * 100 TB plan: one shuffle of (day, register) partial maxes
     * (map-side combine collapses each partition to ≤ 64·days rows),
-    * then O(days·64) everything. The register grid cross join is
-    * O(days)×64 — constant-side broadcast.
+    * then O(days·64) everything.
     *
-    * `withExact = false` is the 100 TB form: it drops the
-    * `countDistinct` audit branch (whose shuffle state is the user set
-    * itself — the thing the sketch exists to avoid) and with it the
-    * `n_exact`/`rel_err` columns; the estimate arithmetic is shared,
-    * so it is bit-identical either way (ProfilingSpec pins this). The
-    * audit form stays the default and is what the oracle checks. */
-  def hllUsers(events: DataFrame, withExact: Boolean = true): DataFrame = {
-    val base = hllBase(events)
-    val grid = base.select(col("day")).distinct()
-      .crossJoin(events.sparkSession.range(64).toDF("j"))
-      .join(hllRegisters(events), Seq("day", "j"), "left")
-      .select(col("day"), coalesce(col("reg"), lit(0)).as("reg"))
-    val sums = grid.groupBy(col("day")).agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), 26 - reg)")).as("z"),
-      sum(when(col("reg") === 0, 1L).otherwise(0L)).as("v_empty"))
+    * `withExact = false` is the 100 TB form, [[hllUsersFromRegisters]]
+    * over the inline register table: it drops the `countDistinct`
+    * audit branch (whose shuffle state is the user set itself — the
+    * thing the sketch exists to avoid) and with it the
+    * `n_exact`/`rel_err` columns; both forms run the one fold,
+    * `hllFold`, so the estimate is bit-identical either way
+    * (ProfilingSpec pins this). The audit form stays the default and
+    * is what the oracle checks. */
+  def hllUsers(events: DataFrame, withExact: Boolean = true): DataFrame =
+    if (!withExact) hllUsersFromRegisters(hllRegisters(events))
+    else {
+      val exact = hllBase(events).groupBy(col("day"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      hllFold(hllRegisters(events), "day").join(exact, Seq("day"))
+        .select(col("day"), col("n_exact"), col("v_empty"),
+          round(col("est"), 4).as("hll_users"),
+          round((col("est") - col("n_exact").cast("double")) /
+            col("n_exact").cast("double"), 6).as("rel_err"))
+    }
+
+  /** The per-day estimate `(day, v_empty, hll_users)` served from a
+    * STORED [[hllRegisters]] table — no raw events. A streaming
+    * register table (the batch grain run as an Update/Complete-mode
+    * `max` aggregation, O(days·64) state) serves it the same way. */
+  def hllUsersFromRegisters(stored: DataFrame): DataFrame =
+    hllFold(stored, "day")
+      .select(col("day"), col("v_empty"), round(col("est"), 4).as("hll_users"))
+
+  /** The one HLL estimate fold: sparse `(keys…, j, reg)` register rows,
+    * at most one per (keys, j), to `(keys…, v_empty, est)` with `est`
+    * unrounded. An absent register is 0, so with `count` present
+    * registers Z = Σ 2^(26−reg) + (64 − count)·2^26 and
+    * V = (64 − count) + #(reg = 0) — the 64-register grid's sums
+    * without materializing the grid. With no keys an empty input still
+    * gives its one row (all registers 0, estimate 0). */
+  private def hllFold(regs: DataFrame, keys: String*): DataFrame = {
+    val absent = lit(64L) - count(lit(1))
+    val sums = regs.groupBy(keys.map(col): _*).agg(
+      (coalesce(sum(expr("shiftleft(CAST(1 AS BIGINT), 26 - reg)")), lit(0L)) +
+        absent * lit(67108864L)).as("z"),
+      (absent + count(when(col("reg") === 0, 1))).as("v_empty"))
     val raw = lit(0.709) * lit(64.0) * lit(64.0) * lit(67108864.0) /
       col("z").cast("double")
     val est = when(col("v_empty") > 0 && raw <= lit(160.0),
       lit(64.0) * log(lit(64.0) / col("v_empty").cast("double"))).otherwise(raw)
-    if (!withExact)
-      sums.select(col("day"), col("v_empty"), round(est, 4).as("hll_users"))
-    else {
-      val exact = base.groupBy(col("day"))
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      sums.join(exact, Seq("day"))
-        .select(col("day"), col("n_exact"), col("v_empty"),
-          round(est, 4).as("hll_users"),
-          round((est - col("n_exact").cast("double")) /
-            col("n_exact").cast("double"), 6).as("rel_err"))
-    }
+    sums.select(keys.map(col) :+ col("v_empty") :+ est.as("est"): _*)
   }
 
   /** (day, user_id, h) base frame of the HLL/KMV family — the house
     * 31-bit md5-derived user hash (identical CTE `h` in the oracles). */
-  private def hllBase(events: DataFrame): DataFrame = events.select(
+  private[graft] def hllBase(events: DataFrame): DataFrame = events.select(
     expr("unix_micros(ts) div 86400000000").as("day"),
     col("user_id"),
     (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
@@ -250,8 +265,11 @@ object Profiling {
     * every later rollup ([[hllGlobalFromRegisters]], month-over-month
     * windows, cross-cluster merges) folds sketch rows instead of
     * re-reading raw events. Sparse: a (day, j) absent here means
-    * register 0 (consumers re-densify against the 64-register grid).
-    * O(days·64) rows regardless of corpus size. */
+    * register 0. O(days·64) rows regardless of corpus size. On a
+    * streaming frame it is the register maintainer: registers merge by
+    * `max`, so continuous ingestion is one Update/Complete-mode
+    * aggregation whose state is the sketch (StreamingSpec pins every
+    * serve fold over the streamed table ≡ batch). */
   def hllRegisters(events: DataFrame): DataFrame =
     hllBase(events)
       .select(col("day"), col("h").bitwiseAND(lit(63L)).as("j"),
@@ -267,28 +285,17 @@ object Profiling {
     * O(days·64·window) sketch rows, no raw re-read, no re-count
     * (this is exactly why HLL registers are the persisted artifact:
     * rolling windows, month rollups, and cross-shard merges are all
-    * the same MAX-fold). Estimate arithmetic identical to
-    * [[hllUsers]]; report days are the OBSERVED days (leading
-    * partial windows by construction, like the exact operator). */
+    * the same MAX-fold). Estimate arithmetic is `hllFold`; report
+    * days are the OBSERVED days (leading partial windows by
+    * construction, like the exact operator). */
   def rollingActiveFromRegisters(stored: DataFrame, window: Int = 7): DataFrame = {
-    val spark = stored.sparkSession
     val observed = stored.select(col("day")).distinct()
     val fanned = stored
       .select(explode(sequence(col("day"), col("day") + (window - 1))).as("day"),
         col("j"), col("reg"))
       .groupBy(col("day"), col("j")).agg(max(col("reg")).as("reg"))
-    val grid = observed
-      .crossJoin(broadcast(spark.range(64).toDF("j")))
-      .join(fanned, Seq("day", "j"), "left")
-      .select(col("day"), coalesce(col("reg"), lit(0)).as("reg"))
-    val sums = grid.groupBy(col("day")).agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), 26 - reg)")).as("z"),
-      sum(when(col("reg") === 0, 1L).otherwise(0L)).as("v_empty"))
-    val raw = lit(0.709) * lit(64.0) * lit(64.0) * lit(67108864.0) /
-      col("z").cast("double")
-    val est = when(col("v_empty") > 0 && raw <= lit(160.0),
-      lit(64.0) * log(lit(64.0) / col("v_empty").cast("double"))).otherwise(raw)
-    sums.select(col("day"), col("v_empty"), round(est, 4).as("hll_active"))
+    hllFold(fanned.join(observed, Seq("day")), "day")
+      .select(col("day"), col("v_empty"), round(col("est"), 4).as("hll_active"))
   }
 
   /** [[rollingActiveFromRegisters]] with the register table built
@@ -303,54 +310,33 @@ object Profiling {
     * storage) — the scoring plan never touches raw events, which is
     * the entire point of persisting sketches: a month-over-month (or
     * 1000-executor cross-shard) rollup costs O(stored sketch rows),
-    * not a raw re-read. Estimate arithmetic identical to
-    * [[hllUsersGlobal]]; output is the estimate columns only — the
-    * exact-audit columns are precisely what a raw-free plan cannot
-    * and should not produce. */
-  def hllGlobalFromRegisters(stored: DataFrame): DataFrame = {
-    val merged = stored.groupBy(col("j")).agg(max(col("reg")).as("reg"))
-    val grid = stored.sparkSession.range(64).toDF("j")
-      .join(merged, Seq("j"), "left")
-      .select(coalesce(col("reg"), lit(0)).as("reg"))
-    val sums = grid.agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), 26 - reg)")).as("z"),
-      sum(when(col("reg") === 0, 1L).otherwise(0L)).as("v_empty"))
-    val raw = lit(0.709) * lit(64.0) * lit(64.0) * lit(67108864.0) /
-      col("z").cast("double")
-    val est = when(col("v_empty") > 0 && raw <= lit(160.0),
-      lit(64.0) * log(lit(64.0) / col("v_empty").cast("double"))).otherwise(raw)
-    sums.select(col("v_empty"), round(est, 4).as("hll_users"))
-  }
+    * not a raw re-read. Output is the estimate columns of
+    * [[hllUsersGlobal]] only — the exact-audit columns are precisely
+    * what a raw-free plan cannot and should not produce. */
+  def hllGlobalFromRegisters(stored: DataFrame): DataFrame =
+    hllFold(mergeDays(stored))
+      .select(col("v_empty"), round(col("est"), 4).as("hll_users"))
+
+  /** All days' registers MAX-folded into one `(j, reg)` sketch. */
+  private def mergeDays(regs: DataFrame): DataFrame =
+    regs.groupBy(col("j")).agg(max(col("reg")).as("reg"))
 
   /** The MERGE property of [[hllUsers]], inside the hard oracle gate:
     * global distinct users estimated by MAX-folding the per-day
     * register tables into one sketch — the exact operation a
     * 1000-executor rollup (or a month-over-month re-aggregation of
     * stored per-day sketches) runs, without ever touching the raw
-    * rows again. Estimate arithmetic identical to [[hllUsers]]. */
+    * rows again. */
   def hllUsersGlobal(events: DataFrame): DataFrame = {
-    val base = hllBase(events)
-    val merged = hllRegisters(events)
-      .groupBy(col("j")).agg(max(col("reg")).as("reg"))
-    val grid = events.sparkSession.range(64).toDF("j")
-      .join(merged, Seq("j"), "left")
-      .select(coalesce(col("reg"), lit(0)).as("reg"))
-    val sums = grid.agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), 26 - reg)")).as("z"),
-      sum(when(col("reg") === 0, 1L).otherwise(0L)).as("v_empty"))
-    val exact = base.agg(countDistinct(col("user_id")).as("n_exact"))
-    val raw = lit(0.709) * lit(64.0) * lit(64.0) * lit(67108864.0) /
-      col("z").cast("double")
-    val est = when(col("v_empty") > 0 && raw <= lit(160.0),
-      lit(64.0) * log(lit(64.0) / col("v_empty").cast("double"))).otherwise(raw)
-    sums.crossJoin(exact)
+    val exact = hllBase(events).agg(countDistinct(col("user_id")).as("n_exact"))
+    hllFold(mergeDays(hllRegisters(events))).crossJoin(exact)
       .select(col("n_exact"), col("v_empty"),
-        round(est, 4).as("hll_users"),
+        round(col("est"), 4).as("hll_users"),
         // empty corpus: the grand aggregate still emits its one row
         // (0 exact, all registers 0 → estimate 0) — ANSI division
         // throws on the 0/0 rel_err, so pin it to 0 explicitly
         round(when(col("n_exact") === 0, lit(0.0))
-          .otherwise((est - col("n_exact").cast("double")) /
+          .otherwise((col("est") - col("n_exact").cast("double")) /
             col("n_exact").cast("double")), 6).as("rel_err"))
   }
 
@@ -584,7 +570,10 @@ object Profiling {
     * answered from the stored rows without re-scanning events. Rank
     * error is bounded by the bucket mass — width trades accuracy for
     * sketch size, the same knob as CMS width. Build: one map-side-
-    * combined aggregation, no window, no sort. */
+    * combined aggregation, no window, no sort. On a streaming frame it
+    * is the incremental maintainer: the aggregation state IS the
+    * sketch, and [[histQuantilesFrom]] reads the sink table (spec pins
+    * stream-final ≡ batch sketch of the union). */
   def histSketch(events: DataFrame, width: Double = 5.0): DataFrame =
     events
       .select(col("event_type"),
@@ -633,7 +622,9 @@ object Profiling {
 
   /** X6 time-bucketed histogram sketch: [[histSketch]] at (type, day)
     * grain — the nightly artifact the rolling read merges. Day =
-    * `unix_micros(ts) div 86400000000`, the x6_trend convention. */
+    * `unix_micros(ts) div 86400000000`, the x6_trend convention. On a
+    * streaming frame its state is the O(days · types · range/width)
+    * daily-sketch table [[histRollingFromDaily]] serves from. */
   def histDaily(events: DataFrame, width: Double = 5.0): DataFrame =
     events
       .select(col("event_type"),
@@ -661,9 +652,9 @@ object Profiling {
     histRollingFromDaily(histDaily(events, width), width, windowDays)
 
   /** [[histRolling]] answered from a STORED daily-sketch table — the
-    * serve form a resident pipeline uses: the streaming aggregation
-    * ([[graft.streaming.StreamPipeline.histDailyStream]]) maintains
-    * the (type, day, bucket) counters and this read merges them, so
+    * serve form a resident pipeline uses: [[histDaily]] run as a
+    * streaming aggregation maintains the (type, day, bucket) counters
+    * and this read merges them, so
     * rolling quantiles never touch raw events (spec pins sink-served
     * ≡ batch). */
   def histRollingFromDaily(dsk: DataFrame, width: Double = 5.0,

@@ -85,7 +85,15 @@ object Windows {
     * unknown type is a schema event, not a rate anomaly). */
   def rateAnomalyAgainst(events: DataFrame, baseline: DataFrame,
                          threshold: Double = 2.0): DataFrame =
-    hourlyCounts(events).join(broadcast(baseline), Seq("event_type"))
+    rateScored(hourlyCounts(events).join(broadcast(baseline), Seq("event_type")),
+      threshold)
+
+  /** The z step of [[rateAnomalyAgainst]] over (event_type, ws_us, n)
+    * counts carrying their type's (c, s, q) moments: the integer
+    * Q·C − S² > 0 guard, the rounded z, and the |z| ≥ threshold
+    * filter. `StreamPipeline.anomalyStream` runs it on a stream. */
+  private[graft] def rateScored(counts: DataFrame, threshold: Double): DataFrame =
+    counts
       .filter(col("q") * col("c") - col("s") * col("s") > 0)
       .withColumn("z", round((col("n") * col("c") - col("s")).cast("double") /
         sqrt((col("q") * col("c") - col("s") * col("s")).cast("double")), 4))
@@ -101,7 +109,8 @@ object Windows {
     * gaps-and-islands formulation: a session starts where the gap from
     * the previous event exceeds `gap`; the running sum of starts
     * numbers the sessions. Streaming equivalent: `session_window(ts,
-    * gap)` (see graft.streaming.StreamOps). One shuffle on user_id. */
+    * gap)` (see [[graft.streaming.StreamPipeline.sessionCounts]]). One
+    * shuffle on user_id. */
   def sessions(events: DataFrame, gapMinutes: Int = 5): DataFrame = {
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -583,11 +592,11 @@ object Windows {
   def abTest(events: DataFrame, zBar: Double = 1.96): DataFrame =
     abTestFromMoments(abMoments(events), zBar)
 
-  /** The per-(event_type, variant) moment grain under [[abTest]] —
-    * also the exact shape [[graft.streaming.StreamPipeline
-    * .abMomentsStream]] maintains incrementally (state = O(types·2)
-    * counter rows forever). */
-  private[graft] def abMoments(events: DataFrame): DataFrame = {
+  /** The per-(event_type, variant) moment grain under [[abTest]]. On
+    * a streaming frame it is the incremental maintainer (state =
+    * O(types·2) counter rows forever) whose sink table
+    * [[abTestFromMoments]] serves. */
+  def abMoments(events: DataFrame): DataFrame = {
     val vq = floor(col("value") * 100 + 0.5).cast("long")
     val arm = Sampling.hash60(col("user_id")) % 2
     events
@@ -930,19 +939,14 @@ object Windows {
     r1.unionByName(r2).unionByName(r3)
   }
 
-  /** Shared head of [[dowProfile]] and [[dowAnomaly]]: per
-    * (event_type, day-of-week) exact integer count moments over the
-    * daily-count frame. Day identity is the integer
-    * `unix_micros div 86_400_000_000` (the [[dailyTrend]] rule); dow
-    * is `(day + 4) % 7` so 0 = Sunday (epoch day 0 was a Thursday) —
-    * pure int64 arithmetic both engines reproduce bit-identically.
-    * Counts are integers, so the per-(type,dow) moments (n days, Σn,
-    * Σn²) are EXACT int64 sums — no float enters until the final
-    * rounded division of each consumer. */
-  /** The (event_type, day) count grain under the dow family — also
-    * the exact shape [[graft.streaming.StreamPipeline.dowDailyStream]]
-    * maintains incrementally (state = O(types·days) rows). */
-  private[graft] def dailyCounts(events: DataFrame): DataFrame =
+  /** The (event_type, day) count grain under the dow family. Day
+    * identity is the integer `unix_micros div 86_400_000_000` (the
+    * [[dailyTrend]] rule); dow is `(day + 4) % 7` so 0 = Sunday (epoch
+    * day 0 was a Thursday), and the per-(type, dow) moments over these
+    * counts are exact int64 sums. On a streaming frame it is the
+    * incremental maintainer (state = O(types·days) rows) whose sink
+    * table [[dowBaselineFromDaily]] folds. */
+  def dailyCounts(events: DataFrame): DataFrame =
     events.select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))

@@ -5,12 +5,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.functions.{OrderEventDecode, SeededUuid}
-import graft.operators.{Enrich, Sampling}
+import graft.operators.{Enrich, Windows}
 import graft.sources.Tables
 
 /** The reference pipeline as Structured Streaming (SURVEY §3.2):
@@ -556,32 +556,25 @@ object StreamPipeline {
     // spans only (the x4_span_incremental nightly shape, live)
     val staticSpanIdx = spanIndex.map(i =>
       graft.operators.Dedup.spanIndex(i).localCheckpoint())
-    docs
-      .withColumn("fp", md5(col("text")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("fp")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // rolling wins over static: read the CURRENT generation at
-        // each trigger, so a refresh() between triggers takes effect
-        // without restarting the query
-        curateBatch(batch, outDir, batchId, bench, minQuality, nBuckets,
-          rollingIndex.map(_.current).orElse(staticIdx),
-          staticSpanIdx, maxSpanFrac)
-        // auto-refresh epilogue: runs AFTER this batch's upsert
-        // committed, so the rolled generation contains it. batchId is
-        // replay-stable, so the cadence is too. The snapshot of an
-        // uninitialized store is an EMPTY schemaless frame — nothing to
-        // index yet, skip (the live generation already gates nothing).
-        if (autoRefreshEvery > 0 && rollingIndex.isDefined &&
-            (batchId + 1) % autoRefreshEvery == 0) {
-          val snap = readUpserted(batch.sparkSession, outDir)
-          if (snap.columns.contains("text"))
-            rollingIndex.get.refresh(snap.select(col("doc_id"), col("text")))
-        }
+    fingerprintIngest(docs, watermark, checkpointDir) { (batch, batchId) =>
+      // rolling wins over static: read the CURRENT generation at
+      // each trigger, so a refresh() between triggers takes effect
+      // without restarting the query
+      curateBatch(batch, outDir, batchId, bench, minQuality, nBuckets,
+        rollingIndex.map(_.current).orElse(staticIdx),
+        staticSpanIdx, maxSpanFrac)
+      // auto-refresh epilogue: runs AFTER this batch's upsert
+      // committed, so the rolled generation contains it. batchId is
+      // replay-stable, so the cadence is too. The snapshot of an
+      // uninitialized store is an EMPTY schemaless frame — nothing to
+      // index yet, skip (the live generation already gates nothing).
+      if (autoRefreshEvery > 0 && rollingIndex.isDefined &&
+          (batchId + 1) % autoRefreshEvery == 0) {
+        val snap = readUpserted(batch.sparkSession, outDir)
+        if (snap.columns.contains("text"))
+          rollingIndex.get.refresh(snap.select(col("doc_id"), col("text")))
       }
+    }
   }
 
   /** One micro-batch of the streaming curation (exposed for replay
@@ -656,31 +649,41 @@ object StreamPipeline {
                        watermark: String = "10 minutes",
                        nBuckets: Int = 8,
                        autoRefreshEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    assets
+    fingerprintIngest(assets, watermark, checkpointDir) { (batch, batchId) =>
+      // one volatile read hands out BOTH generation frames, so
+      // candidates and scores stay within one generation even if a
+      // refresh lands mid-batch
+      val (idxBuckets, idxVectors) = rollingIndex.current
+      val vecs = graft.operators.Multimodal.mediaEmbedding(batch)
+      val near = graft.operators.Similarity
+        .lshDedupAgainstStoredBuckets(vecs, idxBuckets, idxVectors, tau)
+        .select(col("vec_id").as("doc_id"))
+      val fresh = batch.join(near, Seq("doc_id"), "left_anti")
+      upsertBatch(fresh, outDir, batchId, keyCol = "fp", nBuckets = nBuckets)
+      if (autoRefreshEvery > 0 && (batchId + 1) % autoRefreshEvery == 0) {
+        val snap = readUpserted(batch.sparkSession, outDir)
+        if (snap.columns.contains("text"))
+          rollingIndex.refresh(graft.operators.Multimodal.mediaEmbedding(
+            snap.select(col("doc_id"), col("text"))))
+      }
+    }
+
+  /** The ingest head both fingerprint-gated maintainers share: md5
+    * content fingerprint `fp`, watermark on `ts`,
+    * `dropDuplicatesWithinWatermark("fp")` (exact dedup across
+    * micro-batches, state bounded by the horizon), then an append-mode
+    * `foreachBatch` writer checkpointed at `checkpointDir`. */
+  private def fingerprintIngest(docs: DataFrame, watermark: String,
+                                checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+    docs
       .withColumn("fp", md5(col("text")))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("fp")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one volatile read hands out BOTH generation frames, so
-        // candidates and scores stay within one generation even if a
-        // refresh lands mid-batch
-        val (idxBuckets, idxVectors) = rollingIndex.current
-        val vecs = graft.operators.Multimodal.mediaEmbedding(batch)
-        val near = graft.operators.Similarity
-          .lshDedupAgainstStoredBuckets(vecs, idxBuckets, idxVectors, tau)
-          .select(col("vec_id").as("doc_id"))
-        val fresh = batch.join(near, Seq("doc_id"), "left_anti")
-        upsertBatch(fresh, outDir, batchId, keyCol = "fp", nBuckets = nBuckets)
-        if (autoRefreshEvery > 0 && (batchId + 1) % autoRefreshEvery == 0) {
-          val snap = readUpserted(batch.sparkSession, outDir)
-          if (snap.columns.contains("text"))
-            rollingIndex.refresh(graft.operators.Multimodal.mediaEmbedding(
-              snap.select(col("doc_id"), col("text"))))
-        }
-      }
+      .foreachBatch(f)
 
   /** X6 streaming Count-Min sketch: the counter grid maintained
     * incrementally over a document stream — CMS counters are plain
@@ -698,67 +701,6 @@ object StreamPipeline {
     graft.operators.Profiling.cmsProbes(
       docs.select(explode(split(col("text"), " ")).as("token")), depth, width)
       .groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("c"))
-
-  /** X6 streaming histogram sketch — [[graft.operators.Profiling
-    * .histSketch]]'s bucket counters maintained incrementally over an
-    * event stream: the aggregation state IS the quantile sketch,
-    * bounded at O(types · range/width) rows forever; any later
-    * quantile probe reads the sink table through
-    * [[graft.operators.Profiling.histQuantilesFrom]] with no event
-    * replay (spec pins stream-final ≡ batch sketch of the union). */
-  def histSketchStream(events: DataFrame, width: Double = 5.0): DataFrame =
-    events
-      .select(col("event_type"),
-        floor(col("value") / lit(width)).cast("long").as("bucket"))
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-
-  /** [[histSketchStream]] at (type, DAY, bucket) grain — the state IS
-    * the daily-sketch table [[graft.operators.Profiling
-    * .histRollingFromDaily]] serves rolling quantiles from: the
-    * stream maintains O(days · types · range/width) counters and the
-    * rolling read never replays events (spec pins sink-served rolling
-    * ≡ batch [[graft.operators.Profiling.histRolling]]). */
-  def histDailyStream(events: DataFrame, width: Double = 5.0): DataFrame =
-    events
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("day"),
-        floor(col("value") / lit(width)).cast("long").as("bucket"))
-      .groupBy(col("event_type"), col("day"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-
-  /** X6 streaming daily-count maintainer for the dow-seasonality
-    * family — the (event_type, day) counts [[graft.operators.Windows
-    * .dowBaselineFromDaily]] folds into the weekday moment baseline:
-    * the aggregation state is O(types · days) rows forever, the
-    * baseline fold and [[graft.operators.Windows.dowAnomalyAgainst]]
-    * scoring read the SINK table with no event replay (spec pins
-    * store-served baseline + scores ≡ batch, through the physical
-    * `graft_orders` complete-mode epoch-replace sink — the nightly
-    * artifact shape). */
-  def dowDailyStream(events: DataFrame): DataFrame =
-    events
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"))
-
-  /** X6 streaming A/B moment maintainer — the per-(event_type,
-    * variant) exact centi-quantized counters [[graft.operators
-    * .Windows.abTestFromMoments]] reads: the aggregation state is
-    * O(types · 2) rows forever (counts and integer sums just add —
-    * the mergeable-moment property the batch operator documents), so
-    * the experimentation readout is served from the SINK table with
-    * no event replay (spec pins store-served ≡ batch through the
-    * physical `graft_orders` complete-mode sink). */
-  def abMomentsStream(events: DataFrame): DataFrame =
-    events
-      .select(col("event_type"),
-        (Sampling.hash60(col("user_id")) % 2).as("variant"),
-        floor(col("value") * 100 + 0.5).cast("long").as("v"))
-      .groupBy(col("event_type"), col("variant"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
 
   /** X6 streaming: tumbling event-time windows with watermarked late
     * data drop. Same expressions as the batch Windows.tumbling. */
@@ -786,77 +728,16 @@ object StreamPipeline {
       .select(unix_micros(col("w.start")).as("ws_us"),
         col("n_users"), col("n_events"))
 
-  /** X6 streaming HyperLogLog distinct users per day — the streaming
-    * form of [[graft.operators.Profiling.hllUsers]], and the proof of
-    * that sketch's design claim: registers MERGE, so continuous
-    * ingestion is just per-key max-folding. State per day key is the
-    * 64-register int array (constant size, no user set anywhere), via
-    * `flatMapGroupsWithState` — chained streaming aggregations
-    * (register max, then harmonic sum) would need two stateful aggs,
-    * which structured streaming rejects; one custom-state operator
-    * holds the registers and re-emits the day's refreshed estimate
-    * each batch (Update mode).
-    *
-    * The hash/rho/estimate arithmetic is IDENTICAL to the batch
-    * operator (hash and rho computed in the plan with the same column
-    * expressions; the estimate re-derived in Scala with the same
-    * operand order and HALF_UP 4-digit rounding), pinned by
-    * StreamingSpec: after processAllAvailable the last emitted row per
-    * day equals the batch operator's `(day, hll_users)` exactly.
-    *
-    * No timeout: day keys are naturally bounded (one per day of event
-    * time) and a sketch row is the thing you KEEP; a retention window
-    * would evict days past it with the [[milestoneAlerts]] timer
-    * discipline. */
-  def hllUsersStream(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    val hashed = events.select(
-      expr("unix_micros(ts) div 86400000000").as("day"),
-      (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
-      .select(col("day"),
-        col("h").bitwiseAND(lit(63L)).cast("int").as("j"),
-        when(shiftright(col("h"), 6) === 0, lit(26))
-          .otherwise(lit(26) - length(bin(shiftright(col("h"), 6))))
-          .cast("int").as("rho"))
-      .as[(Long, Int, Int)]
-    hashed.groupByKey(_._1).flatMapGroupsWithState(
-      OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-      (day: Long, it: Iterator[(Long, Int, Int)],
-       state: GroupState[(Array[Int], Long)]) =>
-        var (regs, n) = state.getOption.getOrElse((new Array[Int](64), 0L))
-        it.foreach { case (_, j, rho) =>
-          n += 1
-          if (rho > regs(j)) regs(j) = rho
-        }
-        state.update((regs, n))
-        var z = 0L; var v = 0
-        var i = 0
-        while (i < 64) {
-          z += 1L << (26 - regs(i))
-          if (regs(i) == 0) v += 1
-          i += 1
-        }
-        // same operand order as the batch estimate expression
-        val raw = 0.709 * 64.0 * 64.0 * 67108864.0 / z.toDouble
-        val est = if (v > 0 && raw <= 160.0) 64.0 * math.log(64.0 / v) else raw
-        val rounded = BigDecimal(est)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        Iterator.single((day, n, rounded))
-    }.toDF("day", "n_events", "hll_users")
-  }
-
   /** X6 streaming KMV audience signature — the streaming form of
     * [[graft.operators.Profiling.kmvSignatures]], proving the OTHER
     * sketch of the family merges too: the k smallest distinct user
     * hashes of a day are exactly maintainable under continuous
     * ingestion because kmin_k(A ∪ B) = kmin_k(kmin_k(A) ∪ B) — fold
     * each micro-batch's hashes into the stored k-set and the state
-    * never exceeds k longs per day key. Same
-    * `flatMapGroupsWithState` shape as [[hllUsersStream]] (one
-    * custom-state operator instead of a rejected chain of stateful
-    * aggs); each batch re-emits the day's refreshed signature as a
+    * never exceeds k longs per day key. The k-set lives in
+    * `flatMapGroupsWithState` state (a k-smallest set is not a
+    * streaming aggregate, and a rank window is not a streaming
+    * operator); each batch re-emits the day's refreshed signature as a
     * SORTED array (Update mode), so the latest row per day IS the
     * batch operator's signature set — StreamingSpec pins that
     * equality after multi-batch ingestion, and
@@ -864,18 +745,15 @@ object StreamPipeline {
     * estimator can run directly on the emitted signature table
     * without touching raw events (the x6_hll_serve discipline).
     *
-    * Hash arithmetic identical to the batch sketch (house md5-derived
-    * 31-bit hash, computed in the plan with the same column
-    * expressions). No timeout: day keys are bounded by event time and
-    * a signature is the thing you keep. */
+    * `(day, h)` comes from the batch sketch's own base frame
+    * (`Profiling.hllBase`). No timeout: day keys are
+    * bounded by event time and a signature is the thing you keep. */
   def audienceKmvStream(events: DataFrame, k: Int = 32): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    val hashed = events.select(
-      expr("unix_micros(ts) div 86400000000").as("day"),
-      (Sampling.hash60(col("user_id")) % lit(2147483647L)).as("h"))
-      .as[(Long, Long)]
+    val hashed = graft.operators.Profiling.hllBase(events)
+      .select(col("day"), col("h")).as[(Long, Long)]
     hashed.groupByKey(_._1).flatMapGroupsWithState(
       OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
       (day: Long, it: Iterator[(Long, Long)],
@@ -986,7 +864,9 @@ object StreamPipeline {
     * batch build is the retrospective truth. Complete mode is not an
     * option here (flatMapGroupsWithState forbids it), which is why
     * this maintainer upserts per-key rows instead of epoch-replacing
-    * a snapshot like [[histDailyStream]]. No timeout: the pair
+    * a snapshot like a complete-mode aggregation
+    * ([[graft.operators.Profiling.histDaily]] on a stream). No
+    * timeout: the pair
     * counters are the thing you keep — state per user is bounded at
     * the gap cursor + the open session's item counts + ≤ C(cap,2)
     * closed counters per DISTINCT capped pair the user ever formed +
@@ -1129,24 +1009,20 @@ object StreamPipeline {
     * after a streaming aggregation are a rejected plan shape), with
     * the O(1)-per-type moments riding through the aggregation as
     * `max` (they are functionally dependent on the grouping key).
-    * Same exact-integer z arithmetic as the batch scorer; types
-    * absent from the baseline drop (inner join — unknown types are
-    * schema events, not rate anomalies). State is the windowed-count
-    * aggregation's, bounded by the watermark. */
+    * The z step is the batch scorer's own
+    * (`Windows.rateScored`); types absent from the
+    * baseline drop (inner join — unknown types are schema events, not
+    * rate anomalies). State is the windowed-count aggregation's,
+    * bounded by the watermark. */
   def anomalyStream(events: DataFrame, baseline: DataFrame,
                     watermark: String = "10 minutes",
                     threshold: Double = 2.0): DataFrame =
-    events.withWatermark("ts", watermark)
+    Windows.rateScored(events.withWatermark("ts", watermark)
       .join(broadcast(baseline), Seq("event_type"))
       .groupBy(col("event_type"), window(col("ts"), "1 hour").as("w"))
       .agg(count(lit(1)).as("n"), max(col("c")).as("c"),
         max(col("s")).as("s"), max(col("q")).as("q"))
-      .filter(col("q") * col("c") - col("s") * col("s") > 0)
-      .withColumn("z", round((col("n") * col("c") - col("s")).cast("double") /
-        sqrt((col("q") * col("c") - col("s") * col("s")).cast("double")), 4))
-      .filter(abs(col("z")) >= threshold)
-      .select(col("event_type"), unix_micros(col("w.start")).as("ws_us"),
-        col("n"), col("z"))
+      .withColumn("ws_us", unix_micros(col("w.start"))), threshold)
 
   /** X6 streaming session windows (native session_window operator). */
   def sessionCounts(events: DataFrame, watermark: String = "10 minutes",
@@ -1167,16 +1043,8 @@ object StreamPipeline {
   def streamStreamAttribution(views: DataFrame, clicks: DataFrame,
                               watermark: String = "10 minutes",
                               horizon: String = "5 minutes"): DataFrame = {
-    val v = views.withWatermark("ts", watermark)
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-    val c = clicks.withWatermark("ts", watermark)
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-    c.join(v,
-      col("c_user") === col("v_user") &&
-        col("c_ts") >= col("v_ts") &&
-        col("c_ts") <= col("v_ts") + expr(s"INTERVAL $horizon"))
+    val (v, c, within) = attributionSides(views, clicks, watermark, horizon)
+    c.join(v, within)
       .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
         col("c_ts"), col("v_ts"))
   }
@@ -1193,19 +1061,26 @@ object StreamPipeline {
   def streamStreamAttributionOuter(views: DataFrame, clicks: DataFrame,
                                    watermark: String = "10 minutes",
                                    horizon: String = "5 minutes"): DataFrame = {
+    val (v, c, within) = attributionSides(views, clicks, watermark, horizon)
+    v.join(c, within, "left_outer")
+      .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
+        col("v_ts"), col("c_ts"))
+  }
+
+  /** Both attribution joins' inputs: the watermarked, renamed view
+    * and click sides and the same-user `c_ts ∈ [v_ts, v_ts + horizon]`
+    * condition. */
+  private def attributionSides(views: DataFrame, clicks: DataFrame,
+                               watermark: String,
+                               horizon: String): (DataFrame, DataFrame, Column) = {
     val v = views.withWatermark("ts", watermark)
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("ts").as("v_ts"))
     val c = clicks.withWatermark("ts", watermark)
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("c_ts"))
-    v.join(c,
-        col("c_user") === col("v_user") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr(s"INTERVAL $horizon"),
-        "left_outer")
-      .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
-        col("v_ts"), col("c_ts"))
+    (v, c, col("c_user") === col("v_user") && col("c_ts") >= col("v_ts") &&
+      col("c_ts") <= col("v_ts") + expr(s"INTERVAL $horizon"))
   }
 
   /** X6 custom streaming state (flatMapGroupsWithState): per-user

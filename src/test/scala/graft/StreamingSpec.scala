@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.streaming.StreamPipeline
 import graft.functions.{OrderEventDecode, SeededUuid}
-import graft.operators.Windows
+import graft.operators.{Profiling, Windows}
 import graft.gen.DataGen
 import graft.SparkTestBase.withConfs
 import java.nio.file.{Files, Path}
@@ -1465,7 +1465,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming histogram: bucket counters after two batches equal the batch sketch, quantiles read from the sink") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[UserEvent]
-    val q = StreamPipeline.histSketchStream(mem.toDF())
+    val q = graft.operators.Profiling.histSketch(mem.toDF())
       .writeStream.outputMode("complete")
       .format("memory").queryName("hist_mem").start()
     try {
@@ -1494,7 +1494,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming daily histogram: sink-served rolling quantiles equal the batch read") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[UserEvent]
-    val q = StreamPipeline.histDailyStream(mem.toDF())
+    val q = graft.operators.Profiling.histDaily(mem.toDF())
       .writeStream.outputMode("complete")
       .format("memory").queryName("hist_daily_mem").start()
     try {
@@ -1533,7 +1533,7 @@ class StreamingSpec extends AnyFunSuite {
     // stored table (SupportsTruncate), so the store always holds
     // exactly the current daily sketch — the nightly artifact a
     // resident pipeline serves rolling quantiles from
-    val q = StreamPipeline.histDailyStream(mem.toDF())
+    val q = graft.operators.Profiling.histDaily(mem.toDF())
       .writeStream.outputMode("complete")
       .format("graft_orders").option("table", "hist_daily_store")
       .option("checkpointLocation", dir.resolve("ck").toString)
@@ -1572,7 +1572,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Windows
     val mem = MemoryStream[UserEvent]
     val dir = SparkTestBase.tempDir("graft-dow-store")
-    val q = StreamPipeline.dowDailyStream(mem.toDF())
+    val q = Windows.dailyCounts(mem.toDF())
       .writeStream.outputMode("complete")
       .format("graft_orders").option("table", "dow_daily_store")
       .option("checkpointLocation", dir.resolve("ck").toString)
@@ -1607,7 +1607,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Windows
     val mem = MemoryStream[UserEvent]
     val dir = SparkTestBase.tempDir("graft-ab-store")
-    val q = StreamPipeline.abMomentsStream(mem.toDF())
+    val q = Windows.abMoments(mem.toDF())
       .writeStream.outputMode("complete")
       .format("graft_orders").option("table", "ab_moments_store")
       .option("checkpointLocation", dir.resolve("ck").toString)
@@ -1894,9 +1894,9 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming HLL folds registers across batches to the batch sketch") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[UserEvent]
-    val q = StreamPipeline.hllUsersStream(mem.toDF())
+    val q = Profiling.hllRegisters(mem.toDF())
       .writeStream.format("memory").queryName("hll_mem")
-      .outputMode("update").start()
+      .outputMode("complete").start()
     try {
       val day1 = (1 to 120).map(u =>
         UserEvent(u, Timestamp.valueOf("2024-01-01 08:00:00"), u, "click", 1.0))
@@ -1909,15 +1909,24 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       mem.addData((day1.drop(60) ++ day2): _*)
       q.processAllAvailable()
-      val rows = spark.table("hll_mem").as[(Long, Long, Double)].collect()
-      // day 1 was emitted twice (update mode), with growing fold count
-      assert(rows.count(_._1 === 19723L) === 2)
-      val latest = rows.groupBy(_._1)
-        .map { case (d, rs) => d -> rs.maxBy(_._2)._3 }
-      val batch = graft.operators.Profiling.hllUsers((day1 ++ day2).toDF())
+      val all = (day1 ++ day2).toDF()
+      // snapshot the sink first: the rolling fold self-joins its input,
+      // and a MemorySink view can't deduplicate its own leaf
+      val stored = spark.table("hll_mem").localCheckpoint()
+      val served = Profiling.hllUsersFromRegisters(stored)
         .select(col("day"), col("hll_users"))
         .as[(Long, Double)].collect().toMap
-      assert(latest === batch)
+      val batch = Profiling.hllUsers(all)
+        .select(col("day"), col("hll_users"))
+        .as[(Long, Double)].collect().toMap
+      assert(served === batch)
+      // the streamed register table feeds the other serve folds too
+      assert(Profiling.hllGlobalFromRegisters(stored).collect().toSeq ===
+        Profiling.hllUsersGlobal(all).select("v_empty", "hll_users")
+          .collect().toSeq)
+      assert(Profiling.rollingActiveFromRegisters(stored)
+        .as[(Long, Long, Double)].collect().toSet ===
+        Profiling.rollingActiveHll(all).as[(Long, Long, Double)].collect().toSet)
     } finally q.stop()
   }
 

@@ -318,7 +318,7 @@ object Dedup {
   /** The PRE-AGGREGATED band-key index of a corpus — one (band, key,
     * match_id) row per bucket, `match_id` the bucket-minimum doc id.
     * This is the frame a resident pipeline materializes once per index
-    * generation (and what [[graft.streaming.RollingBandIndex]] rolls);
+    * generation (and what [[graft.streaming.RollingIndex.bands]] rolls);
     * every batch then joins it via [[nearDupAgainstBandIndex]] without
     * re-signing or re-aggregating the corpus. */
   def bandIndex(indexed: DataFrame): DataFrame =

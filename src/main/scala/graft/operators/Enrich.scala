@@ -27,22 +27,20 @@ import org.apache.spark.sql.internal.SQLConf
   * size estimate is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
   * (AQE's size for one task's data): a small table spread over many
   * partitions otherwise pays one task launch per partition per trigger.
-  * A larger reference keeps its own partitioning. [[enrich]] reads its
-  * reference once and takes it as it is.
+  * A larger reference keeps its own partitioning.
   */
 object Enrich {
 
   /** C8+C9 on the driver corpus roles (FIXTURES.md §B): `orders` is the
-    * stream-role fact, `customer` the reference-role dimension.
-    * Projection renames mirror reference `README.md:166`. */
+    * stream-role fact, `customer` the reference-role dimension —
+    * [[enrichReference]] over them with the key and payload columns
+    * renamed to the reference's schemas. */
   def enrich(orders: DataFrame, customers: DataFrame): DataFrame =
-    orders.join(broadcast(customers), orders("o_custkey") === customers("c_custkey"), "inner")
-      .select(
-        orders("o_orderkey").as("order_id"),
-        orders("o_custkey").as("customer_id"),
-        customers("c_name").as("customer_name"),
-        customers("c_mktsegment").as("city"),
-        orders("o_totalprice").as("purchase_amount"))
+    enrichReference(
+      orders.select(col("o_orderkey").as("orderID"),
+        col("o_custkey").as("customerID"), col("o_totalprice").as("amount")),
+      customers.select(col("c_custkey").as("cust_id"),
+        col("c_name").as("cust_name"), col("c_mktsegment").as("city")))
 
   /** Reference-fidelity flavor over the reference's own schemas
     * (orders events ⋈ customers CSV) — used by the golden sample test

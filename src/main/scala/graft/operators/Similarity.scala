@@ -852,7 +852,7 @@ object Similarity {
     * per-generation index artifact [[lshDedupAgainstStoredBuckets]]
     * probes (one slim row per vector per table; at scale this — not
     * the raw vectors — is what each generation materializes, the
-    * [[graft.streaming.RollingBandIndex]] discipline for vectors). */
+    * [[graft.streaming.RollingIndex]] discipline for vectors). */
   def lshDedupBucketIndex(vectors: DataFrame, nTables: Int = 4,
                           bits: Int = 16, center: Double = 0.5): DataFrame =
     dedupBucketize(dedupNorm(vectors), nTables, bits, center)
@@ -864,7 +864,7 @@ object Similarity {
     * vector frame — nothing corpus-sized is re-hashed per call; only
     * the incoming batch is bucketized, and raw index vectors are
     * touched only by the O(candidates) scoring join. The rolling
-    * generation gate ([[graft.streaming.RollingVectorIndex]]) holds
+    * generation gate ([[graft.streaming.RollingIndex.media]]) holds
     * exactly these two frames per generation. */
   def lshDedupAgainstStoredBuckets(incoming: DataFrame, idxBuckets: DataFrame,
                                    idxVectors: DataFrame, tau: Double,

@@ -7,7 +7,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.functions.{OrderEventDecode, SeededUuid}
 import graft.operators.{Enrich, Windows}
@@ -517,63 +518,31 @@ object StreamPipeline {
     * is a STATIC (doc_id, text) frame of eval documents — it
     * broadcasts per batch, the reference-data pattern of the flagship
     * join. Near-dedup against the already-accepted corpus — the
-    * cross-generation catch the exact fingerprint cannot make — comes
-    * in two forms: `index`, a STATIC (doc_id, text) frame signed and
-    * band-aggregated ONCE at stream construction (one generation for
-    * the query's lifetime), or `rollingIndex`, a [[RollingBandIndex]]
-    * whose current generation is read at every trigger — refresh it
-    * with the accepted output and generation N's documents gate
-    * generation N+1 without restarting the query. When both are given
-    * the rolling index wins.
-    *
-    * `autoRefreshEvery` > 0 drives that refresh cadence AUTOMATICALLY:
-    * every N committed batches, a foreachBatch EPILOGUE re-materializes
-    * the rolling index from [[readUpserted]] — after the upsert, inside
-    * the same trigger, so the new generation deterministically includes
-    * every batch up to and including this one (a
-    * `StreamingQueryListener` would be the async alternative, but its
-    * onQueryProgress races the next trigger; the epilogue gives the
-    * hard guarantee the gating story needs: with cadence 1, documents
-    * accepted in batch N gate batch N+1, no manual refresh ever). */
+    * cross-generation catch the exact fingerprint cannot make — probes
+    * the generation of `rollingIndex` ([[RollingIndex.bands]]) current
+    * at each trigger: refresh it with the accepted output and
+    * generation N's documents gate generation N+1 without restarting
+    * the query; never refreshed, it is a static index.
+    * `autoRefreshEvery` drives that refresh from the accepted output
+    * every N committed batches (`fingerprintIngest`). */
   def curateStream(docs: DataFrame, outDir: String, checkpointDir: String,
                    bench: Option[DataFrame] = None,
                    minQuality: Double = 0.5,
                    watermark: String = "10 minutes",
                    nBuckets: Int = 8,
-                   index: Option[DataFrame] = None,
-                   rollingIndex: Option[RollingBandIndex] = None,
+                   rollingIndex: Option[RollingIndex[DataFrame]] = None,
                    autoRefreshEvery: Int = 0,
                    spanIndex: Option[DataFrame] = None,
                    maxSpanFrac: Double = 0.5): DataStreamWriter[org.apache.spark.sql.Row] = {
-    // static index: signed + band-aggregated ONCE at stream
-    // construction (eager, lineage-free), so triggers join the
-    // materialized bucket table instead of re-deriving shingle hashes,
-    // signatures, band keys, and the bucket-min per micro-batch
-    val staticIdx = index.map(i =>
-      graft.operators.Dedup.bandIndex(i).localCheckpoint())
-    // span gate: the stored distinct-span artifact is likewise
-    // materialized once — each trigger probes it with the batch's
-    // spans only (the x4_span_incremental nightly shape, live)
+    // span gate: the stored distinct-span artifact is materialized once
+    // — each trigger probes it with the batch's spans only (the
+    // x4_span_incremental nightly shape, live)
     val staticSpanIdx = spanIndex.map(i =>
       graft.operators.Dedup.spanIndex(i).localCheckpoint())
-    fingerprintIngest(docs, watermark, checkpointDir) { (batch, batchId) =>
-      // rolling wins over static: read the CURRENT generation at
-      // each trigger, so a refresh() between triggers takes effect
-      // without restarting the query
+    fingerprintIngest(docs, watermark, checkpointDir, outDir, rollingIndex,
+        autoRefreshEvery) { (batch, batchId) =>
       curateBatch(batch, outDir, batchId, bench, minQuality, nBuckets,
-        rollingIndex.map(_.current).orElse(staticIdx),
-        staticSpanIdx, maxSpanFrac)
-      // auto-refresh epilogue: runs AFTER this batch's upsert
-      // committed, so the rolled generation contains it. batchId is
-      // replay-stable, so the cadence is too. The snapshot of an
-      // uninitialized store is an EMPTY schemaless frame — nothing to
-      // index yet, skip (the live generation already gates nothing).
-      if (autoRefreshEvery > 0 && rollingIndex.isDefined &&
-          (batchId + 1) % autoRefreshEvery == 0) {
-        val snap = readUpserted(batch.sparkSession, outDir)
-        if (snap.columns.contains("text"))
-          rollingIndex.get.refresh(snap.select(col("doc_id"), col("text")))
-      }
+        rollingIndex.map(_.current), staticSpanIdx, maxSpanFrac)
     }
   }
 
@@ -628,31 +597,23 @@ object StreamPipeline {
     * near-dup discipline for the VECTOR modality: each micro-batch of
     * assets is embedded (batch-side only), exact-deduped on the
     * content fingerprint within the watermark, then probed against the
-    * live generation of a [[RollingVectorIndex]] — the pre-built wide
+    * live generation of a [[RollingIndex.media]] — the pre-built wide
     * centered bucket table of the accepted collection — and survivors
     * upsert. The index side is NEVER re-embedded or re-hashed inside a
     * trigger; the per-batch cost is O(batch) embed + bucketize plus
     * the O(candidates) scoring join, the `x5_mm_incremental` nightly
-    * shape live.
-    *
-    * `autoRefreshEvery` > 0 re-rolls the generation from the upserted
-    * output inside the same foreachBatch epilogue `curateStream` uses
-    * (after the upsert commits, so the new generation deterministically
-    * contains this batch): with cadence 1, assets accepted in batch N
-    * gate batch N+1 — no manual refresh, no query restart. The
-    * re-encoded/re-compressed asset (bytes differ, embedding at cosine
-    * ≈ 1) is exactly what the exact fingerprint gate upstream cannot
-    * catch. */
+    * shape live. With `autoRefreshEvery` 1, assets accepted in batch N
+    * gate batch N+1. The re-encoded/re-compressed asset (bytes differ,
+    * embedding at cosine ≈ 1) is exactly what the exact fingerprint
+    * gate upstream cannot catch. */
   def mediaDedupStream(assets: DataFrame, outDir: String, checkpointDir: String,
-                       rollingIndex: RollingVectorIndex,
+                       rollingIndex: RollingIndex[(DataFrame, DataFrame)],
                        tau: Double = 0.995,
                        watermark: String = "10 minutes",
                        nBuckets: Int = 8,
                        autoRefreshEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    fingerprintIngest(assets, watermark, checkpointDir) { (batch, batchId) =>
-      // one volatile read hands out BOTH generation frames, so
-      // candidates and scores stay within one generation even if a
-      // refresh lands mid-batch
+    fingerprintIngest(assets, watermark, checkpointDir, outDir,
+        Some(rollingIndex), autoRefreshEvery) { (batch, batchId) =>
       val (idxBuckets, idxVectors) = rollingIndex.current
       val vecs = graft.operators.Multimodal.mediaEmbedding(batch)
       val near = graft.operators.Similarity
@@ -660,22 +621,32 @@ object StreamPipeline {
         .select(col("vec_id").as("doc_id"))
       val fresh = batch.join(near, Seq("doc_id"), "left_anti")
       upsertBatch(fresh, outDir, batchId, keyCol = "fp", nBuckets = nBuckets)
-      if (autoRefreshEvery > 0 && (batchId + 1) % autoRefreshEvery == 0) {
-        val snap = readUpserted(batch.sparkSession, outDir)
-        if (snap.columns.contains("text"))
-          rollingIndex.refresh(graft.operators.Multimodal.mediaEmbedding(
-            snap.select(col("doc_id"), col("text"))))
-      }
     }
 
   /** The ingest head both fingerprint-gated maintainers share: md5
     * content fingerprint `fp`, watermark on `ts`,
     * `dropDuplicatesWithinWatermark("fp")` (exact dedup across
     * micro-batches, state bounded by the horizon), then an append-mode
-    * `foreachBatch` writer checkpointed at `checkpointDir`. */
+    * `foreachBatch` writer checkpointed at `checkpointDir` that runs `f`
+    * (which upserts into `outDir`).
+    *
+    * `autoRefreshEvery` > 0 then refreshes `index` from the accepted
+    * (doc_id, text) snapshot of `outDir` every N committed batches, in
+    * a foreachBatch EPILOGUE: after the upsert, inside the same
+    * trigger, so the new generation deterministically includes every
+    * batch up to and including this one (a `StreamingQueryListener`'s
+    * onQueryProgress would race the next trigger). batchId is
+    * replay-stable, so the cadence is too. A cadence that cannot run —
+    * negative, or positive with no index — is rejected here. */
   private def fingerprintIngest(docs: DataFrame, watermark: String,
-                                checkpointDir: String)(
-      f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+                                checkpointDir: String, outDir: String,
+                                index: Option[RollingIndex[_]],
+                                autoRefreshEvery: Int)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
+    require(autoRefreshEvery >= 0,
+      s"autoRefreshEvery must be >= 0 (0 = never), got $autoRefreshEvery")
+    require(autoRefreshEvery == 0 || index.isDefined,
+      s"autoRefreshEvery = $autoRefreshEvery needs a rolling index to refresh")
     docs
       .withColumn("fp", md5(col("text")))
       .withWatermark("ts", watermark)
@@ -683,7 +654,18 @@ object StreamPipeline {
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(f)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        f(batch, batchId)
+        // the snapshot of an uninitialized store is an EMPTY schemaless
+        // frame: nothing to index yet (the live generation already
+        // gates nothing)
+        if (autoRefreshEvery > 0 && (batchId + 1) % autoRefreshEvery == 0) {
+          val snap = readUpserted(batch.sparkSession, outDir)
+          if (snap.columns.contains("text"))
+            index.foreach(_.refresh(snap.select(col("doc_id"), col("text"))))
+        }
+      }
+  }
 
   /** X6 streaming Count-Min sketch: the counter grid maintained
     * incrementally over a document stream — CMS counters are plain
@@ -749,7 +731,6 @@ object StreamPipeline {
     * (`Profiling.hllBase`). No timeout: day keys are
     * bounded by event time and a signature is the thing you keep. */
   def audienceKmvStream(events: DataFrame, k: Int = 32): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val hashed = graft.operators.Profiling.hllBase(events)
@@ -791,7 +772,6 @@ object StreamPipeline {
     * discipline). */
   def botScoreStream(events: DataFrame, minEventsPerDay: Double = 2.5,
                      maxEntropy: Double = 1.58): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val slim = events.select(col("user_id"),
@@ -881,7 +861,6 @@ object StreamPipeline {
     * armed off the initial zero watermark (the 1970 trap). */
   def covisitSessionStream(events: DataFrame, gapMinutes: Int = 5,
                            capPerSession: Int = 20): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
@@ -901,21 +880,13 @@ object StreamPipeline {
         var (lastUs, open, closed, prevProv) = state.getOption.getOrElse(
           (Long.MinValue, Map.empty[Long, Long], Map.empty[String, Long],
             Seq.empty[String]))
-        // the closing session's canonical pairs: top-cap items by
-        // (count desc, item), all a < b — the batch cap-before-pairing
-        def sessionPairs(items: Map[Long, Long]): Seq[String] = {
-          val top = items.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
-            .take(capPerSession).map(_._1).sorted
-          for { i <- top.indices; j <- (i + 1) until top.length }
-            yield s"${top(i)}|${top(j)}"
-        }
         // keys whose CLOSED counter moved this batch — with the
         // provisional symmetric difference below, exactly the keys
         // whose stored value (closed + [k ∈ prov]) can have changed
         val touched = scala.collection.mutable.Set.empty[String]
         it.toSeq.sortBy(e => (e._2, e._3)).foreach { case (_, us, _, item) =>
           if (lastUs != Long.MinValue && us - lastUs > gapUs) {
-            sessionPairs(open).foreach { k =>
+            cappedPairs(open, capPerSession).foreach { k =>
               closed = closed.updated(k, closed.getOrElse(k, 0L) + 1L)
               touched += k
             }
@@ -924,17 +895,13 @@ object StreamPipeline {
           lastUs = us
           if (item >= 0L) open = open.updated(item, open.getOrElse(item, 0L) + 1L)
         }
-        val prov = sessionPairs(open)
+        val prov = cappedPairs(open, capPerSession)
         state.update((lastUs, open, closed, prov))
         val provSet = prov.toSet
         val changed = touched ++ (provSet diff prevProv.toSet) ++
           (prevProv.toSet diff provSet)
-        def row(k: String, n: Long): (Long, String, Long, Long, Long) = {
-          val Array(a, b) = k.split('|')
-          (user, s"$user:$k", a.toLong, b.toLong, n)
-        }
         changed.iterator.map { k =>
-          row(k, closed.getOrElse(k, 0L) + (if (provSet(k)) 1L else 0L))
+          pairRow(user, k, closed.getOrElse(k, 0L) + (if (provSet(k)) 1L else 0L))
         }
     }.toDF("user_id", "pair_key", "item_a", "item_b", "n_sessions")
   }
@@ -966,7 +933,6 @@ object StreamPipeline {
     * rows under a retirement generation BEFORE dropping state; the
     * indicator is per-generation and generations add). */
   def covisitStream(events: DataFrame, capPerUser: Int = 20): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val extracted = regexp_extract(col("props"), "\"k\": ([0-9]+)", 1)
@@ -983,21 +949,30 @@ object StreamPipeline {
         it.foreach { case (_, item) =>
           counts = counts.updated(item, counts.getOrElse(item, 0L) + 1L)
         }
-        // the batch cap-before-pairing rule verbatim: top-cap items by
-        // (lifetime count desc, item), canonical a < b pairs
-        val top = counts.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
-          .take(capPerUser).map(_._1).sorted
-        val pairSet = (for { i <- top.indices; j <- (i + 1) until top.length }
-          yield s"${top(i)}|${top(j)}").toSet
+        // ranked by LIFETIME counts
+        val pairSet = cappedPairs(counts, capPerUser).toSet
         val prevSet = prevPairs.toSet
         state.update((counts, pairSet.toSeq))
-        def row(k: String, n: Long): (Long, String, Long, Long, Long) = {
-          val Array(a, b) = k.split('|')
-          (user, s"$user:$k", a.toLong, b.toLong, n)
-        }
-        (pairSet diff prevSet).iterator.map(row(_, 1L)) ++
-          (prevSet diff pairSet).iterator.map(row(_, 0L))
+        (pairSet diff prevSet).iterator.map(pairRow(user, _, 1L)) ++
+          (prevSet diff pairSet).iterator.map(pairRow(user, _, 0L))
     }.toDF("user_id", "pair_key", "item_a", "item_b", "n_users")
+  }
+
+  /** The batch cap-before-pairing rule both covisit maintainers apply:
+    * the top-`cap` items by (count desc, item), paired into canonical
+    * `a|b` keys with a < b. */
+  private def cappedPairs(counts: Map[Long, Long], cap: Int): Seq[String] = {
+    val top = counts.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
+      .take(cap).map(_._1).sorted
+    for { i <- top.indices; j <- (i + 1) until top.length }
+      yield s"${top(i)}|${top(j)}"
+  }
+
+  /** A covisit output row: `user`'s pair `a|b` under its composite
+    * store key `user:a|b`, with count `n`. */
+  private def pairRow(user: Long, k: String, n: Long): (Long, String, Long, Long, Long) = {
+    val Array(a, b) = k.split('|')
+    (user, s"$user:$k", a.toLong, b.toLong, n)
   }
 
   /** X6 STREAMING ANOMALY SCORER — [[graft.operators.Windows
@@ -1098,7 +1073,6 @@ object StreamPipeline {
   def milestoneAlerts(events: DataFrame, threshold: Double = 100.0,
                       watermark: String = "10 minutes",
                       timeoutMs: Long = 3600000L): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val typed = events.withWatermark("ts", watermark)
@@ -1165,7 +1139,6 @@ object StreamPipeline {
                    stages: Seq[String] = Seq("view", "click", "purchase"),
                    watermark: String = "10 minutes",
                    timeoutMs: Long = 3600000L): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(stages.length == 3, "funnel is three-stage")
     val spark = events.sparkSession
     import spark.implicits._

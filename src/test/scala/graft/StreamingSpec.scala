@@ -64,7 +64,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("file-source pipeline writes id-stamped parquet partituioned by customer (C6)") {
+  test("file-source pipeline writes id-stamped parquet partitioned by customer (C6)") {
     val dir = SparkTestBase.tempDir("graft-stream")
     val in = dir.resolve("in"); val out = dir.resolve("out"); val ck = dir.resolve("ck")
     Files.createDirectories(in)
@@ -1355,8 +1355,8 @@ class StreamingSpec extends AnyFunSuite {
       "of the moon and the wind at dusk"
     val index = Seq((0L, indexed)).toDF("doc_id", "text")
     val mem = MemoryStream[DocEvent]
-    val q = StreamPipeline.curateStream(mem.toDF(), out, ck, index = Some(index))
-      .start()
+    val q = StreamPipeline.curateStream(mem.toDF(), out, ck,
+      rollingIndex = Some(streaming.RollingIndex.bands(index))).start()
     try {
       mem.addData(
         DocEvent(40, nearDup, "en", "s0", Timestamp.valueOf("2024-01-01 00:01:00")),
@@ -1380,7 +1380,7 @@ class StreamingSpec extends AnyFunSuite {
     val fresh = "the fish and the frog swim to the lake and the duck calls " +
       "of the moon and the wind at dusk"
     // generation 0: empty index, gates nothing
-    val roll = streaming.RollingBandIndex.build(
+    val roll = streaming.RollingIndex.bands(
       Seq.empty[(Long, String)].toDF("doc_id", "text"))
     val mem = MemoryStream[DocEvent]
     val q = StreamPipeline.curateStream(mem.toDF(), out, ck,
@@ -1414,7 +1414,7 @@ class StreamingSpec extends AnyFunSuite {
     val nearDup = genN.replace("today", "tonight")
     val fresh = "the fish and the frog swim to the lake and the duck calls " +
       "of the moon and the wind at dusk"
-    val roll = streaming.RollingBandIndex.build(
+    val roll = streaming.RollingIndex.bands(
       Seq.empty[(Long, String)].toDF("doc_id", "text"))
     val mem = MemoryStream[DocEvent]
     // cadence 1: the foreachBatch epilogue rolls the index after EVERY
@@ -1436,6 +1436,27 @@ class StreamingSpec extends AnyFunSuite {
       assert(ids === Set(60L, 62L),
         s"auto-refresh did not gate the generation-N near-dup: $ids")
     } finally q.stop()
+  }
+
+  test("a refresh cadence that cannot run is rejected when the writer is built") {
+    implicit val sc = spark.sqlContext
+    val dir = SparkTestBase.tempDir("graft-curate-cadence")
+    val out = dir.resolve("store").toString; val ck = dir.resolve("ck").toString
+    val docs = MemoryStream[DocEvent].toDF()
+    // a cadence with nothing to refresh, and a negative cadence, were
+    // both silently treated as "off"
+    intercept[IllegalArgumentException] {
+      StreamPipeline.curateStream(docs, out, ck, autoRefreshEvery = 1)
+    }
+    val roll = streaming.RollingIndex.bands(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    intercept[IllegalArgumentException] {
+      StreamPipeline.curateStream(docs, out, ck, rollingIndex = Some(roll),
+        autoRefreshEvery = -1)
+    }
+    StreamPipeline.curateStream(docs, out, ck, rollingIndex = Some(roll),
+      autoRefreshEvery = 1)
+    StreamPipeline.curateStream(docs, out, ck)
   }
 
   test("streaming CMS: counters after two batches equal the batch sketch of the union") {
@@ -1644,8 +1665,8 @@ class StreamingSpec extends AnyFunSuite {
     // different sampled chars (z..a vs a..z): cosine ≈ 0.974 < 0.995
     val fresh = "zxxxxxxaxxxxxx"
     // generation 0: empty vector index, gates nothing
-    val roll = streaming.RollingVectorIndex.build(
-      Seq.empty[(Long, Seq[Double])].toDF("vec_id", "v"))
+    val roll = streaming.RollingIndex.media(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"))
     val mem = MemoryStream[DocEvent]
     // cadence 1: the epilogue re-embeds the accepted output and rolls
     // the generation after every committed batch

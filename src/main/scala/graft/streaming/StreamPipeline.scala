@@ -155,8 +155,7 @@ object StreamPipeline {
     * as deltas, and folds a bucket's deltas into a new base only once
     * they outweigh it, so the amortized write per input row is a small
     * constant however large the stored state grows ([[upsertBatch]]).
-    * Replay-idempotent: a replayed batch skips every bucket it already
-    * committed.
+    * Replay-idempotent: a replay skips every bucket it already committed.
     *
     * Every generation is laid out as [[storeWrite]] describes: sorted
     * by key, with `keyCol` and the columns of [[EnrichedPlain]] written
@@ -164,9 +163,10 @@ object StreamPipeline {
     * zstd or snappy) still read and take writes; a bucket holds both
     * until its next compaction rewrites it.
     *
-    * Sizing: all touched buckets commit in one Spark job, so `nBuckets`
-    * sets the files per trigger and the unit of compaction, not the
-    * number of jobs; keep it O(cluster parallelism). */
+    * Sizing: one write job takes every touched bucket (a second, the
+    * compacting ones), so `nBuckets` sets the files per trigger and the
+    * unit of compaction, not the number of jobs; keep it O(cluster
+    * parallelism), and the same for the life of the store. */
   def upsertEnriched(enriched: DataFrame, outDir: String, checkpointDir: String,
                      keyCol: String = "order_id",
                      nBuckets: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -231,11 +231,12 @@ object StreamPipeline {
     * A base is a full snapshot of the bucket. A delta holds the newest
     * row per key of batches `from`..`gen`; it supersedes any older delta
     * of that range. `rows` is unknown (None) only for the empty markers
-    * of stores written before markers had content, which are bases. */
+    * of old stores, which are bases; `buckets` (the store's `nBuckets`)
+    * only for markers written before it was recorded. */
   private final case class Gen(gen: Long, base: Boolean, key: Option[String],
-                               rows: Option[Long], from: Long) {
-    def render: String =
-      s"kind=${if (base) "base" else "delta"}\nkey=${key.get}\nrows=${rows.get}\nfrom=$from\n"
+                               rows: Option[Long], from: Long, buckets: Option[Int]) {
+    def render: String = s"kind=${if (base) "base" else "delta"}\nkey=${key.get}\n" +
+      s"rows=${rows.get}\nfrom=$from\nbuckets=${buckets.get}\n"
   }
 
   private def parseGen(gen: Long, text: String): Gen = {
@@ -243,7 +244,8 @@ object StreamPipeline {
       case Array(k, v) => k -> v
     }.toMap
     Gen(gen, !kv.get("kind").contains("delta"), kv.get("key"),
-      kv.get("rows").map(_.toLong), kv.get("from").fold(gen)(_.toLong))
+      kv.get("rows").map(_.toLong), kv.get("from").fold(gen)(_.toLong),
+      kv.get("buckets").map(_.toInt))
   }
 
   /** Every generation directory of a bucket: its number and its marker,
@@ -292,39 +294,38 @@ object StreamPipeline {
   }
 
   /** One merge-on-key commit (the foreachBatch body, exposed for replay
-    * tests). Work is O(batch), amortized:
+    * tests). Work is O(batch), amortized. A trigger writes first and
+    * decides afterwards:
     *
-    *  - one `groupBy(bucket).count()` job finds the touched buckets;
-    *  - a bucket whose `gen=batchId` is already committed is skipped: it
-    *    is a replay of an applied batch, and foreachBatch re-delivers the
-    *    same rows under the same id;
-    *  - every other touched bucket writes `gen=batchId` as one of
-    *    - a BASE — base, live deltas and batch merged — once
-    *      `delta rows + batch rows >= base rows`. The base about doubles
-    *      at each compaction, so base rewrites cost about 2 rows written
-    *      per input row, on top of the row's own delta write;
-    *    - a DELTA of the batch's newest row per key. A bucket already at
-    *      [[DeltaCap]] deltas merges the batch with its newest delta and
-    *      each next-older one no larger than the merge so far (size
-    *      tiers, the logarithmic method): a merge never reads the base,
-    *      so the cap costs O(log(base / batch)) rewrites per row, not
-    *      O(state);
-    *  - in-key ties resolve newest first, then by the full payload
-    *    descending (deterministic under replay, unlike dropDuplicates);
-    *  - ALL buckets go out in ONE write job, one file per
-    *    bucket-generation, and the markers only after it returns: a
-    *    mid-write crash leaves every written generation torn (invisible)
-    *    and the replay overwrites it;
-    *  - after the markers, each touched bucket deletes its torn
-    *    generations and every generation its live chain no longer
-    *    reaches (older bases, merged deltas), so the store holds about
-    *    one copy of the data.
+    *  - with no job, it lists every bucket's generations once, skips the
+    *    buckets whose `gen=batchId` is committed (a replay of an applied
+    *    batch: foreachBatch re-delivers the same rows under the same id)
+    *    and deletes a torn `gen=batchId`, so every `gen=batchId` after
+    *    the write is the write's own;
+    *  - one write, with nothing cached, puts the batch's newest row per
+    *    key (in-key ties: full payload descending, deterministic under
+    *    replay) as `gen=batchId` of each bucket it touches;
+    *  - with `n` the rows of that generation (the batch's distinct keys),
+    *    a bucket makes it a BASE — base, live deltas and batch merged —
+    *    once `delta rows + n >= base rows`: the base about doubles at each
+    *    compaction, so base rewrites cost about 2 rows written per input
+    *    row. Otherwise it stays a DELTA; a bucket already at [[DeltaCap]]
+    *    deltas merges it with its newest delta and each next-older one no
+    *    larger than the merge so far (size tiers): the cap costs
+    *    O(log(base / batch)) rewrites per row and never reads the base;
+    *  - the buckets that merge rewrite `gen=batchId` from the merged
+    *    generations and the batch's, all in one second write;
+    *  - markers go down only after the writes (a crash leaves torn,
+    *    invisible generations that the replay writes again), then each
+    *    touched bucket deletes its torn generations and every one its live
+    *    chain no longer reaches, so the store holds about one copy.
     *
-    * Steady-state triggers reuse compiled code: Spark caches generated
-    * classes by source text, and a long literal is inlined there, so
-    * `batchId` must not appear as one. Fresh rows rank with a constant
-    * above every stored generation, and the `gen` partition value is a
-    * string literal, which generated code reads from `references[]`. */
+    * A steady delta trigger of [[upsertEnriched]] is three jobs: the
+    * reference broadcast, the write's map stage and the write. A store
+    * written with another `keyCol` or `nBuckets` is rejected. No long
+    * literal such as `batchId` enters generated code (Spark caches
+    * compiled classes by source text): fresh rows rank with a constant,
+    * and `gen` is a string literal, read from `references[]`. */
   def upsertBatch(batch: DataFrame, outDir: String, batchId: Long,
                   keyCol: String = "order_id", nBuckets: Int = 8): Unit =
     upsertInto(batch, outDir, batchId, keyCol, nBuckets, Seq(keyCol))
@@ -335,7 +336,8 @@ object StreamPipeline {
                          keyCol: String, nBuckets: Int, plainCols: Seq[String]): Unit = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataCols = batch.columns
     // the partitioned layout claims these names; a silent collision
     // would duplicate columns at the write (or worse, partition on the
@@ -346,94 +348,92 @@ object StreamPipeline {
     require(!dataCols.exists(c => reserved.exists(_.equalsIgnoreCase(c))),
       s"upsert batch columns ${dataCols.mkString(",")} collide with the " +
         s"sink's reserved names ${reserved.mkString(",")}")
-    def bucketDir(b: Long) = new Path(s"$outDir/bucket=$b")
+    require(nBuckets > 0, s"nBuckets must be positive, not $nBuckets")
     def genDir(b: Long, g: Long) = new Path(s"$outDir/bucket=$b/gen=$g")
+    val listed = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil).map(_.getPath)
+      .filter(_.getName.startsWith("bucket="))
+      .map(p => p.getName.stripPrefix("bucket=").toLong -> listGens(fs, p)).toMap
+      .withDefaultValue(Nil)
+    for ((b, gens) <- listed; g <- gens.flatMap(_._2))
+      require(b < nBuckets && g.key.forall(_ == keyCol) && g.buckets.forall(_ == nBuckets),
+        s"$outDir/bucket=$b/gen=${g.gen} was written with key ${g.key.getOrElse("?")} and " +
+          s"${g.buckets.getOrElse("?")} buckets, not key $keyCol and $nBuckets buckets")
+    val skipped = listed.collect {
+      case (b, gens) if gens.exists(g => g._1 == batchId && g._2.isDefined) => b }.toSet
+    for ((b, gens) <- listed; (g, None) <- gens if g == batchId) fs.delete(genDir(b, g), true)
+    // the newest row per key of `rows` (data, `_bucket`, `_pri`) as each
+    // bucket's gen=batchId. The window on (bucket, key) keeps to the
+    // bucket exchange (one shuffle, whole buckets per task), and its sort
+    // satisfies the layout's (bucket, key) sort
+    def write(rows: DataFrame): Unit = {
+      val w = Window.partitionBy(col("_bucket"), col(keyCol))
+        .orderBy(col("_pri").desc +: dataCols.filterNot(_ == keyCol).map(c => col(c).desc): _*)
+      storeWrite(rows.repartition(col("_bucket"))
+        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        .select(dataCols.map(col) :+ col("_bucket").as("bucket")
+          :+ lit(batchId.toString).as("gen"): _*), Seq("bucket", keyCol), plainCols)
+        // truncate ONLY the (bucket, gen) partitions this job writes;
+        // every other generation is untouched
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket", "gen")
+        .parquet(outDir)
+    }
     val keyed = batch.withColumn("_bucket", pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)))
-      .persist()
-    try {
-      // O(nBuckets) driver values, not data
-      val counts = keyed.groupBy("_bucket").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val listed = counts.keys.map(b => b -> listGens(fs, bucketDir(b))).toMap
-      // a bucket to write: the generations merged into its `out`, and
-      // its live chain once `out` is committed
-      final case class Plan(bucket: Long, merged: List[Gen], out: Gen, chain: List[Gen])
-      val plans = counts.toSeq.sortBy(_._1).flatMap { case (b, n) =>
-        val committed = listed(b).flatMap(_._2)
-        if (committed.exists(_.gen == batchId)) None
+    // filter only when a bucket is skipped, so the bucket list reaches
+    // generated code only on replays
+    write((if (skipped.isEmpty) keyed else keyed.filter(!col("_bucket").isin(skipped.toSeq: _*)))
+      .withColumn("_pri", lit(Long.MaxValue)))
+    // a bucket written: the generations merged into its `out`, and its
+    // live chain once `out` is committed
+    final case class Plan(bucket: Long, merged: List[Gen], out: Gen, chain: List[Gen])
+    val written = (0L until nBuckets).filter(b => !skipped(b) && fs.exists(genDir(b, batchId)))
+    val plans = written.map { b =>
+      val n = parquetRows(fs, genDir(b, batchId))
+      val chain = liveChain(listed(b).flatMap(_._2).filter(_.gen < batchId))
+      val (bases, deltas) = chain.partition(_.base)
+      val baseRows = bases.map(g => g.rows.getOrElse(parquetRows(fs, genDir(b, g.gen)))).sum
+      val sizes = deltas.map(_.rows.get)
+      val isBase = sizes.sum + n >= baseRows
+      val merged =
+        if (isBase) chain
+        else if (deltas.size < DeltaCap) Nil
         else {
-          val chain = liveChain(committed.filter(_.gen < batchId))
-          val (bases, deltas) = chain.partition(_.base)
-          val baseRows = bases.map(g => g.rows.getOrElse(parquetRows(fs, genDir(b, g.gen)))).sum
-          val sizes = deltas.map(_.rows.get)
-          val isBase = sizes.sum + n >= baseRows
-          val merged =
-            if (isBase) chain
-            else if (deltas.size < DeltaCap) Nil
-            else {
-              // size tiers: the newest delta, then each next-older one
-              // no larger than the merge so far
-              var i = deltas.size - 1
-              var acc = n + sizes(i)
-              while (i > 0 && sizes(i - 1) <= acc) { i -= 1; acc += sizes(i) }
-              deltas.drop(i)
-            }
-          val from = if (isBase) batchId else merged.headOption.fold(batchId)(_.from)
-          val out = Gen(batchId, isBase, Some(keyCol), None, from)
-          Some(Plan(b, merged, out, chain.filterNot(merged.contains) :+ out))
+          // size tiers: the newest delta, then each next-older one no
+          // larger than the merge so far
+          var i = deltas.size - 1
+          var acc = n + sizes(i)
+          while (i > 0 && sizes(i - 1) <= acc) { i -= 1; acc += sizes(i) }
+          deltas.drop(i)
         }
-      }
-      if (plans.nonEmpty) {
-        // filter only when a bucket is skipped, so the bucket list
-        // reaches generated code only on replays
-        val written =
-          if (plans.size == counts.size) keyed
-          else keyed.filter(col("_bucket").isin(plans.map(_.bucket): _*))
-        // every stored generation is older than batchId < Long.MaxValue
-        val fresh = written.withColumn("_pri", lit(Long.MaxValue))
-        val stored = plans.flatMap(p => p.merged.map(g => genDir(p.bucket, g.gen).toString))
-        val rows = if (stored.isEmpty) fresh else fresh.unionByName(
-          spark.read.option("basePath", outDir).parquet(stored: _*)
-            .select(dataCols.map(col) :+ col("bucket").cast("long").as("_bucket")
-              :+ col("gen").cast("long").as("_pri"): _*))
-        // the bucket is a function of the key, so partitioning the window
-        // by (bucket, key) keeps it on the bucket exchange: one shuffle,
-        // and each task writes whole buckets. The window's own sort
-        // already orders each task by (bucket, key): Spark drops the
-        // layout's sort as satisfied, and the write adds none
-        val w = Window.partitionBy(col("_bucket"), col(keyCol))
-          .orderBy(col("_pri").desc +: dataCols.filterNot(_ == keyCol)
-            .map(c => col(c).desc): _*)
-        storeWrite(rows.repartition(col("_bucket"))
-          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-          .select(dataCols.map(col) :+ col("_bucket").as("bucket")
-            :+ lit(batchId.toString).as("gen"): _*), Seq("bucket", keyCol), plainCols)
-          // truncate ONLY the (bucket, gen) partitions this job writes —
-          // a replay overwrites its own torn generation; every other
-          // generation is untouched
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket", "gen")
-          .parquet(outDir)
-        plans.foreach { p =>
-          val dir = genDir(p.bucket, batchId)
-          val tmp = new Path(dir, s"$CommitMarker.tmp")
-          val os = fs.create(tmp, true)
-          try os.write(p.out.copy(rows = Some(parquetRows(fs, dir))).render
-            .getBytes(StandardCharsets.UTF_8))
-          finally os.close()
-          fs.rename(tmp, new Path(dir, CommitMarker))
-        }
-      }
-      // retire, only after every marker is down: torn generations and
-      // generations no live chain reaches. Skipped buckets retire too —
-      // their first attempt may have crashed before this step.
-      val after = plans.map(p => p.bucket -> p.chain).toMap
-      counts.keys.foreach { b =>
-        val keep = after.getOrElse(b, liveChain(listed(b).flatMap(_._2))).map(_.gen).toSet
-        listed(b).map(_._1).filter(g => g < batchId && !keep(g))
-          .foreach(g => fs.delete(genDir(b, g), true))
-      }
-    } finally keyed.unpersist()
+      val from = if (isBase) batchId else merged.headOption.fold(batchId)(_.from)
+      val out = Gen(batchId, isBase, Some(keyCol), Some(n), from, Some(nBuckets))
+      Plan(b, merged, out, chain.filterNot(merged.contains) :+ out)
+    }
+    // every merged generation is older than gen=batchId: the batch wins
+    val merging = plans.filter(_.merged.nonEmpty)
+    if (merging.nonEmpty) write(spark.read.option("basePath", outDir)
+      .parquet(merging.flatMap(p => (p.merged.map(_.gen) :+ batchId)
+        .map(g => genDir(p.bucket, g).toString)): _*)
+      .select(dataCols.map(col) :+ col("bucket").cast("long").as("_bucket")
+        :+ col("gen").cast("long").as("_pri"): _*))
+    plans.foreach { p =>
+      val dir = genDir(p.bucket, batchId)
+      val rows = if (p.merged.isEmpty) p.out.rows else Some(parquetRows(fs, dir))
+      val tmp = new Path(dir, s"$CommitMarker.tmp")
+      val os = fs.create(tmp, true)
+      try os.write(p.out.copy(rows = rows).render.getBytes(StandardCharsets.UTF_8))
+      finally os.close()
+      fs.rename(tmp, new Path(dir, CommitMarker))
+    }
+    // retire, only after every marker is down: torn generations and
+    // generations no live chain reaches. Skipped buckets retire too —
+    // their first attempt may have crashed before this step.
+    val after = plans.map(p => p.bucket -> p.chain).toMap
+    (written ++ skipped).foreach { b =>
+      val keep = after.getOrElse(b, liveChain(listed(b).flatMap(_._2))).map(_.gen).toSet
+      listed(b).map(_._1).filter(g => g < batchId && !keep(g))
+        .foreach(g => fs.delete(genDir(b, g), true))
+    }
   }
 
   /** Snapshot of the upserted store — one row per key: every bucket's

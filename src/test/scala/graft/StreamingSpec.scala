@@ -622,6 +622,74 @@ class StreamingSpec extends AnyFunSuite {
     assert(written.filter(_.column.startsWith("customer_")).forall(_.dict), written)
   }
 
+  test("upsert sink: a crash between the write and the compaction leaves the previous state") {
+    val dir = SparkTestBase.tempDir("graft-upsert-crash")
+    val out = dir.resolve("store")
+    def rows(t: Seq[(String, Long, Long)]) = t.toDF("order_id", "customer_id", "amount")
+    // keys split by the sink's bucket function over 2 buckets
+    val keys = (0 until 200).map(i => s"k$i")
+    val bucketOf = keys.toDF("order_id")
+      .select(col("order_id"), pmod(xxhash64(col("order_id")), lit(2L)))
+      .as[(String, Long)].collect().toMap
+    val (in0, in1) = keys.partition(bucketOf(_) == 0L)
+    val model = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    def upsert(t: Seq[(String, Long, Long)], id: Long): Unit = {
+      StreamPipeline.upsertBatch(rows(t), out.toString, id, nBuckets = 2)
+      t.foreach(r => model(r._1) = (r._2, r._3))
+    }
+    def check(when: String): Unit = {
+      val got = StreamPipeline.readUpserted(spark, out.toString).as[(String, Long, Long)].collect()
+      assert(got.length === model.size, when)
+      assert(got.map(r => r._1 -> (r._2, r._3)).toMap === model.toMap, when)
+    }
+    upsert((in0.take(20) ++ in1.take(20)).map((_, 1L, 10L)), 0L)
+    // batch 1 outweighs bucket 0's 20-row base, so bucket 0 compacts;
+    // it does not touch bucket 1
+    val b1 = (in0.take(10) ++ in0.slice(20, 35)).map((_, 2L, 20L))
+    // the crash: bucket 0's gen=1 holds what the first write leaves, valid
+    // parquet of the batch alone, and bucket 1 a valid gen=1 of other
+    // rows; neither has a marker. A fresh store supplies both
+    val scratch = dir.resolve("scratch")
+    StreamPipeline.upsertBatch(rows(b1 ++ in1.slice(20, 25).map((_, 9L, 90L))),
+      scratch.toString, 1L, nBuckets = 2)
+    for (b <- 0 to 1) {
+      val t = out.resolve(s"bucket=$b").resolve("gen=1")
+      copyTree(scratch.resolve(s"bucket=$b").resolve("gen=1"), t)
+      Files.delete(t.resolve("_graft_commit"))
+      Files.deleteIfExists(t.resolve("._graft_commit.crc"))
+    }
+    check("after the crash")
+    upsert(b1, 1L)
+    check("after the replay")
+    // bucket 0 is one base of 35 rows; bucket 1's torn gen=1 was neither
+    // committed nor kept
+    val gens = storeGens(out)
+    assert(gens.keySet === Set((0L, 1L), (1L, 0L)), gens)
+    assert(markerField(gens((0L, 1L)).get, "kind") === "base")
+    assert(markerField(gens((0L, 1L)).get, "rows").toLong === 35L)
+  }
+
+  test("upsert sink rejects a store written with another bucket count or key") {
+    val out = SparkTestBase.tempDir("graft-upsert-layout").resolve("store")
+    val keys = (0 until 32).map(i => (s"k$i", i.toLong, i.toLong))
+    StreamPipeline.upsertBatch(keys.toDF("order_id", "customer_id", "amount"), out.toString, 0L)
+    val update = keys.map(k => (k._1, k._2, k._3 + 100)).toDF("order_id", "customer_id", "amount")
+    // with other buckets, a key's new row would land in another bucket
+    // than its stored one, and both would be read
+    Seq[() => Unit](
+      () => StreamPipeline.upsertBatch(update, out.toString, 1L, nBuckets = 4),
+      () => StreamPipeline.upsertBatch(update, out.toString, 1L, nBuckets = 16),
+      () => StreamPipeline.upsertBatch(update, out.toString, 1L, keyCol = "customer_id"),
+      () => StreamPipeline.upsertBatch(update, out.toString, 1L, nBuckets = 0)
+    ).foreach(f => intercept[IllegalArgumentException](f()))
+    assert(storeGens(out).keySet.map(_._2) === Set(0L))
+    StreamPipeline.upsertBatch(update, out.toString, 1L)
+    val snap = StreamPipeline.readUpserted(spark, out.toString)
+    assert(snap.count() === 32)
+    assert(snap.agg(sum(col("amount"))).head.getLong(0) === keys.map(_._3 + 100).sum)
+    storeGens(out).values.flatten.foreach(m => assert(markerField(m, "buckets") === "8", m))
+  }
+
   test("streaming dedup keeps one row per order id within the watermark") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(String, Timestamp, Long)]
@@ -1043,6 +1111,67 @@ class StreamingSpec extends AnyFunSuite {
       }
       assert(files.map(fileColumn(_, "order_id")(_.getString(_, 0)).size).sum === rows)
     }
+  }
+
+  test("upsert trigger: a steady delta trigger runs the broadcast and the write, and caches nothing") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val sc = spark.sqlContext
+    val dir = SparkTestBase.tempDir("graft-upsert-jobs")
+    val out = dir.resolve("store")
+    val mem = MemoryStream[OrderEvent](3)
+    // the benchmark's reference: 10k rows over 32 partitions
+    val customers = DataGen.customersBatch(spark, 10000)
+    final case class Job(batch: Long, broadcast: Boolean)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.add(Job(b.toLong,
+            Option(j.properties.getProperty("spark.job.tags")).exists(_.contains("broadcast")))))
+    }
+    // registered before the query starts: its cloned session copies it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val executed = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(executed)
+    try {
+      val q = StreamPipeline.upsertEnriched(
+        graft.operators.Enrich.enrichReference(mem.toDF(), customers), out.toString,
+        dir.resolve("ck").toString).start()
+      // a large first trigger: the 3 small ones after it stay deltas
+      try Seq(2000, 100, 100, 100).zipWithIndex.foreach { case (n, b) =>
+        mem.addData((0 until n).map(i => OrderEvent(s"$b-$i", 1 + (i * 7919 + b) % 10000, i % 480)))
+        q.processAllAvailable()
+      } finally q.stop()
+      SparkTestBase.drainListenerBus()
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(executed)
+    }
+    val byBatch = jobs.asScala.toSeq.groupBy(_.batch)
+    assert(byBatch.keySet === (0L until 4L).toSet, jobs)
+    // steady triggers: the broadcast job, then the write's map stage and
+    // write under AQE; no cache build, no bucket count
+    (1L until 4L).foreach { b =>
+      val js = byBatch(b)
+      assert(js.size <= 3, js)
+      assert(js.count(_.broadcast) === 1, js)
+    }
+    val h = new AdaptiveSparkPlanHelper {}
+    assert(plans.size >= 4, plans)
+    plans.asScala.foreach(p =>
+      assert(h.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty, p))
+    assert(storeGens(out).collect { case ((_, g), Some(m)) if g > 0 =>
+      markerField(m, "kind") }.toSet === Set("delta"))
+    assert(StreamPipeline.readUpserted(spark, out.toString).count() === 2300)
   }
 
   test("append sink ids are v4 UUIDs, disjoint across identically partitioned batches") {

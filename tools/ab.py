@@ -22,6 +22,11 @@ BENCHMARK.json and every recorded wall-clock metric:
   correct, too few to tell) and whether the bound holds (the change's
   median is no worse than the parent's by more than the metric's bound).
 
+Two ungated lines per side follow, from each record's params: the
+slowest measured trigger (the max of `measured_triggers_ms`, where
+compactions land) and the warm set-up rounds (`setup_round_s[1:]`, pooled
+over the runs), each as median [Q1-Q3].
+
 A run fails when run.py exits non-zero or its result is not correct or
 counts failed operations. Every run is made whatever fails; the script
 then exits 1 if any run failed, else 0. --out writes every run's result
@@ -45,6 +50,8 @@ SIDES = ("parent", "change")
 # fewer pairs than this cannot show a gain: at 3 pairs, identical code
 # wins all three one time in eight
 MIN_PAIRS = 10
+# record params behind the ungated per-side lines
+PARAMS = ("measured_triggers_ms", "setup_round_s")
 
 
 def run(checkout, workload, seed, seconds):
@@ -60,7 +67,8 @@ def run(checkout, workload, seed, seconds):
     return {"ok": ok, "exit": res.returncode, "correct": summary.get("correct"),
             "attempted": summary.get("attempted"), "failed": summary.get("failed"),
             "metrics": {k: m["value"] for k, m in summary["metrics"].items()},
-            "wall_metrics": {k: m["value"] for k, m in record["wall_metrics"].items()}}
+            "wall_metrics": {k: m["value"] for k, m in record["wall_metrics"].items()},
+            "params": {k: record["params"].get(k) for k in PARAMS}}
 
 
 def quartiles(vals):
@@ -102,6 +110,16 @@ def report(workload, pairs, spec, lower_is_better):
             print(f"  {n:24s} {ma:12.4g} [{qa1:.4g}-{qa3:.4g}]".ljust(57)
                   + f" {mb:12.4g} [{qb1:.4g}-{qb3:.4g}]".ljust(31)
                   + f" {d:+8.1%} {wins:>3d}/{len(got):<2d}  {gain:5s} {bound}")
+    # ungated: where compactions land, and the set-up once the JIT is warm
+    for side in SIDES:
+        ps = [p[side].get("params") or {} for p in good]
+        slowest = [max(q["measured_triggers_ms"]) for q in ps if q.get("measured_triggers_ms")]
+        warm = [v for q in ps for v in (q.get("setup_round_s") or [])[1:]]
+        for label, vals in (("slowest trigger ms", slowest), ("warm set-up rounds s", warm)):
+            if vals:
+                q1, q3 = quartiles(vals)
+                print(f"  {side:6s} {label:21s} {statistics.median(vals):12.4g} [{q1:.4g}-{q3:.4g}]"
+                      f"  n={len(vals)}")
 
 
 def main():
